@@ -688,66 +688,6 @@ def merge_idset_blobs_many(
     )
 
 
-def merge_idset_blobs(
-    a: bytes,
-    b: bytes,
-    size_threshold_in_bytes: int = DEFAULT_SIZE_THRESHOLD,
-    expected_insertions: int = DEFAULT_EXPECTED_INSERTIONS,
-    fpp: float = DEFAULT_FPP,
-) -> bytes:
-    """IdSets.merge (IdSets.java:96-137): union two wire blobs.
-    exact+exact unions values (converting to bloom past the size
-    threshold); bloom+bloom ORs the bit arrays (identical sizing by
-    construction — same expectedInsertions/fpp); exact+bloom inserts
-    the exact values into the bloom. Merging is associative and
-    order-insensitive, so a partial->merge build is byte-identical to
-    a single-pass build with the same parameters."""
-    if a[0] == TYPE_EMPTY:
-        return b
-    if b[0] == TYPE_EMPTY:
-        return a
-    ta, tb = a[0], b[0]
-    if ta != TYPE_BLOOM and tb != TYPE_BLOOM:
-        if ta != tb:
-            raise ValueError(f"cannot merge IdSet types {ta} and {tb}")
-        # vectorized exact union (the arrays are already sorted)
-        vals = np.union1d(decode_idset(a).values(), decode_idset(b).values())
-        return encode_idset(
-            vals.astype(np.int64),
-            _TAG_DTYPE[ta],
-            size_threshold_in_bytes=size_threshold_in_bytes,
-            expected_insertions=expected_insertions,
-            fpp=fpp,
-        )
-    # at least one bloom: result is bloom
-    if ta != TYPE_BLOOM:
-        a, b = b, a  # a := the bloom
-    funnel = a[1]
-    _strategy, k, num_longs = struct.unpack_from(">BBi", a, 2)
-    data = (
-        np.frombuffer(a, dtype=">u8", count=num_longs, offset=8)
-        .astype(np.uint64)
-        .copy()
-    )
-    if b[0] == TYPE_BLOOM:
-        if b[1] != funnel or b[2:8] != a[2:8]:
-            raise ValueError("incompatible bloom IdSets")
-        data |= np.frombuffer(
-            b, dtype=">u8", count=num_longs, offset=8
-        ).astype(np.uint64)
-    else:
-        num_bits = num_longs * 64
-        for v in decode_idset(b).values():
-            _bloom_insert_bits(
-                data, k, num_bits, _funnel_bytes(funnel, v)
-            )
-    return (
-        bytes([TYPE_BLOOM, funnel])
-        + struct.pack(">BBi", 1, k, num_longs)
-        + data.byteswap().tobytes()
-    )
-
-
 def needs_exact_channel(ids: "PinotIdSet") -> bool:
     """True when a float64 image of the PROBE column could change the
     answer, i.e. the emitted probe must carry the exact values through

@@ -181,21 +181,6 @@ def _planes(dim: int, n_planes: int) -> list[list[float]]:
     return [[rng.uniform(-1.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def sign_sketch(vec: Column, dim: int, n_planes: int = 16) -> Column:
-    """n-bit random-hyperplane sketch as a long: bit p = sign of <vec, r_p>.
-    Each dot is a JVM-side zip_with/aggregate fold over the literal plane."""
-    sketch = F.lit(0).cast("long")
-    for p, plane in enumerate(_planes(dim, n_planes)):
-        plane_arr = F.array(*[F.lit(v) for v in plane])
-        dot = F.aggregate(
-            F.zip_with(vec, plane_arr, lambda x, r: x.cast("double") * r),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        sketch = sketch + F.when(dot > 0, F.lit(2**p).cast("long")).otherwise(0)
-    return sketch
-
-
 def _table_sketches(vec: Column, dim: int, n_tables: int, bits: int) -> Column:
     """Array of per-table bucket ids: table t uses its own `bits` planes.
     Multi-table LSH: a pair is a candidate if it collides in ANY table —

@@ -945,7 +945,7 @@ def q_segment_text_index_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TEXT_MATCH boolean query answered through the native text "
     "index from plain dialect SQL (TextMatchFilterOperator.java + "
     "NativeTextIndexReader.getDocIds analog, sql/dialect.py:"
-    "_text_match_rewrite -> sources/native_text_index.py:"
+    "_index_pass -> sources/native_text_index.py:"
     "read_segments_text_match): the segment store registers as a table, "
     "TEXT_MATCH(text, 'spark AND merge') prunes via AND-intersected "
     "postings (substring-superset unions, so 'spark' also reaches "
@@ -1035,7 +1035,7 @@ def _docs_multi_index_store(spark: SparkSession, sf_dir: str) -> str:
     """,
     doc="AND-composed index access from plain dialect SQL "
     "(FilterOperatorUtils.java:183-220 analog, sql/dialect.py:"
-    "_multi_index_rewrite -> sources/index_compose.py): JSON_MATCH AND "
+    "_index_pass -> sources/index_compose.py): JSON_MATCH AND "
     "TEXT_MATCH over one dual-indexed segment store intersect their "
     "per-segment docId allowlists before decode, with the residual "
     "conjunction re-applied. The query raises if the composition did "

@@ -21,12 +21,29 @@ import math
 import re
 import threading
 import uuid
+from copy import copy
+from typing import Callable, NamedTuple
 
 import pyarrow as pa  # Arrow scalar-UDF batches (round-15)
 from pyspark.sql import DataFrame, SparkSession
 
 from hurricanedb_spark.catalog.tables import register_views
 from hurricanedb_spark.functions.registry import register_all, sql_macros
+from hurricanedb_spark.sources.geo_index import (
+    geo_radius_segment_docs,
+    read_segments_geo_radius,
+)
+from hurricanedb_spark.sources.index_compose import read_segments_multi_index
+from hurricanedb_spark.sources.json_index import (
+    json_match_segment_docs,
+    read_segments_json_match,
+)
+from hurricanedb_spark.sources.native_text_index import (
+    read_segments_text_match,
+    text_match_segment_docs,
+)
+from hurricanedb_spark.sql.json_match import translate_json_match
+from hurricanedb_spark.sql.lexer import literal_spans, mask
 from hurricanedb_spark.sql.text_match import translate_text_match
 
 # Exact MV percentile: sort the flattened group values and index with the
@@ -408,57 +425,24 @@ _GROOVY_ALLOWED = re.compile(
 )
 
 
-def _segments(script: str) -> list[tuple[bool, str]]:
-    """Split into (is_literal, text) segments; literal text keeps its quotes.
-    Inside a literal a doubled quote ('') continues it — that is how an
-    embedded quote arrives from the SQL surface. Backslash has no special
-    meaning (the _GROOVY_ALLOWED charset forbids it)."""
-    segs: list[tuple[bool, str]] = []
-    i, n, seg_start = 0, len(script), 0
-    while i < n:
-        if script[i] == "'":
-            segs.append((False, script[seg_start:i]))
-            j = i + 1
-            while j < n:
-                if script[j] == "'":
-                    if j + 1 < n and script[j + 1] == "'":
-                        j += 2  # '' = escaped quote, literal continues
-                        continue
-                    break
-                j += 1
-            segs.append((True, script[i : j + 1]))
-            i = seg_start = j + 1
-        else:
-            i += 1
-    segs.append((False, script[seg_start:]))
-    return segs
-
-
 def _map_outside_strings(script: str, fn) -> str:
-    """Apply `fn` to the segments of `script` that are OUTSIDE single-quoted
-    string literals; literals pass through untouched. Groovy operator
+    """Apply `fn` to the text of `script` OUTSIDE single-quoted string
+    literals; literals pass through untouched. Groovy operator
     characters inside a literal (e.g. `arg0 == 'a&&b'`) must survive
     rewriting verbatim."""
-    return "".join(t if lit else fn(t) for lit, t in _segments(script))
+    out, pos = [], 0
+    for start, end in literal_spans(script):
+        out += [fn(script[pos:start]), script[start:end]]
+        pos = end
+    return "".join(out) + fn(script[pos:])
 
 
 def _code_only(script: str) -> str:
     """The script with string literals dropped — what structural guards
     (`;`, `{`) should inspect."""
-    return "".join(t for lit, t in _segments(script) if not lit)
-
-
-def _index_outside(script: str, char: str, start: int = 0) -> int:
-    """Index of the first `char` at or after `start` that is outside any
-    string literal, or -1."""
-    pos = 0
-    for lit, t in _segments(script):
-        if not lit:
-            k = t.find(char, max(0, start - pos))
-            if k != -1:
-                return pos + k
-        pos += len(t)
-    return -1
+    code: list[str] = []
+    _map_outside_strings(script, lambda t: code.append(t) or t)
+    return "".join(code)
 
 
 def _groovy_methods_rewrite(script: str) -> str:
@@ -471,14 +455,6 @@ def _groovy_methods_rewrite(script: str) -> str:
     methods and bare property access raise the documented subset error
     instead of emitting broken SQL."""
     ident = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-
-    def literal_spans(s: str) -> list[tuple[int, int]]:
-        spans, pos = [], 0
-        for is_lit, text in _segments(s):
-            if is_lit:
-                spans.append((pos, pos + len(text)))
-            pos += len(text)
-        return spans
 
     def in_lit(spans, i: int) -> bool:
         return any(a <= i < b for a, b in spans)
@@ -592,15 +568,6 @@ def _groovy_methods_rewrite(script: str) -> str:
         )
 
 
-def _groovy_mask(script: str) -> str:
-    """Same-length copy with string-literal interiors blanked, so scans
-    can do index math on code characters only."""
-    return "".join(
-        t if not lit else "'" + "x" * (len(t) - 2) + "'"
-        for lit, t in _segments(script)
-    )
-
-
 def _groovy_dquotes(script: str) -> str:
     """Groovy double-quoted strings -> SQL single-quoted literals (the
     reference corpus uses \"Jello\"-style literals). GString
@@ -634,15 +601,15 @@ def _groovy_wrap_calls(script: str, pat: re.Pattern, head: str, tail: str) -> st
     """Rewrite every `pat`-matched call opener (which must end at its
     '(') into head + <args to the MATCHING close paren> + tail."""
     while True:
-        mask = _groovy_mask(script)
-        m = pat.search(mask)
+        masked = mask(script)
+        m = pat.search(masked)
         if not m:
             return script
         depth = 0
-        for i in range(m.end() - 1, len(mask)):
-            if mask[i] == "(":
+        for i in range(m.end() - 1, len(masked)):
+            if masked[i] == "(":
                 depth += 1
-            elif mask[i] == ")":
+            elif masked[i] == ")":
                 depth -= 1
                 if depth == 0:
                     script = (
@@ -687,16 +654,16 @@ def _groovy_concat_plus(script: str) -> str:
     A `+` with a string LITERAL as either adjacent operand (the corpus's
     `firstName + ' ' + lastName` shape) becomes `||`; all-identifier
     sums stay numeric (use .concat() for identifier-only concatenation)."""
-    mask = _groovy_mask(script)
+    masked = mask(script)
     out = list(script)
-    for i, ch in enumerate(mask):
+    for i, ch in enumerate(masked):
         if ch != "+":
             continue
         j = i - 1
-        while j >= 0 and mask[j].isspace():
+        while j >= 0 and masked[j].isspace():
             j -= 1
         k = i + 1
-        while k < len(mask) and mask[k].isspace():
+        while k < len(masked) and masked[k].isspace():
             k += 1
         if (j >= 0 and script[j] == "'") or (
             k < len(script) and script[k] == "'"
@@ -710,9 +677,9 @@ def _groovy_ternary(script: str) -> str:
     (`a ? b : c ? d : e`) and parenthesized nesting both become nested
     CASE WHEN expressions. Operates on a literal-masked copy so ?/: in
     string data never split."""
-    mask = _groovy_mask(script)
+    masked = mask(script)
     depth, q = 0, -1
-    for i, ch in enumerate(mask):
+    for i, ch in enumerate(masked):
         if ch == "(":
             depth += 1
         elif ch == ")":
@@ -723,7 +690,7 @@ def _groovy_ternary(script: str) -> str:
     if q == -1:
         # no top-level ternary: recurse into each top-level paren group
         out, start, depth, gstart = [], 0, 0, -1
-        for i, ch in enumerate(mask):
+        for i, ch in enumerate(masked):
             if ch == "(":
                 if depth == 0:
                     gstart = i
@@ -738,8 +705,8 @@ def _groovy_ternary(script: str) -> str:
         out.append(script[start:])
         return "".join(out)
     depth, nested, c = 0, 0, -1
-    for i in range(q + 1, len(mask)):
-        ch = mask[i]
+    for i in range(q + 1, len(masked)):
+        ch = masked[i]
         if ch == "(":
             depth += 1
         elif ch == ")":
@@ -788,15 +755,16 @@ def translate_groovy(args: list[str]) -> str:
         # The script arrived as a SQL string literal: '' is an escaped
         # embedded quote. Decode one SQL-escape level; the remaining ''
         # pairs are the script's own embedded-quote escapes, which is the
-        # convention _segments scans AND the escape Spark SQL expects on
+        # convention the lexer scans AND the escape Spark SQL expects on
         # emission, so decoded-once is the canonical working form.
         script = script.replace("''", "'")
     # Fail closed on inconsistent escaping: a lone embedded quote (the
     # user skipped one doubling level, e.g. 'arg0 == ''it''s''') mis-splits
     # into an unterminated/odd literal; without this guard that emitted
     # silently-broken SQL instead of the documented rejection.
-    for _lit, _t in _segments(script):
-        if _lit and not (
+    for start, end in literal_spans(script):
+        _t = script[start:end]
+        if not (
             len(_t) >= 2
             and _t.endswith("'")
             and "'" not in _t[1:-1].replace("''", "")
@@ -1999,50 +1967,19 @@ _DOTTED_REF = re.compile(r"[A-Za-z_]\w*\s*\.\s*[A-Za-z_*]")
 
 
 def _split_top(s: str) -> list[str]:
-    """Split on top-level commas (parens and string literals respected)."""
+    """Split on top-level commas (parens, literals and comments respected)."""
     parts: list[str] = []
-    depth, cur, in_str = 0, [], False
-    for ch in s:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if ch == "," and depth == 0 and not in_str:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
+    depth = start = 0
+    for i, ch in enumerate(mask(s)):
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(s[start:i].strip())
+            start = i + 1
+    parts.append(s[start:].strip())
     return [p for p in parts if p]
-
-
-def _mask_literals(sql: str) -> str:
-    """Same-length copy of `sql` with string-literal interiors replaced by
-    NULs, so clause-keyword regexes cannot match inside literals; match
-    spans taken on the masked text slice the original correctly."""
-    out = list(sql)
-    i, n = 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            for k in range(i + 1, min(j, n)):
-                out[k] = "\x00"
-            i = j + 1
-        else:
-            i += 1
-    return "".join(out)
 
 
 def _dot_accessible_cols(fields) -> list[str]:
@@ -2112,7 +2049,7 @@ def _select_alias_map(
     )
     for i, item in enumerate(items):
         item = item.strip()
-        masked = _mask_literals(item)
+        masked = mask(item)
         m = _ALIAS_AS.match(masked)
         if m:
             out[m.group(2).lower()] = item[m.start(1) : m.end(1)].strip()
@@ -2172,7 +2109,7 @@ def _strip_tail_qualifiers(
     literal-masked copy; spans map 1:1 because masking is same-length).
     Callers ALSO dry-run-analyze the rebuilt query, so the strip can
     never turn a working query into an error — at worst it declines."""
-    masked = _mask_literals(text)
+    masked = mask(text)
     counts: dict[str, int] = {}
     for c in view_cols:
         counts[c.lower()] = counts.get(c.lower(), 0) + 1
@@ -2204,13 +2141,11 @@ _DOTTED_CHAIN = re.compile(r"\b[A-Za-z_]\w*(?:\s*\.\s*(?:[A-Za-z_]\w*|\*))+")
 
 
 # an auto-generated output name is pinned back via a backquoted alias
-# ONLY when it cannot confuse the dialect's string parsers — those
-# treat backquoted identifiers as transparent text (_mask_literals
-# masks '...' only), so a name carrying quote characters, a clause
-# keyword, an unbalanced paren, or a top-level comma must decline the
-# restructure instead (conservative; Spark's auto names are expression
-# pretty-prints, so the common forms — sum(x), (v + 1), avg(v) —
-# all pass)
+# ONLY when it is plainly safe: a name carrying quote characters (a
+# backquote would end the alias), a clause keyword, an unbalanced paren,
+# or a top-level comma declines the restructure instead (conservative;
+# Spark's auto names are expression pretty-prints, so the common forms —
+# sum(x), (v + 1), avg(v) — all pass)
 _UNSAFE_AUTO_NAME = re.compile(
     r"(?i)[`'\";\x00]|\\|\bfrom\b|\bwhere\b|\bgroup\b|\bhaving\b|"
     r"\border\b|\blimit\b|\bjoin\b|\bunion\b|\bintersect\b|\bexcept\b|"
@@ -2296,7 +2231,7 @@ def _alias_project_refs(
         return a
 
     def repl(text: str) -> str | None:
-        masked = _mask_literals(text)
+        masked = mask(text)
         out: list[str] = []
         pos = 0
         for m in _DOTTED_CHAIN.finditer(masked):
@@ -2327,7 +2262,7 @@ def _alias_project_refs(
     for idx, item in enumerate(split_items):
         it = item.strip()
         if "*" not in it and re.fullmatch(
-            _DOTTED_CHAIN.pattern, _mask_literals(it)
+            _DOTTED_CHAIN.pattern, mask(it)
         ):
             # bare dotted ref as a whole select item: Spark names the
             # output column after the last path segment — keep it
@@ -2337,7 +2272,7 @@ def _alias_project_refs(
         r = repl(it)
         if r is None:
             return None
-        if r != it and not _ALIAS_AS.match(_mask_literals(it)):
+        if r != it and not _ALIAS_AS.match(mask(it)):
             # composite item with dotted refs but no explicit alias:
             # projecting changes the auto-generated output name — pin
             # the original name back explicitly (round-15), or decline
@@ -2390,7 +2325,7 @@ def _expand_qualified_stars(sel: str, expand) -> str | None:
     changed = False
     for item in _split_top(sel):
         it = item.strip()
-        masked = _mask_literals(it)
+        masked = mask(it)
         m = re.fullmatch(r"([A-Za-z_]\w*)\s*\.\s*\*", masked)
         if m:
             cols = expand(m.group(1))
@@ -2414,7 +2349,7 @@ def _maybe_expand_stars(parts, grp, withp, fromw, analyze) -> None:
     macro/single-phase form)."""
     sel = grp("sel")
     if analyze is None or not sel or not re.search(
-        r"\.\s*\*", _mask_literals(sel)
+        r"\.\s*\*", mask(sel)
     ):
         return
 
@@ -2453,7 +2388,7 @@ def _strip_clause_qualifiers(
     same (possibly qualified) column."""
     for name in clauses:
         part = parts.get(name)
-        if not part or not _DOTTED_REF.search(_mask_literals(part)):
+        if not part or not _DOTTED_REF.search(mask(part)):
             continue
         if schema_info is None:
             return False
@@ -2492,7 +2427,7 @@ def rewrite_mv_percentile_bounded(sql: str, analyze=None) -> str:
     # clause keywords inside string literals must not steer the shape
     # parse: match on a literal-masked copy, slice the original by span
     src = sql.rstrip().rstrip(";")
-    masked = _mask_literals(src)
+    masked = mask(src)
     low = masked.lower()
     if re.search(
         r"\bunion\b|\bintersect\b|\bexcept\b|\bselect\s+distinct\b", low
@@ -2525,7 +2460,7 @@ def rewrite_mv_percentile_bounded(sql: str, analyze=None) -> str:
     # uniquely in the subtree output, else keep the exact macro
     view_cols = None
     if _DOTTED_REF.search(
-        _mask_literals(" ".join(x for x in parts.values() if x))
+        mask(" ".join(x for x in parts.values() if x))
     ):
         if analyze is None:
             return sql
@@ -2773,7 +2708,7 @@ def rewrite_mode_avg_bounded(sql: str, analyze=None) -> str:
     if not calls:
         return sql
     src = sql.rstrip().rstrip(";")
-    masked = _mask_literals(src)
+    masked = mask(src)
     low = masked.lower()
     if re.search(
         r"\bunion\b|\bintersect\b|\bexcept\b|\bselect\s+distinct\b", low
@@ -2809,7 +2744,7 @@ def rewrite_mode_avg_bounded(sql: str, analyze=None) -> str:
     # uniquely in the subtree output, else keep the collect_list macro
     view_cols = None
     if _DOTTED_REF.search(
-        _mask_literals(" ".join(x for x in parts.values() if x))
+        mask(" ".join(x for x in parts.values() if x))
     ):
         if analyze is None:
             return sql
@@ -3039,11 +2974,68 @@ _GEO_RADIUS_CALL = re.compile(
 )
 
 
+_WHERE_SPAN = re.compile(
+    r"\bWHERE\b(?P<span>.*?)(?:\bGROUP\s+BY\b|\bORDER\s+BY\b"
+    r"|\bHAVING\b|\bLIMIT\b|$)",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
+class _IndexKind(NamedTuple):
+    """One accelerable WHERE call for HurricaneSQL._index_pass."""
+
+    note: str  # notes field (last_<note>) set when its own reader fires
+    call: re.Pattern
+    parse: Callable  # call match -> (column, argument)
+    read: Callable  # (spark, segs, column, argument, columns) -> DataFrame
+    docs: Callable  # (segment dir, column, argument) -> docId bound
+    residual: Callable  # (column, argument) -> SQL re-applied, or None
+    access: str  # access-path name in EXPLAIN IMPLEMENTATION PLAN
+    explain: str  # how the single-call path reads, for its EXPLAIN line
+
+
+def _quoted_arg(m: re.Match) -> tuple[str, str]:
+    return m.group(1), m.group(2).replace("''", "'")
+
+
+_INDEX_KINDS = (
+    _IndexKind(
+        "json_match_accel", _JSON_MATCH_CALL, _quoted_arg,
+        read_segments_json_match, json_match_segment_docs, translate_json_match,
+        "JSON_INDEX", "segment skip + docId allowlist + residual",
+    ),
+    _IndexKind(
+        "text_match_accel", _TEXT_MATCH_CALL, _quoted_arg,
+        read_segments_text_match, text_match_segment_docs, translate_text_match,
+        "TEXT_INDEX", "posting algebra + residual",
+    ),
+    # TEXT_CONTAINS(col, 'lit') is raw contains(col, 'lit'); for a bare
+    # [A-Za-z0-9]+ literal that is exactly the TEXT_MATCH plain-term shape
+    _IndexKind(
+        "text_contains_accel", _TEXT_CONTAINS_CALL, _quoted_arg,
+        read_segments_text_match, text_match_segment_docs,
+        lambda col, lit: f"contains({col}, '{lit}')",
+        "TEXT_INDEX", "term posting + residual",
+    ),
+    # the query keeps its own distance predicate, so exactly one residual
+    # expression decides the rows (H3IndexFilterOperator.java:100-160)
+    _IndexKind(
+        "geo_radius_accel", _GEO_RADIUS_CALL,
+        lambda m: (m.group(1), tuple(float(g) for g in m.groups()[1:])),
+        lambda spark, segs, col, a, columns: read_segments_geo_radius(
+            spark, segs, col, *a, columns, apply_residual=False
+        ),
+        lambda seg, col, a: geo_radius_segment_docs(seg, col, *a),
+        lambda col, a: None,
+        "H3_INDEX", "candidate cells + residual",
+    ),
+)
+
+
 def rewrite_json_match(query: str) -> str:
     """JSON_MATCH(col, '<condition>') -> the translated path-predicate
     expression (sql/json_match.py). The condition literal uses Pinot's
     ''-escaped quoting."""
-    from hurricanedb_spark.sql.json_match import translate_json_match
 
     def sub(m: re.Match) -> str:
         return translate_json_match(m.group(1), m.group(2).replace("''", "'"))
@@ -3183,6 +3175,31 @@ def _probe_native_text_headers(seg: str) -> tuple[list[str], list[str]]:
     return missing, corrupt
 
 
+def _guarded(rewrite):
+    """A pure-string bounded restructure as a pass, under the 'a rewrite
+    can never break a working query' contract (round-11 ADVICE): when it
+    changed the query, dry-run-analyze the result (same macro expansion
+    the later passes apply) and keep the original on ANY failure — e.g.
+    a user CTE named _mvsrc/_msrc, or a subtree column colliding with
+    generated aliases (_mv, _gk_*)."""
+
+    def run(hq: "HurricaneSQL", q0: str):
+        out = rewrite(q0, analyze=hq._analyze_cols)
+        if out != q0:
+            try:
+                hq.spark.sql(rewrite_functions(rewrite_json_match(out)))
+            except Exception:  # noqa: BLE001 — macro path still works
+                return q0, None, None
+        return out, None, None
+
+    return run
+
+
+def _string_pass(rewrite):
+    """A str -> str rewrite as a pass: no view to drop, nothing to note."""
+    return lambda _hq, query: (rewrite(query), None, None)
+
+
 class HurricaneSQL:
     """Query front-end: Pinot-dialect SQL in, Spark DataFrame out.
 
@@ -3205,12 +3222,12 @@ class HurricaneSQL:
         null_defaults: dict[str, dict] | None = None,
     ):
         self.spark = spark
-        self.last_query_options: dict[str, str] = {}
         # segment-backed views: name -> (segment_dirs, columns); lets
         # sql() route JSON_MATCH filters through each segment's .json.idx
         self._segment_tables: dict[str, tuple[list[str], list[str] | None]] = {}
-        # (table, decoded columns) of the last per-query pruning rebind
-        self.last_column_prune: tuple[str, list[str]] | None = None
+        # the current request's notes, per thread (read back through
+        # the last_* properties)
+        self._request = threading.local()
         register_all(spark)
         if sf_dir:
             tables = register_views(spark, sf_dir)
@@ -3297,112 +3314,6 @@ class HurricaneSQL:
                 stacklevel=3,
             )
 
-    def _json_match_rewrite(self, query: str):
-        """JSON index access path for segment-backed tables.
-
-        When the query has the safe shape — a single-table `FROM
-        <segment table>` (no JOIN), exactly one JSON_MATCH call sitting
-        inside the WHERE clause as a top-level conjunct (no OR / NOT
-        anywhere in the WHERE, no parenthesized boolean structure), and
-        the predicate column belongs to that table — the table
-        reference is rewritten to a UNIQUE temp view bound to the
-        index-accelerated scan (sources/json_index.py:
-        read_segments_json_match): zero-match segments are skipped,
-        survivors decode only their posting's docs, and the FULL
-        predicate still runs in SQL, so pre-pruning can only remove
-        work, never change results. Any other placement (NOT/OR,
-        projection position, multiple calls, joins) leaves the plain
-        scan: those shapes could lose rows if the pre-filtered source
-        replaced the table. The shared view named `name` is NEVER
-        mutated, so concurrent queries on other threads are unaffected
-        (round-6 review finding).
-
-        Returns (possibly rewritten query, cleanup callable)."""
-        def build(segs, columns, col, cond):
-            from hurricanedb_spark.sources.json_index import (
-                read_segments_json_match,
-            )
-
-            return read_segments_json_match(self.spark, segs, col, cond, columns)
-
-        out = self._conjunct_accel_rewrite(query, _JSON_MATCH_CALL, "jm", build)
-        self.last_json_match_accel = out[0] is not query
-        return out
-
-    def _text_match_rewrite(self, query: str):
-        """TEXT_MATCH access path for segment-backed tables: the same
-        safe-shape conditions as _json_match_rewrite, with the table
-        rebound to the native-text-index-accelerated scan
-        (sources/native_text_index.py:read_segments_text_match —
-        AND/OR posting algebra with the exact translate_text_match
-        residual always re-applied). Reference:
-        pinot-core/.../filter/TextMatchFilterOperator.java +
-        NativeTextIndexReader.getDocIds."""
-
-        def build(segs, columns, col, lucene):
-            from hurricanedb_spark.sources.native_text_index import (
-                read_segments_text_match,
-            )
-
-            return read_segments_text_match(self.spark, segs, col, lucene, columns)
-
-        out = self._conjunct_accel_rewrite(query, _TEXT_MATCH_CALL, "tm", build)
-        self.last_text_match_accel = out[0] is not query
-        return out
-
-    def _text_contains_rewrite(self, query: str):
-        """TEXT_CONTAINS access path: the dialect macro translates
-        TEXT_CONTAINS(col, 'lit') to raw contains(col, 'lit'), and for a
-        plain alphanumeric literal that is exactly the TEXT_MATCH
-        plain-term shape — so the rebind reuses read_segments_text_match
-        (substring-superset vocabulary union, stop-word guards, exact
-        residual). Only bare [A-Za-z0-9]+ literals qualify; anything
-        else keeps the scan."""
-
-        def build(segs, columns, col, lit):
-            from hurricanedb_spark.sources.native_text_index import (
-                read_segments_text_match,
-            )
-
-            return read_segments_text_match(self.spark, segs, col, lit, columns)
-
-        out = self._conjunct_accel_rewrite(
-            query, _TEXT_CONTAINS_CALL, "tc", build
-        )
-        self.last_text_contains_accel = out[0] is not query
-        return out
-
-    def _geo_radius_rewrite(self, query: str):
-        """Geo grid index access path: a sole-conjunct
-        `ST_Distance(ST_GeomFromText(col), ST_Point(lon, lat)) < r` over
-        a segment-backed table rebinds to the candidate-cell superset
-        scan (sources/geo_index.py:read_segments_geo_radius with
-        apply_residual=False — the query KEEPS its own distance
-        predicate, so exactly one residual expression decides the rows;
-        the index can only skip segments/docs outside the radius's bbox
-        cells). Reference: H3IndexFilterOperator.java:100-160."""
-
-        def build(segs, columns, col, lonlatr):
-            lon, lat, r = lonlatr
-            from hurricanedb_spark.sources.geo_index import (
-                read_segments_geo_radius,
-            )
-
-            return read_segments_geo_radius(
-                self.spark, segs, col, lon, lat, r, columns,
-                apply_residual=False,
-            )
-
-        out = self._conjunct_accel_rewrite(
-            query,
-            _GEO_RADIUS_CALL,
-            "geo",
-            build,
-            parse_groups=lambda g: (g[0], (float(g[1]), float(g[2]), float(g[3]))),
-        )
-        self.last_geo_radius_accel = out[0] is not query
-        return out
-
     _FROM_TBL = re.compile(
         r"\bFROM\s+([A-Za-z_][A-Za-z0-9_]*)\b(?!\s*\()", re.IGNORECASE
     )
@@ -3423,7 +3334,7 @@ class HurricaneSQL:
             except Exception:  # noqa: BLE001 — unknown table
                 return None
         src = query.rstrip().rstrip(";")
-        spans = _outer_clause_spans(_mask_literals(src))
+        spans = _outer_clause_spans(mask(src))
         if spans is None:
             return None
 
@@ -3445,7 +3356,7 @@ class HurricaneSQL:
         except Exception:  # noqa: BLE001 — unresolvable subtree
             return None
 
-    def _theta_bytes_rewrite(self, query: str) -> str:
+    def _theta_bytes_rewrite(self, query: str):
         """distinctCountThetaSketch / RawThetaSketch over a BYTES column
         unions the PRE-BUILT sketches stored in it — the reference
         type-dispatches on the input column
@@ -3479,10 +3390,10 @@ class HurricaneSQL:
         }
         calls = _find_calls(query, names)
         if not calls:
-            return query
+            return query, None, None
         src_df = self._theta_bytes_source(query)
         if src_df is None:
-            return query
+            return query, None, None
         schema = {
             f.name.lower(): f.dataType for f in src_df.schema.fields
         }
@@ -3587,7 +3498,7 @@ class HurricaneSQL:
                 out.append(query[start:end])
             pos = end
         out.append(query[pos:])
-        return "".join(out)
+        return "".join(out), None, None
 
     def _rd_wrap_subtree(self, query: str, masked: str, names: set[str]):
         """Round-11: two-phase raw-digest builds for NON-single-table
@@ -3614,13 +3525,13 @@ class HurricaneSQL:
         anything whose rebuilt form fails a dry-run analysis — the final
         query is analyzed here before committing, so a wrap can never
         turn a previously-working query into an error."""
-        noop = (query, lambda: None)
+        noop = (query, None, None)
         low = masked.lower()
         if re.search(
             r"\bunion\b|\bintersect\b|\bexcept\b|\bselect\s+distinct\b", low
         ):
             return noop
-        spans = _outer_clause_spans(_mask_literals(query.rstrip().rstrip(";")))
+        spans = _outer_clause_spans(mask(query.rstrip().rstrip(";")))
         if spans is None:
             return noop
         src = query.rstrip().rstrip(";")
@@ -3639,23 +3550,16 @@ class HurricaneSQL:
         if _find_calls(fromw, names):
             return noop  # digest built inside the subtree: nested shape
         view_sql = (f"WITH {withp} " if withp else "") + f"SELECT * FROM {fromw}"
-        uniq = f"__rdsub_{uuid.uuid4().hex}"
         try:
             vdf = self.spark.sql(rewrite_functions(view_sql))
-            vdf.createOrReplaceTempView(uniq)
         except Exception:  # noqa: BLE001 — unresolvable subtree: fallback
             return noop
-
-        def drop(uniq=uniq):
-            try:
-                self.spark.catalog.dropTempView(uniq)
-            except Exception:  # noqa: BLE001 — already gone
-                pass
+        uniq, drop = self._bind_view(vdf, "rdsub")
 
         # round-14 (r13 verdict #3): qualified stars (`t.*`) expand to
         # explicit per-column refs against the ORIGINAL FROM scope, so
         # those spellings restructure too instead of single-phasing
-        if re.search(r"\.\s*\*", _mask_literals(sel)):
+        if re.search(r"\.\s*\*", mask(sel)):
 
             def _star_cols(q):
                 try:
@@ -3760,7 +3664,7 @@ class HurricaneSQL:
             rebuilt += f" LIMIT {lim}"
         inner_cleanup = None
         try:
-            out, inner_cleanup = self._raw_digest_two_phase(rebuilt)
+            out, inner_cleanup, _ = self._raw_digest_two_phase(rebuilt)
             if out == rebuilt:
                 drop()
                 return noop
@@ -3780,7 +3684,7 @@ class HurricaneSQL:
             inner()
             drop()
 
-        return out, cleanup
+        return out, cleanup, None
 
     def _raw_digest_two_phase(self, query: str):
         """Two-phase (partial -> merge) routing for the raw mergeable
@@ -3815,8 +3719,8 @@ class HurricaneSQL:
         operations, SELECT DISTINCT, star-selects, ordinal/aliased
         GROUP BY, ambiguous/struct dotted refs, unresolvable tables. BYTES-column theta calls never
         reach here (_theta_bytes_rewrite runs first). Returns
-        (query, cleanup)."""
-        noop = (query, lambda: None)
+        (query, cleanup, note)."""
+        noop = (query, None, None)
         names = {
             "percentilerawest",
             "percentilerawtdigest",
@@ -3829,7 +3733,7 @@ class HurricaneSQL:
         }
         if not _find_calls(query, names):
             return noop
-        masked = _mask_literals(query)
+        masked = mask(query)
         low = masked.lower()
         if len(re.findall(r"\bfrom\b", low)) != 1 or re.search(
             r"\bjoin\b|\bunion\b|\bwith\b|\bselect\s+distinct\b", low
@@ -4110,11 +4014,7 @@ class HurricaneSQL:
             # with its documented bound or raises the same error with
             # the original query's context
             return noop
-        uniq = f"__rawdg_{uuid.uuid4().hex}"
-        view.createOrReplaceTempView(uniq)
-
-        def cleanup(uniq=uniq):
-            self.spark.catalog.dropTempView(uniq)
+        uniq, cleanup = self._bind_view(view, "rawdg")
 
         def _body(
             kind: str, k: int, alias: str, agg: bool, qualify: bool
@@ -4247,7 +4147,7 @@ class HurricaneSQL:
                     out = f"SELECT {', '.join(gsel)} FROM {uniq}"
                     if grp("lim"):
                         out += f" LIMIT {grp('lim')}"
-                    return out, cleanup
+                    return out, cleanup, None
                 # fall through to the join-back (mixed shapes)
             else:
                 out = f"SELECT {', '.join(pure_sel)} FROM {uniq}"
@@ -4255,7 +4155,7 @@ class HurricaneSQL:
                     out += f" ORDER BY {', '.join(pure_oby)}"
                 if grp("lim"):
                     out += f" LIMIT {grp('lim')}"
-                return out, cleanup
+                return out, cleanup, None
 
         # JOIN-BACK path
         if gby:
@@ -4276,194 +4176,113 @@ class HurricaneSQL:
             out += f" ORDER BY {_subst(grp('oby'), True)}"
         if grp("lim"):
             out += f" LIMIT {grp('lim')}"
-        return out, cleanup
+        return out, cleanup, None
 
-    def _multi_index_rewrite(self, query: str):
-        """AND-composition of index access paths (round-8 item 5): when
-        the WHERE clause is a plain AND conjunction containing TWO OR
-        MORE accelerable calls (JSON_MATCH / TEXT_MATCH / TEXT_CONTAINS
-        / the geo radius shape) over ONE segment-backed table, each call
-        contributes its per-segment docId bound and the table is rebound
-        to a scan over the INTERSECTED allowlists with the exact
-        residual conjunction re-applied — the reference's AND filter
-        composition (FilterOperatorUtils.java:183-220 intersects child
-        filter bitmaps before the forward-index read). Single-call
-        queries keep their dedicated paths; any boolean structure beyond
-        a top-level AND chain keeps the scan. Returns (query, cleanup)."""
-        noop = (query, lambda: None)
-        self.last_multi_index_accel = None
-        if not self._segment_tables:
-            return noop
-        if re.search(r"\bJOIN\b", query, re.IGNORECASE):
-            return noop
-        wm = re.search(
-            r"\bWHERE\b(?P<span>.*?)(?:\bGROUP\s+BY\b|\bORDER\s+BY\b"
-            r"|\bHAVING\b|\bLIMIT\b|$)",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not wm:
-            return noop
-        span = wm.group("span")
-        call_kinds = (
-            ("JSON_INDEX", _JSON_MATCH_CALL),
-            ("TEXT_INDEX", _TEXT_MATCH_CALL),
-            ("TEXT_INDEX", _TEXT_CONTAINS_CALL),
-            ("H3_INDEX", _GEO_RADIUS_CALL),
-        )
-        found = []
-        for kind, cre in call_kinds:
-            # every occurrence in the query must sit inside the WHERE
-            # span (a projection/HAVING placement is not a conjunct)
-            if len(cre.findall(query)) != len(cre.findall(span)):
-                return noop
-            found.extend((kind, cre, m) for m in cre.finditer(span))
-        if len(found) < 2:
-            return noop  # single-call shapes keep their dedicated paths
-        span_wo = span
-        for _, cre, _ in found:
-            span_wo = cre.sub("", span_wo)
-        if re.search(r"\bOR\b|\bNOT\b|[()]", span_wo, re.IGNORECASE):
-            return noop
-        from hurricanedb_spark.sources.geo_index import geo_radius_segment_docs
-        from hurricanedb_spark.sources.index_compose import (
-            read_segments_multi_index,
-        )
-        from hurricanedb_spark.sources.json_index import json_match_segment_docs
-        from hurricanedb_spark.sources.native_text_index import (
-            text_match_segment_docs,
-        )
-        from hurricanedb_spark.sql.json_match import translate_json_match
+    def _bind_view(self, df: DataFrame, tag: str):
+        """Register `df` under a fresh uuid-named temp view; returns
+        (view name, drop). The uuid keeps concurrent sql() calls from
+        colliding without shared mutable state, and the shared view a
+        table is registered under is never touched."""
+        uniq = f"__{tag}_{uuid.uuid4().hex}"
+        df.createOrReplaceTempView(uniq)
 
-        plan_fns, residuals, pred_cols, kinds = [], [], [], []
-        for kind, cre, m in found:
-            kinds.append(kind)
-            if cre is _JSON_MATCH_CALL:
-                col, cond = m.group(1), m.group(2).replace("''", "'")
-                plan_fns.append(
-                    lambda s, c=col, q=cond: json_match_segment_docs(s, c, q)
-                )
-                residuals.append(translate_json_match(col, cond))
-            elif cre is _TEXT_MATCH_CALL:
-                col, lucene = m.group(1), m.group(2).replace("''", "'")
-                plan_fns.append(
-                    lambda s, c=col, q=lucene: text_match_segment_docs(s, c, q)
-                )
-                residuals.append(translate_text_match(col, lucene))
-            elif cre is _TEXT_CONTAINS_CALL:
-                col, lit = m.group(1), m.group(2)
-                plan_fns.append(
-                    lambda s, c=col, q=lit: text_match_segment_docs(s, c, q)
-                )
-                residuals.append(f"contains({col}, '{lit}')")
-            else:  # geo radius: the query keeps its own distance residual
-                col = m.group(1)
-                lon, lat, r = (
-                    float(m.group(2)),
-                    float(m.group(3)),
-                    float(m.group(4)),
-                )
-                plan_fns.append(
-                    lambda s, c=col, a=lon, b=lat, rr=r: geo_radius_segment_docs(
-                        s, c, a, b, rr
-                    )
-                )
-            pred_cols.append(col)
-        for name, (segs, columns) in self._segment_tables.items():
-            from_ref = re.compile(
-                rf"(\bFROM\s+){re.escape(name)}\b", re.IGNORECASE
-            )
-            if len(from_ref.findall(query)) != 1:
-                continue
-            view = self.spark.table(name)
-            if not set(pred_cols) <= set(view.columns):
-                continue
-            residual = (
-                " AND ".join(f"({r})" for r in residuals) if residuals else "true"
-            )
-            uniq = f"__multi_accel_{uuid.uuid4().hex}"
-            read_segments_multi_index(
-                self.spark,
-                segs,
-                plan_fns,
-                residual,
-                columns,
-                list(dict.fromkeys(pred_cols)),
-            ).createOrReplaceTempView(uniq)
-            rewritten = from_ref.sub(rf"\g<1>{uniq}", query)
-
-            def cleanup(uniq=uniq):
+        def drop():
+            try:
                 self.spark.catalog.dropTempView(uniq)
+            except Exception:  # noqa: BLE001 — already gone
+                pass
 
-            self.last_multi_index_accel = sorted(set(kinds))
-            return rewritten, cleanup
-        return noop
+        return uniq, drop
 
-    def _conjunct_accel_rewrite(
-        self, query: str, call_re, tag: str, build, parse_groups=None
-    ):
-        """Shared rebind machinery for single-conjunct index
-        accelerations (JSON_MATCH / TEXT_MATCH): validate the safe
-        shape, create a uuid-named temp view over the accelerated scan,
-        and splice it into the FROM clause. Returns (query, cleanup)."""
-        noop = (query, lambda: None)
-        if not self._segment_tables:
-            return noop
-        calls = call_re.findall(query)
-        if len(calls) != 1:  # only the unambiguous single-call shape
-            return noop
-        if re.search(r"\bJOIN\b", query, re.IGNORECASE):
-            return noop
-        # the call must be inside the WHERE clause...
-        wm = re.search(
-            r"\bWHERE\b(?P<span>.*?)(?:\bGROUP\s+BY\b|\bORDER\s+BY\b"
-            r"|\bHAVING\b|\bLIMIT\b|$)",
-            query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not wm:
-            return noop
-        span = wm.group("span")
-        if not call_re.search(span):
-            return noop  # projection/HAVING placement: not a conjunct
-        # ...and the WHERE must be a plain AND conjunction: any OR/NOT
-        # (or boolean parens beyond the call's own) makes the
-        # pre-filtered source unsound
-        span_wo_call = call_re.sub("", span)
-        if re.search(r"\bOR\b|\bNOT\b|[()]", span_wo_call, re.IGNORECASE):
-            return noop
-        if parse_groups is not None:
-            col, cond = parse_groups(calls[0])
-        else:
-            col, cond = calls[0][0], calls[0][1].replace("''", "'")
+    def _segment_from_refs(self, masked: str):
+        """(name, segment dirs, columns, span of the name) for each
+        segment table that the masked query names in exactly one
+        `FROM <table>` — the reference a pass may rebind to a view."""
         for name, (segs, columns) in self._segment_tables.items():
-            from_ref = re.compile(
-                rf"(\bFROM\s+){re.escape(name)}\b", re.IGNORECASE
-            )
-            refs = from_ref.findall(query)
-            if len(refs) != 1:
-                continue
-            view = self.spark.table(name)
-            if col not in view.columns:
-                continue  # the predicate targets some other table
-            # uuid view name: collision-free across the threaded query
-            # server's concurrent sql() calls without shared mutable
-            # state (round-6 advice — a shared counter raced)
-            uniq = f"__{tag}_accel_{uuid.uuid4().hex}"
-            build(segs, columns, col, cond).createOrReplaceTempView(uniq)
-            rewritten = from_ref.sub(rf"\g<1>{uniq}", query)
+            from_ref = rf"\bFROM\s+({re.escape(name)})\b"
+            refs = [m.span(1) for m in re.finditer(from_ref, masked, re.I)]
+            if len(refs) == 1:
+                yield name, segs, columns, refs[0]
 
-            def cleanup(uniq=uniq):
-                self.spark.catalog.dropTempView(uniq)
+    def _index_pass(self, query: str):
+        """Index access paths for segment-backed tables. When the WHERE
+        clause is a plain AND chain holding accelerable calls (the kinds
+        in _INDEX_KINDS) over ONE segment table, the table reference is
+        rebound to a uuid view over the index-accelerated scan: zero-match
+        segments are skipped, survivors decode only their allowlisted
+        docs, and the full predicate still runs, so the index can only
+        remove work, never change results. One call uses its kind's
+        dedicated reader; two or more intersect their per-segment docId
+        allowlists under one shared residual — the reference's AND filter
+        composition (FilterOperatorUtils.java:183-220). Only WHERE calls
+        pick the path; a kind with calls both inside and outside the
+        WHERE keeps the scan, as do a JOIN and OR / NOT / parens beyond
+        the calls' own (a pre-filtered source would lose rows there).
+        Shape checks run on masked text (sql/lexer.py lexes like Spark),
+        so literals and comments never decide the shape."""
+        if not self._segment_tables:
+            return query, None, None
+        masked = mask(query)
+        wm = _WHERE_SPAN.search(masked)
+        if not wm or re.search(r"\bJOIN\b", masked, re.IGNORECASE):
+            return query, None, None
+        lo, hi = wm.span("span")
+        found = [
+            (kind, m, lo <= m.start() < m.end() <= hi)
+            for kind in _INDEX_KINDS
+            for m in kind.call.finditer(query)
+            if masked[m.start()] == query[m.start()]  # not in a literal
+        ]
+        calls = [(kind, m) for kind, m, inside in found if inside]
+        outside = {kind for kind, _, inside in found if not inside}
+        if not calls or any(kind in outside for kind, _ in calls):
+            return query, None, None
+        rest = list(masked)
+        for _, m in calls:
+            rest[m.start() : m.end()] = " " * (m.end() - m.start())
+        if re.search(r"\bOR\b|\bNOT\b|[()]", "".join(rest[lo:hi]), re.IGNORECASE):
+            return query, None, None
+        parsed = [(kind, *kind.parse(m)) for kind, m in calls]
+        cols = list(dict.fromkeys(col for _, col, _ in parsed))
+        for name, segs, columns, (s, e) in self._segment_from_refs(masked):
+            if not set(cols) <= set(self.spark.table(name).columns):
+                continue  # the predicates target some other table
+            if len(parsed) == 1:
+                kind, col, arg = parsed[0]
+                df = kind.read(self.spark, segs, col, arg, columns)
+                note = {
+                    kind.note: True,
+                    "access_path": f"accessPath: {kind.access} ({kind.explain})",
+                }
+            else:
+                residual = " AND ".join(
+                    f"({r})" for kind, col, arg in parsed
+                    if (r := kind.residual(col, arg))
+                )
+                df = read_segments_multi_index(
+                    self.spark,
+                    segs,
+                    [
+                        lambda seg, k=kind, c=col, a=arg: k.docs(seg, c, a)
+                        for kind, col, arg in parsed
+                    ],
+                    residual or "true",
+                    columns,
+                    cols,
+                )
+                kinds = sorted({kind.access for kind, _, _ in parsed})
+                note = {
+                    "multi_index_accel": kinds,
+                    "access_path": f"accessPath: AND_COMPOSED({', '.join(kinds)}) "
+                    "(intersected docId allowlists + shared residual)",
+                }
+            uniq, drop = self._bind_view(df, "index_accel")
+            return query[:s] + uniq + query[e:], drop, note
+        return query, None, None
 
-            return rewritten, cleanup
-        return noop
-
-    _SQL_LITERAL_RE = re.compile(r"'(?:[^']|'')*'")
-    _SQL_LINE_COMMENT_RE = re.compile(r"--[^\n]*")
     _SQL_COUNT_STAR_RE = re.compile(r"\bCOUNT\s*\(\s*\*\s*\)", re.IGNORECASE)
 
-    def _column_prune_rewrite(self, query: str):
+    def _column_prune_pass(self, query: str):
         """Per-query column pruning for segment-backed tables (round-16,
         r15 verdict #5). A segment scan is mapInPandas — opaque to
         Catalyst, so projection pruning can never reach the decode: a
@@ -4473,32 +4292,33 @@ class HurricaneSQL:
         set into `read_segments(columns=...)` through a uuid temp view
         (same rebind pattern as the index accelerations).
 
-        Conservative in the SAFE direction: after stripping string
-        literals and line comments, ANY token equal to a table column
-        counts as referenced — over-inclusion merely decodes an extra
-        column; a missed reference would fail analysis loudly, never
-        return wrong rows. A remaining `*` (SELECT * / t.* — COUNT(*)
-        is stripped first) or a non-single table reference keeps the
-        full decode. Runs AFTER the index rewrites, so it only fires
-        when no acceleration already rebound the table."""
-        noop = (query, lambda: None)
+        Conservative in the SAFE direction: outside literals and
+        comments, ANY token equal to a table column counts as
+        referenced — over-inclusion merely decodes an extra column; a
+        missed reference would fail analysis loudly, never return wrong
+        rows. A remaining `*` (SELECT * / t.* — COUNT(*) is stripped
+        first) or a non-single table reference keeps the full decode.
+        Runs AFTER the index rewrites, so it only fires when no
+        acceleration already rebound the table."""
         if not self._segment_tables:
-            return noop
-        self.last_column_prune = None
-        scrubbed = self._SQL_LITERAL_RE.sub(" ", query)
-        scrubbed = self._SQL_LINE_COMMENT_RE.sub(" ", scrubbed)
-        scrubbed = self._SQL_COUNT_STAR_RE.sub(" ", scrubbed)
+            return query, None, None
+        masked = mask(query)
+        scrubbed = self._SQL_COUNT_STAR_RE.sub(" ", masked)
         if "*" in scrubbed:
-            return noop  # SELECT * / t.*: the full row is referenced
-        idents = {t.lower() for t in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", scrubbed)}
-        for name, (segs, columns) in self._segment_tables.items():
-            from_ref = re.compile(rf"(\bFROM\s+){re.escape(name)}\b", re.IGNORECASE)
-            if len(from_ref.findall(query)) != 1:
-                continue
+            return query, None, None  # SELECT * / t.*: the full row is referenced
+        words = re.findall(r"[A-Za-z_][A-Za-z0-9_]*", scrubbed)
+        # backquoted identifiers are masked: read their names from the query
+        words += [
+            query[m.start() + 1 : m.end() - 1]
+            for m in re.finditer(r"`\x00*`", masked)
+        ]
+        words = [w.lower() for w in words]
+        idents = set(words)
+        for name, segs, _columns, (s, e) in self._segment_from_refs(masked):
             # the sole mention must BE the FROM ref: a second mention
             # (JOIN name, name.col qualified refs, a self-subquery)
             # would dangle after the rebind — keep the full decode
-            if len(re.findall(rf"\b{re.escape(name)}\b", scrubbed, re.IGNORECASE)) != 1:
+            if words.count(name.lower()) != 1:
                 continue
             visible = self.spark.table(name).columns
             used = [c for c in visible if c.lower() in idents]
@@ -4511,16 +4331,11 @@ class HurricaneSQL:
                 used = [self._narrowest_column(segs[0], visible)]
             from hurricanedb_spark.sources import pinot_segment as ps
 
-            uniq = f"__prune_accel_{uuid.uuid4().hex}"
-            ps.read_segments(self.spark, segs, used).createOrReplaceTempView(uniq)
-            rewritten = from_ref.sub(rf"\g<1>{uniq}", query)
-            self.last_column_prune = (name, used)
-
-            def cleanup(uniq=uniq):
-                self.spark.catalog.dropTempView(uniq)
-
-            return rewritten, cleanup
-        return noop
+            uniq, drop = self._bind_view(
+                ps.read_segments(self.spark, segs, used), "prune_accel"
+            )
+            return query[:s] + uniq + query[e:], drop, {"column_prune": (name, used)}
+        return query, None, None
 
     @staticmethod
     def _narrowest_column(segment_dir: str, visible: list[str]) -> str:
@@ -4584,28 +4399,18 @@ class HurricaneSQL:
         and the AND that belongs to a BETWEEN is kept with its predicate.
         Returns None on unbalanced input."""
         parts: list[str] = []
-        depth = 0
-        i, n, start = 0, len(txt), 0
+        masked = mask(txt)
+        depth = start = i = 0
         between_pending = False
-        while i < n:
-            c = txt[i]
-            if c == "'":
-                j = i + 1
-                while j < n and txt[j] != "'":
-                    j += 1
-                i = j + 1
-                continue
-            if c == "(":
-                depth += 1
-                i += 1
-                continue
-            if c == ")":
-                depth -= 1
+        while i < len(masked):
+            c = masked[i]
+            if c in "()":
+                depth += 1 if c == "(" else -1
                 if depth < 0:
                     return None
                 i += 1
                 continue
-            m = _TOKEN.match(txt, i)
+            m = _TOKEN.match(masked, i)
             if m and depth == 0:
                 word = m.group(0).upper()
                 if word == "BETWEEN":
@@ -4670,22 +4475,15 @@ class HurricaneSQL:
     def _st_outer_parens_match(part: str) -> bool:
         """True when part is '( ... )' with the first '(' closing at the
         very end (so stripping the pair is safe)."""
-        depth, i, n = 0, 0, len(part)
-        while i < n:
-            c = part[i]
-            if c == "'":
-                j = i + 1
-                while j < n and part[j] != "'":
-                    j += 1
-                i = j + 1
-                continue
+        depth = 0
+        masked = mask(part)
+        for i, c in enumerate(masked):
             if c == "(":
                 depth += 1
             elif c == ")":
                 depth -= 1
-                if depth == 0 and i < n - 1:
+                if depth == 0 and i < len(masked) - 1:
                     return False
-            i += 1
         return depth == 0
 
     def _st_parse_conjunct(self, part: str):
@@ -4845,9 +4643,9 @@ class HurricaneSQL:
         disables the redirect entirely (the tree pre-aggregated
         default-filled values; exact NULL semantics need the scan).
 
-        Returns (query, cleanup, info|None); info feeds
+        Returns (query, cleanup, note); the note's info feeds
         last_star_tree_redirect for observability/tests."""
-        noop = (query, lambda: None, None)
+        noop = (query, None, None)
         if not self._segment_tables:
             return noop
         shape = self._st_parse_shape(query)
@@ -4901,10 +4699,12 @@ class HurricaneSQL:
         if n_fit == 0:
             return noop
         key_cols = list(dict.fromkeys([*shape["group_cols"], *filter_cols]))
-        uniq = f"__st_accel_{uuid.uuid4().hex}"
-        st.read_segments_star_tree(
-            self.spark, segs, key_cols, shape["pairs"], shape["conjuncts"]
-        ).createOrReplaceTempView(uniq)
+        uniq, cleanup = self._bind_view(
+            st.read_segments_star_tree(
+                self.spark, segs, key_cols, shape["pairs"], shape["conjuncts"]
+            ),
+            "st_accel",
+        )
         out_items = []
         for kind, payload in shape["items"]:
             if kind == "dim":
@@ -4954,18 +4754,46 @@ class HurricaneSQL:
             parts.append(f"GROUP BY {', '.join(shape['group_cols'])}")
         if shape["tail"]:
             parts.append(shape["tail"])
-        rewritten = " ".join(parts)
-
-        def cleanup(uniq=uniq):
-            self.spark.catalog.dropTempView(uniq)
-
         info = {
             "view": uniq,
             "pairs": shape["pairs"],
             "segments_tree": n_fit,
             "segments_scan": len(segs) - n_fit,
         }
-        return rewritten, cleanup, info
+        return " ".join(parts), cleanup, {
+            "star_tree_redirect": info,
+            "access_path": "accessPath: STAR_TREE "
+            f"(segments from tree: {n_fit}, "
+            f"scan fallback: {len(segs) - n_fit}, "
+            f"pairs: {','.join(shape['pairs'])})",
+        }
+
+    def _analyze_cols(self, view_sql: str) -> tuple[list[str], list[str]] | None:
+        """(column names, dot-accessible column names — struct/map/
+        array-of-struct) of a SELECT (analyzer only, nothing executes) —
+        the qualifier-strip callback for the bounded restructures. None =
+        unresolvable, caller declines."""
+        try:
+            fields = self.spark.sql(rewrite_functions(view_sql)).schema.fields
+            return [f.name for f in fields], _dot_accessible_cols(fields)
+        except Exception:  # noqa: BLE001 — unresolvable subtree
+            return None
+
+    # sql() runs these in order; each is pass(self, query) -> (query,
+    # cleanup or None, note or None). A note is a dict of per-request
+    # facts: last_<field> values and the EXPLAIN `access_path` line.
+    # The default limit is applied after the last of them.
+    _PASSES = (
+        _guarded(rewrite_mv_percentile_bounded),
+        _guarded(rewrite_mode_avg_bounded),
+        _theta_bytes_rewrite,
+        _index_pass,
+        _star_tree_rewrite,
+        _raw_digest_two_phase,
+        _column_prune_pass,
+        _string_pass(rewrite_json_match),
+        _string_pass(rewrite_functions),
+    )
 
     def sql(self, query: str, default_limit: int | None = 10) -> DataFrame:
         query, opts = extract_query_options(query)
@@ -4977,53 +4805,21 @@ class HurricaneSQL:
         #     (default-value substitution), see __init__.
         #   timeoutMs — advisory; recorded for the caller/server layer.
         #   limit via SET — not a Pinot option; LIMIT stays in the query.
-        self.last_query_options = opts
         explain_impl = bool(_EXPLAIN_IMPL_RE.match(query))
         if explain_impl:
             query = _EXPLAIN_IMPL_RE.sub("", query)
         explain = bool(_EXPLAIN_RE.match(query))
         if explain:
             query = _EXPLAIN_RE.sub("", query)
-        # each accel rewrite may create a temp view; collect the cleanups
-        # as they are created so a ValueError from a LATER rewrite step (or
-        # from rewrite_functions) still drops the views already registered
-        # — otherwise they leak in the session catalog
+        # this request's notes: per thread, so a concurrent request on
+        # the threaded broker can never overwrite them
+        notes = [{"query_options": opts}]
+        self._request.notes = notes
+        # each pass may create a temp view; collect the cleanups as they
+        # are created so a ValueError from a LATER pass still drops the
+        # views already registered — otherwise they leak in the session
+        # catalog
         cleanups: list = []
-
-        def _analyze_cols(
-            view_sql: str,
-        ) -> tuple[list[str], list[str]] | None:
-            """(column names, dot-accessible column names — struct/map/
-            array-of-struct) of a SELECT (analyzer only, nothing
-            executes) — the qualifier-strip callback for the bounded
-            restructures. None = unresolvable, caller declines."""
-            try:
-                fields = self.spark.sql(
-                    rewrite_functions(view_sql)
-                ).schema.fields
-                return (
-                    [f.name for f in fields],
-                    _dot_accessible_cols(fields),
-                )
-            except Exception:  # noqa: BLE001 — unresolvable subtree
-                return None
-
-        def _guarded(rewrite, q0: str) -> str:
-            """Run a pure-string bounded restructure under the
-            'a rewrite can never break a working query' contract
-            (round-11 ADVICE): when it changed the query, dry-run-analyze
-            the result (same macro expansion the caller applies) and keep
-            the original on ANY failure — e.g. a user CTE named
-            _mvsrc/_msrc, or a subtree column colliding with generated
-            aliases (_mv, _gk_*)."""
-            out = rewrite(q0, analyze=_analyze_cols)
-            if out != q0:
-                try:
-                    self.spark.sql(rewrite_functions(rewrite_json_match(out)))
-                except Exception:  # noqa: BLE001 — macro path still works
-                    return q0
-            return out
-
         # expose the query's options to the pure-string rewrites
         # (thetaEstimate opt-in); restored in the finally below. Stored
         # per-thread so concurrent sql() calls never see each other's
@@ -5031,68 +4827,31 @@ class HurricaneSQL:
         prev_opts = _active_query_options()
         _ACTIVE_QUERY_OPTIONS.opts = opts
         try:
-            q = _guarded(rewrite_mv_percentile_bounded, query)
-            q = _guarded(rewrite_mode_avg_bounded, q)
-            q = self._theta_bytes_rewrite(q)
-            q, drop_multi_view = self._multi_index_rewrite(q)
-            cleanups.append(drop_multi_view)
-            q, drop_accel_view = self._json_match_rewrite(q)
-            cleanups.append(drop_accel_view)
-            q, drop_tm_view = self._text_match_rewrite(q)
-            cleanups.append(drop_tm_view)
-            q, drop_tc_view = self._text_contains_rewrite(q)
-            cleanups.append(drop_tc_view)
-            q, drop_geo_view = self._geo_radius_rewrite(q)
-            cleanups.append(drop_geo_view)
-            q, drop_st_view, st_info = self._star_tree_rewrite(q)
-            cleanups.append(drop_st_view)
-            self.last_star_tree_redirect = st_info
-            q, drop_rd_view = self._raw_digest_two_phase(q)
-            cleanups.append(drop_rd_view)
-            q, drop_prune_view = self._column_prune_rewrite(q)
-            cleanups.append(drop_prune_view)
-            q = rewrite_json_match(q)
-            q = rewrite_functions(q)
+            for rewrite in self._PASSES:
+                query, cleanup, note = rewrite(self, query)
+                if cleanup is not None:
+                    cleanups.append(cleanup)
+                if note:
+                    notes.append(note)
             if default_limit is not None and not explain and not explain_impl:
-                q = apply_default_limit(q, default_limit)
+                query = apply_default_limit(query, default_limit)
             # spark.sql analyzes eagerly: the accelerated temp view (if
             # any) is inlined into the plan here, so dropping it right
             # after cannot affect this query's execution
-            df = self.spark.sql(q)
+            df = self.spark.sql(query)
         finally:
             _ACTIVE_QUERY_OPTIONS.opts = prev_opts
             for drop in cleanups:
                 drop()
         if explain_impl:
-            plan = explain_implementation_plan(df)
             # access-path annotations: the reference's explain names the
             # chosen filter operator (FILTER_JSON_INDEX /
             # FILTER_TEXT_INDEX / StarTreeFilterOperator); surface which
-            # index rewrite actually bound this query's source
-            notes = []
-            if getattr(self, "last_multi_index_accel", None):
-                notes.append(
-                    "accessPath: AND_COMPOSED("
-                    + ", ".join(self.last_multi_index_accel)
-                    + ") (intersected docId allowlists + shared residual)"
-                )
-            if getattr(self, "last_json_match_accel", False):
-                notes.append("accessPath: JSON_INDEX (segment skip + docId allowlist + residual)")
-            if getattr(self, "last_text_match_accel", False):
-                notes.append("accessPath: TEXT_INDEX (posting algebra + residual)")
-            if getattr(self, "last_text_contains_accel", False):
-                notes.append("accessPath: TEXT_INDEX (term posting + residual)")
-            if getattr(self, "last_geo_radius_accel", False):
-                notes.append("accessPath: H3_INDEX (candidate cells + residual)")
-            if st_info:
-                notes.append(
-                    "accessPath: STAR_TREE "
-                    f"(segments from tree: {st_info['segments_tree']}, "
-                    f"scan fallback: {st_info['segments_scan']}, "
-                    f"pairs: {','.join(st_info['pairs'])})"
-                )
-            if notes:
-                plan = "\n".join(notes) + "\n" + plan
+            # pass actually bound this query's source
+            plan = "\n".join(
+                [n["access_path"] for n in notes if "access_path" in n]
+                + [explain_implementation_plan(df)]
+            )
             return self.spark.createDataFrame([(plan,)], "plan string")
         if explain:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -5100,3 +4859,31 @@ class HurricaneSQL:
             )
             return self.spark.createDataFrame([(plan,)], "plan string")
         return df
+
+
+# last_<field>: what the last sql() call on the calling thread noted
+# under <field>, or the default when no pass noted it
+_LAST_FIELDS = {
+    "query_options": {},
+    "multi_index_accel": None,
+    "json_match_accel": False,
+    "text_match_accel": False,
+    "text_contains_accel": False,
+    "geo_radius_accel": False,
+    "star_tree_redirect": None,
+    "column_prune": None,
+}
+
+
+def _last_property(field: str, default) -> property:
+    def get(self):
+        for note in getattr(self._request, "notes", ()):
+            if field in note:
+                return note[field]
+        return copy(default)
+
+    return property(get, doc=f"Per-thread: `{field}` of the last sql() call.")
+
+
+for _field, _default in _LAST_FIELDS.items():
+    setattr(HurricaneSQL, f"last_{_field}", _last_property(_field, _default))

@@ -52,8 +52,10 @@ def _json_cell(v):
     import datetime
     import decimal
 
-    if isinstance(v, (datetime.datetime, datetime.date)):
+    if isinstance(v, datetime.datetime):
         return v.isoformat(sep=" ")
+    if isinstance(v, datetime.date):
+        return v.isoformat()
     if isinstance(v, decimal.Decimal):
         return str(v)
     if isinstance(v, bytes):

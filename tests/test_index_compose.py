@@ -2,7 +2,7 @@
 
 The reference intersects child filter-operator bitmaps under AND before
 any forward-index read (FilterOperatorUtils.java:183-220). Here
-`HurricaneSQL._multi_index_rewrite` composes JSON_MATCH / TEXT_MATCH /
+`HurricaneSQL._index_pass` composes JSON_MATCH / TEXT_MATCH /
 TEXT_CONTAINS / geo-radius conjuncts over one segment-backed table into
 a single scan over per-segment INTERSECTED docId allowlists
 (sources/index_compose.py), with every residual re-applied. Every test
@@ -188,6 +188,70 @@ def test_explain_lists_composed_access_path(hq):
         "AND TEXT_MATCH(body, 'spark')"
     ).collect()[0]["plan"]
     assert "AND_COMPOSED(JSON_INDEX, TEXT_INDEX)" in plan
+
+
+@pytest.mark.parametrize(
+    "where,line",
+    [
+        (
+            "JSON_MATCH(props, '\"$.tag\" = ''alpha''')",
+            "accessPath: JSON_INDEX (segment skip + docId allowlist + residual)",
+        ),
+        (
+            "TEXT_MATCH(body, 'spark')",
+            "accessPath: TEXT_INDEX (posting algebra + residual)",
+        ),
+        (
+            "TEXT_CONTAINS(body, 'spark')",
+            "accessPath: TEXT_INDEX (term posting + residual)",
+        ),
+        (GEO_NEAR, "accessPath: H3_INDEX (candidate cells + residual)"),
+    ],
+)
+def test_explain_names_single_index_access_path(hq, where, line):
+    plan = hq.sql(
+        f"EXPLAIN IMPLEMENTATION PLAN FOR SELECT id FROM cmp_docs WHERE {where}"
+    ).collect()[0]["plan"]
+    assert plan.splitlines()[0] == line
+    assert plan.count("accessPath") == 1
+
+
+@pytest.mark.parametrize(
+    "rest,accelerated",
+    [
+        ("props <> 'alpha OR (NOT beta)'", True),
+        # Spark reads \' as an escaped quote and "..." as a string: the
+        # OR after them is real, so the scan is kept
+        ("props = 'it\\'s' OR id = 5", False),
+        ('props = "a--b" OR id = 5', False),
+        ('props = "/*" OR id = 5', False),
+    ],
+)
+def test_literal_text_never_decides_the_shape(spark, hq, rest, accelerated):
+    """OR / NOT / parens inside a string literal are data, lexed the way
+    Spark lexes them: the single call takes its index exactly when the
+    rest of the WHERE is a plain AND chain, and the rows are the scan's."""
+    where = f"TEXT_MATCH(body, 'spark') AND {rest}"
+    fast = hq.sql(f"SELECT id FROM cmp_docs WHERE {where}", default_limit=None)
+    got = sorted(r["id"] for r in fast.collect())
+    assert hq.last_text_match_accel == accelerated
+    assert got == _expected_ids(spark, where) and got
+
+
+def test_other_kind_outside_where_keeps_single_path(spark, hq):
+    """A call of another kind in the projection does not filter rows:
+    the WHERE's single call still takes its index."""
+    q = (
+        "SELECT id, TEXT_MATCH(body, 'spark') AS hit FROM cmp_docs "
+        "WHERE JSON_MATCH(props, '\"$.tag\" = ''alpha''')"
+    )
+    fast = sorted(tuple(r) for r in hq.sql(q, default_limit=None).collect())
+    assert hq.last_json_match_accel and hq.last_multi_index_accel is None
+    slow = sorted(
+        tuple(r)
+        for r in spark.sql(rewrite_functions(rewrite_json_match(q))).collect()
+    )
+    assert fast == slow and fast
 
 
 def test_group_by_aggregate_through_composition(spark, hq):

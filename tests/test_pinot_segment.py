@@ -1301,3 +1301,22 @@ def test_sql_column_pruned_segment_decode(spark, sf_dir, tmp_path):
     exp_s = docs.filter("lang = 'en'").agg(F.sum("n_chars")).collect()[0][0]
     assert got == exp_s
     assert hq.last_column_prune == ("docs_pruned", ["lang", "n_chars"])
+
+    # a column named only inside a block comment is not decoded
+    got = hq.sql(
+        "SELECT sum(n_chars) AS s /* text, doc_id */ FROM docs_pruned "
+        "WHERE lang = 'en'",
+        default_limit=None,
+    ).collect()[0]["s"]
+    assert got == exp_s
+    assert hq.last_column_prune == ("docs_pruned", ["lang", "n_chars"])
+
+    # a backquoted qualifier is a second mention of the table: the
+    # rebind would leave it dangling, so the full decode is kept
+    got = hq.sql(
+        "SELECT sum(`docs_pruned`.n_chars) AS s FROM docs_pruned "
+        "WHERE lang = 'en'",
+        default_limit=None,
+    ).collect()[0]["s"]
+    assert got == exp_s
+    assert hq.last_column_prune is None

@@ -4,10 +4,15 @@ ThreadingHTTPServer (the reference's main entry point, SURVEY.md §3.1)."""
 from __future__ import annotations
 
 import json
+import threading
 import urllib.request
 
+import numpy as np
+import pandas as pd
 import pytest
 
+from hurricanedb_spark.sources import pinot_segment as ps
+from hurricanedb_spark.sql import dialect
 from hurricanedb_spark.sql.dialect import HurricaneSQL
 from hurricanedb_spark.sql.server import serve
 
@@ -56,6 +61,76 @@ def test_pinot_dialect_over_http(endpoint):
 def test_default_limit_over_http(endpoint):
     _, out = _post(endpoint, {"sql": "SELECT l_orderkey FROM lineitem"})
     assert out["numRowsResultSet"] == 10  # broker default LIMIT 10
+
+
+def test_date_cells_over_http(spark, endpoint):
+    q = (
+        "SELECT CAST(l_shipdate AS DATE) AS ship_date, count(*) AS n "
+        "FROM lineitem GROUP BY 1 ORDER BY 1 LIMIT 3"
+    )
+    status, out = _post(endpoint, {"sql": q})
+    assert status == 200 and out["exceptions"] == []
+    rt = out["resultTable"]
+    assert rt["dataSchema"]["columnDataTypes"] == ["TIMESTAMP", "LONG"]
+    want = [[r["ship_date"].isoformat(), r["n"]] for r in spark.sql(q).collect()]
+    assert rt["rows"] == want and len(want) == 3
+    assert all(len(d) == 10 and d[4] == d[7] == "-" for d, _ in rt["rows"])
+
+
+def test_explain_access_path_survives_concurrent_request(
+    spark, tmp_path, monkeypatch
+):
+    """Request A's EXPLAIN is held after its passes ran; request B, a
+    plain query on the same HurricaneSQL, completes meanwhile. A's plan
+    must still name the access path A took, not what B did."""
+    words = ["spark engine", "quiet day"]
+    pdf = pd.DataFrame(
+        {
+            "id": np.arange(40, dtype=np.int64),
+            "body": [f"{words[i % 2]} {i}" for i in range(40)],
+        }
+    )
+    ps.write_segment_pandas(pdf, str(tmp_path / "seg_0"), text_index_columns=["body"])
+    hdb = HurricaneSQL(spark)
+    hdb.register_segment_table("race_docs", str(tmp_path))
+    entered, release = threading.Event(), threading.Event()
+    real_plan = dialect.explain_implementation_plan
+
+    def held_plan(df):
+        entered.set()
+        release.wait(120)
+        return real_plan(df)
+
+    monkeypatch.setattr(dialect, "explain_implementation_plan", held_plan)
+    server = serve(hdb, port=0)
+    url = "http://%s:%s" % server.server_address
+    got: dict = {}
+    a = threading.Thread(
+        target=lambda: got.update(
+            a=_post(
+                url,
+                {
+                    "sql": "EXPLAIN IMPLEMENTATION PLAN FOR SELECT id "
+                    "FROM race_docs WHERE TEXT_MATCH(body, 'spark')"
+                },
+            )[1]
+        )
+    )
+    try:
+        a.start()
+        assert entered.wait(120)
+        _, b = _post(url, {"sql": "SELECT count(*) AS n FROM race_docs"})
+        assert b["exceptions"] == [] and b["resultTable"]["rows"] == [[40]]
+    finally:
+        release.set()
+        a.join(120)
+        server.shutdown()
+    assert not a.is_alive()
+    assert got["a"]["exceptions"] == []
+    plan = got["a"]["resultTable"]["rows"][0][0]
+    assert plan.splitlines()[0] == (
+        "accessPath: TEXT_INDEX (posting algebra + residual)"
+    )
 
 
 def test_error_in_band(endpoint):
