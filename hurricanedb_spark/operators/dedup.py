@@ -384,6 +384,9 @@ def connected_components(
     and would otherwise force the singleton anti-join just to filter
     its rows straight back out.
 
+    `node_col` must be unique in `nodes`: a duplicated id that touches
+    an edge comes out once, a duplicated singleton once per copy.
+
     Returns (node_col, component) where component = min node id reachable.
     """
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))

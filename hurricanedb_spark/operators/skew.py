@@ -117,6 +117,8 @@ def fan_out(df: DataFrame, min_rows: int = 0) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         out = df
     else:
+        # the bound counts the input files' rows before any filter, so a
+        # heavily filtered small input over a big file still repartitions
         rows = _footer_row_bound(df) if min_rows else None
         if rows is not None and rows < min_rows:
             out = df

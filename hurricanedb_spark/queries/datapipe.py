@@ -374,8 +374,11 @@ def q_dedup_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = _footer_row_bound(doc)
     if n_docs is not None and 0 < thresh and n_docs * 32 <= thresh:
         losers = F.broadcast(losers)
+    # NULL doc_id matches no loser, so the anti join alone would keep it;
+    # the oracle's inner JOIN comp (and the earlier semi join) drop it.
     return (
-        doc.join(losers, "doc_id", "anti")
+        doc.filter(F.col("doc_id").isNotNull())
+        .join(losers, "doc_id", "anti")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("kept_docs"),

@@ -9,6 +9,18 @@ Spark's legacy 200.
 At 100 TB scale the same settings hold: AQE coalesces post-shuffle
 partitions to `advisoryPartitionSizeInBytes`, skew-join splitting handles
 hot keys, and broadcast joins keep dimension tables off the shuffle path.
+
+Python workers start from `_pydaemon` rather than `pyspark.daemon`. On
+Python < 3.13 PySpark's per-task `importlib.invalidate_caches()` makes
+every zipimporter into pyspark.zip re-read the archive's directory, a
+fixed cost of hundreds of milliseconds per task that dwarfs a small
+`mapInPandas` decode. `_pydaemon` makes that invalidation lazy, as
+CPython 3.13 does, and then runs the stock daemon; on 3.13+, or when
+`zipimport`'s private names are missing, it only runs the daemon. The
+package's parent directory is appended to the workers' PYTHONPATH so the
+daemon module imports from any working directory. Sessions built
+elsewhere (an existing SparkContext that `getOrCreate` returns) keep
+the stock daemon and its per-task cost.
 """
 
 from __future__ import annotations
@@ -16,6 +28,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the hurricanedb_spark package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -31,6 +46,8 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
+    extra_conf = dict(extra_conf or {})
+    worker_path = extra_conf.pop("spark.executorEnv.PYTHONPATH", "")
 
     builder = (
         SparkSession.builder.master(master)
@@ -61,8 +78,14 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("HURRICANE_DRIVER_MEM", "16g"))
+        # Python workers: see the module docstring
+        .config("spark.python.daemon.module", "hurricanedb_spark._pydaemon")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (worker_path, _PACKAGE_PARENT) if p),
+        )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

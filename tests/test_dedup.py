@@ -282,6 +282,47 @@ def test_connected_components_edge_subgraph_iteration(spark):
     assert sub == {1: 1, 2: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 21}
 
 
+def test_connected_components_duplicate_node_ids(spark):
+    """Pins today's output when `nodes` repeats an id (the docstring
+    requires unique ids): an edge-touching duplicate comes out once, a
+    singleton duplicate once per copy."""
+    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    nodes = spark.createDataFrame(
+        [(i,) for i in [1, 1, 2, 3, 3]], "doc_id long"
+    )
+    got = sorted(
+        tuple(r)
+        for r in dd.connected_components(
+            edges, "id_a", "id_b", nodes, "doc_id"
+        ).collect()
+    )
+    assert got == [(1, 1), (2, 1), (3, 3), (3, 3)]
+
+
+def test_dedup_clean_corpus_drops_null_doc_id(spark, sf_dir, tmp_path):
+    """A NULL doc_id joins no component in the oracle (inner JOIN comp),
+    so it must not survive the losers anti join either: appending one
+    NULL-id copy of a document leaves the per-language counts as they
+    were."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hurricanedb_spark.queries.datapipe import q_dedup_clean_corpus
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    null_row = docs.slice(0, 1).set_column(
+        0, "doc_id", pa.array([None], pa.int64())
+    )
+    pq.write_table(
+        pa.concat_tables([docs, null_row]), tmp_path / "documents.parquet"
+    )
+    base = sorted(tuple(r) for r in q_dedup_clean_corpus(spark, sf_dir).collect())
+    got = sorted(
+        tuple(r) for r in q_dedup_clean_corpus(spark, str(tmp_path)).collect()
+    )
+    assert got == base
+
+
 def test_two_step_tokenization_matches_inline_forms(spark):
     """Round-15: the materialized-token fast path (norm_tokens +
     shingles_from_tokens / ngram_set_from_tokens / simhash_from_hashed)

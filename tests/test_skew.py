@@ -84,3 +84,22 @@ def test_fan_out_footer_bound_unavailable_means_not_small(spark):
     narrow = spark.range(0, 100).coalesce(1)
     assert _footer_row_bound(narrow) is None
     assert fan_out(narrow, min_rows=10_000).rdd.getNumPartitions() == par
+
+
+def test_fan_out_filtered_file_input_still_repartitions(spark, sf_dir):
+    """The min_rows bound counts the file's rows before any filter: a
+    filter down to 5 rows over the 500-row documents file is not
+    "small", so the narrow scan still gets the exchange."""
+    import os
+
+    from hurricanedb_spark.operators.skew import _footer_row_bound, fan_out
+
+    par = spark.sparkContext.defaultParallelism
+    doc = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    few = doc.filter(F.col("doc_id") < 5)
+    assert few.rdd.getNumPartitions() < par
+    assert _footer_row_bound(few) == doc.count() >= 100
+    out = fan_out(few, min_rows=100)
+    assert out is not few
+    assert out.rdd.getNumPartitions() == par
+    assert sorted(r.doc_id for r in out.collect()) == [0, 1, 2, 3, 4]
