@@ -946,7 +946,7 @@ def q_segment_text_index_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "index from plain dialect SQL (TextMatchFilterOperator.java + "
     "NativeTextIndexReader.getDocIds analog, sql/dialect.py:"
     "_index_pass -> sources/native_text_index.py:"
-    "read_segments_text_match): the segment store registers as a table, "
+    "text_match_segment_docs): the segment store registers as a table, "
     "TEXT_MATCH(text, 'spark AND merge') prunes via AND-intersected "
     "postings (substring-superset unions, so 'spark' also reaches "
     "'sparkly'), and the exact translated residual re-applies. The "
@@ -1035,10 +1035,10 @@ def _docs_multi_index_store(spark: SparkSession, sf_dir: str) -> str:
     """,
     doc="AND-composed index access from plain dialect SQL "
     "(FilterOperatorUtils.java:183-220 analog, sql/dialect.py:"
-    "_index_pass -> sources/index_compose.py): JSON_MATCH AND "
-    "TEXT_MATCH over one dual-indexed segment store intersect their "
-    "per-segment docId allowlists before decode, with the residual "
-    "conjunction re-applied. The query raises if the composition did "
+    "_index_pass -> sources/pinot_segment.py:read_segments(bounds=...)): "
+    "JSON_MATCH AND TEXT_MATCH over one dual-indexed segment store "
+    "intersect their per-segment docId allowlists before decode, and "
+    "the query's own WHERE re-applies. The query raises if the composition did "
     "not fire; the oracle replays the predicates over the raw parquet.",
     tags=("sources", "segment-format", "json", "text", "dialect"),
 )

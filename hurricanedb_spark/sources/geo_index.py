@@ -197,8 +197,7 @@ def geo_radius_segment_docs(
     """Per-segment candidate docIds for one radius predicate: None = no
     readable index or a radius the grid cannot bound (full decode),
     else the candidate-cell docId superset (possibly empty = segment
-    pruned). The unit the AND-composition intersects
-    (sources/index_compose.py)."""
+    pruned). The unit read_segments' `bounds` intersect."""
     try:
         idx = read_geo_index(segment_dir, col)
     except Exception:  # noqa: BLE001 — no/unreadable index: full decode
@@ -217,7 +216,6 @@ def read_segments_geo_radius(
     center_lat: float,
     radius_m: float,
     columns: list[str] | None = None,
-    apply_residual: bool = True,
 ):
     """Geo-index-accelerated distance filter: per segment, the `.h3.idx`
     postings of the radius's candidate cells bound the docs — zero-match
@@ -225,37 +223,15 @@ def read_segments_geo_radius(
     exact haversine residual ALWAYS re-applies (every candidate cell is
     treated as the reference's partial match). No/unreadable index, or
     a radius past the cell cap / pole / antimeridian, falls back to the
-    full decode of that segment.
+    full decode of that segment."""
+    from hurricanedb_spark.sources.pinot_segment import read_segments
 
-    `apply_residual=False` returns the candidate superset WITHOUT the
-    internal filter — for callers (the dialect rewrite) whose own query
-    keeps the distance predicate, so exactly one residual expression
-    decides the rows."""
-    from pyspark.sql import functions as F
-
-    from hurricanedb_spark.sources import pinot_segment as ps
-
-    def plan_for(s):
-        docs = geo_radius_segment_docs(s, col, center_lon, center_lat, radius_m)
-        if docs is None:
-            return (s, None)
-        if len(docs) == 0:
-            return None  # whole segment pruned
-        return (s, ps.roaring_serialize(docs))
-
-    plans = [
-        p for p in ps.parallel_segment_map(plan_for, segment_dirs) if p is not None
-    ]
-    residual = (
-        radius_residual_expr(col, center_lon, center_lat, radius_m)
-        if apply_residual
-        else "true"
-    )
-    return ps.read_segments_allowlist(
+    return read_segments(
         spark,
-        plans,
-        columns,
         segment_dirs,
-        F.expr(residual),
-        predicate_columns=[col],
+        columns,
+        bounds=[
+            lambda s: geo_radius_segment_docs(s, col, center_lon, center_lat, radius_m)
+        ],
+        residual=radius_residual_expr(col, center_lon, center_lat, radius_m),
     )

@@ -314,8 +314,8 @@ def json_match_segment_docs(segment_dir: str, col: str, condition: str):
     """Per-segment docId bound for one JSON_MATCH conjunct: None = no
     index support for this condition / no readable index (full decode),
     else the sorted docId array — possibly empty, meaning the segment
-    is pruned entirely. The unit the AND-composition intersects
-    (sources/index_compose.py; FilterOperatorUtils.java:183-220)."""
+    is pruned entirely. The unit read_segments' `bounds` intersect
+    (FilterOperatorUtils.java:183-220)."""
     preds = index_supported_conjunction(condition)
     if preds is None:
         return None
@@ -343,32 +343,14 @@ def read_segments_json_match(
     The exact translated expression still applies as a residual filter,
     so results are identical to the pure expression path whether or not
     an index exists (segments without a json index decode fully and rely
-    on the residual alone).
-
-    Scale shape: the index lookups are O(#segments) driver-side metadata
-    reads (same cost class as min/max pruning); per-segment masks travel
-    with the task, not through a shuffle."""
-    from pyspark.sql import functions as F
-
-    from hurricanedb_spark.sources import pinot_segment as ps
+    on the residual alone)."""
+    from hurricanedb_spark.sources.pinot_segment import read_segments
     from hurricanedb_spark.sql.json_match import translate_json_match
 
-    def plan_for(s):
-        docs = json_match_segment_docs(s, col, condition)
-        if docs is None:
-            return (s, None)
-        if len(docs) == 0:
-            return None  # whole segment pruned
-        return (s, ps.roaring_serialize(docs))
-
-    plans = [
-        p for p in ps.parallel_segment_map(plan_for, segment_dirs) if p is not None
-    ]
-    return ps.read_segments_allowlist(
+    return read_segments(
         spark,
-        plans,
-        columns,
         segment_dirs,
-        F.expr(translate_json_match(col, condition)),
-        predicate_columns=[col],
+        columns,
+        bounds=[lambda s: json_match_segment_docs(s, col, condition)],
+        residual=translate_json_match(col, condition),
     )

@@ -438,19 +438,26 @@ _SAFE_TERM = re.compile(r"^[a-z0-9]+$")
 _SAFE_PREFIX = re.compile(r"^([a-z0-9]+)\.\*$")
 
 
-def _index_predicate(pattern: str):
-    """Pattern shapes where Python-side term enumeration provably agrees
-    with the Java-regex residual: a bare literal token and a trailing
-    `.*` prefix. Anything else (full regex) returns None -> scan +
-    residual only, so a Java/Python regex-dialect divergence can never
-    change results."""
-    m = _SAFE_TERM.match(pattern)
-    if m:
-        return lambda t, p=pattern: t == p
-    m = _SAFE_PREFIX.match(pattern)
-    if m:
-        return lambda t, p=m.group(1): t.startswith(p)
-    return None
+def text_contains_segment_docs(segment_dir: str, col: str, pattern: str):
+    """Per-segment docId bound for one TEXT_CONTAINS pattern: None = no
+    readable index or a pattern shape it cannot bound (full decode),
+    else the matching tokens' docIds (possibly empty = segment pruned).
+    Only a bare literal token and a trailing `.*` prefix are bounded:
+    for those, Python-side term enumeration provably agrees with the
+    Java-regex residual, so a regex-dialect divergence can never change
+    results."""
+    term = _SAFE_TERM.match(pattern)
+    prefix = _SAFE_PREFIX.match(pattern)
+    if not term and not prefix:
+        return None
+    try:
+        idx = read_native_text_index(segment_dir, col)
+    except Exception:  # noqa: BLE001 — no/unreadable index: full decode
+        return None
+    if term:
+        return idx.doc_ids_for_term(pattern)
+    # prefix shape: subtree walk, not a vocabulary scan
+    return idx.doc_ids_with_prefix(prefix.group(1))
 
 
 def read_segments_text_contains(
@@ -467,38 +474,14 @@ def read_segments_text_contains(
     a roaring docId allowlist — and the analyzed-token residual
     expression ALWAYS re-applies, so results equal the pure expression
     path in every case (index absent, unsafe pattern, stop-word query)."""
-    from pyspark.sql import functions as F
+    from hurricanedb_spark.sources.pinot_segment import read_segments
 
-    from hurricanedb_spark.sources import pinot_segment as ps
-
-    predicate = _index_predicate(pattern)
-    prefix_m = _SAFE_PREFIX.match(pattern)
-
-    def plan_for(s):
-        if predicate is None:
-            return (s, None)
-        try:
-            idx = read_native_text_index(s, col)
-        except Exception:  # noqa: BLE001 — no/unreadable index: full decode
-            return (s, None)
-        if _SAFE_TERM.match(pattern):
-            docs = idx.doc_ids_for_term(pattern)
-        else:  # prefix shape: subtree walk, not a vocabulary scan
-            docs = idx.doc_ids_with_prefix(prefix_m.group(1))
-        if len(docs) == 0:
-            return None
-        return (s, ps.roaring_serialize(docs))
-
-    plans = [
-        p for p in ps.parallel_segment_map(plan_for, segment_dirs) if p is not None
-    ]
-    return ps.read_segments_allowlist(
+    return read_segments(
         spark,
-        plans,
-        columns,
         segment_dirs,
-        F.expr(analyzed_contains_expr(col, pattern)),
-        predicate_columns=[col],
+        columns,
+        bounds=[lambda s: text_contains_segment_docs(s, col, pattern)],
+        residual=analyzed_contains_expr(col, pattern),
     )
 
 
@@ -738,7 +721,7 @@ def text_match_segment_docs(segment_dir: str, col: str, lucene_query: str):
     """Per-segment docId bound for one TEXT_MATCH conjunct: None = no
     readable index or an unboundable query (full decode), else the
     sorted superset docId array (possibly empty = segment pruned). The
-    unit the AND-composition intersects (sources/index_compose.py)."""
+    unit read_segments' `bounds` intersect."""
     try:
         idx = read_native_text_index(segment_dir, col)
     except Exception:  # noqa: BLE001 — no/unreadable index: full decode
@@ -761,29 +744,15 @@ def read_segments_text_match(
     the pure expression path whether the index exists, the query has
     un-indexable clauses (fuzzy/regex/NOT), or the pruning is a strict
     superset (substring terms, position-blind phrases)."""
-    from pyspark.sql import functions as F
-
-    from hurricanedb_spark.sources import pinot_segment as ps
+    from hurricanedb_spark.sources.pinot_segment import read_segments
     from hurricanedb_spark.sql.text_match import translate_text_match
 
-    def plan_for(s):
-        docs = text_match_segment_docs(s, col, lucene_query)
-        if docs is None:
-            return (s, None)
-        if len(docs) == 0:
-            return None  # whole segment pruned
-        return (s, ps.roaring_serialize(docs))
-
-    plans = [
-        p for p in ps.parallel_segment_map(plan_for, segment_dirs) if p is not None
-    ]
-    return ps.read_segments_allowlist(
+    return read_segments(
         spark,
-        plans,
-        columns,
         segment_dirs,
-        F.expr(translate_text_match(col, lucene_query)),
-        predicate_columns=[col],
+        columns,
+        bounds=[lambda s: text_match_segment_docs(s, col, lucene_query)],
+        residual=translate_text_match(col, lucene_query),
     )
 
 

@@ -1965,80 +1965,100 @@ def read_segments(
     columns: list[str] | None = None,
     where: tuple | None = None,
     schema_from: list[str] | None = None,
+    bounds: list | None = None,
+    residual: str | None = None,
 ):
-    """Segments -> Spark DataFrame, one decode task per segment
-    (mapInPandas; the driver touches only metadata of the first segment
-    for the schema). `where = (col, op, value)` prunes whole segments
-    (metadata min/max + bloom + partition) AND filters rows inside the
-    survivors using their own indexes — exact results either way.
+    """Segments -> Spark DataFrame, one decode task per surviving
+    segment (mapInPandas; the driver touches only segment metadata and
+    index buffers). Every distributed segment decode goes through here,
+    apart from the star-tree scan.
+
+    `where = (col, op, value)` prunes whole segments (metadata min/max +
+    bloom + partition) AND filters rows inside the survivors using their
+    own indexes — exact results either way.
+
+    `bounds`: index access paths as callables (segment_dir) -> docId
+    bound, the reference's AND composition of index-backed filter
+    operators, whose docId bitmaps are intersected before any
+    forward-index read (FilterOperatorUtils.java:183-220,
+    getAndFilterOperator). Per segment, each bound is
+
+      None          -> this access path cannot bound the segment (no
+                       index, unsupported shape): contributes nothing
+      empty array   -> the segment is pruned entirely
+      docId array   -> a (possibly superset) bound; intersected
+
+    and the surviving segments ship ONE roaring-serialized allowlist
+    into their decode task. Planning is O(#segments x #bounds) threaded
+    driver-side reads (parallel_segment_map) — the cost class of the
+    reference broker's routing plus per-segment filter planning; the
+    allowlists travel with the task, never through a shuffle. A bound
+    is only ever a superset, so the exact predicate must still run:
+    `residual` (a Spark SQL boolean) re-applies after the decode, or
+    the caller's own query keeps it.
+
+    Columns the residual names that are missing from `columns` are
+    decoded as extras and dropped after the filter, so a projection
+    that excludes the predicate column still works.
 
     `schema_from`: optional unpruned segment list used only to derive the
     schema when `segment_dirs` is empty — the everything-pruned case,
     where the reference's broker returns an empty response rather than an
     error (SegmentPrunerService short-circuit)."""
-    if not segment_dirs:
-        if schema_from:
-            return spark.createDataFrame(
-                [], segment_spark_schema(schema_from[0], columns)
-            )
+    if not segment_dirs and not schema_from:
         raise ValueError("no segment directories given")
-    schema = segment_spark_schema(segment_dirs[0], columns)
+    first = (segment_dirs or schema_from)[0]
+    extras = []
+    if residual is not None and columns is not None:
+        from hurricanedb_spark.sql.lexer import mask
+
+        named = {w.lower() for w in re.findall(r"\w+", mask(residual))}
+        extras = [
+            c
+            for c in sorted(read_segment_metadata(first).columns)
+            if c.lower() in named and c not in columns
+        ]
+    decode_cols = [*columns, *extras] if extras else columns
+    schema = segment_spark_schema(first, decode_cols)
     for conjunct in _normalize_where(where):
         segment_dirs = prune_segments(segment_dirs, *conjunct)
-        if not segment_dirs:
-            return spark.createDataFrame([], schema)
-    paths = spark.createDataFrame(
-        [(p,) for p in segment_dirs], "__segment_path string"
-    ).repartition(len(segment_dirs))
 
-    def decode(batches):
-        for pdf in batches:
-            for p in pdf["__segment_path"]:
-                yield read_segment_pandas(p, columns, where=where)
+    def plan_for(s):
+        import numpy as np
 
-    return paths.mapInPandas(decode, schema=schema)
+        docs = None
+        for bound in bounds:
+            d = bound(s)
+            if d is None:
+                continue
+            d = np.asarray(d, dtype=np.uint32)
+            docs = d if docs is None else np.intersect1d(docs, d)
+            if len(docs) == 0:
+                return None  # this bound proves the segment empty
+        return (s, None if docs is None else roaring_serialize(docs))
 
+    if bounds:
+        plans = [
+            p for p in parallel_segment_map(plan_for, segment_dirs) if p is not None
+        ]
+    else:
+        plans = [(s, None) for s in segment_dirs]
+    if plans:
+        tasks = spark.createDataFrame(
+            plans, "__segment_path string, __docids binary"
+        ).repartition(len(plans))
 
-def read_segments_allowlist(
-    spark,
-    plans: list[tuple[str, bytes | None]],
-    columns: list[str] | None,
-    schema_from: list[str],
-    residual_expr,
-    predicate_columns: list[str] | None = None,
-):
-    """Shared index-accelerated scan shape (JSON index / native text
-    index): `plans` holds surviving (segment_dir, roaring-serialized
-    docId allowlist | None-for-full-decode) pairs — pruned segments are
-    simply absent — and `residual_expr` is the exact Spark predicate
-    that ALWAYS re-applies, so an index can only remove work, never
-    change results. One decode task per surviving segment.
+        def decode(batches):
+            for pdf in batches:
+                for p, db in zip(pdf["__segment_path"], pdf["__docids"]):
+                    ids = None if db is None else roaring_deserialize(bytes(db))
+                    yield read_segment_pandas(p, decode_cols, where=where, doc_ids=ids)
 
-    `predicate_columns`: columns the residual references. Any not in
-    `columns` are decoded as extras and dropped after the filter, so a
-    projection that excludes the predicate column still works (matching
-    read_segments(where=...)'s extra-column handling)."""
-    extras = [
-        c for c in (predicate_columns or []) if columns is not None and c not in columns
-    ]
-    decode_cols = columns if not extras else [*columns, *extras]
-    if not plans:
-        df = read_segments(spark, [], decode_cols, schema_from=schema_from).filter(
-            residual_expr
-        )
-        return df.drop(*extras) if extras else df
-    schema = segment_spark_schema(plans[0][0], decode_cols)
-    paths = spark.createDataFrame(
-        plans, "__segment_path string, __docids binary"
-    ).repartition(len(plans))
-
-    def decode(batches):
-        for pdf in batches:
-            for p, db in zip(pdf["__segment_path"], pdf["__docids"]):
-                ids = None if db is None else roaring_deserialize(bytes(db))
-                yield read_segment_pandas(p, decode_cols, doc_ids=ids)
-
-    out = paths.mapInPandas(decode, schema=schema).filter(residual_expr)
+        out = tasks.mapInPandas(decode, schema=schema)
+    else:
+        out = spark.createDataFrame([], schema)
+    if residual is not None:
+        out = out.filter(residual)
     return out.drop(*extras) if extras else out
 
 

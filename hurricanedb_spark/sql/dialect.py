@@ -29,19 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hurricanedb_spark.catalog.tables import register_views
 from hurricanedb_spark.functions.registry import register_all, sql_macros
-from hurricanedb_spark.sources.geo_index import (
-    geo_radius_segment_docs,
-    read_segments_geo_radius,
-)
-from hurricanedb_spark.sources.index_compose import read_segments_multi_index
-from hurricanedb_spark.sources.json_index import (
-    json_match_segment_docs,
-    read_segments_json_match,
-)
-from hurricanedb_spark.sources.native_text_index import (
-    read_segments_text_match,
-    text_match_segment_docs,
-)
+from hurricanedb_spark.sources.geo_index import geo_radius_segment_docs
+from hurricanedb_spark.sources.json_index import json_match_segment_docs
+from hurricanedb_spark.sources.native_text_index import text_match_segment_docs
 from hurricanedb_spark.sql.json_match import translate_json_match
 from hurricanedb_spark.sql.lexer import literal_spans, mask
 from hurricanedb_spark.sql.text_match import translate_text_match
@@ -2984,12 +2974,10 @@ _WHERE_SPAN = re.compile(
 class _IndexKind(NamedTuple):
     """One accelerable WHERE call for HurricaneSQL._index_pass."""
 
-    note: str  # notes field (last_<note>) set when its own reader fires
+    note: str  # notes field (last_<note>) set when it is the only call
     call: re.Pattern
     parse: Callable  # call match -> (column, argument)
-    read: Callable  # (spark, segs, column, argument, columns) -> DataFrame
     docs: Callable  # (segment dir, column, argument) -> docId bound
-    residual: Callable  # (column, argument) -> SQL re-applied, or None
     access: str  # access-path name in EXPLAIN IMPLEMENTATION PLAN
     explain: str  # how the single-call path reads, for its EXPLAIN line
 
@@ -3000,33 +2988,23 @@ def _quoted_arg(m: re.Match) -> tuple[str, str]:
 
 _INDEX_KINDS = (
     _IndexKind(
-        "json_match_accel", _JSON_MATCH_CALL, _quoted_arg,
-        read_segments_json_match, json_match_segment_docs, translate_json_match,
+        "json_match_accel", _JSON_MATCH_CALL, _quoted_arg, json_match_segment_docs,
         "JSON_INDEX", "segment skip + docId allowlist + residual",
     ),
     _IndexKind(
-        "text_match_accel", _TEXT_MATCH_CALL, _quoted_arg,
-        read_segments_text_match, text_match_segment_docs, translate_text_match,
+        "text_match_accel", _TEXT_MATCH_CALL, _quoted_arg, text_match_segment_docs,
         "TEXT_INDEX", "posting algebra + residual",
     ),
     # TEXT_CONTAINS(col, 'lit') is raw contains(col, 'lit'); for a bare
     # [A-Za-z0-9]+ literal that is exactly the TEXT_MATCH plain-term shape
     _IndexKind(
         "text_contains_accel", _TEXT_CONTAINS_CALL, _quoted_arg,
-        read_segments_text_match, text_match_segment_docs,
-        lambda col, lit: f"contains({col}, '{lit}')",
-        "TEXT_INDEX", "term posting + residual",
+        text_match_segment_docs, "TEXT_INDEX", "term posting + residual",
     ),
-    # the query keeps its own distance predicate, so exactly one residual
-    # expression decides the rows (H3IndexFilterOperator.java:100-160)
     _IndexKind(
         "geo_radius_accel", _GEO_RADIUS_CALL,
         lambda m: (m.group(1), tuple(float(g) for g in m.groups()[1:])),
-        lambda spark, segs, col, a, columns: read_segments_geo_radius(
-            spark, segs, col, *a, columns, apply_residual=False
-        ),
         lambda seg, col, a: geo_radius_segment_docs(seg, col, *a),
-        lambda col, a: None,
         "H3_INDEX", "candidate cells + residual",
     ),
 )
@@ -4208,18 +4186,20 @@ class HurricaneSQL:
         """Index access paths for segment-backed tables. When the WHERE
         clause is a plain AND chain holding accelerable calls (the kinds
         in _INDEX_KINDS) over ONE segment table, the table reference is
-        rebound to a uuid view over the index-accelerated scan: zero-match
-        segments are skipped, survivors decode only their allowlisted
-        docs, and the full predicate still runs, so the index can only
-        remove work, never change results. One call uses its kind's
-        dedicated reader; two or more intersect their per-segment docId
-        allowlists under one shared residual — the reference's AND filter
-        composition (FilterOperatorUtils.java:183-220). Only WHERE calls
-        pick the path; a kind with calls both inside and outside the
-        WHERE keeps the scan, as do a JOIN and OR / NOT / parens beyond
-        the calls' own (a pre-filtered source would lose rows there).
-        Shape checks run on masked text (sql/lexer.py lexes like Spark),
-        so literals and comments never decide the shape."""
+        rebound to a uuid view over one `read_segments` scan: each call
+        contributes its kind's per-segment docId bound, and the bounds
+        are intersected — the reference's AND filter composition
+        (FilterOperatorUtils.java:183-220). Zero-match segments are
+        skipped, survivors decode only their allowlisted docs and only
+        the columns the query references (_pruned_columns). The
+        rewritten query keeps its whole WHERE, so exactly one residual
+        expression decides the rows and the index can only remove work,
+        never change results. Only WHERE calls pick the path; a kind
+        with calls both inside and outside the WHERE keeps the scan, as
+        do a JOIN and OR / NOT / parens beyond the calls' own (a
+        pre-filtered source would lose rows there). Shape checks run on
+        masked text (sql/lexer.py lexes like Spark), so literals and
+        comments never decide the shape."""
         if not self._segment_tables:
             return query, None, None
         masked = mask(query)
@@ -4243,69 +4223,63 @@ class HurricaneSQL:
         if re.search(r"\bOR\b|\bNOT\b|[()]", "".join(rest[lo:hi]), re.IGNORECASE):
             return query, None, None
         parsed = [(kind, *kind.parse(m)) for kind, m in calls]
-        cols = list(dict.fromkeys(col for _, col, _ in parsed))
+        from hurricanedb_spark.sources import pinot_segment as ps
+
         for name, segs, columns, (s, e) in self._segment_from_refs(masked):
-            if not set(cols) <= set(self.spark.table(name).columns):
+            visible = self.spark.table(name).columns
+            if not {col for _, col, _ in parsed} <= set(visible):
                 continue  # the predicates target some other table
+            used = self._pruned_columns(query, masked, name, visible, segs)
+            df = ps.read_segments(
+                self.spark,
+                segs,
+                used or columns,
+                bounds=[
+                    lambda seg, k=kind, c=col, a=arg: k.docs(seg, c, a)
+                    for kind, col, arg in parsed
+                ],
+            )
             if len(parsed) == 1:
-                kind, col, arg = parsed[0]
-                df = kind.read(self.spark, segs, col, arg, columns)
+                kind = parsed[0][0]
                 note = {
                     kind.note: True,
                     "access_path": f"accessPath: {kind.access} ({kind.explain})",
                 }
             else:
-                residual = " AND ".join(
-                    f"({r})" for kind, col, arg in parsed
-                    if (r := kind.residual(col, arg))
-                )
-                df = read_segments_multi_index(
-                    self.spark,
-                    segs,
-                    [
-                        lambda seg, k=kind, c=col, a=arg: k.docs(seg, c, a)
-                        for kind, col, arg in parsed
-                    ],
-                    residual or "true",
-                    columns,
-                    cols,
-                )
                 kinds = sorted({kind.access for kind, _, _ in parsed})
                 note = {
                     "multi_index_accel": kinds,
                     "access_path": f"accessPath: AND_COMPOSED({', '.join(kinds)}) "
                     "(intersected docId allowlists + shared residual)",
                 }
+            if used:
+                note["column_prune"] = (name, used)
             uniq, drop = self._bind_view(df, "index_accel")
             return query[:s] + uniq + query[e:], drop, note
         return query, None, None
 
     _SQL_COUNT_STAR_RE = re.compile(r"\bCOUNT\s*\(\s*\*\s*\)", re.IGNORECASE)
 
-    def _column_prune_pass(self, query: str):
-        """Per-query column pruning for segment-backed tables (round-16,
-        r15 verdict #5). A segment scan is mapInPandas — opaque to
-        Catalyst, so projection pruning can never reach the decode: a
-        two-column aggregate over a table with a raw text column was
-        decoding AND Arrow-shipping the text for nothing. The dialect
-        knows the query text, so it threads the referenced-identifier
-        set into `read_segments(columns=...)` through a uuid temp view
-        (same rebind pattern as the index accelerations).
+    def _pruned_columns(self, query: str, masked: str, name: str, visible, segs):
+        """The columns of segment table `name` that `query` references,
+        when that is fewer than its `visible` columns; None when the
+        scan needs the full row. A segment scan is mapInPandas — opaque
+        to Catalyst, so projection pruning can never reach the decode
+        unless the dialect passes this set to `read_segments(columns=)`.
 
         Conservative in the SAFE direction: outside literals and
-        comments, ANY token equal to a table column counts as
-        referenced — over-inclusion merely decodes an extra column; a
+        comments (`masked`), ANY token equal to a table column counts
+        as referenced — over-inclusion merely decodes an extra column; a
         missed reference would fail analysis loudly, never return wrong
         rows. A remaining `*` (SELECT * / t.* — COUNT(*) is stripped
-        first) or a non-single table reference keeps the full decode.
-        Runs AFTER the index rewrites, so it only fires when no
-        acceleration already rebound the table."""
-        if not self._segment_tables:
-            return query, None, None
-        masked = mask(query)
+        first) keeps the full decode, and so does any mention of `name`
+        besides its one FROM ref (a JOIN name, name.col qualified refs,
+        a self-subquery), which would dangle after the rebind. A query
+        referencing no column (pure COUNT(*)) decodes exactly one: the
+        narrowest."""
         scrubbed = self._SQL_COUNT_STAR_RE.sub(" ", masked)
         if "*" in scrubbed:
-            return query, None, None  # SELECT * / t.*: the full row is referenced
+            return None  # SELECT * / t.*: the full row is referenced
         words = re.findall(r"[A-Za-z_][A-Za-z0-9_]*", scrubbed)
         # backquoted identifiers are masked: read their names from the query
         words += [
@@ -4313,22 +4287,31 @@ class HurricaneSQL:
             for m in re.finditer(r"`\x00*`", masked)
         ]
         words = [w.lower() for w in words]
+        if words.count(name.lower()) != 1:
+            return None
         idents = set(words)
+        used = [c for c in visible if c.lower() in idents]
+        if len(used) == len(visible):
+            return None  # nothing to prune
+        return used or [self._narrowest_column(segs[0], visible)]
+
+    def _column_prune_pass(self, query: str):
+        """Per-query column pruning for segment-backed tables (round-16,
+        r15 verdict #5): a two-column aggregate over a table with a raw
+        text column was decoding AND Arrow-shipping the text for
+        nothing. The referenced-column set (_pruned_columns) reaches
+        `read_segments(columns=...)` through a uuid temp view (same
+        rebind pattern as the index accelerations, which prune the same
+        way when they fire)."""
+        if not self._segment_tables:
+            return query, None, None
+        masked = mask(query)
         for name, segs, _columns, (s, e) in self._segment_from_refs(masked):
-            # the sole mention must BE the FROM ref: a second mention
-            # (JOIN name, name.col qualified refs, a self-subquery)
-            # would dangle after the rebind — keep the full decode
-            if words.count(name.lower()) != 1:
+            used = self._pruned_columns(
+                query, masked, name, self.spark.table(name).columns, segs
+            )
+            if used is None:
                 continue
-            visible = self.spark.table(name).columns
-            used = [c for c in visible if c.lower() in idents]
-            if len(used) == len(visible):
-                continue  # nothing to prune
-            if not used:
-                # pure COUNT(*): decode exactly one column — the
-                # narrowest fixed-width one (the row count is identical
-                # through any column; the text blob is the worst pick)
-                used = [self._narrowest_column(segs[0], visible)]
             from hurricanedb_spark.sources import pinot_segment as ps
 
             uniq, drop = self._bind_view(

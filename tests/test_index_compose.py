@@ -5,12 +5,15 @@ any forward-index read (FilterOperatorUtils.java:183-220). Here
 `HurricaneSQL._index_pass` composes JSON_MATCH / TEXT_MATCH /
 TEXT_CONTAINS / geo-radius conjuncts over one segment-backed table into
 a single scan over per-segment INTERSECTED docId allowlists
-(sources/index_compose.py), with every residual re-applied. Every test
+(`read_segments(bounds=...)`), with the query's own WHERE re-applied
+and only the referenced columns decoded. Every test
 asserts exact equality with the pure expression path; the pruning tests
 assert the intersection skips segments NO single index could skip.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pandas as pd
@@ -125,6 +128,37 @@ def test_composed_equals_expression_path(spark, hq, where, kinds):
     assert hq.last_multi_index_accel == kinds
     assert got == _expected_ids(spark, where)
     assert got, f"degenerate test: no rows matched {where}"
+
+
+def _scan_outputs(df) -> list[list[str]]:
+    """Output column names of each segment-decode MapInPandas node in
+    the executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        [a.split("#")[0] for a in m.group(1).split(", ")]
+        for m in re.finditer(r"MapInPandas \w+\([^)]*\)#\d+, \[([^\]]*)\]", plan)
+    ]
+
+
+@pytest.mark.parametrize(
+    "where,used",
+    [
+        ("JSON_MATCH(props, '\"$.tag\" = ''alpha''')", ["id", "props"]),
+        ("TEXT_MATCH(body, 'spark')", ["body", "id"]),
+        ("TEXT_CONTAINS(body, 'hurricane')", ["body", "id"]),
+        (GEO_NEAR, ["id", "loc"]),
+        (COMPOSED[0][0], ["body", "id", "props"]),
+    ],
+)
+def test_accelerated_scan_decodes_only_referenced_columns(spark, hq, where, used):
+    """An index-accelerated scan prunes columns like a plain scan: the
+    decode emits only the columns the query names, and the rows are the
+    expression scan's."""
+    fast = hq.sql(f"SELECT id FROM cmp_docs WHERE {where}", default_limit=None)
+    assert hq.last_column_prune == ("cmp_docs", used)
+    assert _scan_outputs(fast) == [used]
+    got = sorted(r["id"] for r in fast.collect())
+    assert got == _expected_ids(spark, where) and got
 
 
 def test_intersection_prunes_beyond_any_single_index(hq):

@@ -31,23 +31,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _read_cpu_jiffies
 from hurricanedb_spark.queries import all_queries
 from hurricanedb_spark.session import get_spark
 
 RUNS = 3
-
-
-def _read_cpu_jiffies():
-    """(total, steal) jiffies from /proc/stat — None where unsupported.
-    The total sums user..steal only: guest and guest_nice are already
-    counted inside user and nice."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:9]]
-        return sum(vals), vals[7] if len(vals) > 7 else 0
-    except Exception:  # pragma: no cover — non-Linux
-        return None
 
 
 def main() -> int:

@@ -31,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import _read_cpu_jiffies
 from hurricanedb_spark.catalog.tables import load_table
 from hurricanedb_spark.session import get_spark
 from hurricanedb_spark.sources import pinot_segment as ps
@@ -219,15 +220,12 @@ def bench_text_match(spark, sf_dir: str, base: str) -> dict:
 
 
 def bench_compose(spark, sf_dir: str, base: str) -> dict:
-    """AND-composed index access (sources/index_compose.py): documents
+    """AND-composed index access (read_segments(bounds=...)): documents
     with BOTH a json index (synthetic props, range-partitioned on $.k —
     segment-selective) and a native text index, queried with
     JSON_MATCH(...) AND TEXT_MATCH(...). Composed allowlist intersection
     vs the expression scan and vs the better single-index path —
     equality asserted before timing."""
-    from hurricanedb_spark.sources.index_compose import (
-        read_segments_multi_index,
-    )
     from hurricanedb_spark.sources.json_index import (
         json_match_segment_docs,
         read_segments_json_match,
@@ -293,16 +291,14 @@ def bench_compose(spark, sf_dir: str, base: str) -> dict:
         .filter(F.expr(residual)).count(),
         "text-only path + residual",
     )
-    composed = read_segments_multi_index(
+    composed = ps.read_segments(
         spark,
         segs,
-        [
+        bounds=[
             lambda s: json_match_segment_docs(s, "props", cond),
             lambda s: text_match_segment_docs(s, "text", lucene),
         ],
-        residual,
-        None,
-        ["props", "text"],
+        residual=residual,
     )
     n_both, t_both = timed(lambda: composed.count(), "AND-composed path")
     assert n_scan == n_json == n_text == n_both, (n_scan, n_json, n_text, n_both)
@@ -516,19 +512,6 @@ def _loadavg():
     try:
         return [round(x, 2) for x in os.getloadavg()]
     except OSError:  # pragma: no cover
-        return None
-
-
-def _read_cpu_jiffies():
-    """(total, steal) jiffies from /proc/stat — None where unsupported.
-    The total sums user..steal only: guest and guest_nice are already
-    counted inside user and nice."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:9]]
-        return sum(vals), vals[7] if len(vals) > 7 else 0
-    except Exception:  # pragma: no cover — non-Linux
         return None
 
 
