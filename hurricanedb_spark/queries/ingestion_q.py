@@ -390,8 +390,10 @@ def _is_segment(ps, path: str) -> bool:
     "SegmentDictionaryCreator / FixedBitSVForwardIndexWriter layouts, "
     "sources/pinot_segment.py): supplier is exported to on-disk v3 "
     "segments (columns.psf + index_map + metadata.properties, bit-packed "
-    "dictionary-encoded forward indexes), read back distributed (one "
-    "decode task per segment via mapInPandas), and aggregated; the "
+    "dictionary-encoded forward indexes), read back distributed (mapInPandas "
+    "tasks capped at the core count, each decoding the segments whose "
+    "ids it holds, as CombineOperatorUtils caps the reference's "
+    "operator pool), and aggregated; the "
     "oracle aggregates the original parquet — proving the segment "
     "migration path is lossless.",
     tags=("sources", "segment-format"),
@@ -785,7 +787,8 @@ def q_startree_theta_redirect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(VarByteChunkSVForwardIndexWriterV4.java), dictionary-encoded MV "
     "with var-length string dicts, and raw (noDictionary) MV "
     "(Fixed/VarByteChunkMVForwardIndexReader layouts). read_segments "
-    "decodes all five in one distributed scan (one task per segment) "
+    "decodes all five in one distributed scan (min(#segments, cores) "
+    "tasks, CombineOperatorUtils' cap, each segment assigned by id) "
     "and the aggregate must equal the parquet oracle — proving the "
     "migration path as a composite, not per-feature tests.",
     tags=("sources", "segment-format", "migration"),

@@ -21,16 +21,46 @@ package's parent directory is appended to the workers' PYTHONPATH so the
 daemon module imports from any working directory. Sessions built
 elsewhere (an existing SparkContext that `getOrCreate` returns) keep
 the stock daemon and its per-task cost.
+
+The JVM talks to the Python workers (and the driver to the JVM for
+collects and accumulators) over Unix domain sockets, not loopback TCP,
+where a task's small writes stall behind Nagle and delayed ACKs. On a
+4-core x86 VM a one-task `mapInPandas` collect went from ~125 ms to
+~93 ms, and a broker segment query's 13 tasks from 684 ms to 405 ms of
+summed run time. A Unix socket has no auth handshake, so the sockets
+live in a private (0700) directory, one per process. Spark takes a
+socket directory of at most 61 characters, so that its socket names
+fit AF_UNIX's 107-byte path; the directory is made under $TMPDIR when
+that is short enough, else under /tmp.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 # the directory that holds the hurricanedb_spark package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Spark rejects a longer spark.python.unix.domain.socket.dir
+_SOCKET_DIR_MAX = 61
+_socket_dir: str | None = None
+
+
+def _unix_socket_dir() -> str:
+    """This process's private (0700) directory for Spark's Unix sockets,
+    made on first use and removed at exit."""
+    global _socket_dir
+    if _socket_dir is None:
+        base = tempfile.gettempdir()
+        if len(os.path.join(base, "hsp-12345678")) > _SOCKET_DIR_MAX:
+            base = "/tmp"
+        _socket_dir = tempfile.mkdtemp(prefix="hsp-", dir=base)
+        atexit.register(shutil.rmtree, _socket_dir, True)
+    return _socket_dir
 
 
 def get_spark(
@@ -78,12 +108,14 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("HURRICANE_DRIVER_MEM", "16g"))
-        # Python workers: see the module docstring
+        # Python workers and their sockets: see the module docstring
         .config("spark.python.daemon.module", "hurricanedb_spark._pydaemon")
         .config(
             "spark.executorEnv.PYTHONPATH",
             os.pathsep.join(p for p in (worker_path, _PACKAGE_PARENT) if p),
         )
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _unix_socket_dir())
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

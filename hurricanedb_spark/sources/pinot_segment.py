@@ -75,10 +75,11 @@ UnsupportedSegmentError naming the column; auxiliary index entries in
 they are redundant acceleration structures, Spark plans its own access
 paths.
 
-Scale design: one segment is one task. `read_segments` parallelizes the
-segment paths and decodes each inside mapInPandas (Arrow-batched,
-numpy-vectorized bit-unpack), so a 100 TB deep-store of segments reads
-with the same per-segment parallelism the reference's servers use;
+Scale design: a segment is the unit of work, and a query's segments
+share min(#segments, cores) tasks, as the reference's servers share a
+bounded pool (CombineOperatorUtils). `read_segments` numbers the
+surviving segments and each task decodes the ones whose numbers it
+holds inside mapInPandas (Arrow-batched, numpy-vectorized bit-unpack);
 column pruning happens at the decoder (only requested columns are
 sliced out of columns.psf). `export_segments` writes one segment per
 Spark partition, shuffle-free.
@@ -89,6 +90,7 @@ from __future__ import annotations
 import os
 import re
 import struct
+import threading
 import time
 import zlib
 from dataclasses import dataclass, field
@@ -1959,6 +1961,32 @@ def prune_segments(segment_dirs: list[str], column: str, op: str, value):
     return kept
 
 
+def map_segments(spark, plans: list, decode, schema: str):
+    """mapInPandas `decode(plan) -> pandas.DataFrame` over every plan, in
+    min(len(plans), defaultParallelism) tasks. The leaf holds only the
+    plan numbers 0..n-1 and each task decodes the plans whose numbers it
+    holds: the plans travel in the task closure (PySpark broadcasts a
+    closure past 1 MB), so no shuffle is needed to spread them out.
+
+    The leaf is a LogicalRDD over a range, not the Range itself: a Range
+    reports 8 bytes a row, which would let the planner broadcast a whole
+    segment table, while a LogicalRDD's size is unknown
+    (spark.sql.defaultSizeInBytes), as a segment table's is."""
+    from pyspark.sql import DataFrame
+
+    n = len(plans)
+    tasks = min(n, spark.sparkContext.defaultParallelism)
+    ids = spark.range(0, n, 1, tasks)._jdf.toDF()
+    leaf = DataFrame(spark._jsparkSession.createDataFrame(ids.rdd(), ids.schema()), spark)
+
+    def run(batches):
+        for pdf in batches:
+            for i in pdf["id"]:
+                yield decode(plans[i])
+
+    return leaf.mapInPandas(run, schema=schema)
+
+
 def read_segments(
     spark,
     segment_dirs: list[str],
@@ -1968,10 +1996,13 @@ def read_segments(
     bounds: list | None = None,
     residual: str | None = None,
 ):
-    """Segments -> Spark DataFrame, one decode task per surviving
-    segment (mapInPandas; the driver touches only segment metadata and
-    index buffers). Every distributed segment decode goes through here,
-    apart from the star-tree scan.
+    """Segments -> Spark DataFrame, decoded by `map_segments`: the
+    surviving segments are numbered and shared out over min(#segments,
+    defaultParallelism) mapInPandas tasks, the reference's
+    min(#segments, threads) operator pool (CombineOperatorUtils). The
+    driver touches only segment metadata and index buffers. Every
+    distributed segment decode goes through here, apart from the
+    star-tree scan.
 
     `where = (col, op, value)` prunes whole segments (metadata min/max +
     bloom + partition) AND filters rows inside the survivors using their
@@ -1992,8 +2023,8 @@ def read_segments(
     into their decode task. Planning is O(#segments x #bounds) threaded
     driver-side reads (parallel_segment_map) — the cost class of the
     reference broker's routing plus per-segment filter planning; the
-    allowlists travel with the task, never through a shuffle. A bound
-    is only ever a superset, so the exact predicate must still run:
+    allowlists travel in the task closure, never through a shuffle. A
+    bound is only ever a superset, so the exact predicate must still run:
     `residual` (a Spark SQL boolean) re-applies after the decode, or
     the caller's own query keeps it.
 
@@ -2043,18 +2074,14 @@ def read_segments(
         ]
     else:
         plans = [(s, None) for s in segment_dirs]
+
+    def decode(plan):
+        p, db = plan
+        ids = None if db is None else roaring_deserialize(db)
+        return read_segment_pandas(p, decode_cols, where=where, doc_ids=ids)
+
     if plans:
-        tasks = spark.createDataFrame(
-            plans, "__segment_path string, __docids binary"
-        ).repartition(len(plans))
-
-        def decode(batches):
-            for pdf in batches:
-                for p, db in zip(pdf["__segment_path"], pdf["__docids"]):
-                    ids = None if db is None else roaring_deserialize(bytes(db))
-                    yield read_segment_pandas(p, decode_cols, where=where, doc_ids=ids)
-
-        out = tasks.mapInPandas(decode, schema=schema)
+        out = map_segments(spark, plans, decode, schema)
     else:
         out = spark.createDataFrame([], schema)
     if residual is not None:
@@ -2679,17 +2706,32 @@ def export_segments(
     return [r["segment"] for r in manifest.collect()]
 
 
-def parallel_segment_map(fn, items, max_workers: int = 16):
+_SEGMENT_POOL = None
+_SEGMENT_POOL_LOCK = threading.Lock()
+
+
+def parallel_segment_map(fn, items):
     """Order-preserving threaded map for driver-side per-segment
     metadata/index lookups (IO-bound, GIL released in file reads). Every
     index access path funnels its O(#segments) driver-side planning
     through this, so large stores overlap the lookups instead of paying
     them sequentially — the first scale lever SCALE.md names for
-    >100k-segment deployments."""
+    >100k-segment deployments.
+
+    All calls share one 16-thread pool, made on first use, so a query
+    does not pay for starting threads. Callers share it safely because
+    no `fn` calls back into parallel_segment_map: the two callers (the
+    bounds planning in `read_segments` and the dialect's star-tree
+    verdicts) never nest, so a task never waits on a task queued behind
+    it."""
+    global _SEGMENT_POOL
     items = list(items)
     if len(items) <= 1:
         return [fn(x) for x in items]
-    from concurrent.futures import ThreadPoolExecutor
+    with _SEGMENT_POOL_LOCK:
+        if _SEGMENT_POOL is None:
+            from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as ex:
-        return list(ex.map(fn, items))
+            _SEGMENT_POOL = ThreadPoolExecutor(
+                max_workers=16, thread_name_prefix="segment-plan")
+    return list(_SEGMENT_POOL.map(fn, items))

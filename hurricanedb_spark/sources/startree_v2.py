@@ -1029,15 +1029,18 @@ def read_segments_star_tree(
     pairs: list[str],
     conjuncts: list[tuple[str, tuple]] | None = None,
 ):
-    """Distributed star-tree pre-agg scan over a segment store: one
-    task per segment; each task answers from its segment's FITTING tree
-    (fitting_tree_id) or falls back to a raw scan of that segment —
-    both emit the same (key columns + __st_* metric columns) pre-agg
-    shape, and Spark's partial/final HashAggregate re-aggregates the
-    union. This is the scale shape: tree records are tiny
-    (pre-aggregated), the union never materializes on the driver, and
-    the final group-by shuffles only pre-aggregated rows."""
+    """Distributed star-tree pre-agg scan over a segment store, in
+    min(#segments, defaultParallelism) tasks (`map_segments`, the
+    reference's CombineOperatorUtils pool); per segment, its task
+    answers from the segment's FITTING tree (fitting_tree_id) or falls
+    back to a raw scan of that segment — both emit the same (key
+    columns + __st_* metric columns) pre-agg shape, and Spark's
+    partial/final HashAggregate re-aggregates the union. This is the
+    scale shape: tree records are tiny (pre-aggregated), the union never
+    materializes on the driver, and the final group-by shuffles only
+    pre-aggregated rows."""
     from hurricanedb_spark.sources.pinot_segment import (
+        map_segments,
         read_segment_metadata,
         segment_spark_schema,
     )
@@ -1058,19 +1061,11 @@ def read_segments_star_tree(
             t = "double"
         parts.append(f"`{pair_out_col(p)}` {t}")
     schema = ", ".join(parts)
-    paths = spark.createDataFrame(
-        [(p,) for p in segment_dirs], "__segment_path string"
-    ).repartition(len(segment_dirs))
 
-    def scan(batches):
-        for pdf in batches:
-            for seg in pdf["__segment_path"]:
-                tid = fitting_tree_id(seg, key_cols, pairs, [])
-                if tid is not None:
-                    yield star_tree_visit_pandas(seg, tid, key_cols, pairs, conjuncts)
-                else:
-                    yield _segment_prearg_fallback_pandas(
-                        seg, key_cols, pairs, conjuncts
-                    )
+    def scan(seg):
+        tid = fitting_tree_id(seg, key_cols, pairs, [])
+        if tid is not None:
+            return star_tree_visit_pandas(seg, tid, key_cols, pairs, conjuncts)
+        return _segment_prearg_fallback_pandas(seg, key_cols, pairs, conjuncts)
 
-    return paths.mapInPandas(scan, schema=schema)
+    return map_segments(spark, segment_dirs, scan, schema)

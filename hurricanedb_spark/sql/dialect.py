@@ -3227,8 +3227,10 @@ class HurricaneSQL:
         """Register a table backed by a native segment store (a
         directory of v1/v3 segment dirs): point the dialect at existing
         on-disk segments and query them with Pinot SQL directly — the
-        full switch-over story with zero re-ingestion. One decode task
-        per segment (sources/pinot_segment.py)."""
+        full switch-over story with zero re-ingestion. The scan runs in
+        min(#segments, defaultParallelism) decode tasks, each decoding
+        the segments whose ids it holds, the reference's
+        CombineOperatorUtils cap (sources/pinot_segment.py:map_segments)."""
         import os
 
         from hurricanedb_spark.sources import pinot_segment as ps

@@ -98,6 +98,10 @@ def execute_sql(hdb: HurricaneSQL, sql: str, max_rows: int = 100_000) -> dict:
 class _Handler(BaseHTTPRequestHandler):
     hdb: HurricaneSQL = None  # injected by serve()
     protocol_version = "HTTP/1.1"  # chunked transfer needs 1.1
+    # TCP_NODELAY: the headers and the body go out as two writes, and
+    # with Nagle on the body waited for the client's delayed ACK of the
+    # headers, ~40 ms on every response over loopback.
+    disable_nagle_algorithm = True
 
     def do_POST(self):  # noqa: N802 (http.server API)
         if self.path not in ("/query/sql", "/query", "/query/sql/stream"):

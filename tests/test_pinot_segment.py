@@ -1197,7 +1197,8 @@ def test_in_list_prunes_segments_via_minmax_and_bloom(spark, tmp_path):
     assert kept4 == [segs[1]]
     # not_in never prunes on min/max
     assert ps.prune_segments(segs, "k", "not_in", [5]) == segs
-    # end-to-end: one decode task per surviving segment
+    # end-to-end: two surviving segments, under the parallelism cap, so
+    # one decode task each
     got = ps.read_segments(spark, segs, where=("k", "in", [5, 1042]))
     assert got.rdd.getNumPartitions() == 2
     assert sorted(r["k"] for r in got.collect()) == [5, 1042]
@@ -1320,3 +1321,120 @@ def test_sql_column_pruned_segment_decode(spark, sf_dir, tmp_path):
     ).collect()[0]["s"]
     assert got == exp_s
     assert hq.last_column_prune is None
+
+
+def _decoded_segments(df) -> int:
+    """Segments an executed DataFrame decoded: the rows its segment-id
+    leaves (`Scan ExistingRDD[id]` under each MapInPandas) emitted, read
+    from their numOutputRows metrics, through AQE query stages."""
+    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif name == "RDDScanExec":
+            total += node.metrics().apply("numOutputRows").value()
+        else:
+            children = node.children().iterator()
+            while children.hasNext():
+                stack.append(children.next())
+    return total
+
+
+def _assert_one_scan_stage(spark, df):
+    """No Exchange below the decode, and the unknown size estimate that
+    keeps a segment table from being broadcast."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    below = plan.split("MapInPandas", 1)[1].split("== Initial Plan ==")[0]
+    assert "Exchange" not in below, plan
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    assert size == default
+
+
+def _seg11_frame(si: int, n: int = 60) -> pd.DataFrame:
+    """Segment `si` of an 11-segment store: 'alpha' tags only in even
+    segments, 'storm' bodies only in every third one, each at its own
+    stride, so a bound decoded against the wrong segment changes rows."""
+    return pd.DataFrame(
+        {
+            "id": np.arange(n, dtype=np.int64) + 1000 * si,
+            "props": [
+                '{"tag": "%s"}'
+                % ("alpha" if si % 2 == 0 and i % (si + 2) == 0 else "beta")
+                for i in range(n)
+            ],
+            "body": [
+                f"storm {i}" if si % 3 == 0 and i % (si + 3) == 0 else f"calm {i}"
+                for i in range(n)
+            ],
+        }
+    )
+
+
+@pytest.fixture(scope="module")
+def seg11(tmp_path_factory):
+    base = tmp_path_factory.mktemp("seg11")
+    segs = []
+    for si in range(11):
+        seg = str(base / f"seg_{si:02d}")
+        ps.write_segment_pandas(
+            _seg11_frame(si), seg,
+            json_index_columns=["props"], text_index_columns=["body"],
+        )
+        segs.append(seg)
+    return str(base), segs
+
+
+def test_segment_scan_is_one_stage_with_unknown_size(spark, seg11):
+    _, segs = seg11
+    _assert_one_scan_stage(spark, ps.read_segments(spark, segs[:3]))
+    bounded = ps.read_segments(
+        spark, segs[:3], bounds=[lambda s: [0, 1]], residual="id >= 0"
+    )
+    _assert_one_scan_stage(spark, bounded)
+    assert _decoded_segments(bounded) == 3
+
+
+def test_more_segments_than_cores_share_capped_tasks(spark, seg11):
+    """11 segments over defaultParallelism (8) tasks: every segment is
+    decoded once, and each allowlist reaches its own segment."""
+    from hurricanedb_spark.sql.dialect import (
+        HurricaneSQL,
+        rewrite_functions,
+        rewrite_json_match,
+    )
+
+    store, segs = seg11
+    par = spark.sparkContext.defaultParallelism
+    assert par < len(segs)
+    plain = ps.read_segments(spark, segs)
+    assert plain.rdd.getNumPartitions() == par
+    assert sorted(r["id"] for r in plain.collect()) == [
+        1000 * si + i for si in range(11) for i in range(60)
+    ]
+    # segment k's bound admits only its doc k
+    own = ps.read_segments(
+        spark, segs, columns=["id"], bounds=[lambda s: [int(s[-2:])]]
+    )
+    assert sorted(r["id"] for r in own.collect()) == [1001 * k for k in range(11)]
+
+    hq = HurricaneSQL(spark)
+    hq.register_segment_table("seg11", store)
+    cases = [
+        ("id >= 0", None, 11),
+        ("JSON_MATCH(props, '\"$.tag\" = ''alpha''')", "last_json_match_accel", 6),
+        ("TEXT_MATCH(body, 'storm')", "last_text_match_accel", 4),
+    ]
+    for where, accel, decoded in cases:
+        q = f"SELECT id FROM seg11 WHERE {where}"
+        fast = hq.sql(q, default_limit=None)
+        got = sorted(r["id"] for r in fast.collect())
+        assert accel is None or getattr(hq, accel), where
+        assert _decoded_segments(fast) == decoded, where
+        slow = spark.sql(rewrite_functions(rewrite_json_match(q)))
+        assert got == sorted(r["id"] for r in slow.collect()) and got, where

@@ -4,7 +4,9 @@ Workers start from `hurricanedb_spark._pydaemon`, so the package must be
 on the workers' PYTHONPATH from any working directory, and the lazy
 zip-directory invalidation it installs must cost nothing per task while
 keeping what PySpark's per-task `importlib.invalidate_caches()` is for:
-code shipped after the workers started still imports.
+code shipped after the workers started still imports. The JVM reaches
+the workers over Unix sockets in a private directory short enough for
+Spark, whatever temporary directory the caller set.
 """
 
 from __future__ import annotations
@@ -26,10 +28,11 @@ lazy_zip = pytest.mark.skipif(
 )
 
 
-def _run_outside_repo(tmp_path, body: str) -> str:
+def _run_outside_repo(tmp_path, body: str, **env_extra: str) -> str:
     """Run `body` after `spark = get_spark(...)` in a fresh interpreter
     whose cwd is outside the repo and whose PYTHONPATH is unset; only
-    the driver gets the package on sys.path."""
+    the driver gets the package on sys.path. `env_extra` is added to
+    its environment."""
     script = textwrap.dedent(
         """
         import sys
@@ -38,7 +41,7 @@ def _run_outside_repo(tmp_path, body: str) -> str:
         """
     ) + textwrap.dedent(body)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env.update(SPARK_GRAFT_CPUS="2", HURRICANE_DRIVER_MEM="1g")
+    env.update(SPARK_GRAFT_CPUS="2", HURRICANE_DRIVER_MEM="1g", **env_extra)
     cwd = tmp_path / "cwd"
     cwd.mkdir()
     out = subprocess.run(
@@ -108,6 +111,43 @@ def test_caller_worker_pythonpath_is_extended(tmp_path):
         """,
     )
     assert "OK" in out
+
+
+def test_unix_sockets_under_a_deep_tmpdir(tmp_path):
+    """TMPDIR and java.io.tmpdir deeper than Spark's 61-character socket
+    directory cap: the session still runs Python tasks over Unix sockets,
+    from a 0700 directory that is gone after the process exits."""
+    deep = tmp_path / ("t" * 40) / ("u" * 40)
+    deep.mkdir(parents=True)
+    out = _run_outside_repo(
+        tmp_path,
+        """
+        import os, stat, tempfile
+        deep = os.environ["TMPDIR"]
+        assert tempfile.gettempdir() == deep and len(deep) > 61
+        spark = get_spark("deep-tmp", extra_conf={
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={deep}"})
+        conf = spark.sparkContext.getConf()
+        assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+        sock_dir = conf.get("spark.python.unix.domain.socket.dir")
+        assert len(sock_dir) <= 61, sock_dir
+        assert stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700
+
+        def double(batches):
+            for pdf in batches:
+                yield pdf * 2
+
+        df = spark.range(0, 10, 1, 2).mapInPandas(double, "id long")
+        assert sorted(r.id for r in df.collect()) == [2 * i for i in range(10)]
+        # the accumulator server's and the worker daemon's sockets
+        socks = [f for f in os.listdir(sock_dir) if f.endswith(".sock")]
+        assert len(socks) >= 2, socks
+        print("DIR", sock_dir)
+        """,
+        TMPDIR=str(deep),
+    )
+    sock_dir = out.split("DIR ", 1)[1].strip()
+    assert not os.path.exists(sock_dir)
 
 
 @lazy_zip

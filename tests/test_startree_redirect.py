@@ -105,6 +105,49 @@ def test_redirect_equals_scan_path(spark, hq, q):
     assert key(fast) == key(slow)
 
 
+def test_star_tree_scan_is_one_stage_with_unknown_size(spark, store):
+    """The pre-agg scan has no Exchange below its decode, and keeps the
+    unknown size estimate that stops a segment table from broadcasting."""
+    segs = [f"{store}/seg_{si}" for si in range(3)]
+    df = st.read_segments_star_tree(spark, segs, ["city"], ["sum__cents"])
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan.split("MapInPandas", 1)[1], plan
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size == spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+
+
+def test_redirect_over_more_segments_than_cores(spark, tmp_path):
+    """11 segments (every fourth without a tree) share defaultParallelism
+    (8) tasks, and the redirect still equals the same rows held in
+    memory: each segment is answered once, from its own tree or its own
+    fallback scan."""
+    rng = np.random.default_rng(29)
+    segs, frames = [], []
+    for si in range(11):
+        pdf = _seg_frame(rng, 120)
+        seg = str(tmp_path / f"seg_{si:02d}")
+        ps.write_segment_pandas(pdf, seg)
+        if si % 4 != 3:
+            st.write_star_trees(seg, pdf, [SPEC])
+        segs.append(seg)
+        frames.append(pdf)
+    par = spark.sparkContext.defaultParallelism
+    assert par < len(segs)
+    pre = st.read_segments_star_tree(spark, segs, ["city", "status"], ["count__*"])
+    assert pre.rdd.getNumPartitions() == par
+    h = HurricaneSQL(spark)
+    h.register_segment_table("st_wide", str(tmp_path))
+    spark.createDataFrame(pd.concat(frames)).createOrReplaceTempView("st_wide_rows")
+    for q in REDIRECTED[:4]:
+        fast = [tuple(r) for r in h.sql(q.replace("st_metrics", "st_wide")).collect()]
+        assert h.last_star_tree_redirect["segments_tree"] == 9
+        assert h.last_star_tree_redirect["segments_scan"] == 2
+        ref = spark.sql(rewrite_functions(q.replace("st_metrics", "st_wide_rows")))
+        want = [tuple(r) for r in ref.collect()]
+        assert sorted(fast, key=str) == sorted(want, key=str)
+
+
 UNFIT = [
     # AVG composition needs sum__other which no tree carries
     "SELECT city, AVG(other) AS a FROM st_metrics GROUP BY city LIMIT 100",

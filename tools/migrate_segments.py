@@ -3,8 +3,10 @@
 The switch-over path for a user of the reference engine: point this at
 a directory of segment dirs (the untarred deep-store layout) and get a
 parquet table Spark reads natively — or export a parquet table back to
-v3 segments. Decoding/encoding is distributed, one task per segment /
-per partition (sources/pinot_segment.py).
+v3 segments. Decoding is distributed over min(#segments, cores) tasks,
+each decoding the segments whose ids it holds (the reference's
+CombineOperatorUtils cap); encoding writes one segment per partition
+(sources/pinot_segment.py).
 
 Usage:
   python tools/migrate_segments.py to-parquet  <segment_store_dir> <out.parquet> [col,col,...]
