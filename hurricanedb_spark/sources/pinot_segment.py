@@ -92,7 +92,9 @@ import re
 import struct
 import threading
 import time
+import weakref
 import zlib
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 MAGIC_MARKER = 0xDEADBEEFDEAFBEAD
@@ -449,8 +451,48 @@ def _resolve_dir(segment_dir: str) -> str:
     )
 
 
+# read_segment_metadata's cache: resolved dir -> (version, SegmentMeta),
+# least recently used first. Every process that reads segments (the
+# driver and each reused Python worker) keeps its own.
+_META_CACHE: OrderedDict[str, tuple[tuple, SegmentMeta]] = OrderedDict()
+_META_CACHE_SIZE = 1024
+_META_CACHE_LOCK = threading.Lock()
+
+
+def _metadata_version(d: str) -> tuple:
+    """(inode, size, mtime_ns) of the files a SegmentMeta is parsed
+    from: metadata.properties, plus index_map, or in the v1/v2 layout
+    the directory itself, whose entries are the per-index files."""
+    stats = [os.stat(os.path.join(d, METADATA_FILE))]
+    try:
+        stats.append(os.stat(os.path.join(d, INDEX_MAP_FILE)))
+    except FileNotFoundError:
+        stats.append(os.stat(d))
+    return tuple((s.st_ino, s.st_size, s.st_mtime_ns) for s in stats)
+
+
 def read_segment_metadata(segment_dir: str) -> SegmentMeta:
+    """The segment's parsed metadata. Cached per resolved directory
+    and re-parsed when the version of its files changes, so a segment
+    rewritten in place is seen on its next read. Callers share the
+    returned object and must not modify it."""
     d = _resolve_dir(segment_dir)
+    version = _metadata_version(d)
+    with _META_CACHE_LOCK:
+        hit = _META_CACHE.get(d)
+        if hit is not None and hit[0] == version:
+            _META_CACHE.move_to_end(d)
+            return hit[1]
+    meta = _parse_segment_metadata(d)
+    with _META_CACHE_LOCK:
+        _META_CACHE[d] = (version, meta)
+        _META_CACHE.move_to_end(d)
+        if len(_META_CACHE) > _META_CACHE_SIZE:
+            _META_CACHE.popitem(last=False)
+    return meta
+
+
+def _parse_segment_metadata(d: str) -> SegmentMeta:
     with open(os.path.join(d, METADATA_FILE), encoding="utf-8") as f:
         props = parse_properties(f.read())
     total_docs = int(_prop(props, "segment.total.docs"))
@@ -1961,23 +2003,66 @@ def prune_segments(segment_dirs: list[str], column: str, op: str, value):
     return kept
 
 
+# Per-session DataFrames that depend only on the session and the store:
+# the id leaves and the plain scans. A DataFrame is an immutable plan,
+# so one can back every query of its session. Weakly keyed by the
+# session and holding only the JVM handles, so an entry dies with its
+# session; least recently used first, at most _SESSION_FRAMES_SIZE each.
+_SESSION_FRAMES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SESSION_FRAMES_SIZE = 64
+_SESSION_FRAMES_LOCK = threading.Lock()
+
+
+def _session_frame(spark, key: tuple, build):
+    """The DataFrame cached under `key` for session `spark`, made by
+    `build()` on a miss."""
+    from pyspark.sql import DataFrame
+
+    with _SESSION_FRAMES_LOCK:
+        frames = _SESSION_FRAMES.setdefault(spark, OrderedDict())
+        jdf = frames.get(key)
+        if jdf is not None:
+            frames.move_to_end(key)
+            return DataFrame(jdf, spark)
+    df = build()
+    with _SESSION_FRAMES_LOCK:
+        frames[key] = df._jdf
+        if len(frames) > _SESSION_FRAMES_SIZE:
+            frames.popitem(last=False)
+    return df
+
+
+def drop_session_frames(spark, segment_dirs: list[str]) -> None:
+    """Forget the plain scans cached for `segment_dirs` in session `spark`."""
+    segs = tuple(segment_dirs)
+    with _SESSION_FRAMES_LOCK:
+        frames = _SESSION_FRAMES.get(spark, {})
+        for key in [k for k in frames if k[:2] == ("scan", segs)]:
+            del frames[key]
+
+
+def _id_leaf(spark, n: int):
+    """The plan numbers 0..n-1 in min(n, defaultParallelism) partitions,
+    as a LogicalRDD over a range, not the Range itself: a Range reports
+    8 bytes a row, which would let the planner broadcast a whole segment
+    table, while a LogicalRDD's size is unknown
+    (spark.sql.defaultSizeInBytes), as a segment table's is."""
+    from pyspark.sql import DataFrame
+
+    tasks = min(n, spark.sparkContext.defaultParallelism)
+    ids = spark.range(0, n, 1, tasks)._jdf.toDF()
+    return DataFrame(spark._jsparkSession.createDataFrame(ids.rdd(), ids.schema()), spark)
+
+
 def map_segments(spark, plans: list, decode, schema: str):
     """mapInPandas `decode(plan) -> pandas.DataFrame` over every plan, in
     min(len(plans), defaultParallelism) tasks. The leaf holds only the
     plan numbers 0..n-1 and each task decodes the plans whose numbers it
     holds: the plans travel in the task closure (PySpark broadcasts a
-    closure past 1 MB), so no shuffle is needed to spread them out.
-
-    The leaf is a LogicalRDD over a range, not the Range itself: a Range
-    reports 8 bytes a row, which would let the planner broadcast a whole
-    segment table, while a LogicalRDD's size is unknown
-    (spark.sql.defaultSizeInBytes), as a segment table's is."""
-    from pyspark.sql import DataFrame
-
-    n = len(plans)
-    tasks = min(n, spark.sparkContext.defaultParallelism)
-    ids = spark.range(0, n, 1, tasks)._jdf.toDF()
-    leaf = DataFrame(spark._jsparkSession.createDataFrame(ids.rdd(), ids.schema()), spark)
+    closure past 1 MB), so no shuffle is needed to spread them out. The
+    leaf (`_id_leaf`) is planned once per session and plan count; each
+    call pickles only its own closure."""
+    leaf = _session_frame(spark, ("leaf", len(plans)), lambda: _id_leaf(spark, len(plans)))
 
     def run(batches):
         for pdf in batches:
@@ -2000,9 +2085,14 @@ def read_segments(
     surviving segments are numbered and shared out over min(#segments,
     defaultParallelism) mapInPandas tasks, the reference's
     min(#segments, threads) operator pool (CombineOperatorUtils). The
-    driver touches only segment metadata and index buffers. Every
-    distributed segment decode goes through here, apart from the
-    star-tree scan.
+    driver touches only segment metadata (cached, `read_segment_metadata`)
+    and index buffers. Every distributed segment decode goes through
+    here, apart from the star-tree scan.
+
+    A plain scan (no `where`, `bounds` or `residual`) depends only on
+    the session, the segments and the columns, so it is built once per
+    session and shared by every caller: the registered view and the
+    dialect's column-pruned scans pickle no new closure.
 
     `where = (col, op, value)` prunes whole segments (metadata min/max +
     bloom + partition) AND filters rows inside the survivors using their
@@ -2020,8 +2110,10 @@ def read_segments(
       docId array   -> a (possibly superset) bound; intersected
 
     and the surviving segments ship ONE roaring-serialized allowlist
-    into their decode task. Planning is O(#segments x #bounds) threaded
-    driver-side reads (parallel_segment_map) — the cost class of the
+    into their decode task, which decodes whole columns and then masks
+    them to the allowlist. Planning is O(#segments x #bounds)
+    driver-side index reads in a plain loop (the per-segment work holds
+    the GIL, so threads would only add hand-offs) — the cost class of the
     reference broker's routing plus per-segment filter planning; the
     allowlists travel in the task closure, never through a shuffle. A
     bound is only ever a superset, so the exact predicate must still run:
@@ -2054,6 +2146,14 @@ def read_segments(
     for conjunct in _normalize_where(where):
         segment_dirs = prune_segments(segment_dirs, *conjunct)
 
+    if not (bounds or where or residual) and segment_dirs:
+        cols = None if decode_cols is None else tuple(decode_cols)
+        return _session_frame(
+            spark,
+            ("scan", tuple(segment_dirs), cols, schema),
+            lambda: _scan(spark, [(s, None) for s in segment_dirs], decode_cols, None, schema),
+        )
+
     def plan_for(s):
         import numpy as np
 
@@ -2069,24 +2169,27 @@ def read_segments(
         return (s, None if docs is None else roaring_serialize(docs))
 
     if bounds:
-        plans = [
-            p for p in parallel_segment_map(plan_for, segment_dirs) if p is not None
-        ]
+        plans = [p for p in map(plan_for, segment_dirs) if p is not None]
     else:
         plans = [(s, None) for s in segment_dirs]
+    out = _scan(spark, plans, decode_cols, where, schema)
+    if residual is not None:
+        out = out.filter(residual)
+    return out.drop(*extras) if extras else out
+
+
+def _scan(spark, plans: list, columns: list[str] | None, where, schema: str):
+    """`map_segments` over (segment_dir, roaring allowlist or None)
+    plans; an empty frame of `schema` when no plan is left."""
+    if not plans:
+        return spark.createDataFrame([], schema)
 
     def decode(plan):
         p, db = plan
         ids = None if db is None else roaring_deserialize(db)
-        return read_segment_pandas(p, decode_cols, where=where, doc_ids=ids)
+        return read_segment_pandas(p, columns, where=where, doc_ids=ids)
 
-    if plans:
-        out = map_segments(spark, plans, decode, schema)
-    else:
-        out = spark.createDataFrame([], schema)
-    if residual is not None:
-        out = out.filter(residual)
-    return out.drop(*extras) if extras else out
+    return map_segments(spark, plans, decode, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2704,34 +2807,3 @@ def export_segments(
         write_part, schema="segment string"
     )
     return [r["segment"] for r in manifest.collect()]
-
-
-_SEGMENT_POOL = None
-_SEGMENT_POOL_LOCK = threading.Lock()
-
-
-def parallel_segment_map(fn, items):
-    """Order-preserving threaded map for driver-side per-segment
-    metadata/index lookups (IO-bound, GIL released in file reads). Every
-    index access path funnels its O(#segments) driver-side planning
-    through this, so large stores overlap the lookups instead of paying
-    them sequentially — the first scale lever SCALE.md names for
-    >100k-segment deployments.
-
-    All calls share one 16-thread pool, made on first use, so a query
-    does not pay for starting threads. Callers share it safely because
-    no `fn` calls back into parallel_segment_map: the two callers (the
-    bounds planning in `read_segments` and the dialect's star-tree
-    verdicts) never nest, so a task never waits on a task queued behind
-    it."""
-    global _SEGMENT_POOL
-    items = list(items)
-    if len(items) <= 1:
-        return [fn(x) for x in items]
-    with _SEGMENT_POOL_LOCK:
-        if _SEGMENT_POOL is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            _SEGMENT_POOL = ThreadPoolExecutor(
-                max_workers=16, thread_name_prefix="segment-plan")
-    return list(_SEGMENT_POOL.map(fn, items))

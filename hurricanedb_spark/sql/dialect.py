@@ -3216,10 +3216,21 @@ class HurricaneSQL:
                         df.na.fill(fills).createOrReplaceTempView(name)
 
     def register(self, name: str, df, null_defaults: dict | None = None) -> None:
-        """Register an extra table; optional Pinot-style default-null fill."""
+        """Register an extra table; optional Pinot-style default-null fill.
+        A segment table of the same name stops being one."""
+        self._forget_segment_table(name)
         (df.na.fill(null_defaults) if null_defaults else df).createOrReplaceTempView(
             name
         )
+
+    def _forget_segment_table(self, name: str) -> None:
+        """Drop segment table `name` (view names are case-insensitive)
+        and the plain scans cached for its segments."""
+        from hurricanedb_spark.sources import pinot_segment as ps
+
+        for key in [k for k in self._segment_tables if k.lower() == name.lower()]:
+            segs, _columns = self._segment_tables.pop(key)
+            ps.drop_session_frames(self.spark, segs)
 
     def register_segment_table(
         self, name: str, segment_store_dir: str, columns: list[str] | None = None
@@ -3246,6 +3257,7 @@ class HurricaneSQL:
                 segs.append(p)
         if not segs:
             raise ValueError(f"no segments under {segment_store_dir}")
+        self._forget_segment_table(name)
         ps.read_segments(self.spark, segs, columns).createOrReplaceTempView(name)
         self._segment_tables[name] = (segs, columns)
         self._warn_unrebuilt_text_indexes(name, segs)
@@ -4192,8 +4204,8 @@ class HurricaneSQL:
         contributes its kind's per-segment docId bound, and the bounds
         are intersected — the reference's AND filter composition
         (FilterOperatorUtils.java:183-220). Zero-match segments are
-        skipped, survivors decode only their allowlisted docs and only
-        the columns the query references (_pruned_columns). The
+        skipped; survivors decode only the columns the query references
+        (_pruned_columns), whole, and keep only their allowlisted docs. The
         rewritten query keeps its whole WHERE, so exactly one residual
         expression decides the rows and the index can only remove work,
         never change results. Only WHERE calls pick the path; a kind
@@ -4656,8 +4668,6 @@ class HurricaneSQL:
         involved = {*shape["group_cols"], *filter_cols, *metric_cols}
         if not involved <= view_cols:
             return noop
-        from hurricanedb_spark.sources.pinot_segment import parallel_segment_map
-
         def seg_verdict(seg):
             """'block' = redirect unsound for the whole store; else
             whether this segment has a fitting tree."""
@@ -4677,7 +4687,7 @@ class HurricaneSQL:
                 is not None
             )
 
-        verdicts = parallel_segment_map(seg_verdict, segs)
+        verdicts = [seg_verdict(seg) for seg in segs]
         if "block" in verdicts:
             return noop
         n_fit = sum(1 for v in verdicts if v is True)
