@@ -503,7 +503,6 @@ def register_all(spark: SparkSession) -> None:
 
     def _raw_theta(v: pa.Array, k: pa.Array) -> bytes:
         nominal = int(k[0].as_py()) if len(k) else 4096
-        lg = max(4, (nominal - 1).bit_length())
         vals, stype = _pa_values(v, "rawthetasketch")
         dtype = _hash_dtypes[stype] if stype in _hash_dtypes else None
         if dtype is None:
@@ -515,7 +514,7 @@ def register_all(spark: SparkSession) -> None:
         sk = _theta_from_hashes(
             (int(h) for h in hs if h), nominal, _theta_seed_hash(_theta_seed)
         )
-        return _theta_serialize(sk, lg)
+        return _theta_serialize(sk)
 
     spark.udf.register("rawthetasketch", _F.arrow_udf(_raw_theta, "binary"))
     # thetaSetOpSketch('<set expr>', array(<sketch bytes>...), nominal):
@@ -535,9 +534,7 @@ def register_all(spark: SparkSession) -> None:
 
         sks = [_d(bytes(b)) for b in blobs]
         tree = _theta_parse_tree(expr_s, len(sks) - 1)
-        k = int(nominal)
-        lg = max(4, (k - 1).bit_length())
-        return _s(_ev(tree, sks, k), lg)
+        return _s(_ev(tree, sks, int(nominal)))
 
     spark.udf.register("thetasetopsketch", _theta_setop_sketch, "binary")
 
@@ -731,31 +728,25 @@ def register_all(spark: SparkSession) -> None:
         "clearspringhllunionest",
         _F.pandas_udf(_cs_hll_union_est, "bigint", _F.PandasUDFType.GROUPED_AGG),
     )
-    # theta aggregation over a BYTES column = union of the PRE-BUILT
+    # raw theta aggregation over a BYTES column = union of the PRE-BUILT
     # sketches stored in it (DistinctCountThetaSketchAggregationFunction
     # aggregate(): valueTypes[0] == BYTES deserializes and unions instead
-    # of hashing the blobs). The dialect routes BINARY columns here
-    # (HurricaneSQL._theta_bytes_rewrite).
+    # of hashing the blobs), re-serialized as serVer-3 wire bytes. The
+    # dialect routes BINARY columns here (HurricaneSQL.
+    # _theta_bytes_rewrite); the estimate form unions natively
+    # (theta_union_agg), which reads the same bytes.
     from hurricanedb_spark.operators.theta_ds import (
         deserialize as _theta_deser,
         union as _theta_union,
     )
 
-    def _theta_union_of(v, k):
-        sks = [_theta_deser(bytes(b)) for b in v if b is not None]
-        return _theta_union(sks, k=int(k.iloc[0]))
-
-    def _theta_union_est(v, k):
-        return int(round(_theta_union_of(v, k).estimate()))
-
     def _theta_union_raw(v, k):
-        nominal = int(k.iloc[0])
-        lg = max(4, (nominal - 1).bit_length())
-        return _theta_serialize(_theta_union_of(v, k), lg)
+        sks = [_theta_deser(bytes(b)) for b in v if b is not None]
+        return _theta_serialize(_theta_union(sks, k=int(k.iloc[0])))
 
     spark.udf.register(
-        "thetasketchunionest",
-        _F.pandas_udf(_theta_union_est, "bigint", _F.PandasUDFType.GROUPED_AGG),
+        "thetasketchunionraw",
+        _F.pandas_udf(_theta_union_raw, "binary", _F.PandasUDFType.GROUPED_AGG),
     )
     # EXACT distinct over serialized value RoaringBitmaps (star-tree
     # distinctCountBitmap pairs): union + cardinality
@@ -773,10 +764,6 @@ def register_all(spark: SparkSession) -> None:
     spark.udf.register(
         "bitmapunioncount",
         _F.pandas_udf(_bitmap_union_count, "bigint", _F.PandasUDFType.GROUPED_AGG),
-    )
-    spark.udf.register(
-        "thetasketchunionraw",
-        _F.pandas_udf(_theta_union_raw, "binary", _F.PandasUDFType.GROUPED_AGG),
     )
     spark.udf.register("issubnetof", _is_subnet_of, T.BooleanType())
     spark.udf.register("geotoh3", _geo_to_grid, T.LongType())

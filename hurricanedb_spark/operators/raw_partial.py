@@ -99,8 +99,7 @@ def empty_state(kind: str, k: int = 4096) -> bytes:
             serialize,
         )
 
-        lg = max(4, (k - 1).bit_length())
-        return serialize(from_hashes((), k, compute_seed_hash(DEFAULT_SEED)), lg)
+        return serialize(from_hashes((), k, compute_seed_hash(DEFAULT_SEED)))
     if kind == "hll":
         from hurricanedb_spark.operators.clearspring_hll import ClearspringHLL
 
@@ -199,7 +198,6 @@ def _make_acc_factory(spec: DigestSpec, spark_type: str):
                 f"{spark_type} (sketchable: int/long/float/double/string)"
             )
         seed_hash = compute_seed_hash(DEFAULT_SEED)
-        lg = max(4, (spec.k - 1).bit_length())
         k = spec.k
 
         class _ThAcc:
@@ -232,7 +230,7 @@ def _make_acc_factory(spec: DigestSpec, spark_type: str):
 
             def emit(self) -> bytes:
                 return serialize(
-                    from_hashes(self.hashes, k, seed_hash, self.theta), lg
+                    from_hashes(self.hashes, k, seed_hash, self.theta)
                 )
 
         return _ThAcc
@@ -351,12 +349,8 @@ def _make_merger(spec: DigestSpec):
             union,
         )
 
-        lg = max(4, (spec.k - 1).bit_length())
-
         def merge_theta(blobs):
-            return serialize(
-                union([deserialize(b) for b in blobs], spec.k), lg
-            )
+            return serialize(union([deserialize(b) for b in blobs], spec.k))
 
         return merge_theta
     if spec.kind == "hll":

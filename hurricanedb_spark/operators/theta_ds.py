@@ -4,10 +4,18 @@ The reference's distinctCountRawThetaSketch returns serialized
 org.apache.datasketches theta sketch bytes so sketches can round-trip
 between segments, brokers, and external consumers
 (pinot-core/.../function/DistinctCountThetaSketchAggregationFunction.java:60-111,
-default nominalEntries 4096 per its class javadoc). operators/theta.py
-carries the engine-internal KMV form (array<double>, pure-JVM merge);
-this module adds the wire-compatible form so a sketch produced here can
-be read by a real DataSketches/Pinot/Druid deployment and vice versa.
+default nominalEntries 4096 per its class javadoc). This module is the
+engine's one theta sketch family, and the only source of the reference's
+serVer-3 wire bytes, so a sketch produced here can be read by a real
+DataSketches/Pinot/Druid deployment and vice versa.
+
+Where only an estimate leaves the query, the sketch work runs on Spark
+4.1's bundled datasketches-java 6.2.0 instead: `theta_union_agg` reads
+these serVer-3 bytes, and `theta_sketch_agg` / `theta_sketch_estimate`
+run as JVM partial and final aggregates. Their nominal is a log2
+(`lgNomEntries`); `lg_k` maps a nominal-entries count to it. Native
+sketches serialize as serVer 4, so every raw wire form (and the merges
+behind it) stays on this module.
 
 Everything below follows the PUBLIC Apache DataSketches specification:
 
@@ -43,16 +51,16 @@ Estimate = curCount / (thetaLong / 2^63-1).
 
 Scale design: hashing numeric columns is a vectorized numpy kernel (an
 8-byte murmur3 input needs no block loop, so the whole hash is ~15
-uint64 array ops); strings take a per-row loop inside the Arrow batch —
-documented cold path, the hot engine-internal form is operators/theta.py.
-Partial sketches are built per partition via mapInArrow (map-side
-combine), so the one shuffle carries O(groups x k) longs, never O(rows).
+uint64 array ops); strings take a per-row loop inside the Arrow batch.
+The distributed raw path is operators/raw_partial.digests_by_group:
+partial sketches per partition via mapInArrow (map-side combine), so the
+one shuffle carries O(groups x k) longs, never O(rows).
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterable, Iterator, NamedTuple, Sequence
+from typing import Iterable, NamedTuple, Sequence
 
 DEFAULT_SEED = 9001  # datasketches-java ThetaUtil.DEFAULT_UPDATE_SEED
 DEFAULT_NOMINAL = 4096  # reference default nominalEntries
@@ -79,6 +87,13 @@ _FLAG_EMPTY = 4
 _FLAG_COMPACT = 8
 _FLAG_ORDERED = 16
 _FLAG_SINGLE_ITEM = 32  # real readers require it on the 1-prelong form
+
+
+def lg_k(k: int) -> int:
+    """log2 of a nominal-entries count, rounded up to a power of two as
+    DataSketches does, and at least 4: the `lgNomEntries` argument of
+    Spark's theta_sketch_agg / theta_union_agg."""
+    return max(4, (k - 1).bit_length())
 
 
 def _rotl(x: int, r: int) -> int:
@@ -236,7 +251,7 @@ def build_sketch(
     seed: int = DEFAULT_SEED,
 ) -> CompactTheta:
     """Build a compact sketch from raw values (driver-side / per-batch
-    helper; the distributed path is theta_ds_sketch_by_group)."""
+    helper; the distributed path is raw_partial.digests_by_group)."""
     hashes = set()
     for v in values:
         b = canonical_bytes(v)
@@ -490,94 +505,3 @@ _SPARK_TO_HASH_DTYPE = {
     "string": "string",
 }
 
-
-def theta_ds_sketch_by_group(
-    df,
-    group_cols: list[str],
-    value_col: str,
-    k: int = DEFAULT_NOMINAL,
-    seed: int = DEFAULT_SEED,
-):
-    """GroupBy + DataSketches-compatible theta sketch: one row per group
-    with a `sketch` binary column holding compact ordered sketch bytes.
-
-    Two-phase: mapInArrow emits one partial sketch per (partition,
-    group) — map-side combine, shuffle is O(groups x k) — then
-    applyInPandas unions partials per group. Arrow batches keep
-    null-bearing BIGINT values and group keys exact (int64 + validity
-    bitmap; the mapInPandas float64 degrade rounded ids past 2^53
-    before hashing)."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from pyspark.sql import functions as F
-
-    spark_type = dict(df.dtypes)[value_col]
-    hash_dtype = _SPARK_TO_HASH_DTYPE.get(spark_type)
-    if hash_dtype is None:
-        raise ValueError(
-            f"distinctCountRawThetaSketch: unsupported column type {spark_type}"
-        )
-    seed_hash = compute_seed_hash(seed)
-    # preamble lgNomLongs follows the requested nominal k (the single-phase
-    # SQL builder does the same); serializing partials and merge with
-    # different lg values would still deserialize, but the SQL-path and
-    # programmatic-path bytes for the same data must be identical
-    lg = max(4, (k - 1).bit_length())
-    src = df.select(*group_cols, F.col(value_col).alias("__v"))
-    fields = ", ".join(
-        f"`{c}` {src.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    out_schema = f"{fields}, sketch binary"
-
-    def partials(batches):
-        out_fields = None
-        for batch in batches:
-            if out_fields is None:
-                out_fields = pa.schema(
-                    [batch.schema.field(c) for c in group_cols]
-                    + [pa.field("sketch", pa.binary())]
-                )
-            if batch.num_rows == 0:
-                continue
-            # nullable Int64 only when the batch actually carries nulls
-            # (null-free batches convert straight to plain int64 numpy)
-            mapper = (
-                {pa.int64(): pd.Int64Dtype()}.get
-                if any(
-                    batch.column(i).null_count
-                    for i in range(batch.num_columns)
-                )
-                else None
-            )
-            pdf = batch.to_pandas(types_mapper=mapper)
-            pdf = pdf.assign(__h=hash_column_np(pdf["__v"], hash_dtype, seed))
-            rows = []
-            for key, grp in pdf.groupby(group_cols, dropna=False, sort=False):
-                hs = [int(h) for h in grp["__h"].to_numpy() if h]
-                key = key if isinstance(key, tuple) else (key,)
-                key = tuple(None if pd.isna(x) else x for x in key)
-                rows.append(
-                    (*key, serialize(from_hashes(hs, k, seed_hash), lg))
-                )
-            # pa.array with explicit field types — a pandas constructor
-            # would re-infer an [int, None] key column as float64,
-            # re-introducing the exact rounding mapInArrow kills
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r[i] for r in rows], type=f.type)
-                    for i, f in enumerate(out_fields)
-                ],
-                schema=out_fields,
-            )
-
-    def merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        sketches = [deserialize(b, seed_hash) for b in pdf["sketch"]]
-        merged = serialize(union(sketches, k), lg)
-        return pdf.iloc[:1].assign(sketch=[merged])[[*group_cols, "sketch"]]
-
-    return (
-        src.mapInArrow(partials, schema=out_schema)
-        .groupBy(*group_cols)
-        .applyInPandas(merge, schema=out_schema)
-    )

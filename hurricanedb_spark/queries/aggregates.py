@@ -320,22 +320,20 @@ def q_hll_raw_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "form (DistinctCountThetaSketchAggregationFunction.java:60-111 "
     "serializes org.apache.datasketches compact bytes): per-group compact "
     "ordered theta sketches (murmur3-x64-128, seed 9001, nominalEntries "
-    "4096), serialized to the public byte layout, deserialized back, and "
-    "estimated. The oracle is valid because below nominalEntries the "
-    "sketch is EXACT by construction (theta == Long.MAX_VALUE, estimate "
-    "== retained count) — true at the gate's sf0.01; the estimation "
-    "regime is bounds-tested in tests/test_theta_ds.py.",
+    "4096) built two-phase by raw_partial.digests_by_group in the public "
+    "serVer-3 byte layout, then read back and estimated by Spark's "
+    "bundled DataSketches (theta_sketch_estimate). The oracle is valid "
+    "because below nominalEntries the sketch is EXACT by construction "
+    "(theta == Long.MAX_VALUE, estimate == retained count) — true at the "
+    "gate's sf0.01; the estimation regime is bounds-tested in "
+    "tests/test_theta_ds.py.",
     tags=("aggregation", "sketch", "wire-format"),
 )
 def q_theta_ds_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hurricanedb_spark.operators.theta_ds import (
-        deserialize,
-        theta_ds_sketch_by_group,
+    from hurricanedb_spark.operators.raw_partial import (
+        DigestSpec,
+        digests_by_group,
     )
-
-    @F.pandas_udf("double")
-    def _estimate(sketches):
-        return sketches.map(lambda b: deserialize(bytes(b)).estimate())
 
     li = _t(spark, sf_dir, "lineitem")
     # exactness precondition, asserted loudly (the same data-scale
@@ -357,9 +355,12 @@ def q_theta_ds_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
             "longer applies at this SF (estimation accuracy is bounds-"
             "tested in tests/test_theta_ds.py)"
         )
-    sk = theta_ds_sketch_by_group(li, ["l_returnflag"], "l_partkey", k=k)
+    sk = digests_by_group(
+        li, ["l_returnflag"], [DigestSpec("sketch", "l_partkey", "theta", k)]
+    )
     return sk.select(
-        "l_returnflag", _estimate(F.col("sketch")).alias("theta_estimate")
+        "l_returnflag",
+        F.theta_sketch_estimate("sketch").cast("double").alias("theta_estimate"),
     )
 
 

@@ -803,20 +803,19 @@ def q_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_returnflag, COUNT(DISTINCT l_suppkey) AS n_supp
     FROM lineitem GROUP BY l_returnflag
     """,
-    doc="Mergeable KMV theta sketch (operators/theta.py; reference "
-    "distinctCountThetaSketch raw form): per-group sketches built with a "
-    "map-side partial phase (one shuffle of O(groups x K) doubles), "
-    "estimated with the KMV estimator. Below K the sketch is lossless, "
-    "so THIS query is exact and oracle-checked — a DATA-SCALE "
+    doc="Mergeable theta sketch (reference distinctCountThetaSketch): "
+    "Spark's bundled DataSketches theta_sketch_agg per group, run as a JVM "
+    "partial and final aggregate (one shuffle of O(groups x K) sketch "
+    "bytes), estimated by theta_sketch_estimate. Below K the sketch is "
+    "lossless, so THIS query is exact and oracle-checked — a DATA-SCALE "
     "precondition the query asserts loudly (per-group NDV <= K) instead "
     "of letting the exact oracle silently rot when the fixture grows "
-    "(sf1 crosses it); the approximate regime and "
-    "union/intersection/difference algebra are bounded in "
-    "tests/test_theta.py.",
+    "(sf1 crosses it); the estimation regime and the set algebra are "
+    "bounded in tests/test_theta_ds.py.",
     tags=("datapipe", "sketch", "approx"),
 )
 def q_theta_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hurricanedb_spark.operators import theta as th
+    from hurricanedb_spark.operators.theta_ds import lg_k
 
     li = _t(spark, sf_dir, "lineitem")
     k = 1024
@@ -829,12 +828,11 @@ def q_theta_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ndv and ndv > k:
         raise RuntimeError(
             f"q_theta_sketch_distinct: per-group NDV {ndv} exceeds K={k} — "
-            "the KMV sketch enters estimation mode and the exact oracle no "
+            "the theta sketch enters estimation mode and the exact oracle no "
             "longer applies at this SF (estimation accuracy is bounds-"
-            "tested in tests/test_theta.py)"
+            "tested in tests/test_theta_ds.py)"
         )
-    sk = th.theta_sketch_by_group(li, ["l_returnflag"], "l_suppkey", k=k)
-    return sk.select(
-        "l_returnflag",
-        th.theta_estimate(F.col("sketch"), 1024).cast("bigint").alias("n_supp"),
+    sketch = F.theta_sketch_agg("l_suppkey", lg_k(k))
+    return li.groupBy("l_returnflag").agg(
+        F.theta_sketch_estimate(sketch).alias("n_supp")
     )

@@ -94,15 +94,15 @@ def q_streaming_windowed_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_streaming_theta_live",
-    oracle=None,  # custom stateful op: KMV state uses xxhash64, which the
-    # DuckDB oracle cannot reproduce; equivalence to the BATCH sketch is
-    # asserted bit-exactly in tests/test_streaming_stateful.py instead
+    oracle=None,  # the theta estimate past K is DataSketches-specific,
+    # which the DuckDB oracle cannot reproduce; equivalence to the BATCH
+    # sketch is asserted byte-exactly in tests/test_streaming_stateful.py
     doc="Continuous per-event-type distinct-user estimate, executed as a "
-    "LIVE applyInPandasWithState pipeline (streaming/stateful.py): KMV "
-    "theta-sketch state bounded O(K) per key across micro-batches — the "
-    "reference's realtime distinct-count-sketch path "
-    "(DistinctCountThetaSketchAggregationFunction over consuming "
-    "segments) as a Spark custom stateful operator.",
+    "LIVE streaming aggregate (streaming/stateful.py): Spark's bundled "
+    "DataSketches theta_sketch_agg as update-mode state, bounded O(K) per "
+    "key across micro-batches — the reference's realtime "
+    "distinct-count-sketch path (DistinctCountThetaSketchAggregationFunction "
+    "over consuming segments) as a declarative stateful aggregate.",
     tags=("streaming", "live", "sketch"),
 )
 def q_streaming_theta_live(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,7 +132,7 @@ def q_streaming_theta_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination(300)
-    # latest state row per key, sketch dropped (array column hashes are
+    # latest state row per key, sketch dropped (its bytes are
     # engine-specific; estimate + n_seen are the queryable surface)
     snap = spark.table(name)
     return (

@@ -442,12 +442,9 @@ def write_star_trees(segment_dir: str, pdf, specs: list[StarTreeSpec]) -> None:
                 )
 
                 sh = compute_seed_hash(9001)
-                lg = max(4, (_TREE_THETA_K - 1).bit_length())
                 payload = _encode_raw_sv(
                     [
-                        theta_serialize(
-                            from_hashes(fs, _TREE_THETA_K, sh), lg
-                        )
+                        theta_serialize(from_hashes(fs, _TREE_THETA_K, sh))
                         for fs in records[key]
                     ],
                     "BYTES",
@@ -646,8 +643,7 @@ def _bytes_sketch_union(series):
     )
 
     sks = [deserialize(bytes(b)) for b in series]
-    lg = max(4, (_TREE_THETA_K - 1).bit_length())
-    return serialize(union(sks, k=_TREE_THETA_K), lg)
+    return serialize(union(sks, k=_TREE_THETA_K))
 
 
 def _bytes_bitmap_union(series):
@@ -995,10 +991,7 @@ def _segment_prearg_fallback_pandas(
             serialize as theta_serialize,
         )
 
-        lg = max(4, (_TREE_THETA_K - 1).bit_length())
-        return theta_serialize(
-            build_sketch(series.tolist(), k=_TREE_THETA_K), lg
-        )
+        return theta_serialize(build_sketch(series.tolist(), k=_TREE_THETA_K))
 
     def _raw_bitmap_bytes(series):
         from hurricanedb_spark.sources.pinot_segment import roaring_serialize

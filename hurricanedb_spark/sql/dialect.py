@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hurricanedb_spark.catalog.tables import register_views
 from hurricanedb_spark.functions.registry import register_all, sql_macros
+from hurricanedb_spark.operators.theta_ds import lg_k
 from hurricanedb_spark.sources.geo_index import geo_radius_segment_docs
 from hurricanedb_spark.sources.json_index import json_match_segment_docs
 from hurricanedb_spark.sources.native_text_index import text_match_segment_docs
@@ -1099,84 +1100,76 @@ def _theta_inclusion_exclusion(tree, col: str, preds: dict[int, str]) -> str:
     return f"CAST(({' + '.join(terms)}) AS BIGINT)"
 
 
-def _theta_set_expr(expr: str, sketches: list[str]) -> str:
-    """Array-algebra form of the theta set expression over per-filter
-    collect_set states — used only above the inclusion-exclusion
-    filter-count cap (state is O(ndv) per group there, so the
-    distributed form is preferred; this one handles arbitrarily many
-    filters)."""
-    pos = 0
-    n = len(expr)
+def _theta_array_expr(tree, sketches: dict[int, str]) -> str:
+    """Array-algebra form of a parsed theta set-expression tree over
+    per-filter collect_set states — used only above the
+    inclusion-exclusion filter-count cap (state is O(ndv) per group
+    there, so the distributed form is preferred; this one handles
+    arbitrarily many filters)."""
+    if isinstance(tree, int):
+        return sketches[tree]
+    op, children = tree
+    args = [_theta_array_expr(c, sketches) for c in children]
+    if op == "diff":
+        return f"array_except({args[0]}, {args[1]})"
+    fold = "array_union" if op == "union" else "array_intersect"
+    out = args[0]
+    for a in args[1:]:
+        out = f"{fold}({out}, {a})"
+    return out
 
-    def skip_ws() -> None:
-        nonlocal pos
-        while pos < n and expr[pos].isspace():
-            pos += 1
 
-    def parse() -> str:
-        nonlocal pos
-        skip_ws()
-        if pos >= n:
-            raise ValueError(f"theta set expression truncated: {expr!r}")
-        if expr[pos] == "$":
-            m = re.match(r"\$(\d+)", expr[pos:])
-            if not m:
-                raise ValueError(f"invalid sketch id at {expr[pos:]!r}")
-            sid = int(m.group(1))
-            if sid >= len(sketches):
-                raise ValueError(
-                    f"sketch id ${sid} exceeds number of filters "
-                    f"({len(sketches) - 1}) in {expr!r}"
-                )
-            pos += m.end()
-            return sketches[sid]
-        m = _TOKEN.match(expr, pos)
-        if not m:
-            raise ValueError(f"invalid theta set expression at {expr[pos:]!r}")
-        # FunctionRegistry canonicalization: case-insensitive, underscores
-        # dropped (SET_UNION == setUnion)
-        op = m.group(0).lower().replace("_", "")
-        pos = m.end()
-        skip_ws()
-        if pos >= n or expr[pos] != "(":
-            raise ValueError(f"expected '(' after {m.group(0)} in {expr!r}")
-        pos += 1
-        args = [parse()]
-        skip_ws()
-        while pos < n and expr[pos] == ",":
-            pos += 1
-            args.append(parse())
-            skip_ws()
-        if pos >= n or expr[pos] != ")":
-            raise ValueError(f"expected ')' in theta set expression {expr!r}")
-        pos += 1
-        if op == "setunion":
-            fold = "array_union"
-        elif op == "setintersect":
-            fold = "array_intersect"
-        elif op == "setdiff":
-            if len(args) != 2:
-                raise ValueError(
-                    f"SET_DIFF should have 2 arguments, got: {len(args)}"
-                )
-            return f"array_except({args[0]}, {args[1]})"
-        else:
-            raise ValueError(f"Invalid set operation: {op}")
-        if len(args) < 2:
-            raise ValueError(
-                f"SET_UNION and SET_INTERSECT should have at least 2 "
-                f"arguments, got: {len(args)}"
-            )
-        out = args[0]
-        for a in args[1:]:
-            out = f"{fold}({out}, {a})"
-        return out
+class _ThetaFiltered(NamedTuple):
+    """The parts of a filtered theta call (expr, params, filter...,
+    setExpr) that every emission of it shares."""
 
-    result = parse()
-    skip_ws()
-    if pos != n:
-        raise ValueError(f"trailing input in theta set expression: {expr!r}")
-    return result
+    nominal: int
+    tree: object  # _theta_parse_tree output, original sketch ids
+    preds: dict  # sketch id -> filter predicate ($0: "true")
+    values: dict  # referenced sketch id -> the value expr it sketches
+    rendered: str  # set expression over positions in `values`
+
+    def setop_sql(self, bodies: list[str] | None = None) -> str:
+        """thetasetopsketch over one BINARY sketch per referenced id
+        (default: a rawthetasketch of each value): the serVer-3 bytes
+        of the set-op result."""
+        if bodies is None:
+            bodies = [
+                f"rawthetasketch({v}, {self.nominal})"
+                for v in self.values.values()
+            ]
+        return (
+            f"thetasetopsketch('{self.rendered}', "
+            f"array({', '.join(bodies)}), {self.nominal})"
+        )
+
+
+def _theta_filtered_parts(name: str, args: list[str]) -> _ThetaFiltered:
+    """Validate and split a filtered theta call. Raises ValueError on a
+    malformed parameter, filter or set expression."""
+    col = args[0]
+    nominal = _theta_params(args[1])
+    filters = [
+        _unquote_literal(a, f"{name} filter expression") for a in args[2:-1]
+    ]
+    set_expr = _unquote_literal(args[-1], f"{name} post-aggregation expression")
+    tree = _theta_parse_tree(set_expr, len(filters))
+    ids = sorted(_theta_tree_ids(tree))
+    # the Spark schema of a CASE branch keeps the source column type, so
+    # $0 and the filter sketches share one hash space
+    values = {
+        a: f"({col})"
+        if a == 0
+        else f"CASE WHEN ({filters[a - 1]}) THEN ({col}) END"
+        for a in ids
+    }
+    return _ThetaFiltered(
+        nominal,
+        tree,
+        {0: "true", **{i + 1: f for i, f in enumerate(filters)}},
+        values,
+        _theta_render_tree(tree, {a: i for i, a in enumerate(ids)}),
+    )
 
 
 def _theta_sketch_sql(name: str, args: list[str]) -> str:
@@ -1209,7 +1202,7 @@ def _theta_sketch_sql(name: str, args: list[str]) -> str:
       child in Spark's Expand-based multi-distinct plan, so a query
       stacking many theta calls multiplies the expand factor; pipelines
       doing heavy repeated set algebra should use the bounded mergeable
-      sketches (operators/theta.py / theta_ds.py or the raw form).
+      sketches (operators/theta_ds.py or the raw form).
     - 3 args: rejected loudly. The reference silently ignores the third
       argument (numArguments < 4 takes the simple-union path, java:112);
       this engine refuses to guess which of params/filter was meant.
@@ -1234,13 +1227,7 @@ def _theta_sketch_sql(name: str, args: list[str]) -> str:
             f"{name}: 3-argument form is ambiguous (filtered form needs "
             "expr, params, filter(s), set-expression — at least 4 args)"
         )
-    col = args[0]
-    nominal = _theta_params(args[1])
-    filters = [
-        _unquote_literal(a, f"{name} filter expression") for a in args[2:-1]
-    ]
-    set_expr = _unquote_literal(args[-1], f"{name} post-aggregation expression")
-    tree = _theta_parse_tree(set_expr, len(filters))
+    parts = _theta_filtered_parts(name, args)
     if name == "distinctcountrawthetasketch":
         # filtered RAW form: the result is the serialized SKETCH of the
         # set-op result (mergeable state), not its estimate — one theta
@@ -1251,30 +1238,9 @@ def _theta_sketch_sql(name: str, args: list[str]) -> str:
         # restructurable single-table shapes never reach it — they route
         # through _raw_digest_two_phase (mapInArrow partials, no
         # raw-value shuffle) with byte-identical output
-        ids = sorted(_theta_tree_ids(tree))
-        pos = {a: i for i, a in enumerate(ids)}
-        rendered = _theta_render_tree(tree, pos)
-        # the Arrow-native UDAF sees the true column type in every
-        # sketch (the CASE branches inject NULLs, which ride the
-        # validity bitmap instead of degrading int64 to float64), so
-        # $0 and the filter sketches share one hash space by
-        # construction
-        sk_exprs = [
-            f"rawthetasketch(({col}), {nominal})"
-            if a == 0
-            else (
-                f"rawthetasketch(CASE WHEN ({filters[a - 1]}) "
-                f"THEN ({col}) END, {nominal})"
-            )
-            for a in ids
-        ]
-        return (
-            f"base64(thetasetopsketch('{rendered}', "
-            f"array({', '.join(sk_exprs)}), {nominal}))"
-        )
-    if len(_theta_tree_ids(tree)) <= 6:
-        preds = {0: "true", **{i + 1: f for i, f in enumerate(filters)}}
-        return _theta_inclusion_exclusion(tree, col, preds)
+        return f"base64({parts.setop_sql()})"
+    if len(parts.values) <= 6:
+        return _theta_inclusion_exclusion(parts.tree, args[0], parts.preds)
     # Above the inclusion-exclusion cap (2^k - 1 union terms). Round-13
     # (r12 'what's wrong' #1): with OPTION(thetaEstimate=true) the
     # estimate form routes through the bounded mergeable theta_ds
@@ -1288,27 +1254,10 @@ def _theta_sketch_sql(name: str, args: list[str]) -> str:
     # user who hits >6 filters on a high-NDV column chooses between
     # exact-with-guard and bounded-estimate explicitly.
     if _active_query_options().get("thetaEstimate", "").lower() == "true":
-        ids = sorted(_theta_tree_ids(tree))
-        pos = {a: i for i, a in enumerate(ids)}
-        rendered = _theta_render_tree(tree, pos)
-        sk_exprs = [
-            f"rawthetasketch(({col}), {nominal})"
-            if a == 0
-            else (
-                f"rawthetasketch(CASE WHEN ({filters[a - 1]}) "
-                f"THEN ({col}) END, {nominal})"
-            )
-            for a in ids
-        ]
-        return (
-            f"thetasketchestimate(thetasetopsketch('{rendered}', "
-            f"array({', '.join(sk_exprs)}), {nominal}))"
-        )
+        return f"thetasketchestimate({parts.setop_sql()})"
     # exact fallback: per-group array set algebra, state O(ndv) per group
-    sketches = [f"collect_set({col})"] + [
-        f"collect_set(CASE WHEN ({f}) THEN ({col}) END)" for f in filters
-    ]
-    return f"CAST(size({_theta_set_expr(set_expr, sketches)}) AS BIGINT)"
+    sets = {a: f"collect_set({v})" for a, v in parts.values.items()}
+    return f"CAST(size({_theta_array_expr(parts.tree, sets)}) AS BIGINT)"
 
 
 # Pinot FieldSpec.DataType -> Spark SQL type, for the firstWithTime /
@@ -3369,11 +3318,15 @@ class HurricaneSQL:
         type, but distinctCountHLL / distinctCountThetaSketch quietly
         counted distinct BLOBS instead of unioning the stored sketches.
 
-        Limitation: the theta union is a grouped-agg pandas UDF, which
+        The estimate forms union natively (theta_union_agg reads the
+        stored serVer-3 bytes; hll_union_agg): JVM partial and final
+        aggregates that mix freely with other aggregates. Beside a raw
+        theta or clearspring HLL union from this pass, a theta estimate
+        reads the raw union's bytes instead.
+        Limitation: those raw unions are grouped-agg pandas UDFs, which
         Spark cannot place beside JVM aggregates in one SELECT — such a
         mix fails loudly at analysis (INVALID_PANDAS_UDF_PLACEMENT);
-        query the sketch column in its own statement. The HLL forms are
-        JVM-side and mix freely."""
+        query that sketch column in its own statement."""
         names = {
             "distinctcountthetasketch",
             "distinctcountrawthetasketch",
@@ -3418,6 +3371,11 @@ class HurricaneSQL:
             return None
 
         out, pos = [], 0
+        # theta estimates (index in `out`, column, nominal): emitted after
+        # the loop, once it is known whether this pass emitted a Python
+        # aggregate they must sit beside
+        estimates: list[tuple[int, str, int]] = []
+        py_agg = False
         for start, end, name, args in calls:
             out.append(query[pos:start])
             col = args[0].strip()
@@ -3454,6 +3412,7 @@ class HurricaneSQL:
                     )
                 except Exception:  # noqa: BLE001 — unreadable: DS path
                     pass
+                py_agg = py_agg or clearspring
                 if name == "distinctcounthll":
                     out.append(
                         f"clearspringhllunionest({col})"
@@ -3475,11 +3434,13 @@ class HurricaneSQL:
             elif is_bin and len(args) <= 2:
                 nominal = _theta_params(args[1]) if len(args) == 2 else 4096
                 if name == "distinctcountrawthetasketch":
+                    py_agg = True
                     out.append(
                         f"base64(thetasketchunionraw({col}, {nominal}))"
                     )
                 else:
-                    out.append(f"thetasketchunionest({col}, {nominal})")
+                    estimates.append((len(out), col, nominal))
+                    out.append("")
             elif is_bin:
                 raise ValueError(
                     f"{name} over a BYTES column supports only the simple "
@@ -3490,6 +3451,17 @@ class HurricaneSQL:
                 out.append(query[start:end])
             pos = end
         out.append(query[pos:])
+        for i, col, nominal in estimates:
+            # native union (JVM partial + final aggregate) unless a raw
+            # union from this pass is a Python aggregate: Spark cannot
+            # place the two kinds in one SELECT, so the estimate then
+            # reads the Python union's serVer-3 bytes
+            out[i] = (
+                f"thetasketchestimate(thetasketchunionraw({col}, {nominal}))"
+                if py_agg
+                else "theta_sketch_estimate("
+                f"theta_union_agg({col}, {lg_k(nominal)}))"
+            )
         return "".join(out), None, None
 
     def _rd_wrap_subtree(self, query: str, masked: str, names: set[str]):
@@ -3866,40 +3838,13 @@ class HurricaneSQL:
             if name != "distinctcountrawthetasketch" or len(args) < 4:
                 return None
             try:
-                nominal = _theta_params(args[1])
-                filters = [
-                    _unquote_literal(a, f"{name} filter expression")
-                    for a in args[2:-1]
-                ]
-                set_expr = _unquote_literal(
-                    args[-1], f"{name} post-aggregation expression"
-                )
-                tree = _theta_parse_tree(set_expr, len(filters))
+                parts = _theta_filtered_parts(name, args)
             except ValueError:
                 return None
-            ids = sorted(_theta_tree_ids(tree))
-            pos = {a: i for i, a in enumerate(ids)}
-            rendered = _theta_render_tree(tree, pos)
-            col = args[0]
             specs = [
-                (
-                    f"({col})"
-                    if a == 0
-                    else f"CASE WHEN ({filters[a - 1]}) THEN ({col}) END",
-                    "theta",
-                    nominal,
-                    "",
-                )
-                for a in ids
+                (v, "theta", parts.nominal, "") for v in parts.values.values()
             ]
-
-            def render(bodies, rendered=rendered, nominal=nominal):
-                return (
-                    f"base64(thetasetopsketch('{rendered}', "
-                    f"array({', '.join(bodies)}), {nominal}))"
-                )
-
-            return specs, render
+            return specs, lambda bodies: f"base64({parts.setop_sql(bodies)})"
 
         # round-15: name parity for UNALIASED digest-bearing select
         # items. The restructured emission (coalesce over the merged
@@ -4597,10 +4542,9 @@ class HurricaneSQL:
             return None
         pairs = list(dict.fromkeys(pairs))
         agg_fns = [p[0] for kind, p in items if kind == "agg"]
-        pandas_fns = ("distinctcountthetasketch", "distinctcountbitmap")
-        n_theta = sum(f in pandas_fns for f in agg_fns)
-        if n_theta and n_theta != len(agg_fns):
-            # the sketch union is a grouped-agg pandas UDF, which Spark
+        n_bitmap = agg_fns.count("distinctcountbitmap")
+        if n_bitmap and n_bitmap != len(agg_fns):
+            # the bitmap union is a grouped-agg pandas UDF, which Spark
             # cannot place beside JVM aggregates in one SELECT — a mixed
             # shape must keep the scan path (where every aggregate is
             # JVM-side) rather than redirect into an analysis error
@@ -4724,15 +4668,15 @@ class HurricaneSQL:
             elif fn == "distinctcountthetasketch":
                 # union the per-segment pre-agg sketches (tree records
                 # or fallback-built — both carry the same compact byte
-                # form) and round the estimate to a long. Note: the
-                # scan path estimates via HLL; the redirect estimates
-                # via the ACTUAL theta sketches — the reference's own
-                # estimator for this aggregate. Both are exact below
-                # their sketch bounds.
+                # form) natively and estimate as a rounded long. Note:
+                # the scan path estimates via HLL++, which can be off
+                # even at small counts; the redirect estimates via the
+                # ACTUAL theta sketches — the reference's own estimator
+                # for this aggregate, exact below nominalEntries.
                 src = st.pair_out_col(f"{fn}__{arg}")
                 out_items.append(
-                    f"thetasketchunionest(`{src}`, {st._TREE_THETA_K}) "
-                    f"AS {alias}"
+                    "theta_sketch_estimate(theta_union_agg("
+                    f"`{src}`, {lg_k(st._TREE_THETA_K)})) AS {alias}"
                 )
             elif fn == "distinctcountbitmap":
                 # EXACT: value bitmaps union losslessly across segments,

@@ -1,91 +1,51 @@
-"""Custom stateful streaming operators via applyInPandasWithState.
+"""Continuous per-key distinct count over a stream.
 
 The reference's realtime servers maintain per-segment aggregation state
 as events arrive (LLRealtimeSegmentDataManager ingestion; the
 distinct-count family keeps sketches per consuming segment). Spark's
-built-in streaming aggregations cover sums/counts/windows; operators
-whose state is a custom data structure need
-`applyInPandasWithState` — this module holds those.
+streaming aggregation keeps the same kind of state declaratively: a
+`groupBy().agg()` in update mode stores each key's partial aggregate in
+the state store and merges every micro-batch into it.
 
-`streaming_theta_distinct`: continuous per-key distinct-count with a KMV
-theta sketch (operators/theta.py) as the state. State per key is bounded
-at O(K) doubles no matter how many events arrive — exactly the property
-that makes continuous distinct-count feasible on an unbounded stream —
-and because KMV merging is associative/commutative/idempotent-per-value,
-the streaming result after any number of micro-batches is IDENTICAL to
-the batch sketch over the same rows (asserted in
-tests/test_streaming_stateful.py, not just approximately equal).
+`streaming_theta_distinct` is that aggregate with Spark's bundled
+DataSketches theta sketch (`theta_sketch_agg`) as the state, so per-key
+state is bounded at O(K) hashes no matter how many events arrive. A
+micro-batch's partial sketch is unioned into the stored one, so after any
+number of micro-batches (or a restart from the checkpoint) each key's
+sketch bytes are IDENTICAL to the batch `theta_sketch_agg` over the same
+rows (asserted in tests/test_streaming_stateful.py).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from hurricanedb_spark.operators.theta import DEFAULT_K, u01_hash
+from hurricanedb_spark.operators.theta_ds import lg_k
 
 
 def streaming_theta_distinct(
     stream_df: DataFrame,
     key_col: str,
     value_col: str,
-    k: int = DEFAULT_K,
+    k: int = 1024,
 ) -> DataFrame:
     """Per-key continuous distinct-count estimate over a stream.
 
     Emits one row per key per micro-batch that touched it:
-    (key, sketch array<double>, estimate double, n_seen bigint).
-    Hashing runs JVM-side before the stateful operator; Python only
-    merges bounded sorted arrays (numpy), so per-batch work per key is
-    O(batch + K), state is O(K)."""
-    import numpy as np
-    import pandas as pd
-
-    key_type = stream_df.schema[key_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {key_type}, sketch array<double>, "
-        "estimate double, n_seen bigint"
-    )
-    state_schema = "sketch array<double>, n_seen bigint"
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        if state.exists:
-            prev, n_seen = state.get
-            sk = np.asarray(prev, dtype=np.float64)
-        else:
-            sk, n_seen = np.empty(0, dtype=np.float64), 0
-        for pdf in pdfs:
-            u = pdf["__u"].to_numpy(dtype=np.float64)
-            n_seen += len(u)
-            u = u[~np.isnan(u)]  # NULL values: counted in n_seen, no slot
-            sk = np.unique(np.concatenate([sk, u]))[:k]  # sorted distinct
-        state.update((sk.tolist(), int(n_seen)))
-        if len(sk) < k:
-            est = float(len(sk))
-        else:
-            est = (k - 1) / sk[-1]
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "sketch": [sk.tolist()],
-                "estimate": [est],
-                "n_seen": [int(n_seen)],
-            }
+    (key, sketch binary, estimate bigint, n_seen bigint). `k` is the
+    sketch's nominal entries (rounded up to a power of two); `n_seen`
+    counts every row of the key, NULL values included, while NULL
+    values take no sketch slot."""
+    return (
+        stream_df.groupBy(key_col)
+        .agg(
+            F.theta_sketch_agg(value_col, lg_k(k)).alias("sketch"),
+            F.count(F.lit(1)).alias("n_seen"),
         )
-
-    hashed = stream_df.select(
-        F.col(key_col), u01_hash(F.col(value_col)).alias("__u")
-    )
-    return hashed.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        .select(
+            key_col,
+            "sketch",
+            F.theta_sketch_estimate("sketch").alias("estimate"),
+            "n_seen",
+        )
     )

@@ -1933,6 +1933,33 @@ def test_theta_over_bytes_column_unions_sketches(hdb, spark):
         )
 
 
+def test_theta_bytes_estimate_is_a_jvm_aggregate(hdb, spark):
+    """The estimate form over a BYTES column unions the stored sketches
+    natively: a global aggregate over no rows returns one row reading 0,
+    and the estimate sits beside JVM aggregates in one SELECT."""
+    from hurricanedb_spark.operators.theta_ds import build_sketch, serialize
+
+    # 6 sketches over [i, i + 10) for i = 0, 5, ..., 25: 35 distinct
+    rows = [
+        (i, bytearray(serialize(build_sketch(list(range(i, i + 10))))))
+        for i in range(0, 30, 5)
+    ]
+    spark.createDataFrame(rows, "p int, sk binary") \
+        .createOrReplaceTempView("theta_bytes_jvm_t")
+    empty = hdb.sql(
+        "SELECT distinctCountThetaSketch(sk) AS dc FROM theta_bytes_jvm_t "
+        "WHERE p < 0",
+        default_limit=None,
+    ).collect()
+    assert [r["dc"] for r in empty] == [0]
+    mixed = hdb.sql(
+        "SELECT COUNT(*) AS n, distinctCountThetaSketch(sk) AS dc "
+        "FROM theta_bytes_jvm_t",
+        default_limit=None,
+    ).collect()
+    assert [(r["n"], r["dc"]) for r in mixed] == [(6, 35)]
+
+
 def test_theta_over_qualified_bytes_column_unions(hdb, spark):
     """Round-12: a table-QUALIFIED BYTES argument (`t.sk` — how join
     queries are written) must type-dispatch to the sketch union too; the

@@ -473,8 +473,8 @@ def test_theta_pair_redirect(spark, tmp_path):
     carrying the theta pair answers plain Pinot SQL from its sketch
     records; segments without a fitting tree build sketches in their
     fallback scan, and the final union estimates exactly (below
-    nominalEntries). Mixed theta + JVM-aggregate selects keep the scan
-    (pandas placement)."""
+    nominalEntries). The union is a JVM aggregate, so mixed theta +
+    JVM-aggregate selects redirect too."""
     rng = np.random.default_rng(17)
     theta_spec = st.StarTreeSpec(
         split_order=["city", "status"],
@@ -505,12 +505,24 @@ def test_theta_pair_redirect(spark, tmp_path):
     }
     assert fast == exact  # theta exact below nominalEntries
 
-    # mixed theta + COUNT(*) keeps the scan path (no redirect)
-    h.sql(
-        "SELECT city, COUNT(*) AS n, distinctCountThetaSketch(other) AS du "
-        "FROM st_theta GROUP BY city LIMIT 100"
-    ).collect()
-    assert h.last_star_tree_redirect is None
+    # mixed theta + COUNT(*) redirects as well, and reads the scan's
+    # count(*) and exact distinct
+    mixed = {
+        r["city"]: (r["n"], r["du"])
+        for r in h.sql(
+            "SELECT city, COUNT(*) AS n, distinctCountThetaSketch(other) AS du "
+            "FROM st_theta GROUP BY city LIMIT 100"
+        ).collect()
+    }
+    assert h.last_star_tree_redirect is not None
+    scan = {
+        r["city"]: (r["n"], r["du"])
+        for r in spark.sql(
+            "SELECT city, count(*) AS n, count(DISTINCT other) AS du "
+            "FROM st_theta GROUP BY city"
+        ).collect()
+    }
+    assert mixed == scan
 
 
 def test_bitmap_pair_exact_distinct_redirect(spark, tmp_path):

@@ -418,20 +418,15 @@ def test_rollup_sink_sketch_metrics(spark, tmp):
         "SELECT hll_sketch_estimate(event_id) AS e FROM rollup_state_t"
     ).collect()[0]["e"]
     assert abs(est - 12) / 12 < 0.1
-    # ...and the Pinot SQL surface type-dispatches the BYTES columns
-    # (theta and HLL queried separately: Spark cannot place a grouped-agg
-    # pandas UDF beside JVM aggregates in one SELECT — loud
-    # INVALID_PANDAS_UDF_PLACEMENT, documented in _theta_bytes_rewrite)
+    # ...and the Pinot SQL surface type-dispatches the BYTES columns;
+    # both unions are JVM aggregates, so one SELECT answers both
     h = HurricaneSQL(spark)
-    du = h.sql(
-        "SELECT distinctCountThetaSketch(user_id) AS du FROM rollup_state_t",
+    row = h.sql(
+        "SELECT distinctCountThetaSketch(user_id) AS du, "
+        "distinctCountHLL(event_id) AS de FROM rollup_state_t",
         default_limit=None,
-    ).collect()[0]["du"]
-    de = h.sql(
-        "SELECT distinctCountHLL(event_id) AS de FROM rollup_state_t",
-        default_limit=None,
-    ).collect()[0]["de"]
-    assert du == 3 and abs(de - 12) / 12 < 0.1
+    ).collect()[0]
+    assert row["du"] == 3 and abs(row["de"] - 12) / 12 < 0.1
 
 
 def test_rollup_aggregate_keeps_null_dimension_groups(spark):

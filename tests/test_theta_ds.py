@@ -15,6 +15,7 @@ import struct
 import pytest
 
 from hurricanedb_spark.operators import theta_ds as t
+from hurricanedb_spark.operators.raw_partial import DigestSpec, digests_by_group
 
 
 def test_murmur_python_vs_numpy_fixed8():
@@ -216,8 +217,8 @@ def test_spark_theta_ds_by_group(spark, sf_dir):
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    out = t.theta_ds_sketch_by_group(
-        li, ["l_returnflag"], "l_partkey", k=4096
+    out = digests_by_group(
+        li, ["l_returnflag"], [DigestSpec("sketch", "l_partkey", "theta", 4096)]
     ).collect()
     exact = {
         r["l_returnflag"]: r["cnt"]
@@ -242,9 +243,37 @@ def test_spark_theta_ds_by_group(spark, sf_dir):
 
 def test_spark_string_column_and_serde_stability(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out1 = t.theta_ds_sketch_by_group(docs, ["lang"], "doc_id", k=1024)
-    out2 = t.theta_ds_sketch_by_group(docs, ["lang"], "doc_id", k=1024)
+    spec = [DigestSpec("sketch", "doc_id", "theta", 1024)]
+    out1 = digests_by_group(docs, ["lang"], spec)
+    out2 = digests_by_group(docs, ["lang"], spec)
     rows1 = {r["lang"]: bytes(r["sketch"]) for r in out1.collect()}
     rows2 = {r["lang"]: bytes(r["sketch"]) for r in out2.collect()}
     # deterministic bytes regardless of partition evaluation order
     assert rows1 == rows2
+
+
+def test_native_theta_estimates_plan_without_python(spark, sf_dir):
+    """q_theta_sketch_distinct and a BYTES-column estimate run on Spark's
+    bundled DataSketches: JVM partial and final aggregates, so the plan
+    holds no Python node and exactly one Exchange."""
+    import re
+
+    from hurricanedb_spark.queries.datapipe import q_theta_sketch_distinct
+    from hurricanedb_spark.sql.dialect import HurricaneSQL
+
+    rows = [
+        (i % 2, bytearray(t.serialize(t.build_sketch(range(i, i + 50)))))
+        for i in range(0, 200, 40)
+    ]
+    spark.createDataFrame(rows, "g int, sk binary").createOrReplaceTempView(
+        "theta_plan_t"
+    )
+    bytes_est = HurricaneSQL(spark).sql(
+        "SELECT g, distinctCountThetaSketch(sk) AS n FROM theta_plan_t "
+        "GROUP BY g",
+        default_limit=None,
+    )
+    for df in (q_theta_sketch_distinct(spark, sf_dir), bytes_est):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"InPandas|InArrow|Python", plan), plan
+        assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
