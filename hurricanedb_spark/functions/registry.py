@@ -23,6 +23,15 @@ import math
 import pyarrow as pa  # Arrow-native UDAF batches (round-15)
 from pyspark.sql import SparkSession, functions as F, types as T
 
+
+def unchunked_base64(expr: str) -> str:
+    """SQL for the one-line base64 text of the binary `expr`. Spark's
+    base64() (like to_char(x, 'base64')) puts CRLF after every 76
+    characters; the reference's Base64 strings (java.util.Base64) have
+    no line breaks."""
+    return f"replace(base64({expr}), '\\r\\n', '')"
+
+
 # SQL-macro shims: name -> (args, body). Registered as Spark SQL temp
 # functions via `CREATE OR REPLACE TEMPORARY FUNCTION` is unavailable for
 # macros, so these are registered through spark.sql("SELECT ...") rewriting
@@ -99,7 +108,7 @@ _SQL_ALIASES: dict[str, tuple[list[str], str]] = {
     "remove": (["s", "sub"], "replace(s, sub, '')"),
     "encodeurl": (["s"], "url_encode(s)"),
     "decodeurl": (["s"], "url_decode(s)"),
-    "tobase64": (["b"], "base64(b)"),
+    "tobase64": (["b"], unchunked_base64("b")),
     "frombase64": (["s"], "unbase64(s)"),
     "toutf8": (["s"], "encode(s, 'UTF-8')"),
     "fromutf8": (["b"], "decode(b, 'UTF-8')"),
@@ -145,7 +154,7 @@ _SQL_ALIASES: dict[str, tuple[list[str], str]] = {
     "arrayunionint": (["a", "b"], "array_union(a, b)"),
     "arrayunionstring": (["a", "b"], "array_union(a, b)"),
     # --- DataTypeConversionFunctions / StringFunctions byte helpers ---
-    "base64encode": (["b"], "encode(base64(b), 'UTF-8')"),
+    "base64encode": (["b"], f"encode({unchunked_base64('b')}, 'UTF-8')"),
     "base64decode": (["b"], "unbase64(decode(b, 'UTF-8'))"),
     "frombytes": (["b", "c"], "decode(b, c)"),
     "tobytes": (["s", "c"], "encode(s, c)"),

@@ -63,6 +63,14 @@ def _unix_socket_dir() -> str:
     return _socket_dir
 
 
+def _default_driver_memory() -> str:
+    """The driver heap when $HURRICANE_DRIVER_MEM is unset: 16g, or half
+    of physical memory on a smaller host, so that the JVM heap cannot
+    grow to the whole machine."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "hurricanedb_spark",
     master: str | None = None,
@@ -107,7 +115,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("HURRICANE_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("HURRICANE_DRIVER_MEM") or _default_driver_memory(),
+        )
         # Python workers and their sockets: see the module docstring
         .config("spark.python.daemon.module", "hurricanedb_spark._pydaemon")
         .config(

@@ -28,7 +28,7 @@ import pyarrow as pa  # Arrow scalar-UDF batches (round-15)
 from pyspark.sql import DataFrame, SparkSession
 
 from hurricanedb_spark.catalog.tables import register_views
-from hurricanedb_spark.functions.registry import register_all, sql_macros
+from hurricanedb_spark.functions.registry import register_all, sql_macros, unchunked_base64
 from hurricanedb_spark.operators.theta_ds import lg_k
 from hurricanedb_spark.sources.geo_index import geo_radius_segment_docs
 from hurricanedb_spark.sources.json_index import json_match_segment_docs
@@ -120,7 +120,7 @@ _AGG_REWRITES: dict[str, str] = {
     # Arrow-native UDAF dispatches IdSets.create on the true batch
     # type, and null-bearing INT/LONG groups arrive exact (validity
     # bitmap — no float64 degrade rounding ids past 2^53)
-    "idset": "base64(idsetwireagg($1, ''))",
+    "idset": unchunked_base64("idsetwireagg($1, '')"),
     # documented superset: the reference REFUSES a standalone fourthMoment
     # (FourthMomentAggregationFunction.java:167 — the moment state exists
     # only as the carrier for skewness/kurtosis) so any defined answer is
@@ -1220,7 +1220,7 @@ def _theta_sketch_sql(name: str, args: list[str]) -> str:
             # (ColumnDataType.STRING). Arrow-native UDAF: the batch
             # type IS the column type, so int values hash as longs
             # even in NULL-bearing groups (validity bitmap, no degrade)
-            return f"base64(rawthetasketch({args[0]}, {nominal}))"
+            return unchunked_base64(f"rawthetasketch({args[0]}, {nominal})")
         return f"approx_count_distinct({args[0]})"
     if len(args) == 3:
         raise ValueError(
@@ -1238,7 +1238,7 @@ def _theta_sketch_sql(name: str, args: list[str]) -> str:
         # restructurable single-table shapes never reach it — they route
         # through _raw_digest_two_phase (mapInArrow partials, no
         # raw-value shuffle) with byte-identical output
-        return f"base64({parts.setop_sql()})"
+        return unchunked_base64(parts.setop_sql())
     if len(parts.values) <= 6:
         return _theta_inclusion_exclusion(parts.tree, args[0], parts.preds)
     # Above the inclusion-exclusion cap (2^k - 1 union terms). Round-13
@@ -1492,7 +1492,7 @@ def _agg_optional_args(name: str, args: list[str]) -> str | None:
                 "fpp",
             ):
                 raise ValueError(f"malformed idSet parameter: {kv!r}")
-        return f"base64(idsetwireagg({args[0]}, '{params}'))"
+        return unchunked_base64(f"idsetwireagg({args[0]}, '{params}')")
     if name == "inidset" and len(args) == 2:
         lit = args[1].strip()
         if lit.startswith("'") and lit.endswith("'"):
@@ -3436,7 +3436,7 @@ class HurricaneSQL:
                 if name == "distinctcountrawthetasketch":
                     py_agg = True
                     out.append(
-                        f"base64(thetasketchunionraw({col}, {nominal}))"
+                        unchunked_base64(f"thetasketchunionraw({col}, {nominal})")
                     )
                 else:
                     estimates.append((len(out), col, nominal))
@@ -3830,7 +3830,7 @@ class HurricaneSQL:
             k = _call_key(name, args)
             if k is not None:
                 env = (
-                    "base64({})"
+                    unchunked_base64("{}")
                     if k[1] in ("theta", "idset")
                     else "lower(hex({}))"
                 )
@@ -3844,7 +3844,7 @@ class HurricaneSQL:
             specs = [
                 (v, "theta", parts.nominal, "") for v in parts.values.values()
             ]
-            return specs, lambda bodies: f"base64({parts.setop_sql(bodies)})"
+            return specs, lambda bodies: unchunked_base64(parts.setop_sql(bodies))
 
         # round-15: name parity for UNALIASED digest-bearing select
         # items. The restructured emission (coalesce over the merged

@@ -27,6 +27,7 @@ import shutil
 
 import pyarrow as pa  # Arrow-native rollup UDAF batches (round-15)
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from hurricanedb_spark.operators.upsert import upsert_view
 
@@ -43,14 +44,21 @@ from hurricanedb_spark.operators.upsert import upsert_view
 # offsets); here the analog is versioned parquet directories plus an
 # atomically renamed meta file as the commit point:
 #
-#   {sink}.v{N}   full state after epoch E          (written first)
-#   {sink}.meta   {"version": N, "epoch": E}        (os.replace = commit)
-#   {sink}        queryable copy of the committed version (re-runnable)
+#   {sink}.v{N}   full state after epoch E          (the one write)
+#   {sink}.meta   {"version": N, "epoch": E,        (os.replace = commit)
+#                  "schema": <state schema JSON>}
+#   {sink}        relative symlink -> {sink}.v{N}   (os.replace = publish)
 #
 # A crash before the meta rename leaves the old version committed and the
 # epoch unrecorded -> replay re-merges from the old version (correct). A
 # crash after the rename leaves the epoch recorded -> replay skips the
-# merge and just repairs the queryable copy.
+# merge and just re-points the link. Readers of {sink} see a whole
+# version at every instant; the version before the committed one is kept
+# until the next commit, so a reader that opened {sink} just before a
+# swap still finds its files. The state is read back with the schema
+# in .meta, which skips Spark's parquet schema-inference job (a .meta
+# with no schema, from before the schema was recorded, still infers).
+# The protocol needs a local filesystem (symlinks, os.replace).
 # ---------------------------------------------------------------------------
 
 
@@ -63,24 +71,39 @@ def _read_state_meta(sink_dir: str) -> dict | None:
 
 
 def _load_state(spark: SparkSession, sink_dir: str) -> tuple[DataFrame | None, dict | None]:
-    """Return (committed state, meta) — never the possibly-torn {sink} copy."""
+    """Return (committed state, meta), read from the committed version."""
     meta = _read_state_meta(sink_dir)
     if meta is None:
         return None, None
-    return spark.read.parquet(f"{sink_dir}.v{meta['version']}"), meta
+    reader = spark.read
+    if "schema" in meta:
+        reader = reader.schema(StructType.fromJson(meta["schema"]))
+    return reader.parquet(f"{sink_dir}.v{meta['version']}"), meta
 
 
-def _publish_state(spark: SparkSession, sink_dir: str) -> None:
-    """Refresh the queryable copy from the committed version (idempotent)."""
-    meta = _read_state_meta(sink_dir)
-    if meta is not None:
-        spark.read.parquet(f"{sink_dir}.v{meta['version']}").write.mode(
-            "overwrite"
-        ).parquet(sink_dir)
+def _publish_state(sink_dir: str, version: int) -> None:
+    """Point {sink} at {sink}.v{version} (idempotent). A {sink} directory
+    left by the copy-based layout is removed on the first publish."""
+    if os.path.isdir(sink_dir) and not os.path.islink(sink_dir):
+        shutil.rmtree(sink_dir)
+    tmp_link = sink_dir + ".link.tmp"
+    if os.path.lexists(tmp_link):
+        os.remove(tmp_link)
+    os.symlink(f"{os.path.basename(sink_dir)}.v{version}", tmp_link)
+    os.replace(tmp_link, sink_dir)
+
+
+def _drop_old_versions(sink_dir: str, version: int) -> None:
+    """Remove every {sink}.v{K} but the committed version and the one
+    before it, including versions torn or left behind by a crash."""
+    parent, base = os.path.split(os.path.abspath(sink_dir))
+    for entry in os.listdir(parent):
+        k = entry[len(base) + 2:]
+        if entry.startswith(base + ".v") and k.isdigit() and int(k) < version - 1:
+            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
 
 
 def _commit_state(
-    spark: SparkSession,
     sink_dir: str,
     result: DataFrame,
     epoch_id: int,
@@ -90,11 +113,13 @@ def _commit_state(
     result.write.mode("overwrite").parquet(f"{sink_dir}.v{version}")
     tmp_meta = sink_dir + ".meta.tmp"
     with open(tmp_meta, "w") as f:
-        json.dump({"version": version, "epoch": epoch_id}, f)
+        json.dump(
+            {"version": version, "epoch": epoch_id, "schema": result.schema.jsonValue()},
+            f,
+        )
     os.replace(tmp_meta, sink_dir + ".meta")  # atomic commit point
-    _publish_state(spark, sink_dir)
-    if prev_meta is not None:
-        shutil.rmtree(f"{sink_dir}.v{prev_meta['version']}", ignore_errors=True)
+    _publish_state(sink_dir, version)
+    _drop_old_versions(sink_dir, version)
 
 
 def _already_applied(meta: dict | None, epoch_id: int) -> bool:
@@ -186,11 +211,11 @@ def start_upsert_sink(
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         state, meta = _load_state(spark, sink_dir)
         if _already_applied(meta, epoch_id):
-            _publish_state(spark, sink_dir)
+            _publish_state(sink_dir, meta["version"])
             return
         merged = state.unionByName(batch_df) if state is not None else batch_df
         result = upsert_view(merged, pk, cmp_col, tiebreak)
-        _commit_state(spark, sink_dir, result, epoch_id, meta)
+        _commit_state(sink_dir, result, epoch_id, meta)
 
     return (
         stream_df.writeStream.foreachBatch(merge_batch)
@@ -399,7 +424,7 @@ def start_partial_upsert_sink(
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         state, meta = _load_state(spark, sink_dir)
         if _already_applied(meta, epoch_id):
-            _publish_state(spark, sink_dir)
+            _publish_state(sink_dir, meta["version"])
             return
         if state is not None:
             result = merge_partial_state(
@@ -409,7 +434,7 @@ def start_partial_upsert_sink(
             from hurricanedb_spark.operators.upsert import partial_upsert_view
 
             result = partial_upsert_view(batch_df, pk, cmp_col, strategies, tiebreak)
-        _commit_state(spark, sink_dir, result, epoch_id, meta)
+        _commit_state(sink_dir, result, epoch_id, meta)
 
     return (
         stream_df.writeStream.foreachBatch(merge_batch)
@@ -588,11 +613,11 @@ def start_rollup_sink(
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         state, meta = _load_state(spark, sink_dir)
         if _already_applied(meta, epoch_id):
-            _publish_state(spark, sink_dir)
+            _publish_state(sink_dir, meta["version"])
             return
         batch_agg = _rollup_aggregate(batch_df, dims, aggs)
         result = _rollup_merge(state, batch_agg, dims, aggs) if state is not None else batch_agg
-        _commit_state(spark, sink_dir, result, epoch_id, meta)
+        _commit_state(sink_dir, result, epoch_id, meta)
 
     return (
         stream_df.writeStream.foreachBatch(merge_batch)

@@ -1712,6 +1712,45 @@ def test_raw_theta_sketch_sql_returns_wire_bytes(hdb):
         assert round(sk.estimate()) == exact[r["l_returnflag"]]
 
 
+def test_base64_results_are_one_line(hdb):
+    """Raw theta sketches, IdSets and toBase64 come back as one-line
+    base64, as the reference's java.util.Base64 strings do: Spark's
+    base64() alone breaks its output with CRLF every 76 characters
+    (57 input bytes), which a strict decoder rejects."""
+    import base64
+
+    from hurricanedb_spark.operators.idset_wire import decode_idset
+    from hurricanedb_spark.operators.theta_ds import deserialize
+
+    def one_line(s: str) -> bytes:
+        assert "\r" not in s and "\n" not in s
+        return base64.b64decode(s, validate=True)
+
+    n_supp = hdb.sql(
+        "SELECT count(DISTINCT l_suppkey) AS n FROM lineitem", default_limit=None
+    ).collect()[0]["n"]
+    row = hdb.sql(
+        "SELECT distinctCountRawThetaSketch(l_suppkey) AS sk, "
+        "distinctCountRawThetaSketch(l_suppkey, 'nominalEntries=1024', "
+        "  'l_returnflag = ''R''', 'l_returnflag <> ''R''', "
+        "  'SET_UNION($1, $2)') AS sk_union "
+        "FROM lineitem",
+        default_limit=None,
+    ).collect()[0]
+    for col in ("sk", "sk_union"):
+        blob = one_line(row[col])
+        assert len(blob) > 57
+        assert round(deserialize(blob).estimate()) == n_supp
+    ids = hdb.sql("SELECT idSet(o_orderkey) AS ids FROM orders", default_limit=None)
+    blob = one_line(ids.collect()[0]["ids"])
+    assert len(blob) > 57
+    n_orders = hdb.sql("SELECT count(*) AS n FROM orders", default_limit=None)
+    assert len(list(decode_idset(blob).values())) == n_orders.collect()[0]["n"]
+    text = hdb.sql(
+        "SELECT toBase64(toUtf8(repeat('x', 100))) AS b", default_limit=None
+    ).collect()[0]["b"]
+    assert one_line(text) == b"x" * 100
+
 def test_raw_theta_sketch_filtered_returns_setop_sketch(hdb):
     """The FILTERED raw form distinctCountRawThetaSketch(col, params,
     filter..., 'SET_OP(...)') returns the base64 serialized sketch OF THE

@@ -268,3 +268,17 @@ def test_pydaemon_leaves_zipimport_alone(python, prelude):
         [exe, "-c", script, PYDAEMON], capture_output=True, text=True, timeout=60
     )
     assert out.returncode == 0 and "OK" in out.stdout, out.stderr
+
+
+def test_default_driver_memory_is_half_of_ram_up_to_16g(monkeypatch):
+    from hurricanedb_spark import session
+
+    def host(phys_bytes):
+        sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_bytes // 4096}
+        monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+        return session._default_driver_memory()
+
+    assert host(15 * 2**30) == f"{15 * 512}m"
+    assert host(4 * 2**30) == "2048m"
+    assert host(32 * 2**30) == "16384m"
+    assert host(256 * 2**30) == "16384m"

@@ -5,6 +5,7 @@ sink, hybrid view), driven synchronously via availableNow triggers."""
 from __future__ import annotations
 
 import datetime
+import json
 import os
 import shutil
 import tempfile
@@ -484,3 +485,208 @@ def test_rollup_theta_hash_space_stable_across_null_batches(spark):
     merged = _rollup_merge(s1, s2, ["dim"], aggs).collect()[0]
     # union of {0..9} and {5..14} = 15 distinct (pre-fix: 20)
     assert round(deserialize(bytes(merged["user_id"])).estimate()) == 15
+
+
+# ---------------------------------------------------------------------------
+# The versioned-state commit protocol: {sink} is a link to the committed
+# version, and .meta carries the state schema.
+# ---------------------------------------------------------------------------
+
+
+def _run_upsert(spark, src, sink, ckpt):
+    q = rt.start_upsert_sink(
+        rt.read_event_stream(spark, src, SCHEMA), sink, ckpt,
+        pk=["event_id"], cmp_col="ts", tiebreak="value",
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+
+def _served(spark, sink):
+    return sorted((r.event_id, r.value) for r in spark.read.parquet(sink).collect())
+
+
+def _meta(sink):
+    with open(sink + ".meta") as f:
+        return json.load(f)
+
+
+def _versions(sink):
+    parent, base = os.path.split(sink)
+    return sorted(e for e in os.listdir(parent) if e.startswith(base + ".v"))
+
+
+def _upd(n0, n, value):
+    """Rows n0..n0+n-1 again, later in time and with a new value."""
+    return [(i, ts + datetime.timedelta(days=1), uid, et, value)
+            for i, ts, uid, et, _ in _rows(n0, n)]
+
+
+def test_upsert_commit_publishes_link_and_schema(spark, tmp):
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/sink", f"{tmp}/ckpt"
+    _write_batch(spark, src, _rows(0, 4))
+    _run_upsert(spark, src, sink, ckpt)
+    _write_batch(spark, src, _upd(0, 2, 50.0))
+    _run_upsert(spark, src, sink, ckpt)
+    _write_batch(spark, src, _rows(4, 1))
+    _run_upsert(spark, src, sink, ckpt)
+    assert os.readlink(sink) == "sink.v2"
+    # the version before the committed one stays for readers mid-swap
+    assert _versions(sink) == ["sink.v1", "sink.v2"]
+    meta = _meta(sink)
+    assert meta["version"] == 2
+    assert T.StructType.fromJson(meta["schema"]) == SCHEMA
+    assert _served(spark, sink) == [(0, 50.0), (1, 50.0), (2, 2.0), (3, 3.0), (4, 4.0)]
+
+
+def test_upsert_torn_next_version_remerges_from_committed(spark, tmp):
+    """A crash while writing {sink}.v{N+1} leaves .meta at N: the next
+    run merges from v{N} and overwrites the torn directory."""
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/sink", f"{tmp}/ckpt"
+    _write_batch(spark, src, _rows(0, 3))
+    _run_upsert(spark, src, sink, ckpt)
+    os.makedirs(f"{sink}.v1")
+    with open(f"{sink}.v1/part-00000-torn.snappy.parquet", "wb") as f:
+        f.write(b"PAR1 not a whole file")
+    _write_batch(spark, src, _upd(1, 1, 70.0) + _rows(3, 1))
+    _run_upsert(spark, src, sink, ckpt)
+    assert _meta(sink)["version"] == 1
+    assert os.readlink(sink) == "sink.v1"
+    assert _served(spark, sink) == [(0, 0.0), (1, 70.0), (2, 2.0), (3, 3.0)]
+
+
+def test_upsert_replay_after_meta_rename_only_repoints(spark, tmp):
+    """A crash between the .meta rename and the publish leaves .meta at
+    N+1 and {sink} on v{N}; the replayed epoch re-points the link and
+    merges nothing."""
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/sink", f"{tmp}/ckpt"
+    _write_batch(spark, src, _rows(0, 3))
+    _run_upsert(spark, src, sink, ckpt)
+    _write_batch(spark, src, _upd(0, 1, 90.0))
+    _run_upsert(spark, src, sink, ckpt)
+    want = _served(spark, sink)
+    # roll the publish and the stream's own commit of epoch 1 back
+    os.remove(sink)
+    os.symlink("sink.v0", sink)
+    os.remove(f"{ckpt}/commits/1")
+    os.remove(f"{ckpt}/commits/.1.crc")
+    meta = _meta(sink)
+    _run_upsert(spark, src, sink, ckpt)
+    assert _meta(sink) == meta  # the epoch was not merged again
+    assert _versions(sink) == ["sink.v0", "sink.v1"]
+    assert os.readlink(sink) == "sink.v1"
+    assert _served(spark, sink) == want == [(0, 90.0), (1, 1.0), (2, 2.0)]
+
+
+def test_upsert_upgrades_copy_layout_state(spark, tmp):
+    """State from the copy-based layout (a real {sink} directory and a
+    .meta without a schema) is read by inference and upgraded to the
+    link layout on the next commit."""
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/sink", f"{tmp}/ckpt"
+    _write_batch(spark, src, _rows(0, 3))
+    _run_upsert(spark, src, sink, ckpt)
+    os.remove(sink)
+    shutil.copytree(f"{sink}.v0", sink)
+    meta = _meta(sink)
+    del meta["schema"]
+    with open(sink + ".meta", "w") as f:
+        json.dump(meta, f)
+    _write_batch(spark, src, _upd(2, 1, 20.0) + _rows(3, 1))
+    _run_upsert(spark, src, sink, ckpt)
+    assert os.readlink(sink) == "sink.v1"
+    assert "schema" in _meta(sink)
+    assert _served(spark, sink) == [(0, 0.0), (1, 1.0), (2, 20.0), (3, 3.0)]
+
+
+def test_upsert_served_path_never_empty_during_commits(spark, tmp):
+    """The broker may list {sink} at any moment: every listing during a
+    commit holds a whole version (a part file and _SUCCESS)."""
+    import threading
+
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/sink", f"{tmp}/ckpt"
+    _write_batch(spark, src, _rows(0, 20))
+    _run_upsert(spark, src, sink, ckpt)
+    bad, polls, done = [], [0], threading.Event()
+
+    def poll():
+        while not done.is_set():
+            try:
+                names = os.listdir(sink)
+            except OSError as e:
+                names = [repr(e)]
+            polls[0] += 1
+            if "_SUCCESS" not in names or not any(
+                n.startswith("part-") and n.endswith(".parquet") for n in names
+            ):
+                bad.append(names)
+
+    t = threading.Thread(target=poll, daemon=True)
+    t.start()
+    try:
+        for step in range(1, 4):
+            _write_batch(spark, src, _upd(0, 5, 100.0 + step) + _rows(20 * step, 20))
+            _run_upsert(spark, src, sink, ckpt)
+    finally:
+        done.set()
+        t.join(10)
+    assert polls[0] > 100
+    assert not bad, bad[:3]
+
+
+def _last_job_id(spark) -> int:
+    """Id of the newest job in the status store, once the listener bus
+    has delivered every event. Job ids count up from 0 across the
+    context, so the difference of two readings counts the jobs between
+    them whatever their job group (a foreachBatch body runs its jobs on
+    a thread that does not inherit the caller's group)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_warm_upsert_commit_runs_two_jobs(spark, tmp):
+    """A warm commit runs the merge's shuffle and the write of the new
+    version: no schema-inference job for the state and no second copy."""
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/sink", f"{tmp}/ckpt"
+    _write_batch(spark, src, _rows(0, 10))
+    _run_upsert(spark, src, sink, ckpt)
+    _write_batch(spark, src, _upd(0, 3, 5.0))
+    _run_upsert(spark, src, sink, ckpt)
+    _write_batch(spark, src, _upd(3, 3, 6.0) + _rows(10, 2))
+    before = _last_job_id(spark)
+    _run_upsert(spark, src, sink, ckpt)
+    assert _last_job_id(spark) - before == 2
+    assert len(_served(spark, sink)) == 12
+
+
+def test_rollup_sink_restart_reads_state_with_meta_schema(spark, tmp):
+    """A rollup commit after a restart reads its state with the schema in
+    .meta (a binary sketch column included) and keeps every row."""
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/rollup", f"{tmp}/ckpt"
+    aggs = {"value": "SUM", "event_id": "COUNT", "user_id": "DISTINCTCOUNTHLL"}
+
+    def run():
+        q = rt.start_rollup_sink(
+            rt.read_event_stream(spark, src, SCHEMA), sink, ckpt,
+            dims=["event_type"], aggs=aggs,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    _write_batch(spark, src, _rows(0, 3, uid=1) + _rows(3, 2, uid=2, et="view"))
+    run()
+    schema = T.StructType.fromJson(_meta(sink)["schema"])
+    assert [(f.name, f.dataType) for f in schema.fields] == [
+        ("event_type", T.StringType()), ("value", T.DoubleType()),
+        ("event_id", T.LongType()), ("user_id", T.BinaryType())]
+    state, _ = rt._load_state(spark, sink)
+    assert state.schema == spark.read.parquet(f"{sink}.v0").schema
+    _write_batch(spark, src, _rows(5, 2, uid=3) + _rows(7, 1, uid=3, et="error"))
+    run()
+    spark.read.parquet(sink).createOrReplaceTempView("rollup_restart_t")
+    got = {r.event_type: (r.value, r.event_id, round(r.users)) for r in spark.sql(
+        "SELECT event_type, value, event_id, hll_sketch_estimate(user_id) AS users "
+        "FROM rollup_restart_t").collect()}
+    assert got == {"click": (0.0 + 1 + 2 + 5 + 6, 5, 2), "view": (7.0, 2, 1),
+                   "error": (7.0, 1, 1)}
