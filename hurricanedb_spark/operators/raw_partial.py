@@ -42,18 +42,19 @@ Determinism vs the single-phase builders:
   - hll (clearspring registers): identical bytes — registers merge by
     elementwise max, which commutes.
 
-The SQL surface routes the restructurable shapes here
-(sql/dialect.py HurricaneSQL._raw_digest_two_phase) — single-table
-queries directly, and since round 11 joins/CTEs/subqueries-in-FROM via
-the named-subtree wrap (_rd_wrap_subtree), so partials stream over the
-join output. This includes the FILTERED set-op raw theta form, whose
-CASE-filtered per-filter sketches become one spec each and whose set
-expression folds over the merged sketches (byte-identical to the
+The SQL surface routes the restructurable shapes here: the raw-digest
+family of sql/dialect.py's bounded restructures (`_raw_build`) feeds
+this function `SELECT <keys>, <values> FROM <source>` for any FROM
+shape (a table, aliased or not, a subquery, a CTE, a join, with
+qualified outer refs stripped or projected), so partials stream over
+the join output. This includes the FILTERED set-op raw theta form,
+whose CASE-filtered per-filter sketches become one spec each and whose
+set expression folds over the merged sketches (byte-identical to the
 single-phase emission, since union of partials keeps the same k
 smallest distinct hashes — the accumulator carries the implied theta
 through QuickSelect trims, so identity holds at ANY per-partition NDV).
-Genuinely dynamic shapes (set ops, DISTINCT, qualified outer refs) keep
-the single-phase grouped-agg fallback with its documented bound.
+Set operations and SELECT DISTINCT keep the single-phase grouped-agg
+fallback with its documented bound.
 """
 
 from __future__ import annotations

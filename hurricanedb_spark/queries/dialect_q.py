@@ -520,7 +520,7 @@ def q_sketch_bytes_join_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the raw form's base64 STRING envelope decodes to the sketch's wire
     # bytes — the BYTES column a migrated reference store would hold.
     # Per-call unique view name + drop after the (eagerly analyzed)
-    # result plan has inlined it — matching the __rdsub_* convention, so
+    # result plan has inlined it — matching the dialect's own bound views, so
     # repeated driver runs don't accrete views in the session catalog.
     import uuid as _uuid
 
@@ -574,8 +574,8 @@ def q_sketch_bytes_join_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deterministic, so the extracted quantile has an EXACT oracle: "
     "getQuantiles() returns the value at the smallest rank whose "
     "forward cumulative weight exceeds q*N — rank floor(q*N)+1 — "
-    "expressed in SQL via row_number(). Built two-phase (mapInPandas "
-    "partials + blob merge, sql/dialect._raw_digest_two_phase), which "
+    "expressed in SQL via row_number(). Built two-phase (mapInArrow "
+    "partials + blob merge, the raw-digest restructure in sql/dialect), which "
     "is byte-identical to a single-pass build for the exact regime.",
     tags=("dialect", "aggregation", "percentile", "wire-format"),
 )

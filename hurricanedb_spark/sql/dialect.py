@@ -313,49 +313,32 @@ def _regexp_extract(args: list[str]) -> str:
 
 
 def _find_calls(sql: str, names: set[str]) -> list[tuple[int, int, str, list[str]]]:
-    """Find outermost known-name calls as (start, end, name, args); string
-    literals are opaque."""
+    """Find outermost known-name calls as (start, end, name, args).
+    Literals, backquoted identifiers and comments are opaque: the scan
+    runs on `mask(sql)` and the args are sliced from `sql`."""
+    masked = mask(sql)
     out = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n and sql[j] != "'":
-                j += 2 if sql[j] == "\\" else 1
-            i = j + 1
-            continue
-        m = _TOKEN.match(sql, i)
-        if not m:
-            i += 1
-            continue
-        word = m.group(0)
+    n, i = len(sql), 0
+    for m in _TOKEN.finditer(masked):
         j = m.end()
-        if word.lower() in names and j < n and sql[j] == "(":
-            depth, k, args, arg_start = 0, j, [], j + 1
-            in_str = False
-            while k < n:
-                ch = sql[k]
-                if in_str:
-                    if ch == "'":
-                        in_str = False
-                elif ch == "'":
-                    in_str = True
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        args.append(sql[arg_start:k].strip())
-                        break
-                elif ch == "," and depth == 1:
+        if m.start() < i or m.group(0).lower() not in names or masked[j : j + 1] != "(":
+            continue
+        depth, k, args, arg_start = 0, j, [], j + 1
+        while k < n:
+            ch = masked[k]
+            if ch == "(":
+                depth += 1
+            elif ch == ")":
+                depth -= 1
+                if depth == 0:
                     args.append(sql[arg_start:k].strip())
-                    arg_start = k + 1
-                k += 1
-            out.append((i, k + 1, word.lower(), [a for a in args if a != ""]))
-            i = k + 1
-        else:
-            i = j
+                    break
+            elif ch == "," and depth == 1:
+                args.append(sql[arg_start:k].strip())
+                arg_start = k + 1
+            k += 1
+        out.append((m.start(), k + 1, m.group(0).lower(), [a for a in args if a != ""]))
+        i = k + 1
     return out
 
 
@@ -1235,9 +1218,9 @@ def _theta_sketch_sql(name: str, args: list[str]) -> str:
         # folded post-aggregation, base64 STRING envelope like the
         # reference (DistinctCountRawThetaSketchAggregationFunction
         # .java:50-56). This emission is the single-phase FALLBACK:
-        # restructurable single-table shapes never reach it — they route
-        # through _raw_digest_two_phase (mapInArrow partials, no
-        # raw-value shuffle) with byte-identical output
+        # restructurable shapes never reach it — they take the raw-digest
+        # restructure (mapInArrow partials, no raw-value shuffle) with
+        # byte-identical output
         return unchunked_base64(parts.setop_sql())
     if len(parts.values) <= 6:
         return _theta_inclusion_exclusion(parts.tree, args[0], parts.preds)
@@ -1765,23 +1748,38 @@ def rewrite_functions(sql: str, max_passes: int = 10) -> str:
     return sql
 
 
-# ---- bounded-state MV percentile restructure -------------------------------
-# The reference feeds every MV element into a bounded sketch for the
-# TDigest/Est percentile names (PercentileTDigestMVAggregationFunction.java
-# — t-digest, O(compression) state per group). The pure-macro exact rewrite
-# materializes the whole group (O(values) state), which a billion-value
-# group would blow up at 100 TB. The Spark-native bounded form is
-# explode + percentile_approx (QuantileSummaries: bounded state, values
-# streamed through it) — that needs a query-shape restructure, done here
-# for the common Pinot shape
-#   SELECT ... FROM <table> [WHERE] [GROUP BY] [HAVING] [ORDER BY] [LIMIT]
-# by computing the percentiles in an exploded CTE LEFT-JOINed back on the
-# group keys (LEFT so groups whose arrays are all empty keep their NULL
-# default). Shapes outside this (joins, subqueries, DISTINCT, select-star,
-# ordinal GROUP BY) fall back to the exact macro — still correct, with the
-# documented O(group values) state bound. percentileMV itself always stays
-# exact, matching the reference's exact/sketch split.
+# ---- bounded-state restructures ---------------------------------------------
+# Three aggregate families keep per-group state that grows with the
+# group's rows in their plain form: the MV sketch and distinct names (the
+# macros collect every array), mode(x, 'AVG') (a sorted collect_list)
+# and the raw digests (a grouped-agg UDF that ships the group's values to
+# one Python worker). The reference runs every aggregate as partial ->
+# combine -> final (AggregationFunction.java:42-130), and its V2 leaf
+# stages compile whole FROM subtrees back to that contract
+# (ServerRequestPlanVisitor.java:79-133). One skeleton restructures the
+# three families over any FROM subtree (joins, CTEs, subqueries):
+#
+#   shape      _restructure_shape: one outer SELECT over <fromwhere>, its
+#              outer clauses made to resolve against
+#              `SELECT *<proj> FROM <fromwhere>` by stripping qualifiers
+#              or, where a strip could rebind, by projecting each dotted
+#              ref under a generated alias;
+#   parts      the family's bounded-state relations over that source,
+#              one row per group, keyed `_gk_i` by the GROUP BY keys;
+#   join-back  _join_back: the source LEFT JOINed to each part on the
+#              keys (CROSS JOIN for a global aggregate), each call
+#              replaced by an aggregate over its part's column;
+#   dry-run    HurricaneSQL._restructure analyzes the committed form and
+#              keeps the original query on any failure.
+#
+# Set operations, SELECT DISTINCT, a call inside the subtree, a bare
+# star, ordinal keys and keys that name a select alias keep the plain
+# form — still correct, with its documented state bound. percentileMV
+# itself always stays exact, matching the reference's exact/sketch split.
 
+# the TDigest/Est MV percentiles feed every element into a bounded sketch
+# in the reference (PercentileTDigestMVAggregationFunction.java); here
+# explode + percentile_approx (QuantileSummaries) or the raw digest UDAFs
 _TDMV_NAMES = {
     "percentiletdigestmv",
     "percentilerawtdigestmv",
@@ -1793,10 +1791,10 @@ _TDMV_NAMES = {
 # through the same restructure so per-group state is the HLL++ sketch,
 # not collect_set of arrays.
 _HLLMV_NAMES = {"distinctcounthllmv", "distinctcountrawhllmv"}
-# Round-13 (r12 'what's wrong' #2): the EXACT MV distinct names also
-# restructure — explode + count/sum/avg(DISTINCT) is shuffle-bound
-# (Spark's Expand-based distinct aggregation) instead of buffering
-# per-group arrays in collect_set state. Results stay exact; the one
+# The EXACT MV distinct names restructure too — explode +
+# count/sum/avg(DISTINCT) is shuffle-bound (Spark's Expand-based
+# distinct aggregation) instead of buffering per-group arrays in
+# collect_set state. Results stay exact; the one
 # semantic nuance is NULL array elements (the macro counts them, the
 # explode form does not) — unreachable from the reference's data model,
 # whose MV columns cannot hold null elements (FieldSpec default-value
@@ -1809,17 +1807,6 @@ _DISTINCT_MV_NAMES = {
     "distinctavgmv",
 }
 _BOUNDED_MV_NAMES = _TDMV_NAMES | _HLLMV_NAMES | _DISTINCT_MV_NAMES
-
-_TDMV_SHAPE = re.compile(
-    r"^\s*select\s+(?P<sel>.*?)\s+from\s+(?P<tbl>[A-Za-z_]\w*)"
-    r"(?:\s+where\s+(?P<where>.*?))?"
-    r"(?:\s+group\s+by\s+(?P<gby>.*?))?"
-    r"(?:\s+having\s+(?P<having>.*?))?"
-    r"(?:\s+order\s+by\s+(?P<oby>.*?))?"
-    r"(?:\s+limit\s+(?P<lim>\d+))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-
 
 def _outer_clause_spans(masked: str) -> dict[str, tuple[int, int]] | None:
     """Top-level clause spans of ONE outer SELECT over an arbitrary FROM
@@ -1926,9 +1913,9 @@ def _dot_accessible_cols(fields) -> list[str]:
     not only StructType (`s.field` -> GetStructField) but also MapType
     (`m.key` -> GetMapValue) and ArrayType-of-StructType (`arr.field`
     -> GetArrayStructFields). A qualifier naming any of these may be
-    FIELD ACCESS, so the strip must decline (round-12 ADVICE: treating
-    only structs as dot-accessible let `m.score` strip to bare `score`,
-    silently rebinding a map lookup to a different column)."""
+    FIELD ACCESS, so the strip must decline (treating only structs as
+    dot-accessible would let `m.score` strip to bare `score`, silently
+    rebinding a map lookup to a different column)."""
     from pyspark.sql import types as _T
 
     out = []
@@ -1963,22 +1950,21 @@ def _select_alias_map(
     sel: str, out_names: list[str] | None = None
 ) -> dict[str, str]:
     """lower(alias) -> aliased expression text for select-list aliases,
-    both explicit `AS` and implicit (`expr ident` with no AS — round-13
-    ADVICE: the rebind guard missed the implicit spelling, so `SELECT
-    d.fam g ... ORDER BY t.g` silently re-sorted by the alias once the
+    both explicit `AS` and implicit (`expr ident` with no AS: `SELECT
+    d.fam g ... ORDER BY t.g` would re-sort by the alias once the
     qualifier was stripped). Matches on the literal-masked copy (an `as`
     inside a string can never create an alias), slices the original by
     span.
 
     Implicit detection is a regex heuristic that may over-match an
     operand in rare spellings (`INTERVAL 5 day`): with `out_names` —
-    the analyzer's POSITIONAL output names for this select list
-    (round-15, r14 verdict #6) — a regex-detected implicit alias is
-    kept only when the analyzer agrees the item's output name IS that
-    identifier, so the over-match class no longer forces the callers'
-    conservative declines. Without `out_names` (or on item-count
-    misalignment) the heuristic stands alone and over-matching only
-    makes the guards MORE conservative, never less."""
+    the analyzer's POSITIONAL output names for this select list — a
+    regex-detected implicit alias is kept only when the analyzer agrees
+    the item's output name IS that identifier, so the over-match class
+    does not force the callers' conservative declines. Without
+    `out_names` (or on item-count misalignment) the heuristic stands
+    alone and over-matching only makes the guards MORE conservative,
+    never less."""
     out: dict[str, str] = {}
     items = _split_top(sel)
     names = (
@@ -2019,11 +2005,9 @@ def _strip_tail_qualifiers(
     """Rewrite two-part qualified references `q.col` in an outer-clause
     segment (select list / GROUP BY / HAVING / ORDER BY) to bare `col`,
     so the segment resolves against the collapsed `SELECT * FROM
-    <subtree>` view the bounded restructures generate. Round-12:
-    qualified refs are the MOST COMMON spelling of join queries, and
-    bailing on them silently kept the single-phase unbounded-intermediate
-    path for exactly that shape — the reference's leaf-stage compilation
-    streams partials regardless of how the SELECT spells its columns
+    <subtree>` source the bounded restructures generate. Qualified refs
+    are the most common spelling of join queries, and the reference's
+    leaf stages stream partials however the SELECT spells its columns
     (ServerRequestPlanVisitor.java:79-133, AggregationFunction.java:42-130).
 
     Returns (rewritten segment, set of lowered bare names produced), or
@@ -2122,18 +2106,15 @@ def _once(fn):
 def _alias_project_refs(
     parts: dict[str, str | None], tag: str, auto_names=None
 ) -> list[str] | None:
-    """Round-13 (r12 verdict #2): the decline cases of the qualifier
-    strip — ambiguous bare names (same column on both join sides),
-    struct/map/array-of-struct field access, 3-part refs, select-alias
-    collisions — restructure SOUNDLY by projecting each dotted
-    reference into the collapsed subtree view under a generated alias:
-    `SELECT *, o.col AS __q0_<tag> FROM <subtree>`. The projection is
-    analyzed in the ORIGINAL FROM scope, where the relation aliases,
-    struct-vs-relation precedence, and ambiguity rules are exactly
-    those the outer ref had — so unlike stripping, no rebinding is
-    possible for ANY spelling (the r11-verdict alias-projection
-    design; the reference streams leaf-stage partials regardless of
-    spelling, ServerRequestPlanVisitor.java:79-133).
+    """The decline cases of the qualifier strip — ambiguous bare names
+    (same column on both join sides), struct/map/array-of-struct field
+    access, 3-part refs, select-alias collisions — restructure soundly
+    by projecting each dotted reference into the collapsed subtree
+    source under a generated alias: `SELECT *, o.col AS __q0_<tag> FROM
+    <subtree>`. The projection is analyzed in the ORIGINAL FROM scope,
+    where the relation aliases, struct-vs-relation precedence, and
+    ambiguity rules are exactly those the outer ref had — so unlike
+    stripping, no rebinding is possible for ANY spelling.
 
     Mutates `parts` in place, replacing every dotted chain with its
     alias; a select item that IS a bare dotted ref keeps its output
@@ -2142,16 +2123,16 @@ def _alias_project_refs(
     qualified star (`t.*`) or a qualified function call (`q.fn(...)`).
 
     A COMPOSITE select item containing a dotted chain but carrying no
-    explicit alias is closable (round-15, r14 verdict #2) when
-    `auto_names` — a zero-arg callable returning the POSITIONAL output
-    names of the original query's non-restructured form — resolves:
+    explicit alias is closable when `auto_names` — a zero-arg callable
+    returning the POSITIONAL output names of the original query's
+    non-restructured form — resolves:
     rewriting the refs inside the item would change Spark's
     auto-generated output column name (`sum(t.x)` ->
     `sum(__q0_ab12cd34)`), so the rewritten item is pinned back to the
     original name with an explicit backquoted alias. Without
     `auto_names` (or when the name list misaligns with the select
-    items) those shapes still decline — round-13 ADVICE: an observable
-    result-schema change for the same query text is never acceptable.
+    items) those shapes still decline: an observable result-schema
+    change for the same query text is never acceptable.
     Callers dry-run-analyze the rebuilt query, so at worst this
     declines."""
     mapping: dict[str, str] = {}
@@ -2214,10 +2195,9 @@ def _alias_project_refs(
         if r != it and not _ALIAS_AS.match(mask(it)):
             # composite item with dotted refs but no explicit alias:
             # projecting changes the auto-generated output name — pin
-            # the original name back explicitly (round-15), or decline
-            # when the analyzer can't supply it (or the name would
-            # confuse the downstream string parsers, which treat
-            # backquoted identifiers as transparent text)
+            # the original name back explicitly, or decline when the
+            # analyzer can't supply it (or the name would confuse the
+            # downstream string scans)
             nm = _orig_name(idx)
             if (
                 nm is None
@@ -2245,15 +2225,13 @@ def _alias_project_refs(
 
 
 def _expand_qualified_stars(sel: str, expand) -> str | None:
-    """Round-14 (r13 verdict #3): expand select items that are EXACTLY a
-    qualified star (`t.*`) into explicit per-column refs `t.c1, t.c2,
-    ...` so the qualifier strip / alias projection can restructure the
-    query instead of declining — the reference streams leaf-stage
-    partials regardless of how the SELECT spells its columns
-    (ServerRequestPlanVisitor.java:79-133). `expand` maps a qualifier to
-    its column-name list by analyzing `SELECT <q>.* FROM <subtree>` in
-    the ORIGINAL scope (relation-alias binding is exactly the outer
-    ref's), or returns None when unresolvable.
+    """Expand select items that are EXACTLY a qualified star (`t.*`)
+    into explicit per-column refs `t.c1, t.c2, ...` so the qualifier
+    strip / alias projection can restructure the query instead of
+    declining. `expand` maps a qualifier to its column-name list by
+    analyzing `SELECT <q>.* FROM <subtree>` in the ORIGINAL scope
+    (relation-alias binding is exactly the outer ref's), or returns None
+    when unresolvable.
 
     Returns the rewritten select list, or None when a `.*` appears in
     any non-item position (expression context), a qualifier doesn't
@@ -2281,28 +2259,6 @@ def _expand_qualified_stars(sel: str, expand) -> str | None:
     return ", ".join(items) if changed else sel
 
 
-def _maybe_expand_stars(parts, grp, withp, fromw, analyze) -> None:
-    """Apply _expand_qualified_stars to the select list in place when an
-    analyzer is available; silently leaves `parts` untouched when the
-    expansion declines (the caller's own `.*` guard then keeps the
-    macro/single-phase form)."""
-    sel = grp("sel")
-    if analyze is None or not sel or not re.search(
-        r"\.\s*\*", mask(sel)
-    ):
-        return
-
-    def _star_cols(q: str):
-        r = analyze(
-            (f"WITH {withp} " if withp else "") + f"SELECT {q}.* FROM {fromw}"
-        )
-        return r[0] if r else None
-
-    expanded = _expand_qualified_stars(sel, _star_cols)
-    if expanded is not None:
-        parts["sel"] = expanded
-
-
 def _strip_clause_qualifiers(
     parts: dict[str, str | None],
     schema_info: tuple[list[str], list[str]] | None,
@@ -2316,8 +2272,8 @@ def _strip_clause_qualifiers(
     present); False = some ref is out of scope and the caller must keep
     the original query.
 
-    ORDER BY / HAVING alias safety (round-12 ADVICE): Spark resolves
-    those clauses against the select-list OUTPUT first, so stripping
+    ORDER BY / HAVING alias safety: Spark resolves those clauses
+    against the select-list OUTPUT first, so stripping
     `t.x` to bare `x` when the select list carries `... AS x` over a
     DIFFERENT expression would silently rebind the sort/filter to the
     alias (`SELECT t.y AS x ... ORDER BY t.x` sorts by t.y once
@@ -2348,474 +2304,584 @@ def _strip_clause_qualifiers(
     return True
 
 
-def rewrite_mv_percentile_bounded(sql: str, analyze=None) -> str:
-    """Restructure percentile*TDigest/Est*MV calls into a bounded-state
-    explode + percentile_approx CTE; return `sql` unchanged (exact-macro
-    fallback) when the query shape doesn't allow it. Round-11:
-    non-single-table FROM shapes (joins, CTEs, subqueries in FROM)
-    restructure too — the whole FROM subtree (with its WHERE) becomes
-    the `_mvsrc` CTE, same as rewrite_mode_avg_bounded. Round-12:
-    qualified refs (`t.col`) in the outer tail no longer bail — they are
-    stripped to bare columns when they resolve uniquely in the subtree
-    output (`analyze`: callable mapping a SELECT string to its output
-    column names, or None on failure — supplied by HurricaneSQL.sql,
-    which also dry-run-analyzes the rewritten query so a restructure can
-    never break a working query)."""
-    if not _find_calls(sql, _BOUNDED_MV_NAMES):
-        return sql
-    # clause keywords inside string literals must not steer the shape
-    # parse: match on a literal-masked copy, slice the original by span
+_SET_OP_OR_DISTINCT = re.compile(
+    r"\bunion\b|\bintersect\b|\bexcept\b|\bselect\s+distinct\b", re.IGNORECASE
+)
+_AS_ALIAS = re.compile(r"\s+[Aa][Ss]\s+([A-Za-z_][A-Za-z0-9_]*)\s*$")
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _norm(s: str) -> str:
+    return " ".join(s.split())
+
+
+def _as_aliases(sel: str) -> set[str]:
+    """Lowered explicit `AS ident` aliases of a select list."""
+    return {
+        m.group(1).lower() for it in _split_top(sel) if (m := _AS_ALIAS.search(it))
+    }
+
+
+class _Shape(NamedTuple):
+    """A restructurable query: one outer SELECT over a FROM subtree, its
+    outer clauses rewritten to resolve against `SELECT *<proj> FROM
+    <fromw>`."""
+
+    withp: str | None  # the user's CTE list
+    fromw: str  # the FROM subtree through the end of WHERE
+    sel: str
+    gby: list[str]
+    having: str | None
+    oby: str | None
+    lim: str | None
+    proj: str  # ", <ref> AS __q<i>_<tag>, ..." when refs == "project"
+    refs: str | None  # qualified outer refs: "strip", "project" or None
+    out_names: Callable  # () -> output names of the original query, or None
+
+    def ctes(self, src: str) -> list[str]:
+        """The user's CTEs plus the source CTE `src`."""
+        return ([self.withp] if self.withp else []) + [
+            f"{src} AS (SELECT *{self.proj} FROM {self.fromw})"
+        ]
+
+
+def _restructure_shape(sql: str, find, analyze) -> _Shape | None:
+    """The shape analysis every bounded restructure shares; None keeps
+    the plain form. `find(text)` lists the family's calls in a text;
+    `analyze(sql)` gives (column names, dot-accessible column names) of
+    a SELECT, or None when it does not resolve. Without `analyze`,
+    qualified refs, qualified stars and alias-shadowed keys decline.
+
+    Clause keywords inside literals or comments never steer the parse:
+    spans come from the masked text and slice the original."""
     src = sql.rstrip().rstrip(";")
     masked = mask(src)
-    low = masked.lower()
-    if re.search(
-        r"\bunion\b|\bintersect\b|\bexcept\b|\bselect\s+distinct\b", low
-    ):
-        return sql
+    if _SET_OP_OR_DISTINCT.search(masked):
+        return None
     spans = _outer_clause_spans(masked)
     if spans is None:
-        return sql
-    parts: dict[str, str | None] = {}  # qualifier-stripped overrides
+        return None
 
-    def grp(name: str) -> str | None:
-        if name in parts:
-            return parts[name]
-        s, e = spans[name] if name in spans else (-1, -1)
+    def seg(name: str) -> str | None:
+        s, e = spans.get(name, (-1, -1))
         return src[s:e].strip() if s != -1 else None
 
-    withp, fromw = grp("with"), grp("fromwhere")
-    if not grp("sel") or not fromw:
-        return sql
-    if _find_calls(fromw, _BOUNDED_MV_NAMES):
-        return sql  # call inside the subtree: nested shape, macro keeps it
-    # round-14 (r13 verdict #3): qualified stars expand to explicit
-    # per-column refs via the analyzer so `t.*` spellings restructure
-    # instead of keeping the macro; bare `*` still declines below
-    _maybe_expand_stars(parts, grp, withp, fromw, analyze)
-    if any(it == "*" or it.endswith(".*") for it in _split_top(grp("sel"))):
-        return sql  # select-star would leak the helper columns
-    parts.update({n: grp(n) for n in ("sel", "gby", "having", "oby")})
-    # qualified refs (round-12): strip to bare columns that resolve
-    # uniquely in the subtree output, else keep the exact macro
-    view_cols = None
-    if _DOTTED_REF.search(
-        mask(" ".join(x for x in parts.values() if x))
-    ):
-        if analyze is None:
-            return sql
-        view_cols = analyze(
-            (f"WITH {withp} " if withp else "") + f"SELECT * FROM {fromw}"
-        )
-    src_proj = ""
+    withp, fromw, sel = seg("with"), seg("fromwhere"), seg("sel")
+    if not sel or not fromw or find(fromw):
+        return None  # a call inside the subtree is a nested shape
+    with_ = f"WITH {withp} " if withp else ""
+    if analyze is not None and re.search(r"\.\s*\*", mask(sel)):
+        # `t.*` expands to t's columns, bound in the original FROM scope
+        sel = _expand_qualified_stars(
+            sel,
+            lambda q: (analyze(f"{with_}SELECT {q}.* FROM {fromw}") or [None])[0],
+        ) or sel
+    if any(it == "*" or it.endswith(".*") for it in _split_top(sel)):
+        return None  # a star would leak the helper columns
+    view = _once(lambda: analyze(f"{with_}SELECT * FROM {fromw}") if analyze else None)
 
-    def _orig_out_names():
-        # positional output names of the original (macro-form) query —
-        # confirms implicit aliases for the rebind guard and pins
-        # composite unaliased items in the projection (round-15)
+    def _out_names():
+        # positional output names of the original query: they confirm
+        # implicit aliases for the rebind guard and pin the names of
+        # rewritten items that carry no alias
         r = analyze(src) if analyze is not None else None
         return list(r[0]) if r else None
 
-    _orig_out_names = _once(_orig_out_names)
-    if not _strip_clause_qualifiers(
-        parts, view_cols, out_names=_orig_out_names
-    ):
-        # round-13: the strip's decline cases restructure via alias
-        # PROJECTION into the source CTE (see _alias_project_refs) —
-        # the strip may have partially mutated parts; reset from spans
-        for n in ("sel", "gby", "having", "oby"):
-            s_, e_ = spans[n] if n in spans else (-1, -1)
-            parts[n] = src[s_:e_].strip() if s_ != -1 else None
-
-        proj = _alias_project_refs(
-            parts, uuid.uuid4().hex[:8], auto_names=_orig_out_names
-        )
-        if not proj:
-            return sql
-        src_proj = ", " + ", ".join(proj)
+    out_names = _once(_out_names)
+    clauses = {"sel": sel} | {n: seg(n) for n in ("gby", "having", "oby")}
+    parts, proj, refs = dict(clauses), "", None
+    if _DOTTED_REF.search(mask(" ".join(x for x in clauses.values() if x))):
+        if analyze is None:
+            return None
+        refs = "strip"
+        if not _strip_clause_qualifiers(parts, view(), out_names=out_names):
+            # the strip may have mutated `parts` before it declined
+            parts, refs = dict(clauses), "project"
+            items = _alias_project_refs(
+                parts, uuid.uuid4().hex[:8], auto_names=out_names
+            )
+            if not items:
+                return None
+            proj = ", " + ", ".join(items)
     gby = _split_top(parts["gby"] or "")
     if any(g.isdigit() for g in gby):
-        return sql  # ordinal keys aren't reconstructable in the CTE
-    # GROUP BY over a select-list alias resolves in plain Spark GROUP BY
-    # (spark.sql.groupByAliases) but NOT inside the generated CTE / join
-    # condition — fall back to the exact macro for those shapes. When the
-    # subtree schema is known (qualified-ref path), a key that is a REAL
-    # subtree column is safe even if a select alias shadows its name:
-    # both resolutions pick the column (columns shade aliases in Spark).
-    sel_aliases = set()
-    for it in _split_top(parts["sel"]):
-        m_alias = re.search(r"\s+[Aa][Ss]\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", it)
-        if m_alias:
-            sel_aliases.add(m_alias.group(1).lower())
-    conflicts = [
-        g
-        for g in gby
-        if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", g)
-        and g.lower() in sel_aliases
-    ]
-    if conflicts:
-        # resolve lazily: a shadowed key that is a REAL subtree column
-        # is safe (both resolutions pick the column) — fetch the schema
-        # on demand so `fam AS fam` doesn't decline just because no
-        # dotted ref happened to trigger the analysis earlier
-        if view_cols is None and analyze is not None:
-            view_cols = analyze(
-                (f"WITH {withp} " if withp else "") + f"SELECT * FROM {fromw}"
-            )
-        real_cols = (
-            {c.lower() for c in view_cols[0]} if view_cols else set()
-        )
-        if any(g.lower() not in real_cols for g in conflicts):
-            return sql
+        return None  # ordinal keys aren't reconstructable in the parts
+    # GROUP BY over a select alias resolves in plain Spark GROUP BY
+    # (spark.sql.groupByAliases) but not inside a part or a join
+    # condition. A key that is a real subtree column is safe even when an
+    # alias shadows its name: both resolutions pick the column.
+    aliases = _as_aliases(parts["sel"])
+    shadowed = {g.lower() for g in gby if _IDENT.fullmatch(g)} & aliases
+    if shadowed:
+        cols = view()
+        if not shadowed <= {c.lower() for c in (cols[0] if cols else ())}:
+            return None
+    return _Shape(
+        withp, fromw, parts["sel"], gby, parts["having"], parts["oby"],
+        seg("lim"), proj, refs, out_names,
+    )
 
-    def _norm(s: str) -> str:
-        return " ".join(s.split())
 
-    assign: dict[tuple[str, str], str] = {}  # (col, spec) -> alias
-    colinfo: dict[str, tuple[str, list[tuple[str, str]]]] = {}  # col -> (orig, [(agg_sql, alias)])
+class _Family(NamedTuple):
+    """One bounded restructure: what it brings to the skeleton. An
+    instance is also its pass in HurricaneSQL._PASSES."""
 
-    def _call_key(name: str, args: list[str]) -> tuple[str, str] | None:
-        if name == "percentilerawtdigestmv" and len(args) == 2:
-            # raw form: HEX-serialized t-digest of the exploded values
-            # (result independent of the pct arg — clients extract)
-            return (_norm(args[0]), "#rawtd")
-        if name == "percentilerawestmv" and len(args) == 2:
-            return (_norm(args[0]), "#rawqd")
-        if name in _TDMV_NAMES and len(args) == 2:
-            return (_norm(args[0]), _norm(args[1]))
-        if name == "distinctcountrawhllmv" and len(args) == 1:
-            # raw form: serialized HLL of the exploded values (the
-            # reference's DistinctCountRawHLLMV returns the sketch, not
-            # its estimate), base64 STRING envelope like every raw form
-            return (_norm(args[0]), "#rawhll")
-        if name in _HLLMV_NAMES and len(args) == 1:
-            return (_norm(args[0]), "#hll")
-        if name in ("distinctcountmv", "distinctcountbitmapmv") and len(args) == 1:
-            return (_norm(args[0]), "#dc")
-        if name == "distinctsummv" and len(args) == 1:
-            return (_norm(args[0]), "#dsum")
-        if name == "distinctavgmv" and len(args) == 1:
-            return (_norm(args[0]), "#davg")
-        return None
+    name: str  # the `restructure` value of the pass's note
+    find: Callable  # text -> the family's calls in it (_find_calls rows)
+    key: Callable  # (name, args) -> hashable key, or None to leave the call
+    # (shape, {key: (name, args) of its first call}, session or None)
+    #   -> (rewritten sql, cleanup or None), or None to keep the query
+    build: Callable
 
-    def _scan(text: str) -> None:
-        for _s, _e, name, args in _find_calls(text, _BOUNDED_MV_NAMES):
-            k = _call_key(name, args)
-            if k is None or k in assign:
-                continue
-            alias = f"_tdmv_{len(assign)}"
-            assign[k] = alias
-            # rsd 0.016 ~ the reference's default HLL log2m=12 precision;
-            # the raw form keeps the sketch itself (hll_sketch_agg's
-            # default lgConfigK=12 matches)
-            if k[1] == "#hll":
-                agg_sql = "approx_count_distinct(_mv, 0.016)"
-            elif k[1] == "#rawhll":
-                # clearspring HLL over the exploded elements, offered by
-                # their element type (DistinctCountRawHLLMV offers each
-                # MV element; MurmurHash.hash64 hashes its Java
-                # toString bytes — operators/clearspring_hll); default
-                # log2m = 8 like the SV raw form
-                agg_sql = "rawclearspringhll(_mv, 8)"
-            elif k[1] == "#rawtd":
-                agg_sql = "rawtdigest(CAST(_mv AS DOUBLE))"
-            elif k[1] == "#rawqd":
-                agg_sql = "rawqdigest(CAST(_mv AS BIGINT))"
-            elif k[1] == "#dc":
-                # exact, shuffle-bound (Expand-based distinct agg)
-                agg_sql = "count(DISTINCT _mv)"
-            elif k[1] == "#dsum":
-                agg_sql = "sum(DISTINCT CAST(_mv AS DOUBLE))"
-            elif k[1] == "#davg":
-                agg_sql = "avg(DISTINCT CAST(_mv AS DOUBLE))"
-            else:
-                agg_sql = (
-                    f"percentile_approx(CAST(_mv AS DOUBLE), ({args[1]}) / 100)"
-                )
-            colinfo.setdefault(k[0], (args[0], []))[1].append((agg_sql, alias))
+    def __call__(self, hq: "HurricaneSQL", query: str):
+        return hq._restructure(query, self)
 
-    def _subst(text: str) -> str:
+
+def _join_back(shape: _Shape, family: _Family, src: str, parts, expr) -> str:
+    """The join-back emission: `WITH <user CTEs>, <src> AS (SELECT
+    *<proj> FROM <fromw>), <parts> SELECT ... FROM <src> LEFT JOIN <part>
+    ON <keys> <=> <part>._gk_i ...`, then the outer GROUP BY, HAVING,
+    ORDER BY and LIMIT. `parts` lists (relation name, CTE body or None
+    for a bound view); LEFT keeps the groups a part has no row for. Each
+    call becomes expr(key): an aggregate over its part's columns, which
+    hold one value per group."""
+    gby = shape.gby
+    ctes, joined = shape.ctes(src), src
+    for name, body in parts:
+        if body is not None:
+            ctes.append(f"{name} AS ({body})")
+        if gby:
+            cond = " AND ".join(f"({g}) <=> {name}._gk_{i}" for i, g in enumerate(gby))
+            joined += f" LEFT JOIN {name} ON {cond}"
+        else:
+            joined += f" CROSS JOIN {name}"
+
+    def subst(text: str) -> str:
         out, pos = [], 0
-        for s, e, name, args in _find_calls(text, _BOUNDED_MV_NAMES):
-            k = _call_key(name, args)
-            if k not in assign:
-                continue
-            out.append(text[pos:s])
-            if k[1] == "#hll":
-                # a group whose arrays are all empty has 0 distinct values
-                # (matching the exact macro), not NULL
-                out.append(f"coalesce(min({assign[k]}), 0)")
-            elif k[1] == "#rawhll":
-                # lowercase-HEX STRING envelope (SerializedHLL.toString);
-                # a group whose arrays are all empty yields NULL
-                out.append(f"lower(hex(min({assign[k]})))")
-            elif k[1] in ("#rawtd", "#rawqd"):
-                # hex STRING envelope (SerializedTDigest /
-                # SerializedQuantileDigest .toString); empty -> NULL
-                out.append(f"lower(hex(min({assign[k]})))")
-            elif k[1] == "#dc":
-                # macro emits INT (size(...)); all-empty groups -> 0
-                out.append(f"CAST(coalesce(min({assign[k]}), 0) AS INT)")
-            elif k[1] == "#dsum":
-                # macro folds from a 0.0 accumulator: all-empty -> 0.0
-                out.append(
-                    f"coalesce(min({assign[k]}), CAST(0.0 AS DOUBLE))"
-                )
-            elif k[1] == "#davg":
-                # macro divides 0.0 by size 0 -> NaN for all-empty
-                # groups, matching Java's 0.0/0 in the reference
-                out.append(
-                    f"coalesce(min({assign[k]}), CAST('NaN' AS DOUBLE))"
-                )
-            else:
-                out.append(f"min({assign[k]})")
-            pos = e
+        for s, e, name, args in family.find(text):
+            k = family.key(name, args)
+            if k is not None:
+                out += [text[pos:s], expr(k)]
+                pos = e
         out.append(text[pos:])
         return "".join(out)
 
-    for clause in ("sel", "having", "oby"):
-        if grp(clause):
-            _scan(grp(clause))
-    if not assign:
-        return sql
-
-    ctes = ([withp] if withp else []) + [
-        f"_mvsrc AS (SELECT *{src_proj} FROM {fromw})"
-    ]
-    joined = "_mvsrc"
-    for j, (orig_col, plist) in enumerate(colinfo.values()):
-        keysel = "".join(f"{g} AS _gk_{i}, " for i, g in enumerate(gby))
-        pctsel = ", ".join(f"{agg} AS {a}" for agg, a in plist)
-        grp_by = f" GROUP BY {', '.join(gby)}" if gby else ""
-        ctes.append(
-            f"_mvp{j} AS (SELECT {keysel}{pctsel} "
-            f"FROM (SELECT *, explode({orig_col}) AS _mv FROM _mvsrc){grp_by})"
-        )
-        if gby:
-            cond = " AND ".join(
-                f"({g}) <=> _mvp{j}._gk_{i}" for i, g in enumerate(gby)
-            )
-            joined += f" LEFT JOIN _mvp{j} ON {cond}"
-        else:
-            joined += f" CROSS JOIN _mvp{j}"
-
-    out = f"WITH {', '.join(ctes)} SELECT {_subst(grp('sel'))} FROM {joined}"
+    out = f"WITH {', '.join(ctes)} SELECT {subst(shape.sel)} FROM {joined}"
     if gby:
         out += f" GROUP BY {', '.join(gby)}"
-    if grp("having"):
-        out += f" HAVING {_subst(grp('having'))}"
-    if grp("oby"):
-        out += f" ORDER BY {_subst(grp('oby'))}"
-    if grp("lim"):
-        out += f" LIMIT {grp('lim')}"
+    if shape.having:
+        out += f" HAVING {subst(shape.having)}"
+    if shape.oby:
+        out += f" ORDER BY {subst(shape.oby)}"
+    if shape.lim:
+        out += f" LIMIT {shape.lim}"
     return out
+
+
+def _rewrite_bounded(sql: str, family: _Family, analyze, hq=None):
+    """(query, cleanup, refs): the family's restructure of `sql`, or `sql`
+    itself with no cleanup when the shape or the calls decline."""
+    shape = _restructure_shape(sql, family.find, analyze) if family.find(sql) else None
+    keys: dict = {}
+    for text in (shape.sel, shape.having, shape.oby) if shape else ():
+        for _s, _e, name, args in family.find(text or ""):
+            k = family.key(name, args)
+            if k is not None:
+                keys.setdefault(k, (name, args))
+    built = family.build(shape, keys, hq) if keys else None
+    if built is None:
+        return sql, None, None
+    return (*built, shape.refs)
+
+
+# ---- MV sketches and distincts: explode, then one aggregate per spec
+# (`_mvp{j}` per MV column). Key spec: the percentile, or a '#' tag.
+_MV_SPECS = {
+    "percentilerawtdigestmv": "#rawtd",
+    "percentilerawestmv": "#rawqd",
+    "distinctcountrawhllmv": "#rawhll",
+    "distinctcounthllmv": "#hll",
+    "distinctcountmv": "#dc",
+    "distinctcountbitmapmv": "#dc",
+    "distinctsummv": "#dsum",
+    "distinctavgmv": "#davg",
+}
+# spec -> (aggregate over the exploded `_mv`, final over its part column)
+_MV_AGGS = {
+    # rsd 0.016 ~ the reference's default HLL log2m=12; a group whose
+    # arrays are all empty has 0 distinct values, not NULL
+    "#hll": ("approx_count_distinct(_mv, 0.016)", "coalesce(min({}), 0)"),
+    # the raw forms return the serialized sketch as a lowercase-HEX
+    # STRING (SerializedHLL / SerializedTDigest / SerializedQuantileDigest
+    # .toString); all-empty groups give NULL. The raw HLL offers each
+    # element by its type (clearspring, default log2m = 8 like the SV form)
+    "#rawhll": ("rawclearspringhll(_mv, 8)", "lower(hex(min({})))"),
+    "#rawtd": ("rawtdigest(CAST(_mv AS DOUBLE))", "lower(hex(min({})))"),
+    "#rawqd": ("rawqdigest(CAST(_mv AS BIGINT))", "lower(hex(min({})))"),
+    # exact and shuffle-bound (Expand-based distinct aggregation); the
+    # finals match the macros on all-empty groups: INT 0, 0.0, and NaN
+    # (0.0 / 0, as Java divides in the reference)
+    "#dc": ("count(DISTINCT _mv)", "CAST(coalesce(min({}), 0) AS INT)"),
+    "#dsum": (
+        "sum(DISTINCT CAST(_mv AS DOUBLE))",
+        "coalesce(min({}), CAST(0.0 AS DOUBLE))",
+    ),
+    "#davg": (
+        "avg(DISTINCT CAST(_mv AS DOUBLE))",
+        "coalesce(min({}), CAST('NaN' AS DOUBLE))",
+    ),
+}
+
+
+def _mv_key(name: str, args: list[str]):
+    if len(args) != (2 if name in _TDMV_NAMES else 1):
+        return None
+    return _norm(args[0]), _MV_SPECS.get(name) or _norm(args[1])
+
+
+def _mv_build(shape: _Shape, keys: dict, _hq):
+    alias = {k: f"_tdmv_{i}" for i, k in enumerate(keys)}
+    cols: dict[str, tuple[str, list[str]]] = {}  # column -> (text, aggs)
+    for k, (_name, args) in keys.items():
+        agg = _MV_AGGS[k[1]][0] if k[1] in _MV_AGGS else (
+            f"percentile_approx(CAST(_mv AS DOUBLE), ({args[1]}) / 100)"
+        )
+        cols.setdefault(k[0], (args[0], []))[1].append(f"{agg} AS {alias[k]}")
+    keysel = "".join(f"{g} AS _gk_{i}, " for i, g in enumerate(shape.gby))
+    grp_by = f" GROUP BY {', '.join(shape.gby)}" if shape.gby else ""
+    parts = [
+        (
+            f"_mvp{j}",
+            f"SELECT {keysel}{', '.join(aggs)} "
+            f"FROM (SELECT *, explode({col}) AS _mv FROM _mvsrc){grp_by}",
+        )
+        for j, (col, aggs) in enumerate(cols.values())
+    ]
+
+    def final(k) -> str:
+        return _MV_AGGS.get(k[1], ("", "min({})"))[1].format(alias[k])
+
+    return _join_back(shape, _MV_PERCENTILE, "_mvsrc", parts, final), None
+
+
+_MV_PERCENTILE = _Family(
+    "mv_percentile",
+    lambda text: _find_calls(text, _BOUNDED_MV_NAMES),
+    _mv_key,
+    _mv_build,
+)
+
+
+def rewrite_mv_percentile_bounded(sql: str, analyze=None) -> str:
+    """Restructure the bounded MV names (percentile*TDigest/Est*MV, the
+    HLL and exact distinct MV names) into explode + bounded aggregate
+    parts joined back on the group keys; `sql` unchanged (the exact
+    macro) when the shape declines. `analyze` resolves qualified refs,
+    see _restructure_shape; HurricaneSQL.sql also dry-runs the result."""
+    return _rewrite_bounded(sql, _MV_PERCENTILE, analyze)[0]
+
+
+# ---- mode(x, 'AVG'): pre-aggregated value counts, so per-group state is
+# O(distinct values), the reference's value -> count map
+# (ModeAggregationFunction.java:65-75). `_mavg{j}` per value expression:
+#
+#   counts  SELECT keys, CAST(x AS DOUBLE) AS _v, count(*) AS _c
+#           FROM src WHERE x IS NOT NULL GROUP BY keys, _v
+#           -- partial-aggregated map-side: the shuffle carries (keys,
+#           -- value, partial count), never raw rows
+#   modes   avg(_v) FILTER (WHERE _c = max(_c) OVER (PARTITION BY keys))
+#           -- the mean of all tied modes (the AVG reducer)
+#
+# MIN/MAX reducers map to Spark's native mode() (O(distinct) JVM state).
+def _mode_find(text: str):
+    return [
+        c
+        for c in _find_calls(text, {"mode"})
+        if len(c[3]) == 2 and c[3][1].strip().strip("'\"").upper() == "AVG"
+    ]
+
+
+def _mode_build(shape: _Shape, keys: dict, _hq):
+    gk = [f"_gk_{i}" for i in range(len(shape.gby))]
+    keysel = "".join(f"{g} AS _gk_{i}, " for i, g in enumerate(shape.gby))
+    over = f"PARTITION BY {', '.join(gk)}" if gk else ""
+    parts = []
+    for j, (_name, args) in enumerate(keys.values()):
+        x = args[0]
+        parts.append((
+            f"_mavg{j}",
+            "SELECT " + "".join(f"{k}, " for k in gk)
+            + "avg(_v) FILTER (WHERE _c = _mx) AS _m FROM ("
+            f"SELECT *, max(_c) OVER ({over}) AS _mx FROM ("
+            f"SELECT {keysel}CAST(({x}) AS DOUBLE) AS _v, count(*) AS _c "
+            f"FROM _msrc WHERE ({x}) IS NOT NULL GROUP BY {', '.join(gk + ['_v'])}))"
+            + (f" GROUP BY {', '.join(gk)}" if gk else ""),
+        ))
+    order = {k: j for j, k in enumerate(keys)}
+    return _join_back(
+        shape, _MODE_AVG, "_msrc", parts, lambda k: f"min(_mavg{order[k]}._m)"
+    ), None
+
+
+_MODE_AVG = _Family(
+    "mode_avg", _mode_find, lambda _name, args: _norm(args[0]), _mode_build
+)
 
 
 def rewrite_mode_avg_bounded(sql: str, analyze=None) -> str:
-    """Restructure mode(col, 'AVG') into a pre-aggregated value-counts
-    shape so per-group state is O(distinct values), matching the
-    reference's value->count map (ModeAggregationFunction.java:65-75).
+    """Restructure mode(x, 'AVG') into value-counts parts joined back on
+    the group keys; `sql` unchanged (the collect_list fold macro) when
+    the shape declines. `analyze` as for rewrite_mv_percentile_bounded."""
+    return _rewrite_bounded(sql, _MODE_AVG, analyze)[0]
 
-    The expression-macro fallback folds a sorted collect_list — a linear
-    fold, but the buffer is O(rows/group) doubles, which a hot key
-    concentrates. For the single-table shape this emits instead:
 
-      counts  SELECT keys, CAST(col AS DOUBLE) AS _v, count(*) AS _c
-              FROM src WHERE col IS NOT NULL GROUP BY keys, _v
-              -- Spark partial-aggregates map-side: the shuffle carries
-              -- (keys, value, partial count), never raw rows
-      modes   avg(_v) FILTER (WHERE _c = max(_c) OVER (PARTITION BY
-              keys)) — the mean of all tied modes (AVG reducer)
+# ---- raw digests: percentileRawEst / percentileRawTDigest /
+# distinctCountRawHLL / distinctCountRawThetaSketch (the simple union and
+# the FILTERED set-op form) / idSet over a value column. The part is one
+# bound view from operators/raw_partial.digests_by_group: mapInArrow
+# partials where the data sits plus a grouped merge of serialized
+# partials, so no raw value is shuffled. BYTES-column sketch calls never
+# get here (_theta_bytes_rewrite runs first).
+_RAW_DIGEST_NAMES = {
+    "percentilerawest",
+    "percentilerawtdigest",
+    "distinctcountrawthetasketch",
+    "distinctcountrawhll",
+    # idSet streams mergeable IdSet partials too — the reference's own
+    # partial/merge contract (IdSetAggregationFunction + IdSets.merge)
+    "idset",
+}
 
-    LEFT JOINed back on the group keys like the other bounded
-    restructures. Round-11: non-single-table FROM shapes (joins, CTEs,
-    subqueries in FROM) restructure too — the whole FROM subtree
-    (including WHERE) becomes the `_msrc` CTE, so the value-counts
-    pre-aggregation runs over the join OUTPUT and the O(rows/group)
-    collect_list fold is the exception (set operations, DISTINCT),
-    not the default for joined inputs. Round-12: qualified outer refs
-    strip to bare columns when they resolve uniquely in the subtree
-    output (`analyze` callback + session-level dry-run, see
-    rewrite_mv_percentile_bounded). MIN/MAX reducers already map to
-    Spark's native `mode()` (O(distinct) JVM state) and are
-    untouched."""
-    calls = [
-        (s, e, name, args)
-        for s, e, name, args in _find_calls(sql, {"mode"})
-        if len(args) == 2
-        and args[1].strip().strip("'\"").upper() == "AVG"
+
+def _raw_spec(name: str, args: list[str]):
+    """(value_expr_sql, kind, k, extra) of a simple call, or None when the
+    form is outside the restructure (the single-phase path validates it
+    and raises)."""
+    if name in ("percentilerawest", "percentilerawtdigest"):
+        if len(args) != 2:
+            return None
+        try:
+            pct = float(args[1].strip().strip("'"))
+        except ValueError:
+            return None
+        if not 0 <= pct <= 100:
+            return None
+        if name == "percentilerawest":
+            return (f"CAST(({args[0]}) AS BIGINT)", "qdigest", 0, "")
+        return (f"CAST(({args[0]}) AS DOUBLE)", "tdigest", 0, "")
+    if name == "distinctcountrawhll":
+        if len(args) > 2:
+            return None
+        try:
+            log2m = int(args[1].strip().strip("'")) if len(args) == 2 else 8
+        except ValueError:
+            return None
+        if not 4 <= log2m <= 30:
+            return None
+        return (f"({args[0]})", "hll", log2m, "")
+    if name == "idset":
+        # the params literal rides in `extra`, so the partials and the
+        # merge apply the single-phase aggregate's threshold/bloom rules
+        if len(args) > 2:
+            return None
+        params = ""
+        if len(args) == 2:
+            lit = args[1].strip()
+            if not (lit.startswith("'") and lit.endswith("'")):
+                return None
+            params = lit[1:-1]
+            for kv in params.split(";"):
+                if not kv.strip():
+                    continue
+                kk, sep, _v = kv.partition("=")
+                if not sep or kk.strip().lower() not in (
+                    "sizethresholdinbytes",
+                    "expectedinsertions",
+                    "fpp",
+                ):
+                    return None
+        return (f"({args[0]})", "idset", 0, params)
+    # theta: the simple union form; the filtered set-op form is composite
+    if len(args) > 2:
+        return None
+    try:
+        k = _theta_params(args[1]) if len(args) == 2 else 4096
+    except ValueError:
+        return None
+    return (f"({args[0]})", "theta", k, "")
+
+
+def _raw_call_parts(name: str, args: list[str]):
+    """(specs, render) of a call, or None outside the restructure.
+    `specs` are the digest columns the call reads; `render(bodies)` wraps
+    their BINARY bodies into the call's emission.
+
+    A simple form is one spec in its STRING envelope. The FILTERED set-op
+    raw theta form (expr, params, filter..., 'SET_OP') reads one
+    CASE-filtered spec per sketch id and folds them with thetasetopsketch
+    over the MERGED sketches: a union of partials keeps the same k
+    smallest distinct hashes as a direct build, so the emission is
+    byte-identical to the single-phase path. A CASE branch keeps the
+    source column's type, so the hash space is pinned as before."""
+    spec = _raw_spec(name, args)
+    if spec is not None:
+        theta_like = spec[1] in ("theta", "idset")
+        env = unchunked_base64("{}") if theta_like else "lower(hex({}))"
+        return [spec], lambda bodies: env.format(bodies[0])
+    if name != "distinctcountrawthetasketch" or len(args) < 4:
+        return None
+    try:
+        parts = _theta_filtered_parts(name, args)
+    except ValueError:
+        return None
+    specs = [(v, "theta", parts.nominal, "") for v in parts.values.values()]
+    return specs, lambda bodies: unchunked_base64(parts.setop_sql(bodies))
+
+
+def _raw_key(name: str, args: list[str]):
+    return (name, *args) if _raw_call_parts(name, args) is not None else None
+
+
+_BQ_ALIAS = re.compile(r"(?s)^(.*)\s+[Aa][Ss]\s+(`(?:[^`]|``)+`)\s*$")
+
+
+def _split_alias(it: str) -> tuple[str, str]:
+    """(body, alias suffix) of a select item: a plain or a backquoted
+    (pinned-name) trailing alias, or none."""
+    m = _AS_ALIAS.search(it)
+    if m:
+        return it[: m.start()], it[m.start() :]
+    m = _BQ_ALIAS.match(it)
+    if m:
+        return m.group(1), it[m.end(1) :]
+    return it, ""
+
+
+def _raw_build(shape: _Shape, keys: dict, hq: "HurricaneSQL"):
+    from hurricanedb_spark.operators.raw_partial import (
+        DigestSpec,
+        digests_by_group,
+        empty_state,
+    )
+
+    # An unaliased item that holds a call would take the emission's
+    # auto-generated name: pin the original query's name back, or keep
+    # the single-phase form when it is unavailable or would confuse the
+    # string scans
+    items = _split_top(shape.sel)
+    sel_items = []
+    for idx, it in enumerate(items):
+        if _AS_ALIAS.search(it) or it.endswith("`") or not any(
+            _raw_key(n, a) for _s, _e, n, a in _RAW_DIGEST.find(it)
+        ):
+            sel_items.append(it)
+            continue
+        names = shape.out_names()
+        if (
+            names is None
+            or len(names) != len(items)
+            or _UNSAFE_AUTO_NAME.search(names[idx])
+            or not _balanced_commasafe(names[idx])
+        ):
+            return None
+        sel_items.append(f"{it} AS `{names[idx]}`")
+
+    calls = {k: _raw_call_parts(*keys[k]) for k in keys}
+    cols: dict[tuple, str] = {}  # normalized spec -> digest column
+    for specs, _render in calls.values():
+        for expr, kd, kk, ex in specs:
+            cols.setdefault((_norm(expr), kd, kk, ex), f"_rd_{len(cols)}")
+    gby = shape.gby
+    src_sql = f"WITH {', '.join(shape.ctes('_rdsrc'))} SELECT " + ", ".join(
+        [f"({g}) AS _gk_{i}" for i, g in enumerate(gby)]
+        + [f"({expr}) AS {col}" for (expr, *_), col in cols.items()]
+    ) + " FROM _rdsrc"
+    specs = [
+        DigestSpec(alias=col, value_col=col, kind=kd, k=kk or 4096, extra=ex)
+        for (_e, kd, kk, ex), col in cols.items()
     ]
-    if not calls:
-        return sql
-    src = sql.rstrip().rstrip(";")
-    masked = mask(src)
-    low = masked.lower()
-    if re.search(
-        r"\bunion\b|\bintersect\b|\bexcept\b|\bselect\s+distinct\b", low
-    ):
-        return sql
-    spans = _outer_clause_spans(masked)
-    if spans is None:
-        return sql
-
-    parts: dict[str, str | None] = {}  # qualifier-stripped overrides
-
-    def grp(name: str) -> str | None:
-        if name in parts:
-            return parts[name]
-        s, e = spans[name] if name in spans else (-1, -1)
-        return src[s:e].strip() if s != -1 else None
-
-    withp, fromw = grp("with"), grp("fromwhere")
-    if not grp("sel") or not fromw:
-        return sql
-    # mode() inside the subtree is a nested shape — macro fallback
-    if any(
-        len(a) == 2 and a[1].strip().strip("'\"").upper() == "AVG"
-        for _s, _e, _n, a in _find_calls(fromw, {"mode"})
-    ):
-        return sql
-    # round-14: `t.*` expands via the analyzer (see _expand_qualified_stars)
-    _maybe_expand_stars(parts, grp, withp, fromw, analyze)
-    if any(it == "*" or it.endswith(".*") for it in _split_top(grp("sel"))):
-        return sql
-    parts.update({n: grp(n) for n in ("sel", "gby", "having", "oby")})
-    # qualified refs (round-12): strip to bare columns that resolve
-    # uniquely in the subtree output, else keep the collect_list macro
-    view_cols = None
-    if _DOTTED_REF.search(
-        mask(" ".join(x for x in parts.values() if x))
-    ):
-        if analyze is None:
-            return sql
-        view_cols = analyze(
-            (f"WITH {withp} " if withp else "") + f"SELECT * FROM {fromw}"
+    try:
+        # float/double keys are safe: digests_by_group keeps genuine NaN
+        # keys apart from Arrow's NULL-as-NaN, and NaN = NaN in Spark's
+        # grouping and <=> joins the restored key back
+        view = digests_by_group(
+            hq.spark.sql(rewrite_functions(src_sql)),
+            [f"_gk_{i}" for i in range(len(gby))],
+            specs,
         )
-    src_proj = ""
+    except Exception:  # noqa: BLE001 — an unsketchable column and the
+        # like: the single-phase path runs or raises with the query's context
+        return None
+    uniq, cleanup = hq._bind_view(view, "rawdg")
 
-    def _orig_out_names():
-        # positional output names of the original (macro-form) query —
-        # confirms implicit aliases for the rebind guard and pins
-        # composite unaliased items in the projection (round-15)
-        r = analyze(src) if analyze is not None else None
-        return list(r[0]) if r else None
+    def emit(k, agg: bool = True, qualify: bool = True) -> str:
+        specs, render = calls[k]
+        bodies = []
+        for expr, kd, kk, ex in specs:
+            col = cols[(_norm(expr), kd, kk, ex)]
+            col = f"{uniq}.{col}" if qualify else col
+            empty = empty_state(kd, kk or 4096).hex()
+            bodies.append(f"coalesce({f'min({col})' if agg else col}, X'{empty}')")
+        return render(bodies)
 
-    _orig_out_names = _once(_orig_out_names)
-    if not _strip_clause_qualifiers(
-        parts, view_cols, out_names=_orig_out_names
-    ):
-        # round-13: alias-projection fallback, same as the MV rewrite —
-        # reset parts from spans first (the strip mutates on the way out)
-        for n in ("sel", "gby", "having", "oby"):
-            s_, e_ = spans[n] if n in spans else (-1, -1)
-            parts[n] = src[s_:e_].strip() if s_ != -1 else None
+    # PURE: every select item is a group key or exactly one call, with no
+    # HAVING, so the view answers alone. Grouped, its columns are read
+    # as they are; a global select aggregates the view's 0 or 1 rows,
+    # which gives one row on empty input without a CROSS JOIN that would
+    # attach the digest to every base row.
+    def pure_item(it: str) -> str | None:
+        body, alias = _split_alias(it)
+        for i, g in enumerate(gby):
+            if _norm(g) == _norm(body):
+                if alias:
+                    return f"_gk_{i}{alias}"
+                # an unaliased expression key is named by its text,
+                # which a rename cannot reproduce
+                ident = _IDENT.fullmatch(body.strip())
+                return f"_gk_{i} AS {ident.group(0)}" if ident else None
+        calls_ = _RAW_DIGEST.find(body)
+        if len(calls_) == 1:
+            s, e, name, args = calls_[0]
+            k = _raw_key(name, args)
+            if k is not None and not body[:s].strip() and not body[e:].strip():
+                return f"{emit(k, agg=not gby, qualify=False)}{alias}"
+        return None
 
-        proj = _alias_project_refs(
-            parts, uuid.uuid4().hex[:8], auto_names=_orig_out_names
+    aliases = _as_aliases(shape.sel)
+
+    def pure_oby(it: str) -> str | None:
+        m = re.match(
+            r"(.*?)((?:\s+(?:asc|desc))?(?:\s+nulls\s+(?:first|last))?)\s*$",
+            it,
+            re.IGNORECASE | re.DOTALL,
         )
-        if not proj:
-            return sql
-        src_proj = ", " + ", ".join(proj)
-    gby = _split_top(parts["gby"] or "")
-    if any(g.isdigit() for g in gby):
-        return sql
-    sel_items = _split_top(parts["sel"])
-    sel_aliases = set()
-    for it in sel_items:
-        m_alias = re.search(r"\s+[Aa][Ss]\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", it)
-        if m_alias:
-            sel_aliases.add(m_alias.group(1).lower())
-    # alias group keys: see rewrite_mv_percentile_bounded — a key that is
-    # a real subtree column is safe even when a select alias shadows it;
-    # the schema is fetched lazily when the guard needs it
-    conflicts = [
-        g
-        for g in gby
-        if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", g)
-        and g.lower() in sel_aliases
-    ]
-    if conflicts:
-        if view_cols is None and analyze is not None:
-            view_cols = analyze(
-                (f"WITH {withp} " if withp else "") + f"SELECT * FROM {fromw}"
-            )
-        real_cols = (
-            {c.lower() for c in view_cols[0]} if view_cols else set()
-        )
-        if any(g.lower() not in real_cols for g in conflicts):
-            return sql
+        body, sfx = m.group(1), m.group(2)
+        for i, g in enumerate(gby):
+            if _norm(g) == _norm(body):
+                return f"_gk_{i}{sfx}"
+        if _IDENT.fullmatch(body.strip()) and body.strip().lower() in aliases:
+            return it
+        return None
 
-    def _norm(s: str) -> str:
-        return " ".join(s.split())
+    sel_p = [pure_item(it) for it in sel_items]
+    oby_p = [pure_oby(it) for it in _split_top(shape.oby or "")]
+    if not shape.having and None not in sel_p and None not in oby_p:
+        out = f"SELECT {', '.join(sel_p)} FROM {uniq}"
+        if oby_p and gby:
+            out += f" ORDER BY {', '.join(oby_p)}"
+        if shape.lim:
+            out += f" LIMIT {shape.lim}"
+        return out, cleanup
+    shape = shape._replace(sel=", ".join(sel_items))
+    return _join_back(shape, _RAW_DIGEST, "_rdsrc", [(uniq, None)], emit), cleanup
 
-    exprs: dict[str, str] = {}  # normalized value expr -> original text
 
-    def _scan(text: str) -> None:
-        for _s, _e, _name, args in _find_calls(text, {"mode"}):
-            if len(args) == 2 and args[1].strip().strip("'\"").upper() == "AVG":
-                exprs.setdefault(_norm(args[0]), args[0])
-
-    for clause in ("sel", "having", "oby"):
-        if grp(clause):
-            _scan(grp(clause))
-    if not exprs:
-        return sql
-
-    order = {k: j for j, k in enumerate(exprs)}
-
-    def _subst(text: str) -> str:
-        out, pos = [], 0
-        for s, e, _name, args in _find_calls(text, {"mode"}):
-            if not (
-                len(args) == 2
-                and args[1].strip().strip("'\"").upper() == "AVG"
-            ):
-                continue
-            out.append(text[pos:s])
-            out.append(f"min(_mavg{order[_norm(args[0])]}._m)")
-            pos = e
-        out.append(text[pos:])
-        return "".join(out)
-
-    ctes = ([withp] if withp else []) + [
-        f"_msrc AS (SELECT *{src_proj} FROM {fromw})"
-    ]
-    joined = "_msrc"
-    for nk, j in order.items():
-        orig = exprs[nk]
-        keysel = "".join(f"{g} AS _gk_{i}, " for i, g in enumerate(gby))
-        keys = [f"_gk_{i}" for i in range(len(gby))]
-        part = (
-            f" PARTITION BY {', '.join(keys)}" if keys else ""
-        )
-        grp_keys = f" GROUP BY {', '.join(keys + ['_v'])}" if keys else " GROUP BY _v"
-        ctes.append(
-            f"_mavg{j} AS (SELECT "
-            + "".join(f"_gk_{i}, " for i in range(len(gby)))
-            + "avg(_v) FILTER (WHERE _c = _mx) AS _m FROM ("
-            f"SELECT *, max(_c) OVER ({part.strip() or ''}) AS _mx FROM ("
-            f"SELECT {keysel}CAST(({orig}) AS DOUBLE) AS _v, count(*) AS _c "
-            f"FROM _msrc WHERE ({orig}) IS NOT NULL{grp_keys}))"
-            + (f" GROUP BY {', '.join(keys)}" if keys else "")
-            + ")"
-        )
-        if gby:
-            cond = " AND ".join(
-                f"({g}) <=> _mavg{j}._gk_{i}" for i, g in enumerate(gby)
-            )
-            joined += f" LEFT JOIN _mavg{j} ON {cond}"
-        else:
-            joined += f" CROSS JOIN _mavg{j}"
-
-    out = f"WITH {', '.join(ctes)} SELECT {_subst(grp('sel'))} FROM {joined}"
-    if gby:
-        out += f" GROUP BY {', '.join(gby)}"
-    if grp("having"):
-        out += f" HAVING {_subst(grp('having'))}"
-    if grp("oby"):
-        out += f" ORDER BY {_subst(grp('oby'))}"
-    if grp("lim"):
-        out += f" LIMIT {grp('lim')}"
-    return out
+_RAW_DIGEST = _Family(
+    "raw_digest",
+    lambda text: _find_calls(text, _RAW_DIGEST_NAMES),
+    _raw_key,
+    _raw_build,
+)
 
 
 _LIMIT_RE = re.compile(r"\blimit\s+\d+", re.IGNORECASE)
@@ -3102,26 +3168,6 @@ def _probe_native_text_headers(seg: str) -> tuple[list[str], list[str]]:
     return missing, corrupt
 
 
-def _guarded(rewrite):
-    """A pure-string bounded restructure as a pass, under the 'a rewrite
-    can never break a working query' contract (round-11 ADVICE): when it
-    changed the query, dry-run-analyze the result (same macro expansion
-    the later passes apply) and keep the original on ANY failure — e.g.
-    a user CTE named _mvsrc/_msrc, or a subtree column colliding with
-    generated aliases (_mv, _gk_*)."""
-
-    def run(hq: "HurricaneSQL", q0: str):
-        out = rewrite(q0, analyze=hq._analyze_cols)
-        if out != q0:
-            try:
-                hq.spark.sql(rewrite_functions(rewrite_json_match(out)))
-            except Exception:  # noqa: BLE001 — macro path still works
-                return q0, None, None
-        return out, None, None
-
-    return run
-
-
 def _string_pass(rewrite):
     """A str -> str rewrite as a pass: no view to drop, nothing to note."""
     return lambda _hq, query: (rewrite(query), None, None)
@@ -3289,10 +3335,10 @@ class HurricaneSQL:
         withp = seg("with")
         view_sql = (f"WITH {withp} " if withp else "") + f"SELECT * FROM {fromw}"
         try:
-            # rewrite_functions first, the _rd_wrap_subtree convention: a
-            # subtree containing dialect functions (round-11 ADVICE) must
-            # still resolve here, or a BYTES sketch column silently falls
-            # to the value path and counts distinct BLOBS
+            # rewrite_functions first, as the restructures' analysis does:
+            # a subtree holding dialect functions must still resolve here,
+            # or a BYTES sketch column silently falls to the value path
+            # and counts distinct BLOBS
             return self.spark.sql(rewrite_functions(view_sql))
         except Exception:  # noqa: BLE001 — unresolvable subtree
             return None
@@ -3464,656 +3510,24 @@ class HurricaneSQL:
             )
         return "".join(out), None, None
 
-    def _rd_wrap_subtree(self, query: str, masked: str, names: set[str]):
-        """Round-11: two-phase raw-digest builds for NON-single-table
-        shapes (joins, CTEs, subqueries in FROM). The FROM-subtree —
-        including its WHERE — is NAMED as a temp view (a lazy logical
-        plan, nothing materializes) and the outer aggregate re-enters
-        _raw_digest_two_phase as a single-table query over it, so the
-        mapInArrow partials stream over the JOIN OUTPUT where it is
-        produced. This is the reference's shape: V2 leaf stages compile
-        join subtrees back to the V1 engine
-        (pinot-query-runtime/.../plan/ServerRequestPlanVisitor.java:79-133)
-        whose aggregation contract is always partial/combine/final
-        (AggregationFunction.java:42-130) — a raw-digest call over a
-        joined fact no longer ships the group's raw values to one Python
-        worker.
-
-        Round-12: qualified references in the outer tail (`t.col` — the
-        most common join spelling) restructure too, via
-        _strip_tail_qualifiers against the collapsed view's schema.
-
-        Fallback (single-phase, documented bound) is kept for genuinely
-        dynamic shapes: set operations / SELECT DISTINCT, digest calls
-        INSIDE the subtree, ambiguous or struct-shaped dotted refs, and
-        anything whose rebuilt form fails a dry-run analysis — the final
-        query is analyzed here before committing, so a wrap can never
-        turn a previously-working query into an error."""
-        noop = (query, None, None)
-        low = masked.lower()
-        if re.search(
-            r"\bunion\b|\bintersect\b|\bexcept\b|\bselect\s+distinct\b", low
-        ):
-            return noop
-        spans = _outer_clause_spans(mask(query.rstrip().rstrip(";")))
-        if spans is None:
-            return noop
-        src = query.rstrip().rstrip(";")
-
-        def seg(name: str) -> str | None:
-            s, e = spans[name] if name in spans else (-1, -1)
-            return src[s:e].strip() if s != -1 else None
-
-        withp, sel, fromw = seg("with"), seg("sel"), seg("fromwhere")
-        if not sel or not fromw:
-            return noop
-        if not withp and re.fullmatch(r"[A-Za-z_]\w*", fromw):
-            # bare single table: the single-table matcher owns it (and
-            # this breaks re-entry if a rebuilt query lands here again)
-            return noop
-        if _find_calls(fromw, names):
-            return noop  # digest built inside the subtree: nested shape
-        view_sql = (f"WITH {withp} " if withp else "") + f"SELECT * FROM {fromw}"
+    def _restructure(self, query: str, family: _Family):
+        """A bounded restructure as a pass (see _restructure_shape). The
+        committed form is analyzed once, with the macro expansion the
+        later passes apply, and any failure keeps the original query
+        after dropping the family's views: a rewrite never breaks a
+        working query. Such failures are, say, a user CTE named like a
+        generated one (_mvsrc, _msrc, _rdsrc) or a subtree column named
+        like a generated alias (_mv, _gk_*)."""
+        out, cleanup, refs = _rewrite_bounded(query, family, self._analyze_cols, self)
+        if out == query:
+            return query, None, None
         try:
-            vdf = self.spark.sql(rewrite_functions(view_sql))
-        except Exception:  # noqa: BLE001 — unresolvable subtree: fallback
-            return noop
-        uniq, drop = self._bind_view(vdf, "rdsub")
-
-        # round-14 (r13 verdict #3): qualified stars (`t.*`) expand to
-        # explicit per-column refs against the ORIGINAL FROM scope, so
-        # those spellings restructure too instead of single-phasing
-        if re.search(r"\.\s*\*", mask(sel)):
-
-            def _star_cols(q):
-                try:
-                    return [
-                        f.name
-                        for f in self.spark.sql(
-                            rewrite_functions(
-                                (f"WITH {withp} " if withp else "")
-                                + f"SELECT {q}.* FROM {fromw}"
-                            )
-                        ).schema.fields
-                    ]
-                except Exception:  # noqa: BLE001 — unresolvable qualifier
-                    return None
-
-            expanded = _expand_qualified_stars(sel, _star_cols)
-            if expanded is None:
-                drop()
-                return noop
-            sel = expanded
-        # round-12: qualified refs (`t.col` — the most common join
-        # spelling) no longer bail; strip to bare columns that resolve
-        # uniquely in the collapsed view's schema (the analyzed subtree
-        # df gives the schema for free, nothing executes)
-        parts: dict[str, str | None] = {
-            "sel": sel,
-            "gby": seg("gby"),
-            "having": seg("having"),
-            "oby": seg("oby"),
-        }
-        def _orig_out_names(src=src):
-            # positional output names of the ORIGINAL query's
-            # single-phase form (round-15): confirms implicit aliases
-            # for the rebind guard, and lets the alias projection pin
-            # composite unaliased items back to the name the user
-            # would have seen without the restructure
-            try:
-                return [
-                    f.name
-                    for f in self.spark.sql(
-                        rewrite_functions(rewrite_json_match(src))
-                    ).schema.fields
-                ]
-            except Exception:  # noqa: BLE001 — decline instead
-                return None
-
-        _orig_out_names = _once(_orig_out_names)
-        if not _strip_clause_qualifiers(
-            parts,
-            (
-                [f.name for f in vdf.schema.fields],
-                _dot_accessible_cols(vdf.schema.fields),
-            ),
-            out_names=_orig_out_names,
-        ):
-            # round-13 (r12 verdict #2): the strip's decline cases —
-            # ambiguous bare names, struct/map field access, 3-part
-            # refs, select-alias collisions — restructure via alias
-            # PROJECTION instead of falling back to single-phase: each
-            # dotted ref is projected into the subtree view under a
-            # generated alias, resolved in the original FROM scope
-            # where its binding is unambiguous by construction. The
-            # strip may have partially mutated `parts`; rebuild from
-            # the original segments.
-            parts = {
-                "sel": sel,
-                "gby": seg("gby"),
-                "having": seg("having"),
-                "oby": seg("oby"),
-            }
-
-            proj = _alias_project_refs(
-                parts, uuid.uuid4().hex[:8], auto_names=_orig_out_names
-            )
-            if not proj:
-                drop()
-                return noop
-            proj_sql = (
-                (f"WITH {withp} " if withp else "")
-                + "SELECT *, "
-                + ", ".join(proj)
-                + f" FROM {fromw}"
-            )
-            try:
-                self.spark.sql(
-                    rewrite_functions(proj_sql)
-                ).createOrReplaceTempView(uniq)
-            except Exception:  # noqa: BLE001 — unresolvable projection
-                drop()
-                return noop
-        rebuilt = f"SELECT {parts['sel']} FROM {uniq}"
-        for kw, name in (
-            ("GROUP BY", "gby"),
-            ("HAVING", "having"),
-            ("ORDER BY", "oby"),
-        ):
-            part = parts[name]
-            if part:
-                rebuilt += f" {kw} {part}"
-        lim = seg("lim")
-        if lim:
-            rebuilt += f" LIMIT {lim}"
-        inner_cleanup = None
-        try:
-            out, inner_cleanup, _ = self._raw_digest_two_phase(rebuilt)
-            if out == rebuilt:
-                drop()
-                return noop
-            # dry-run analysis of the committed form (same downstream
-            # rewrites the caller applies); any failure -> fallback
             self.spark.sql(rewrite_functions(rewrite_json_match(out)))
-        except Exception:  # noqa: BLE001 — wrap must never break a query
-            # the inner two-phase may have registered its __rawdg_* view
-            # before the dry-run failed: drop it too or it leaks in the
-            # session catalog (round-11 ADVICE)
-            if inner_cleanup is not None:
-                inner_cleanup()
-            drop()
-            return noop
-
-        def cleanup(inner=inner_cleanup, drop=drop):
-            inner()
-            drop()
-
-        return out, cleanup, None
-
-    def _raw_digest_two_phase(self, query: str):
-        """Two-phase (partial -> merge) routing for the raw mergeable
-        digest builders — percentileRawEst / percentileRawTDigest /
-        distinctCountRawHLL / distinctCountRawThetaSketch (both the
-        simple-union and the FILTERED set-op form) over a VALUE column.
-
-        The single-phase grouped-agg fallback ships a group's entire raw
-        value set to one Python worker before building the bounded digest
-        (bounded output, unbounded intermediate); the reference instead
-        streams partials (AggregationFunction.java:42-130 partial ->
-        combine -> final). For the restructurable single-table shape this
-        rewrites the query so digests are built by
-        operators/raw_partial.digests_by_group: mapInArrow partials
-        where the data sits (no raw-value shuffle) + a grouped merge of
-        serialized partials, exposed to the query as a temp view.
-
-        Two emission forms:
-          - PURE: every select item is a group key or a rewritten call
-            -> read straight from the merged view (no join, no base-row
-            aggregation at all);
-          - JOIN-BACK: other aggregates present -> LEFT JOIN the view on
-            the group keys and take min(<digest>) per group (one row per
-            group in the view, so min is identity), the
-            rewrite_mv_percentile_bounded pattern.
-
-        Round-11: joins/CTEs/subqueries-in-FROM restructure too, via
-        _rd_wrap_subtree (the FROM subtree becomes a named lazy view and
-        this method re-applies over it); round-12: qualified outer refs
-        strip to bare view columns instead of bailing. The remaining
-        single-phase fallbacks are genuinely dynamic shapes: set
-        operations, SELECT DISTINCT, star-selects, ordinal/aliased
-        GROUP BY, ambiguous/struct dotted refs, unresolvable tables. BYTES-column theta calls never
-        reach here (_theta_bytes_rewrite runs first). Returns
-        (query, cleanup, note)."""
-        noop = (query, None, None)
-        names = {
-            "percentilerawest",
-            "percentilerawtdigest",
-            "distinctcountrawthetasketch",
-            "distinctcountrawhll",
-            # round-13: idSet() streams mergeable IdSet partials too —
-            # the reference's own partial/merge contract
-            # (IdSetAggregationFunction + IdSets.merge)
-            "idset",
-        }
-        if not _find_calls(query, names):
-            return noop
-        masked = mask(query)
-        low = masked.lower()
-        if len(re.findall(r"\bfrom\b", low)) != 1 or re.search(
-            r"\bjoin\b|\bunion\b|\bwith\b|\bselect\s+distinct\b", low
-        ):
-            # round-11 generalization: join/CTE/subquery FROM shapes
-            # re-enter via the named-subtree wrap instead of falling
-            # straight to the single-phase grouped agg
-            return self._rd_wrap_subtree(query, masked, names)
-        m = _TDMV_SHAPE.match(masked)
-        if not m:
-            return noop
-
-        def grp(name: str) -> str | None:
-            s, e = m.span(name)
-            return query[s:e] if s != -1 else None
-
-        tbl = m.group("tbl")
-        try:
-            tbl_cols = {
-                f.name.lower() for f in self.spark.table(tbl).schema.fields
-            }
-        except Exception:  # noqa: BLE001 — unresolvable: fall back
-            return noop
-        gby = _split_top(grp("gby") or "")
-        if any(g.isdigit() for g in gby):
-            return noop
-        sel_items = _split_top(grp("sel"))
-        if any(it == "*" or it.endswith(".*") for it in sel_items):
-            return noop
-        sel_aliases = set()
-        for it in sel_items:
-            m_alias = re.search(
-                r"\s+[Aa][Ss]\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", it
-            )
-            if m_alias:
-                sel_aliases.add(m_alias.group(1).lower())
-        # a key that is a REAL table column is safe even when a select
-        # alias shadows its name: both resolutions pick the column
-        if any(
-            re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", g)
-            and g.lower() in sel_aliases
-            and g.lower() not in tbl_cols
-            for g in gby
-        ):
-            return noop
-
-        def _norm(s: str) -> str:
-            return " ".join(s.split())
-
-        def _call_key(name: str, args: list[str]):
-            """(value_expr_sql, kind, k) or None when the call form is
-            outside the restructure (fallback path validates/raises)."""
-            if name in ("percentilerawest", "percentilerawtdigest"):
-                if len(args) != 2:
-                    return None
-                try:
-                    pct = float(args[1].strip().strip("'"))
-                except ValueError:
-                    return None
-                if not 0 <= pct <= 100:
-                    return None
-                if name == "percentilerawest":
-                    return (f"CAST(({args[0]}) AS BIGINT)", "qdigest", 0, "")
-                return (f"CAST(({args[0]}) AS DOUBLE)", "tdigest", 0, "")
-            if name == "distinctcountrawhll":
-                if len(args) > 2:
-                    return None
-                try:
-                    log2m = (
-                        int(args[1].strip().strip("'"))
-                        if len(args) == 2
-                        else 8
-                    )
-                except ValueError:
-                    return None
-                if not 4 <= log2m <= 30:
-                    return None
-                return (f"({args[0]})", "hll", log2m, "")
-            if name == "idset":
-                # 1/2-arg forms; the params literal rides in `extra` so
-                # the partial emit and the merge apply the same
-                # threshold/bloom rules as the single-phase aggregate
-                if len(args) > 2:
-                    return None
-                params = ""
-                if len(args) == 2:
-                    lit = args[1].strip()
-                    if not (lit.startswith("'") and lit.endswith("'")):
-                        return None
-                    params = lit[1:-1]
-                    for kv in params.split(";"):
-                        if not kv.strip():
-                            continue
-                        kk, sep, _v = kv.partition("=")
-                        if not sep or kk.strip().lower() not in (
-                            "sizethresholdinbytes",
-                            "expectedinsertions",
-                            "fpp",
-                        ):
-                            return None
-                return (f"({args[0]})", "idset", 0, params)
-            # theta: simple union form here; the filtered set-op form is
-            # a COMPOSITE call (several specs + a fold) — _call_parts
-            if len(args) > 2:
-                return None
-            try:
-                k = _theta_params(args[1]) if len(args) == 2 else 4096
-            except ValueError:
-                return None
-            return (f"({args[0]})", "theta", k, "")
-
-        def _call_parts(name: str, args: list[str]):
-            """-> (specs, render): `specs` is a list of
-            (value_expr_sql, kind, k) view columns the call consumes;
-            `render(bodies)` wraps the per-spec BINARY digest bodies into
-            the call's final emission. None = outside the restructure
-            (the single-phase fallback validates/raises).
-
-            Simple forms are one spec + an envelope. The FILTERED set-op
-            raw theta form (expr, params, filter..., 'SET_OP') maps to
-            one spec per referenced sketch id — CASE-filtered value
-            exprs, each an O(k) per-partition partial — folded by
-            thetasetopsketch over the MERGED sketches: union of partials
-            keeps the same k smallest distinct hashes as a direct build,
-            so eval_set_tree sees identical compact sketches either way
-            and the emission is byte-identical to the single-phase path.
-            The Spark schema of a CASE branch keeps the source column
-            type, so the hash-space pin (the r9 typeof() class) is
-            preserved without the explicit typeof() argument."""
-            k = _call_key(name, args)
-            if k is not None:
-                env = (
-                    unchunked_base64("{}")
-                    if k[1] in ("theta", "idset")
-                    else "lower(hex({}))"
-                )
-                return [k], lambda bodies, env=env: env.format(bodies[0])
-            if name != "distinctcountrawthetasketch" or len(args) < 4:
-                return None
-            try:
-                parts = _theta_filtered_parts(name, args)
-            except ValueError:
-                return None
-            specs = [
-                (v, "theta", parts.nominal, "") for v in parts.values.values()
-            ]
-            return specs, lambda bodies: unchunked_base64(parts.setop_sql(bodies))
-
-        # round-15: name parity for UNALIASED digest-bearing select
-        # items. The restructured emission (coalesce over the merged
-        # view column) auto-names differently than the single-phase
-        # rewrite's expression text, so an item whose text _subst will
-        # change and that carries no alias gets the single-phase form's
-        # positional output name pinned back via a backquoted alias —
-        # the restructure stays observably invisible. Items the
-        # projection already pinned (trailing backquote) are kept;
-        # if the name is unavailable or would confuse the string
-        # parsers, fall back to single-phase (names right by
-        # construction there).
-        _sp_names_memo: list = []
-
-        def _single_phase_names():
-            if not _sp_names_memo:
-                try:
-                    _sp_names_memo.append(
-                        [
-                            f.name
-                            for f in self.spark.sql(
-                                rewrite_functions(rewrite_json_match(query))
-                            ).schema.fields
-                        ]
-                    )
-                except Exception:  # noqa: BLE001 — fall back
-                    _sp_names_memo.append(None)
-            return _sp_names_memo[0]
-
-        pinned_items: list[str] = []
-        for _idx, _it in enumerate(sel_items):
-            _its = _it.strip()
-            has_call = any(
-                _call_parts(nm, ar) is not None
-                for _cs, _ce, nm, ar in _find_calls(_its, names)
-            )
-            aliased = bool(
-                re.search(r"\s+[Aa][Ss]\s+[A-Za-z_]\w*\s*$", _its)
-            ) or _its.endswith("`")
-            if not has_call or aliased:
-                pinned_items.append(_its)
-                continue
-            flds = _single_phase_names()
-            if (
-                flds is None
-                or len(flds) != len(sel_items)
-                or _UNSAFE_AUTO_NAME.search(flds[_idx])
-                or not _balanced_commasafe(flds[_idx])
-            ):
-                return noop
-            pinned_items.append(f"{_its} AS `{flds[_idx]}`")
-        sel_items = pinned_items
-        sel_text = ", ".join(sel_items)
-
-        assign: dict[tuple[str, str, int], str] = {}  # key -> view column
-
-        def _scan(text: str) -> None:
-            for _s, _e, name, args in _find_calls(text, names):
-                parts = _call_parts(name, args)
-                if parts is None:
-                    continue
-                for expr, kd, k, ex in parts[0]:
-                    nk = (_norm(expr), kd, k, ex)
-                    if nk not in assign:
-                        assign[nk] = f"_rd_{len(assign)}"
-
-        _scan(sel_text)
-        for clause in ("having", "oby"):
-            if grp(clause):
-                _scan(grp(clause))
-        if not assign:
-            return noop
-
-        from hurricanedb_spark.operators.raw_partial import (
-            DigestSpec,
-            digests_by_group,
-            empty_state,
-        )
-
-        gk = [f"_gk_{i}" for i in range(len(gby))]
-        where = grp("where")
-        src_sql = "SELECT " + ", ".join(
-            [f"({g}) AS _gk_{i}" for i, g in enumerate(gby)]
-            + [
-                f"({expr}) AS {al}"
-                for (expr, _kd, _k, _ex), al in assign.items()
-            ]
-        ) + f" FROM {tbl}" + (f" WHERE {where}" if where else "")
-        specs = [
-            DigestSpec(alias=al, value_col=al, kind=kd, k=k or 4096, extra=ex)
-            for (_expr, kd, k, ex), al in assign.items()
-        ]
-        try:
-            src = self.spark.sql(rewrite_functions(src_sql))
-            # float/double group keys two-phase too (round-12): the
-            # is-NaN marker inside digests_by_group keeps genuine NaN
-            # keys distinct from Arrow's NULL-as-NaN, and Spark's own
-            # NaN semantics (NaN = NaN in grouping and <=>) make the
-            # restored key join back correctly
-            view = digests_by_group(src, gk, specs)
-        except Exception:  # noqa: BLE001 — any analysis/type error here
-            # (unsketchable theta column, alias-referencing WHERE, ...)
-            # falls back to the single-phase path, which either executes
-            # with its documented bound or raises the same error with
-            # the original query's context
-            return noop
-        uniq, cleanup = self._bind_view(view, "rawdg")
-
-        def _body(
-            kind: str, k: int, alias: str, agg: bool, qualify: bool
-        ) -> str:
-            col = f"{uniq}.{alias}" if qualify else alias
-            expr = f"min({col})" if agg else col
-            empty = f"X'{empty_state(kind, k or 4096).hex()}'"
-            return f"coalesce({expr}, {empty})"
-
-        def _emit_call(parts, qualify: bool, agg: bool | None = None) -> str:
-            specs, render = parts
-            agg = qualify if agg is None else agg
-            return render(
-                [
-                    _body(
-                        kd, k, assign[(_norm(expr), kd, k, ex)], agg, qualify
-                    )
-                    for expr, kd, k, ex in specs
-                ]
-            )
-
-        def _subst(text: str, qualify: bool) -> str:
-            out, pos = [], 0
-            for s, e, name, args in _find_calls(text, names):
-                parts = _call_parts(name, args)
-                if parts is None:
-                    continue
-                out.append(text[pos:s])
-                out.append(_emit_call(parts, qualify))
-                pos = e
-            out.append(text[pos:])
-            return "".join(out)
-
-        _BQ_ALIAS = re.compile(r"(?s)^(.*)\s+[Aa][Ss]\s+(`(?:[^`]|``)+`)\s*$")
-
-        def _split_alias(it: str):
-            """(body, alias_suffix) — plain-identifier or backquoted
-            (round-15 pinned-name) trailing alias."""
-            m_alias = re.search(
-                r"\s+[Aa][Ss]\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", it
-            )
-            if m_alias:
-                return it[: m_alias.start()], it[m_alias.start():]
-            m_bq = _BQ_ALIAS.match(it)
-            if m_bq:
-                return m_bq.group(1), it[m_bq.end(1):]
-            return it, ""
-
-        # PURE path: every select item (alias stripped) is a group key or
-        # contains only rewritten calls over group keys -> no join needed;
-        # group keys rename to their _gk_i view columns
-        def _pure_item(it: str) -> str | None:
-            body, alias_sfx = _split_alias(it)
-            norm_body = _norm(body)
-            for i, g in enumerate(gby):
-                if _norm(g) == norm_body:
-                    if alias_sfx:
-                        return f"_gk_{i}{alias_sfx}"
-                    if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", body.strip()):
-                        return f"_gk_{i} AS {body.strip()}"
-                    return None  # unaliased expression key: its implicit
-                    # output name is the expression text, which a rename
-                    # cannot reproduce — join-back keeps it
-            calls = _find_calls(body, names)
-            if len(calls) == 1:
-                s, e, name, args = calls[0]
-                parts = _call_parts(name, args)
-                if parts and not body[:s].strip() and not body[e:].strip():
-                    return f"{_emit_call(parts, False)}{alias_sfx}"
-            return None
-
-        # ORDER BY items that are group keys rename to their view columns;
-        # select-list aliases pass through (they exist in the pure output)
-        def _pure_oby_item(it: str) -> str | None:
-            mm = re.match(
-                r"(.*?)((?:\s+(?:asc|desc))?(?:\s+nulls\s+(?:first|last))?)"
-                r"\s*$",
-                it,
-                re.IGNORECASE | re.DOTALL,
-            )
-            body, sfx = mm.group(1), mm.group(2)
-            norm_body = _norm(body)
-            for i, g in enumerate(gby):
-                if _norm(g) == norm_body:
-                    return f"_gk_{i}{sfx}"
-            if (
-                re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", body.strip())
-                and body.strip().lower() in sel_aliases
-            ):
-                return it
-            return None
-
-        pure_sel = [_pure_item(it) for it in sel_items]
-        pure_oby = [
-            _pure_oby_item(it) for it in _split_top(grp("oby") or "")
-        ]
-        if (
-            all(p is not None for p in pure_sel)
-            and all(p is not None for p in pure_oby)
-            and not grp("having")
-        ):
-            if not gby:
-                # GLOBAL pure-digest select (round-13, found by the sf1
-                # idset OOM): aggregate over the VIEW itself — min()
-                # over its 0-or-1 rows returns one row even on empty
-                # input (global aggregates always do), so the empty
-                # guarantee holds WITHOUT the CROSS JOIN, which
-                # attached the serialized digest to EVERY base row
-                # (450k rows x a 188KB IdSet blob = tens of GB through
-                # the aggregate's input batches)
-                def _pure_global(it: str) -> str | None:
-                    body, alias_sfx = _split_alias(it)
-                    calls = _find_calls(body, names)
-                    if len(calls) == 1:
-                        cs, ce, cname, cargs = calls[0]
-                        parts = _call_parts(cname, cargs)
-                        if (
-                            parts
-                            and not body[:cs].strip()
-                            and not body[ce:].strip()
-                        ):
-                            return (
-                                f"{_emit_call(parts, False, agg=True)}"
-                                f"{alias_sfx}"
-                            )
-                    return None
-
-                gsel = [_pure_global(it) for it in sel_items]
-                if all(g is not None for g in gsel):
-                    out = f"SELECT {', '.join(gsel)} FROM {uniq}"
-                    if grp("lim"):
-                        out += f" LIMIT {grp('lim')}"
-                    return out, cleanup, None
-                # fall through to the join-back (mixed shapes)
-            else:
-                out = f"SELECT {', '.join(pure_sel)} FROM {uniq}"
-                if pure_oby:
-                    out += f" ORDER BY {', '.join(pure_oby)}"
-                if grp("lim"):
-                    out += f" LIMIT {grp('lim')}"
-                return out, cleanup, None
-
-        # JOIN-BACK path
-        if gby:
-            cond = " AND ".join(
-                f"({g}) <=> {uniq}._gk_{i}" for i, g in enumerate(gby)
-            )
-            joined = f"{tbl} LEFT JOIN {uniq} ON {cond}"
-        else:
-            joined = f"{tbl} CROSS JOIN {uniq}"
-        out = f"SELECT {_subst(sel_text, True)} FROM {joined}"
-        if where:
-            out += f" WHERE {where}"
-        if gby:
-            out += f" GROUP BY {', '.join(gby)}"
-        if grp("having"):
-            out += f" HAVING {_subst(grp('having'), True)}"
-        if grp("oby"):
-            out += f" ORDER BY {_subst(grp('oby'), True)}"
-        if grp("lim"):
-            out += f" LIMIT {grp('lim')}"
-        return out, cleanup, None
+        except Exception:  # noqa: BLE001 — the plain form still works
+            if cleanup is not None:
+                cleanup()
+            return query, None, None
+        return out, cleanup, {"restructure": family.name, "refs": refs}
 
     def _bind_view(self, df: DataFrame, tag: str):
         """Register `df` under a fresh uuid-named temp view; returns
@@ -4710,10 +4124,12 @@ class HurricaneSQL:
     def _analyze_cols(self, view_sql: str) -> tuple[list[str], list[str]] | None:
         """(column names, dot-accessible column names — struct/map/
         array-of-struct) of a SELECT (analyzer only, nothing executes) —
-        the qualifier-strip callback for the bounded restructures. None =
+        the `analyze` callback of the bounded restructures. None =
         unresolvable, caller declines."""
         try:
-            fields = self.spark.sql(rewrite_functions(view_sql)).schema.fields
+            fields = self.spark.sql(
+                rewrite_functions(rewrite_json_match(view_sql))
+            ).schema.fields
             return [f.name for f in fields], _dot_accessible_cols(fields)
         except Exception:  # noqa: BLE001 — unresolvable subtree
             return None
@@ -4723,12 +4139,12 @@ class HurricaneSQL:
     # facts: last_<field> values and the EXPLAIN `access_path` line.
     # The default limit is applied after the last of them.
     _PASSES = (
-        _guarded(rewrite_mv_percentile_bounded),
-        _guarded(rewrite_mode_avg_bounded),
+        _MV_PERCENTILE,
+        _MODE_AVG,
         _theta_bytes_rewrite,
         _index_pass,
         _star_tree_rewrite,
-        _raw_digest_two_phase,
+        _RAW_DIGEST,
         _column_prune_pass,
         _string_pass(rewrite_json_match),
         _string_pass(rewrite_functions),

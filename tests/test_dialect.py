@@ -42,6 +42,23 @@ def test_rewrite_agg_templates():
     assert "(max(y) - min(y))" in out
 
 
+def test_find_calls_lexes_like_spark():
+    """The call scan reads the masked query (sql/lexer.py): an escaped
+    quote, parens or commas inside a literal, and a call inside a
+    comment never steer it; the args are sliced from the original."""
+    from hurricanedb_spark.sql.dialect import _find_calls, rewrite_mode_avg_bounded
+
+    assert rewrite_functions(
+        "SELECT regexpExtract(s, 'a\\'b(c)', 1) AS r FROM t"
+    ) == "SELECT (regexp_extract(s, 'a\\'b(c)', 1)) AS r FROM t"
+    q = "SELECT concat(s, 'it\\'s, (ok') AS c FROM t"
+    [(_s, e, name, args)] = _find_calls(q, {"concat"})
+    assert (name, args, q[e:]) == ("concat", ["s", "'it\\'s, (ok'"], " AS c FROM t")
+    q2 = "SELECT g, -- mode(y, 'AVG')\n mode(x, 'MIN') AS m FROM t GROUP BY g"
+    assert [c[3] for c in _find_calls(q2, {"mode"})] == [["x", "'MIN'"]]
+    assert rewrite_mode_avg_bounded(q2) == q2
+
+
 def test_dialect_selection_default_limit(hdb):
     df = hdb.sql("SELECT l_orderkey FROM lineitem ORDER BY l_orderkey")
     assert df.count() == 10  # Pinot default LIMIT 10 (query.thrift:34)

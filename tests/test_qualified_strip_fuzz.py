@@ -1,12 +1,12 @@
-"""Differential fuzz for the round-12 qualifier strip.
+"""Differential fuzz for the qualifier strip.
 
-For a join query, the table-qualified spelling (`t.col`) and the
+For a query over one FROM shape (a bare table, an aliased table, a
+subquery, a CTE or a join), the qualified spelling (`t.col`) and the
 unqualified spelling are the SAME query — so across a seeded space of
-aggregate choices (two-phase digests, mode-AVG, bounded MV percentile),
-group-key spellings, aliases, HAVING and ORDER BY, the two spellings
-must return identical rows, and the qualified one must restructure to
-the same plan class as the unqualified one (no ArrowAggregatePython /
-collect_list reappearing just because the user wrote `t.col`).
+FROM shapes, aggregate choices (two-phase digests, mode-AVG, bounded MV
+percentile), group-key spellings, aliases, HAVING and ORDER BY, the two
+spellings must return identical rows, and both must restructure (no
+ArrowAggregatePython / collect_list for any shape or spelling).
 
 This pins the space around _strip_tail_qualifiers the way the theta
 fuzz pins the set-op rewrites: any future edge where the strip rewrites
@@ -76,27 +76,37 @@ AGGS = [
 ]
 
 
+# FROM shapes: (WITH prefix, FROM clause, qualifier of qf_t's columns).
+# The join also carries qf_dim as `d`.
+SHAPES = [
+    ("", "qf_t", "qf_t."),
+    ("", "qf_t x", "x."),
+    ("", "qf_t AS x", "x."),
+    ("", "(SELECT * FROM qf_t) x", "x."),
+    ("WITH s AS (SELECT * FROM qf_t) ", "s", "s."),
+    ("", "qf_t t JOIN qf_dim d ON t.g = d.gk", "t."),
+]
+
+
 def _case(rng: random.Random):
     agg, marker = rng.choice(AGGS)
-    key = rng.choice(["fam", "g"])
-    key_qual = ("d." if key == "fam" else "t.") + key
+    withp, src, tq = rng.choice(SHAPES)
+    key = rng.choice(["fam", "g"]) if "JOIN" in src else "g"
+    key_qual = ("d." if key == "fam" else tq) + key
     alias = rng.random() < 0.5
     extra = rng.random() < 0.4  # JVM aggregate alongside -> join-back
     having = rng.random() < 0.3  # qualified ref inside HAVING too
 
     def build(qual: bool) -> str:
         k = key_qual if qual else key
-        q = "t." if qual else ""
+        q = tq if qual else ""
         call = agg.format(q=q)
         key_sel = f"{k} AS {key}" if alias else k
         sel = f"{key_sel}, {call} AS a0" + (
             ", count(*) AS n" if extra else ""
         )
         hv = f" HAVING min({q}v) >= 0" if having else ""
-        return (
-            f"SELECT {sel} FROM qf_t t JOIN qf_dim d ON t.g = d.gk "
-            f"GROUP BY {k}{hv} ORDER BY {k}"
-        )
+        return f"{withp}SELECT {sel} FROM {src} GROUP BY {k}{hv} ORDER BY {k}"
 
     return build(True), build(False), marker
 

@@ -3,7 +3,8 @@
 The reference's aggregation contract is partial/combine/final
 (AggregationFunction.java:42-130) — a hot group's raw values never
 concentrate on one node. These tests pin the SQL-path restructure
-(HurricaneSQL._raw_digest_two_phase + operators/raw_partial):
+(the raw-digest family of sql/dialect.py's bounded restructures +
+operators/raw_partial):
 
   - executed plans build digests via MapInArrow partials + a grouped
     merge of serialized blobs — the single-phase ArrowAggregatePython
@@ -228,6 +229,83 @@ def test_global_empty_input_keeps_one_row(hdb):
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0]["qd"] == build_qdigest([]).hex()
+    # an aliased table restructures like the bare one: one row, holding
+    # the empty digest (the single-phase grouped agg returned no row)
+    for src in ("rp_t x", "rp_t AS x"):
+        aliased = hdb.sql(
+            f"SELECT percentileRawEst(x.v, 50) AS qd FROM {src} WHERE x.v < -1",
+            default_limit=None,
+        ).collect()
+        assert [r["qd"] for r in aliased] == [build_qdigest([]).hex()], src
+
+
+def test_aliased_table_restructures_two_phase(hdb):
+    """`FROM t x` and `FROM t AS x` take the two-phase path like `FROM
+    t`: the plan has MapInArrow partials and no whole-group grouped agg,
+    and the rows and column names (an unaliased item keeps its
+    single-phase name) equal the bare spelling's, digest bytes included."""
+    bare = hdb.sql(
+        "SELECT g, percentileRawEst(v, 50), percentileRawTDigest(d, 90) AS td "
+        "FROM rp_t GROUP BY g ORDER BY g",
+        default_limit=None,
+    )
+    want = bare.collect()
+    for src, q in (("rp_t t", ""), ("rp_t AS t", "t.")):
+        df = hdb.sql(
+            f"SELECT {q}g, percentileRawEst({q}v, 50), "
+            f"percentileRawTDigest({q}d, 90) AS td "
+            f"FROM {src} GROUP BY {q}g ORDER BY {q}g",
+            default_limit=None,
+        )
+        plan = _plan(df)
+        assert "MapInArrow" in plan and "ArrowAggregatePython" not in plan, src
+        assert df.columns == bare.columns, src
+        assert df.collect() == want, src
+
+
+def test_restructure_notes_name_family_and_refs(hdb, spark):  # noqa: F811
+    """Each restructure leaves one note: its family, and how qualified
+    outer refs were resolved (None: there were none; "strip": to bare
+    columns; "project": as generated aliases of the source)."""
+    # g on both join sides: `t.g` is ambiguous once stripped
+    hdb.register("rp_dim4", spark.createDataFrame(
+        [("a", "x"), ("b", "y"), ("c", "y")], "g string, fam string"
+    ))
+    cases = [
+        ("SELECT percentileRawEst(v, 50) AS qd FROM rp_t x", None),
+        (
+            "SELECT d.fam, percentileRawEst(t.v, 50) AS qd FROM rp_t t "
+            "JOIN rp_dim4 d ON t.g = d.g GROUP BY d.fam",
+            "strip",
+        ),
+        (
+            "SELECT t.g, percentileRawEst(t.v, 50) AS qd FROM rp_t t "
+            "JOIN rp_dim4 d ON t.g = d.g GROUP BY t.g",
+            "project",
+        ),
+    ]
+    for q, refs in cases:
+        hdb.sql(q, default_limit=None)
+        notes = [n for n in hdb._request.notes if "restructure" in n]
+        assert notes == [{"restructure": "raw_digest", "refs": refs}], q
+
+
+def test_reserved_source_name_falls_back(hdb):
+    """A user CTE named like the generated source (_rdsrc) cannot take
+    the restructure; the query keeps the single-phase form and its rows."""
+    df = hdb.sql(
+        "WITH _rdsrc AS (SELECT g, v FROM rp_t) "
+        "SELECT g, percentileRawEst(v, 50) AS qd FROM _rdsrc GROUP BY g "
+        "ORDER BY g",
+        default_limit=None,
+    )
+    assert not [n for n in hdb._request.notes if "restructure" in n]
+    assert "ArrowAggregatePython" in _plan(df)
+    want = hdb.sql(
+        "SELECT g, percentileRawEst(v, 50) AS qd FROM rp_t GROUP BY g ORDER BY g",
+        default_limit=None,
+    ).collect()
+    assert df.collect() == want
 
 
 def test_mixed_kinds_single_view_and_oby(hdb):
