@@ -83,6 +83,15 @@ holds inside mapInPandas (Arrow-batched, numpy-vectorized bit-unpack);
 column pruning happens at the decoder (only requested columns are
 sliced out of columns.psf). `export_segments` writes one segment per
 Spark partition, shuffle-free.
+
+A reference server loads a segment once and answers later queries from
+it. Here the dialect's column-pruned and star-tree scans play that part
+(`session_view`): each is decoded by the first query that reads it into
+Spark's in-memory columnar cache, per session, projection and segment
+version, and a rewritten segment is decoded again on the next query.
+Spark's storage memory bounds the cache; a block that does not fit is
+decoded again when read. The registered view and the index-accelerated
+scans decode on every query.
 """
 
 from __future__ import annotations
@@ -92,6 +101,7 @@ import re
 import struct
 import threading
 import time
+import uuid
 import weakref
 import zlib
 from collections import OrderedDict
@@ -103,6 +113,7 @@ INDEX_FILE = "columns.psf"
 INDEX_MAP_FILE = "index_map"
 METADATA_FILE = "metadata.properties"
 CREATION_META_FILE = "creation.meta"
+VALID_DOC_IDS_FILE = "validdocids.bitmap.snapshot"
 PAD_CHAR = b"\x00"
 VAR_LENGTH_MAGIC = b".vl;"
 
@@ -1569,8 +1580,7 @@ def write_valid_doc_ids(segment_dir: str, doc_ids) -> str:
     """Persist the upsert valid-docId snapshot
     (`validdocids.bitmap.snapshot`, raw serialized RoaringBitmap —
     ImmutableSegmentImpl.persistValidDocIdsSnapshot)."""
-    d = _resolve_dir(segment_dir)
-    path = os.path.join(d, "validdocids.bitmap.snapshot")
+    path = os.path.join(_resolve_dir(segment_dir), VALID_DOC_IDS_FILE)
     with open(path, "wb") as f:
         f.write(roaring_serialize(doc_ids))
     return path
@@ -1579,8 +1589,7 @@ def write_valid_doc_ids(segment_dir: str, doc_ids) -> str:
 def read_valid_doc_ids(segment_dir: str):
     """Valid docIds from the snapshot, or None when absent
     (ImmutableSegmentImpl.loadValidDocIdsFromSnapshot)."""
-    d = _resolve_dir(segment_dir)
-    path = os.path.join(d, "validdocids.bitmap.snapshot")
+    path = os.path.join(_resolve_dir(segment_dir), VALID_DOC_IDS_FILE)
     if not os.path.isfile(path):
         return None
     with open(path, "rb") as f:
@@ -2004,22 +2013,72 @@ def prune_segments(segment_dirs: list[str], column: str, op: str, value):
 
 
 # Per-session DataFrames that depend only on the session and the store:
-# the id leaves and the plain scans. A DataFrame is an immutable plan,
-# so one can back every query of its session. Weakly keyed by the
-# session and holding only the JVM handles, so an entry dies with its
+# the id leaves, the plain scans, and the persisted scans behind the
+# dialect's column-pruned and star-tree views (`session_view`). A
+# DataFrame is an immutable plan, so one can back every query of its
+# session. Weakly keyed by the session, so an entry dies with its
 # session; least recently used first, at most _SESSION_FRAMES_SIZE each.
 _SESSION_FRAMES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _SESSION_FRAMES_SIZE = 64
 _SESSION_FRAMES_LOCK = threading.Lock()
+# one persisted build at a time, so that a key's successive builds see
+# strictly newer segment versions
+_SESSION_BUILD_LOCK = threading.Lock()
+
+
+@dataclass
+class _Persisted:
+    """A persisted frame and the temp view over it. `versions` are its
+    segments' versions when it was built; `retired` is the view of the
+    entry it replaced, kept for requests in flight until the next
+    replacement."""
+
+    versions: tuple
+    jdf: object
+    view: str
+    retired: str | None = None
+
+
+def _frames(spark) -> OrderedDict:
+    """Session `spark`'s entries (call under _SESSION_FRAMES_LOCK). A
+    session that dies unpersists what it still holds."""
+    frames = _SESSION_FRAMES.get(spark)
+    if frames is None:
+        frames = _SESSION_FRAMES[spark] = OrderedDict()
+        weakref.finalize(spark, _unpersist_all, frames).atexit = False
+    return frames
+
+
+def _unpersist_all(frames: OrderedDict) -> None:
+    for entry in list(frames.values()):
+        if isinstance(entry, _Persisted):
+            entry.jdf.unpersist(False)
+
+
+def _evict(spark, frames: OrderedDict, key=None) -> None:
+    """Pop `key`'s entry, or the least recently used ones past the bound
+    (call under _SESSION_FRAMES_LOCK), and release them."""
+    if key is not None:
+        gone = [frames.pop(key)]
+    else:
+        extra = len(frames) - _SESSION_FRAMES_SIZE
+        gone = [frames.popitem(last=False)[1] for _ in range(extra)]
+    for entry in gone:
+        if isinstance(entry, _Persisted):
+            entry.jdf.unpersist(False)
+            for view in (entry.view, entry.retired):
+                if view is not None:
+                    spark.catalog.dropTempView(view)
 
 
 def _session_frame(spark, key: tuple, build):
     """The DataFrame cached under `key` for session `spark`, made by
-    `build()` on a miss."""
+    `build()` on a miss. The plan is cached, not its rows: every query
+    over it decodes again."""
     from pyspark.sql import DataFrame
 
     with _SESSION_FRAMES_LOCK:
-        frames = _SESSION_FRAMES.setdefault(spark, OrderedDict())
+        frames = _frames(spark)
         jdf = frames.get(key)
         if jdf is not None:
             frames.move_to_end(key)
@@ -2027,18 +2086,90 @@ def _session_frame(spark, key: tuple, build):
     df = build()
     with _SESSION_FRAMES_LOCK:
         frames[key] = df._jdf
-        if len(frames) > _SESSION_FRAMES_SIZE:
-            frames.popitem(last=False)
+        _evict(spark, frames)
     return df
 
 
+def _segment_versions(segment_dirs: list[str]) -> tuple:
+    """Each segment's on-disk version: the stat of the files its
+    metadata is parsed from (`_metadata_version`), and the (inode, size,
+    mtime_ns) of columns.psf and of the upsert valid-docId snapshot, or
+    None for either file when it is absent. A rewrite through the
+    writers changes it."""
+    out = []
+    for seg in segment_dirs:
+        d = _resolve_dir(seg)
+        stats = [_metadata_version(d)]
+        for name in (INDEX_FILE, VALID_DOC_IDS_FILE):
+            try:
+                s = os.stat(os.path.join(d, name))
+                stats.append((s.st_ino, s.st_size, s.st_mtime_ns))
+            except FileNotFoundError:
+                stats.append(None)
+        out.append(tuple(stats))
+    return tuple(out)
+
+
+def session_view(spark, key: tuple, segment_dirs: list[str], build) -> tuple[str, str]:
+    """(temp view name, "hit" or "build") for the frame cached under
+    `key` in session `spark`: `build(plans)`, persisted MEMORY_ONLY in
+    Spark's in-memory columnar cache. The first query that reads the
+    view fills the cache, later ones read InMemoryTableScan and start no
+    Python worker; a block that does not fit in storage memory is
+    decoded again, as an uncached scan would be.
+
+    `plans` pair each of `segment_dirs` with its `_segment_versions`
+    entry, and the cached entry keeps them: a query that finds any of
+    them changed rebuilds the entry. The versions also make each build's
+    plan its own, since Spark's cache manager matches and uncaches plans
+    by their result. A replaced entry is unpersisted at once, but its
+    view lives on until the next replacement, so a request that bound it
+    a moment before still resolves it (and decodes). The view lives as
+    long as the entry: dropping a temp view uncaches its plan, so a
+    per-request drop would leave nothing to hit. `key[0]` names the
+    views."""
+    from pyspark import StorageLevel
+
+    def current(versions):
+        with _SESSION_FRAMES_LOCK:
+            frames = _frames(spark)
+            entry = frames.get(key)
+            if entry is not None and entry.versions == versions:
+                frames.move_to_end(key)
+                return entry.view
+        return None
+
+    view = current(_segment_versions(segment_dirs))
+    if view is not None:
+        return view, "hit"
+    with _SESSION_BUILD_LOCK:
+        versions = _segment_versions(segment_dirs)
+        view = current(versions)
+        if view is not None:
+            return view, "hit"  # built while this request waited
+        df = build(list(zip(segment_dirs, versions))).persist(StorageLevel.MEMORY_ONLY)
+        view = f"__{key[0]}_{uuid.uuid4().hex}"
+        df.createOrReplaceTempView(view)
+        with _SESSION_FRAMES_LOCK:
+            frames = _frames(spark)
+            old = frames.get(key)
+            frames[key] = _Persisted(versions, df._jdf, view, old and old.view)
+            if old is not None:
+                old.jdf.unpersist(False)
+                if old.retired is not None:
+                    spark.catalog.dropTempView(old.retired)
+            _evict(spark, frames)
+    return view, "build"
+
+
 def drop_session_frames(spark, segment_dirs: list[str]) -> None:
-    """Forget the plain scans cached for `segment_dirs` in session `spark`."""
+    """Forget the frames cached for `segment_dirs` in session `spark`:
+    the plain scans, and the persisted scans with their views."""
     segs = tuple(segment_dirs)
     with _SESSION_FRAMES_LOCK:
-        frames = _SESSION_FRAMES.get(spark, {})
-        for key in [k for k in frames if k[:2] == ("scan", segs)]:
-            del frames[key]
+        frames = _frames(spark)
+        for key in [k for k in frames if k[1] == segs]:
+            _evict(spark, frames, key)
 
 
 def _id_leaf(spark, n: int):
@@ -2061,7 +2192,8 @@ def map_segments(spark, plans: list, decode, schema: str):
     holds: the plans travel in the task closure (PySpark broadcasts a
     closure past 1 MB), so no shuffle is needed to spread them out. The
     leaf (`_id_leaf`) is planned once per session and plan count; each
-    call pickles only its own closure."""
+    call pickles only its own closure. The frame decodes on every query
+    that runs it, unless it is persisted (`session_view`)."""
     leaf = _session_frame(spark, ("leaf", len(plans)), lambda: _id_leaf(spark, len(plans)))
 
     def run(batches):
@@ -2090,9 +2222,11 @@ def read_segments(
     here, apart from the star-tree scan.
 
     A plain scan (no `where`, `bounds` or `residual`) depends only on
-    the session, the segments and the columns, so it is built once per
-    session and shared by every caller: the registered view and the
-    dialect's column-pruned scans pickle no new closure.
+    the session, the segments and the columns, so its plan is built once
+    per session and shared by every caller: the registered view pickles
+    no new closure. It still decodes on every query, so a query that
+    bypasses the dialect sees the segments as they are on disk. The
+    dialect's column-pruned scans keep their rows too (`scan_view`).
 
     `where = (col, op, value)` prunes whole segments (metadata min/max +
     bloom + partition) AND filters rows inside the survivors using their
@@ -2176,6 +2310,21 @@ def read_segments(
     if residual is not None:
         out = out.filter(residual)
     return out.drop(*extras) if extras else out
+
+
+def scan_view(spark, segment_dirs: list[str], columns: list[str]) -> tuple[str, str]:
+    """`session_view` over the plain scan of `columns`: the segments are
+    decoded once per session and version, and every later query of the
+    projection reads Spark's in-memory columnar cache."""
+
+    def build(plans):
+        schema = segment_spark_schema(segment_dirs[0], columns)
+        return map_segments(
+            spark, plans, lambda p: read_segment_pandas(p[0], columns), schema
+        )
+
+    key = ("prune_accel", tuple(segment_dirs), tuple(columns))
+    return session_view(spark, key, segment_dirs, build)
 
 
 def _scan(spark, plans: list, columns: list[str] | None, where, schema: str):

@@ -1032,16 +1032,56 @@ def read_segments_star_tree(
     scale shape: tree records are tiny (pre-aggregated), the union never
     materializes on the driver, and the final group-by shuffles only
     pre-aggregated rows."""
+    from hurricanedb_spark.sources.pinot_segment import map_segments
+
+    scan = _star_tree_scan(key_cols, pairs, conjuncts)
+    return map_segments(
+        spark, segment_dirs, scan, _star_tree_schema(segment_dirs[0], key_cols, pairs)
+    )
+
+
+def star_tree_view(
+    spark, segment_dirs: list[str], key_cols: list[str], pairs: list[str]
+) -> tuple[str, str]:
+    """`session_view` over the star-tree pre-agg scan of `key_cols` and
+    `pairs`, without conjuncts: the pre-agg rows are decoded once per
+    session and version, and the caller's WHERE re-applies on the view
+    (`key_cols` holds its columns)."""
+    from hurricanedb_spark.sources.pinot_segment import map_segments, session_view
+
+    scan = _star_tree_scan(key_cols, pairs, None)
+
+    def build(plans):
+        schema = _star_tree_schema(segment_dirs[0], key_cols, pairs)
+        return map_segments(spark, plans, lambda p: scan(p[0]), schema)
+
+    key = ("st_accel", tuple(segment_dirs), tuple(key_cols), tuple(pairs))
+    return session_view(spark, key, segment_dirs, build)
+
+
+def _star_tree_scan(key_cols: list[str], pairs: list[str], conjuncts):
+    """segment dir -> its pre-agg rows, from the fitting tree or a raw scan."""
+
+    def scan(seg):
+        tid = fitting_tree_id(seg, key_cols, pairs, [])
+        if tid is not None:
+            return star_tree_visit_pandas(seg, tid, key_cols, pairs, conjuncts)
+        return _segment_prearg_fallback_pandas(seg, key_cols, pairs, conjuncts)
+
+    return scan
+
+
+def _star_tree_schema(segment_dir: str, key_cols: list[str], pairs: list[str]) -> str:
+    """DDL of the pre-agg rows: the key columns, then one column a pair."""
     from hurricanedb_spark.sources.pinot_segment import (
-        map_segments,
         read_segment_metadata,
         segment_spark_schema,
     )
 
-    meta0 = read_segment_metadata(segment_dirs[0])
+    meta0 = read_segment_metadata(segment_dir)
     parts = []
     if key_cols:
-        parts = [segment_spark_schema(segment_dirs[0], key_cols)]
+        parts = [segment_spark_schema(segment_dir, key_cols)]
     for p in pairs:
         fn, col = _parse_pair(p)
         if fn in _SET_FNS:
@@ -1053,12 +1093,4 @@ def read_segments_star_tree(
         else:
             t = "double"
         parts.append(f"`{pair_out_col(p)}` {t}")
-    schema = ", ".join(parts)
-
-    def scan(seg):
-        tid = fitting_tree_id(seg, key_cols, pairs, [])
-        if tid is not None:
-            return star_tree_visit_pandas(seg, tid, key_cols, pairs, conjuncts)
-        return _segment_prearg_fallback_pandas(seg, key_cols, pairs, conjuncts)
-
-    return map_segments(spark, segment_dirs, scan, schema)
+    return ", ".join(parts)

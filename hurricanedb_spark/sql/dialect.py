@@ -2488,10 +2488,37 @@ def _rewrite_bounded(sql: str, family: _Family, analyze, hq=None):
             k = family.key(name, args)
             if k is not None:
                 keys.setdefault(k, (name, args))
-    built = family.build(shape, keys, hq) if keys else None
+    if keys:
+        shape = _pin_names(shape, family)
+    built = family.build(shape, keys, hq) if keys and shape else None
     if built is None:
         return sql, None, None
     return (*built, shape.refs)
+
+
+def _pin_names(shape: _Shape, family: _Family) -> _Shape | None:
+    """`shape` with every unaliased select item that holds one of the
+    family's calls pinned to the name the original query gives it, since
+    the emission would otherwise name it after its generated text. None
+    (keep the plain form) when that name is unavailable or would confuse
+    the string scans."""
+    items = _split_top(shape.sel)
+    pinned = list(items)
+    for idx, it in enumerate(items):
+        if _AS_ALIAS.search(it) or it.endswith("`") or not any(
+            family.key(n, a) for _s, _e, n, a in family.find(it)
+        ):
+            continue
+        names = shape.out_names()
+        if (
+            names is None
+            or len(names) != len(items)
+            or _UNSAFE_AUTO_NAME.search(names[idx])
+            or not _balanced_commasafe(names[idx])
+        ):
+            return None
+        pinned[idx] = f"{it} AS `{names[idx]}`"
+    return shape if pinned == items else shape._replace(sel=", ".join(pinned))
 
 
 # ---- MV sketches and distincts: explode, then one aggregate per spec
@@ -2764,28 +2791,6 @@ def _raw_build(shape: _Shape, keys: dict, hq: "HurricaneSQL"):
         empty_state,
     )
 
-    # An unaliased item that holds a call would take the emission's
-    # auto-generated name: pin the original query's name back, or keep
-    # the single-phase form when it is unavailable or would confuse the
-    # string scans
-    items = _split_top(shape.sel)
-    sel_items = []
-    for idx, it in enumerate(items):
-        if _AS_ALIAS.search(it) or it.endswith("`") or not any(
-            _raw_key(n, a) for _s, _e, n, a in _RAW_DIGEST.find(it)
-        ):
-            sel_items.append(it)
-            continue
-        names = shape.out_names()
-        if (
-            names is None
-            or len(names) != len(items)
-            or _UNSAFE_AUTO_NAME.search(names[idx])
-            or not _balanced_commasafe(names[idx])
-        ):
-            return None
-        sel_items.append(f"{it} AS `{names[idx]}`")
-
     calls = {k: _raw_call_parts(*keys[k]) for k in keys}
     cols: dict[tuple, str] = {}  # normalized spec -> digest column
     for specs, _render in calls.values():
@@ -2863,7 +2868,7 @@ def _raw_build(shape: _Shape, keys: dict, hq: "HurricaneSQL"):
             return it
         return None
 
-    sel_p = [pure_item(it) for it in sel_items]
+    sel_p = [pure_item(it) for it in _split_top(shape.sel)]
     oby_p = [pure_oby(it) for it in _split_top(shape.oby or "")]
     if not shape.having and None not in sel_p and None not in oby_p:
         out = f"SELECT {', '.join(sel_p)} FROM {uniq}"
@@ -2872,7 +2877,6 @@ def _raw_build(shape: _Shape, keys: dict, hq: "HurricaneSQL"):
         if shape.lim:
             out += f" LIMIT {shape.lim}"
         return out, cleanup
-    shape = shape._replace(sel=", ".join(sel_items))
     return _join_back(shape, _RAW_DIGEST, "_rdsrc", [(uniq, None)], emit), cleanup
 
 
@@ -3220,7 +3224,8 @@ class HurricaneSQL:
 
     def _forget_segment_table(self, name: str) -> None:
         """Drop segment table `name` (view names are case-insensitive)
-        and the plain scans cached for its segments."""
+        and the frames cached for its segments: the plain scans, and the
+        persisted scans with their views."""
         from hurricanedb_spark.sources import pinot_segment as ps
 
         for key in [k for k in self._segment_tables if k.lower() == name.lower()]:
@@ -3533,7 +3538,9 @@ class HurricaneSQL:
         """Register `df` under a fresh uuid-named temp view; returns
         (view name, drop). The uuid keeps concurrent sql() calls from
         colliding without shared mutable state, and the shared view a
-        table is registered under is never touched."""
+        table is registered under is never touched. Dropping a temp view
+        uncaches its plan, so a persisted frame never goes through here
+        (`pinot_segment.session_view` keeps its own view)."""
         uniq = f"__{tag}_{uuid.uuid4().hex}"
         df.createOrReplaceTempView(uniq)
 
@@ -3672,10 +3679,14 @@ class HurricaneSQL:
         """Per-query column pruning for segment-backed tables (round-16,
         r15 verdict #5): a two-column aggregate over a table with a raw
         text column was decoding AND Arrow-shipping the text for
-        nothing. The referenced-column set (_pruned_columns) reaches
-        `read_segments(columns=...)` through a uuid temp view (same
-        rebind pattern as the index accelerations, which prune the same
-        way when they fire)."""
+        nothing. The table is rebound to the view of the referenced
+        columns (_pruned_columns) that `pinot_segment.scan_view` keeps
+        per session and segment version: the first query of a projection
+        decodes it into Spark's in-memory columnar cache, later ones read
+        the cache. The view outlives the request, since dropping it would
+        uncache it; the note's `scan_cache` says "build" or "hit". The
+        index accelerations prune the same way when they fire, but decode
+        per query."""
         if not self._segment_tables:
             return query, None, None
         masked = mask(query)
@@ -3687,10 +3698,9 @@ class HurricaneSQL:
                 continue
             from hurricanedb_spark.sources import pinot_segment as ps
 
-            uniq, drop = self._bind_view(
-                ps.read_segments(self.spark, segs, used), "prune_accel"
-            )
-            return query[:s] + uniq + query[e:], drop, {"column_prune": (name, used)}
+            view, cache = ps.scan_view(self.spark, segs, used)
+            note = {"column_prune": (name, used), "scan_cache": cache}
+            return query[:s] + view + query[e:], None, note
         return query, None, None
 
     @staticmethod
@@ -3998,8 +4008,11 @@ class HurricaneSQL:
         disables the redirect entirely (the tree pre-aggregated
         default-filled values; exact NULL semantics need the scan).
 
-        Returns (query, cleanup, note); the note's info feeds
-        last_star_tree_redirect for observability/tests."""
+        The pre-agg view (`startree_v2.star_tree_view`) is built without
+        the WHERE conjuncts, which only prune the tree walk, and kept per
+        session and segment version in Spark's in-memory columnar cache,
+        like the column-pruned scans; the note's `scan_cache` says
+        "build" or "hit" and its info feeds last_star_tree_redirect."""
         noop = (query, None, None)
         if not self._segment_tables:
             return noop
@@ -4052,12 +4065,7 @@ class HurricaneSQL:
         if n_fit == 0:
             return noop
         key_cols = list(dict.fromkeys([*shape["group_cols"], *filter_cols]))
-        uniq, cleanup = self._bind_view(
-            st.read_segments_star_tree(
-                self.spark, segs, key_cols, shape["pairs"], shape["conjuncts"]
-            ),
-            "st_accel",
-        )
+        uniq, cache = st.star_tree_view(self.spark, segs, key_cols, shape["pairs"])
         out_items = []
         for kind, payload in shape["items"]:
             if kind == "dim":
@@ -4113,8 +4121,9 @@ class HurricaneSQL:
             "segments_tree": n_fit,
             "segments_scan": len(segs) - n_fit,
         }
-        return " ".join(parts), cleanup, {
+        return " ".join(parts), None, {
             "star_tree_redirect": info,
+            "scan_cache": cache,
             "access_path": "accessPath: STAR_TREE "
             f"(segments from tree: {n_fit}, "
             f"scan fallback: {len(segs) - n_fit}, "
@@ -4136,7 +4145,8 @@ class HurricaneSQL:
 
     # sql() runs these in order; each is pass(self, query) -> (query,
     # cleanup or None, note or None). A note is a dict of per-request
-    # facts: last_<field> values and the EXPLAIN `access_path` line.
+    # facts: last_<field> values, the EXPLAIN `access_path` line, and
+    # `scan_cache` ("build" or "hit") of a cached segment scan.
     # The default limit is applied after the last of them.
     _PASSES = (
         _MV_PERCENTILE,

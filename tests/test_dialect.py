@@ -1588,6 +1588,29 @@ def test_mode_avg_restructures_to_value_counts(hdb):
     assert rewrite_mode_avg_bounded(q_min) == q_min
 
 
+def test_restructures_keep_unaliased_output_names(spark):
+    """An unaliased MV-percentile or mode-AVG call is named as the exact
+    macro names it, whether or not the restructure fires; the raw-digest
+    family already pinned its names this way."""
+    hq = HurricaneSQL(spark)
+    hq.register(
+        "pin_t",
+        spark.range(40).selectExpr(
+            "id % 3 AS g", "CAST(id % 5 AS DOUBLE) AS x",
+            "array(CAST(id AS DOUBLE), CAST(id + 1 AS DOUBLE)) AS arr",
+        ),
+    )
+    for q, family in (
+        ("SELECT g, percentileTDigestMV(arr, 95) FROM pin_t GROUP BY g", "mv_percentile"),
+        ("SELECT g, mode(x, 'AVG') FROM pin_t GROUP BY g", "mode_avg"),
+    ):
+        got = hq.sql(q, default_limit=None)
+        notes = hq._request.notes
+        assert [n["restructure"] for n in notes if "restructure" in n] == [family]
+        assert got.columns == spark.sql(rewrite_functions(q)).columns, q
+        assert len(got.collect()) == 3, q
+
+
 def test_mode_avg_join_shape_restructures(hdb):
     """Round-11 (r10 verdict #7): a JOIN-shaped mode(col,'AVG') routes
     through the value-counts restructure too — the whole FROM subtree

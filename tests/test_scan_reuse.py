@@ -1,15 +1,20 @@
 """The per-store parts of a segment scan are built once and reused:
 parsed segment metadata (`read_segment_metadata`, checked against the
 files' stat on every read), the id leaf of each session and plan count,
-and one plain scan per (session, segments, columns). Each test checks
-that the reuse never serves a stale store, another session's frames or
-a table name that now names something else.
+one plain scan per (session, segments, columns), and the rows of the
+dialect's column-pruned and star-tree scans, persisted per (session,
+segments, projection) and checked against the segments' versions on
+every query. Each test checks that the reuse never serves a stale
+store, another session's frames or a table name that now names
+something else, and that a dropped entry leaves nothing cached.
 """
 
 from __future__ import annotations
 
 import gc
 import os
+import threading
+import time
 import weakref
 
 import numpy as np
@@ -24,7 +29,9 @@ from hurricanedb_spark.sql.dialect import (
     rewrite_functions,
     rewrite_json_match,
 )
-from tests.test_pinot_segment import _decoded_segments
+from hurricanedb_spark.sql.server import serve
+from tests.test_pinot_segment import _collect_decoding, _decoded_segments
+from tests.test_server import _post
 
 SPEC = st.StarTreeSpec(
     split_order=["lang"], function_column_pairs=["count__*"], max_leaf_records=2
@@ -64,6 +71,23 @@ def _plain(spark, q: str) -> list[tuple]:
 
 
 STAR_Q = "SELECT lang, COUNT(*) AS n FROM docs GROUP BY lang"
+PRUNED_Q = "SELECT lang, SUM(id) AS s FROM docs GROUP BY lang"
+
+
+def _scan_cache(hq) -> str | None:
+    """The `scan_cache` note of hq's last sql() on this thread."""
+    return next((n["scan_cache"] for n in hq._request.notes if "scan_cache" in n), None)
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _cache_views(spark) -> list[str]:
+    return [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith(("__prune_accel_", "__st_accel_"))
+    ]
 
 
 def test_v3_segment_rewritten_in_place_is_seen_next_query(spark, tmp_path):
@@ -225,3 +249,170 @@ def test_warm_json_match_py4j_calls(spark, indexed_store):
     assert hq.last_json_match_accel
     assert len(calls) == 42, calls
     assert _rows(df) == _plain(spark, q)
+
+
+def test_repeated_queries_read_the_in_memory_cache(spark, tmp_path):
+    """The first pruned and the first star-tree query decode the store
+    and fill the cache; a repeat reads InMemoryTableScan, decodes no
+    segment and returns the same rows."""
+    _store(tmp_path, [_frame(0, 30), _frame(1, 30)], star_tree_specs=[SPEC])
+    hq = HurricaneSQL(spark)
+    hq.register_segment_table("docs", str(tmp_path))
+    for q, note in ((PRUNED_Q, "last_column_prune"), (STAR_Q, "last_star_tree_redirect")):
+        first, n = _collect_decoding(hq.sql(q, default_limit=None))
+        assert getattr(hq, note) and _scan_cache(hq) == "build", q
+        assert n == 2, q
+        again = hq.sql(q, default_limit=None)
+        rows, n = _collect_decoding(again)
+        assert _scan_cache(hq) == "hit" and n == 0, q
+        assert "InMemoryTableScan" in again._jdf.queryExecution().executedPlan().toString()
+        assert sorted(rows) == sorted(first) == _plain(spark, q), q
+
+
+def test_new_versions_are_seen_by_the_next_query(spark, tmp_path):
+    """Three changes that each leave other files' stat alone are seen by
+    the next query, which rebuilds the entry and unpersists the old one:
+    a new valid-docId snapshot, a v3 rewrite in place that changes only
+    columns.psf (the metadata files keep their bytes and mtimes), and a
+    rewrite that adds rows under the star-tree."""
+    frames = [_frame(0, 30), _frame(1, 30)]
+    segs = _store(tmp_path, frames, star_tree_specs=[SPEC])
+    hq = HurricaneSQL(spark)
+    hq.register_segment_table("docs", str(tmp_path))
+    base = _persisted(spark)
+
+    def check(q):
+        rows = _rows(hq.sql(q, default_limit=None))
+        assert rows == _plain(spark, q), q
+        return rows
+
+    before = check(PRUNED_Q)
+    assert _scan_cache(hq) == "build" and _persisted(spark) == base + 1
+    ps.write_valid_doc_ids(segs[0], list(range(10)))
+    assert check(PRUNED_Q) != before and _scan_cache(hq) == "build"
+    assert _persisted(spark) == base + 1  # the replaced entry is unpersisted
+
+    d = os.path.join(segs[1], ps.V3_SUBDIR)
+    kept = {
+        f: os.stat(os.path.join(d, f)) for f in (ps.METADATA_FILE, ps.INDEX_MAP_FILE)
+    }
+    moved = frames[1].assign(lang=frames[1]["lang"].iloc[::-1].to_numpy())
+    ps.write_segment_pandas(moved, segs[1], star_tree_specs=[SPEC])
+    for f, st_ in kept.items():
+        os.utime(os.path.join(d, f), ns=(st_.st_atime_ns, st_.st_mtime_ns))
+        now = os.stat(os.path.join(d, f))
+        assert (now.st_ino, now.st_size, now.st_mtime_ns) == (
+            st_.st_ino, st_.st_size, st_.st_mtime_ns
+        )
+    mid = check(PRUNED_Q)
+    assert _scan_cache(hq) == "build"
+    want = pd.concat([frames[0].iloc[:10], moved]).groupby("lang")["id"].sum()
+    assert mid == [(k, int(v)) for k, v in want.items()]
+
+    # the tree holds every doc, so the star-tree part runs without the snapshot
+    os.remove(os.path.join(segs[0], ps.V3_SUBDIR, ps.VALID_DOC_IDS_FILE))
+    assert check(STAR_Q) and _scan_cache(hq) == "build"
+    ps.write_segment_pandas(_frame(1, 45), segs[1], star_tree_specs=[SPEC])
+    want = pd.concat([frames[0], _frame(1, 45)]).groupby("lang").size()
+    assert check(STAR_Q) == [(k, int(v)) for k, v in want.items()]
+    assert _scan_cache(hq) == "build" and hq.last_star_tree_redirect["segments_tree"] == 2
+    assert _persisted(spark) == base + 2
+
+
+def test_register_and_eviction_release_the_cache(spark, tmp_path, monkeypatch):
+    """register() over the table's name, and eviction from a session's
+    bounded entries, unpersist the cached scans and drop their views."""
+    _store(tmp_path, [_frame(0, 20), _frame(1, 20)], star_tree_specs=[SPEC])
+    base, views = _persisted(spark), _cache_views(spark)
+    hq = HurricaneSQL(spark)
+    hq.register_segment_table("docs", str(tmp_path))
+    for q in (PRUNED_Q, STAR_Q):
+        hq.sql(q, default_limit=None).collect()
+    assert _persisted(spark) == base + 2 and len(_cache_views(spark)) == len(views) + 2
+    hq.register("docs", spark.range(3))
+    assert _persisted(spark) == base and _cache_views(spark) == views
+
+    session = spark.newSession()
+    hq = HurricaneSQL(session)
+    hq.register_segment_table("docs", str(tmp_path))
+    monkeypatch.setattr(ps, "_SESSION_FRAMES_SIZE", 4)
+    projections = ["id", "lang", "text", "props", "id, lang", "id, text"]
+    for cols in projections:
+        hq.sql(f"SELECT {cols} FROM docs", default_limit=None).collect()
+        assert _scan_cache(hq) == "build"
+    cached = [e for e in ps._SESSION_FRAMES[session].values() if isinstance(e, ps._Persisted)]
+    assert 0 < len(cached) < len(projections)
+    assert _persisted(spark) == base + len(cached)
+    assert sorted(_cache_views(session)) == sorted(e.view for e in cached)
+
+
+def test_broker_threads_during_a_rewrite(spark, tmp_path, monkeypatch):
+    """4 broker threads send mixed queries while one segment is swapped,
+    again and again, for a fresh copy of itself: each swap is a new
+    version, so cached entries are rebuilt and replaced under requests in
+    flight. Every answer matches the expression scan."""
+    store, copies = tmp_path / "store", tmp_path / "copies"
+    frames = [_frame(0, 40), _frame(1, 40)]
+    options = dict(
+        star_tree_specs=[SPEC], text_index_columns=["text"], json_index_columns=["props"]
+    )
+    ps.write_segment_pandas(frames[0], str(store / "seg_0"), **options)
+
+    def fresh_copy(k: int) -> None:
+        target = copies / f"v{k}" / "seg_1"
+        ps.write_segment_pandas(frames[1], str(target), **options)
+        link = store / "seg_1.tmp"
+        os.symlink(target, link)
+        os.replace(link, store / "seg_1")
+
+    fresh_copy(0)
+    builds = []
+    session_view = ps.session_view
+
+    def counting(*args):
+        out = session_view(*args)
+        builds.append(out[1] == "build")
+        return out
+
+    monkeypatch.setattr(ps, "session_view", counting)
+    hq = HurricaneSQL(spark)
+    hq.register_segment_table("docs", str(store))
+    queries = [
+        PRUNED_Q,
+        STAR_Q,
+        "SELECT lang, COUNT(*) AS n FROM docs WHERE TEXT_MATCH(text, 'storm') GROUP BY lang",
+        "SELECT COUNT(*) AS n, SUM(id) AS s FROM docs",
+    ]
+    want = {q: _plain(spark, q) for q in queries}
+    server = serve(hq, port=0)
+    url = "http://%s:%s" % server.server_address
+    stop, answers, errors = threading.Event(), [], []
+
+    def client(i: int) -> None:
+        k = i
+        while not stop.is_set() or k < i + 2 * len(queries):
+            q = queries[k % len(queries)]
+            k += 1
+            try:
+                _, out = _post(url, {"sql": q})
+                answers.append((q, out["exceptions"], out["resultTable"]["rows"]))
+            except Exception as e:  # noqa: BLE001 — reported below
+                errors.append(repr(e))
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(4)]
+    try:
+        for t in threads:
+            t.start()
+        for k in range(1, 4):
+            time.sleep(0.5)
+            fresh_copy(k)
+        stop.set()
+        for t in threads:
+            t.join(300)
+    finally:
+        stop.set()
+        server.shutdown()
+    assert not errors and not any(t.is_alive() for t in threads)
+    for q, exceptions, rows in answers:
+        assert exceptions == [] and sorted(map(tuple, rows)) == want[q], q
+    assert len(answers) >= 8 * len(queries) and sum(builds) > 2

@@ -14,9 +14,11 @@ raised. Pytest's exit code is returned.
 `diff` keys each line by (test id, query, occurrence) with uuid-named
 views and generated aliases normalised, and prints how many keys both
 logs share, how many of those differ, and how many only one log holds,
-then every differing key and the restructure counts of each log. A
-note field that only one log ever records (one commit added it) is left
-out of the comparison; the fired passes still show what changed.
+then every differing key, the restructure counts of each log and its
+scan-cache builds and hits (the `scan_cache` notes of the column-pruned
+and star-tree scans). A note field that only one log ever records (one
+commit added it) is left out of the comparison; the fired passes still
+show what changed.
 """
 
 from __future__ import annotations
@@ -132,12 +134,13 @@ def _view(rec: dict, fields: set):
     return rec["fired"], [n for n in notes if n], rec["error"]
 
 
-def _restructures(log: dict) -> collections.Counter:
+def _counts(log: dict, *fields: str) -> collections.Counter:
+    """How often each value of `fields` occurs in the log's notes."""
     return collections.Counter(
-        (note["restructure"], note["refs"])
+        tuple(note[f] for f in fields)
         for rec in log.values()
         for note in rec["notes"]
-        if "restructure" in note
+        if fields[0] in note
     )
 
 
@@ -156,10 +159,12 @@ def diff(a_path: str, b_path: str) -> int:
     for name, log in zip("AB", logs):
         counts = ", ".join(
             f"{fam}/{refs}: {n}" for (fam, refs), n in sorted(
-                _restructures(log).items(), key=lambda kv: repr(kv[0])
+                _counts(log, "restructure", "refs").items(), key=lambda kv: repr(kv[0])
             )
         )
         print(f"\nrestructures in {name}: {counts or 'none'}")
+        cache = _counts(log, "scan_cache")
+        print(f"scan cache in {name}: build {cache[('build',)]}, hit {cache[('hit',)]}")
     return 0
 
 
