@@ -668,10 +668,10 @@ def q_startree_sql_redirect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(round-8 item 3): the reference's star-tree accepts any "
     "per-dimension predicate evaluator (StarTreeFilterOperator.java:"
     "59-117; the fit check is column-membership only, StarTreeUtils."
-    "java:144-169). The dialect compiles BETWEEN / comparison / OR "
-    "conjuncts into dictionary-level pruning predicates "
-    "(startree_v2._compile_value_pred) and re-applies the verbatim "
-    "WHERE as residual — the query raises if the redirect did not fire.",
+    "java:144-169). The dialect accepts BETWEEN / comparison / OR "
+    "conjuncts over one dimension each, keys the pre-agg view by their "
+    "columns and re-applies the verbatim WHERE on it — the query "
+    "raises if the redirect did not fire.",
     tags=("sources", "segment-format", "startree", "dialect"),
 )
 def q_startree_range_redirect(spark: SparkSession, sf_dir: str) -> DataFrame:

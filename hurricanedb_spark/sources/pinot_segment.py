@@ -2013,11 +2013,11 @@ def prune_segments(segment_dirs: list[str], column: str, op: str, value):
 
 
 # Per-session DataFrames that depend only on the session and the store:
-# the id leaves, the plain scans, and the persisted scans behind the
-# dialect's column-pruned and star-tree views (`session_view`). A
-# DataFrame is an immutable plan, so one can back every query of its
-# session. Weakly keyed by the session, so an entry dies with its
-# session; least recently used first, at most _SESSION_FRAMES_SIZE each.
+# the id leaves, and the persisted scans behind the dialect's
+# column-pruned and star-tree views (`session_view`). A DataFrame is an
+# immutable plan, so one can back every query of its session. Weakly
+# keyed by the session, so an entry dies with its session; least
+# recently used first, at most _SESSION_FRAMES_SIZE each.
 _SESSION_FRAMES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _SESSION_FRAMES_SIZE = 64
 _SESSION_FRAMES_LOCK = threading.Lock()
@@ -2029,14 +2029,16 @@ _SESSION_BUILD_LOCK = threading.Lock()
 @dataclass
 class _Persisted:
     """A persisted frame and the temp view over it. `versions` are its
-    segments' versions when it was built; `retired` is the view of the
-    entry it replaced, kept for requests in flight until the next
-    replacement."""
+    segments' versions when it was built; `holds` counts the requests
+    that bound `view` and have not released it yet. An entry that is
+    replaced or evicted is unpersisted at once, and its view is dropped
+    when its last hold is released."""
 
     versions: tuple
     jdf: object
     view: str
-    retired: str | None = None
+    holds: int = 0
+    gone: bool = False
 
 
 def _frames(spark) -> OrderedDict:
@@ -2055,26 +2057,30 @@ def _unpersist_all(frames: OrderedDict) -> None:
             entry.jdf.unpersist(False)
 
 
+def _retire(spark, entry) -> None:
+    """Release a popped entry (call under _SESSION_FRAMES_LOCK): a
+    persisted frame is unpersisted, and its view dropped unless a
+    request still holds it."""
+    if isinstance(entry, _Persisted):
+        entry.jdf.unpersist(False)
+        entry.gone = True
+        if not entry.holds:
+            spark.catalog.dropTempView(entry.view)
+
+
 def _evict(spark, frames: OrderedDict, key=None) -> None:
     """Pop `key`'s entry, or the least recently used ones past the bound
-    (call under _SESSION_FRAMES_LOCK), and release them."""
+    (call under _SESSION_FRAMES_LOCK), and retire them."""
     if key is not None:
-        gone = [frames.pop(key)]
-    else:
-        extra = len(frames) - _SESSION_FRAMES_SIZE
-        gone = [frames.popitem(last=False)[1] for _ in range(extra)]
-    for entry in gone:
-        if isinstance(entry, _Persisted):
-            entry.jdf.unpersist(False)
-            for view in (entry.view, entry.retired):
-                if view is not None:
-                    spark.catalog.dropTempView(view)
+        _retire(spark, frames.pop(key))
+        return
+    while len(frames) > _SESSION_FRAMES_SIZE:
+        _retire(spark, frames.popitem(last=False)[1])
 
 
 def _session_frame(spark, key: tuple, build):
     """The DataFrame cached under `key` for session `spark`, made by
-    `build()` on a miss. The plan is cached, not its rows: every query
-    over it decodes again."""
+    `build()` on a miss. The plan is cached, not its rows."""
     from pyspark.sql import DataFrame
 
     with _SESSION_FRAMES_LOCK:
@@ -2110,10 +2116,10 @@ def _segment_versions(segment_dirs: list[str]) -> tuple:
     return tuple(out)
 
 
-def session_view(spark, key: tuple, segment_dirs: list[str], build) -> tuple[str, str]:
-    """(temp view name, "hit" or "build") for the frame cached under
-    `key` in session `spark`: `build(plans)`, persisted MEMORY_ONLY in
-    Spark's in-memory columnar cache. The first query that reads the
+def session_view(spark, key: tuple, segment_dirs: list[str], build):
+    """(temp view name, "hit" or "build", release) for the frame cached
+    under `key` in session `spark`: `build(plans)`, persisted MEMORY_ONLY
+    in Spark's in-memory columnar cache. The first query that reads the
     view fills the cache, later ones read InMemoryTableScan and start no
     Python worker; a block that does not fit in storage memory is
     decoded again, as an uncached scan would be.
@@ -2122,13 +2128,25 @@ def session_view(spark, key: tuple, segment_dirs: list[str], build) -> tuple[str
     entry, and the cached entry keeps them: a query that finds any of
     them changed rebuilds the entry. The versions also make each build's
     plan its own, since Spark's cache manager matches and uncaches plans
-    by their result. A replaced entry is unpersisted at once, but its
-    view lives on until the next replacement, so a request that bound it
-    a moment before still resolves it (and decodes). The view lives as
-    long as the entry: dropping a temp view uncaches its plan, so a
-    per-request drop would leave nothing to hit. `key[0]` names the
-    views."""
+    by their result. The caller holds the view until it calls
+    `release()`, once its query is analyzed: a replaced or evicted entry
+    is unpersisted at once, but its view is dropped only when no request
+    holds it, so a request that bound it still resolves it (and
+    decodes). The view lives as long as the entry: dropping a temp view
+    uncaches its plan, so a per-request drop would leave nothing to hit.
+    `key[0]` names the views."""
     from pyspark import StorageLevel
+
+    def hold(entry):
+        entry.holds += 1
+
+        def release():
+            with _SESSION_FRAMES_LOCK:
+                entry.holds -= 1
+                if entry.gone and not entry.holds:
+                    spark.catalog.dropTempView(entry.view)
+
+        return release
 
     def current(versions):
         with _SESSION_FRAMES_LOCK:
@@ -2136,35 +2154,32 @@ def session_view(spark, key: tuple, segment_dirs: list[str], build) -> tuple[str
             entry = frames.get(key)
             if entry is not None and entry.versions == versions:
                 frames.move_to_end(key)
-                return entry.view
+                return entry.view, "hit", hold(entry)
         return None
 
-    view = current(_segment_versions(segment_dirs))
-    if view is not None:
-        return view, "hit"
+    hit = current(_segment_versions(segment_dirs))
+    if hit is not None:
+        return hit
     with _SESSION_BUILD_LOCK:
         versions = _segment_versions(segment_dirs)
-        view = current(versions)
-        if view is not None:
-            return view, "hit"  # built while this request waited
+        hit = current(versions)
+        if hit is not None:
+            return hit  # built while this request waited
         df = build(list(zip(segment_dirs, versions))).persist(StorageLevel.MEMORY_ONLY)
-        view = f"__{key[0]}_{uuid.uuid4().hex}"
-        df.createOrReplaceTempView(view)
+        entry = _Persisted(versions, df._jdf, f"__{key[0]}_{uuid.uuid4().hex}")
+        df.createOrReplaceTempView(entry.view)
         with _SESSION_FRAMES_LOCK:
             frames = _frames(spark)
-            old = frames.get(key)
-            frames[key] = _Persisted(versions, df._jdf, view, old and old.view)
-            if old is not None:
-                old.jdf.unpersist(False)
-                if old.retired is not None:
-                    spark.catalog.dropTempView(old.retired)
+            if key in frames:
+                _evict(spark, frames, key)
+            frames[key] = entry
             _evict(spark, frames)
-    return view, "build"
+            return entry.view, "build", hold(entry)
 
 
 def drop_session_frames(spark, segment_dirs: list[str]) -> None:
-    """Forget the frames cached for `segment_dirs` in session `spark`:
-    the plain scans, and the persisted scans with their views."""
+    """Forget the persisted scans cached for `segment_dirs` in session
+    `spark`, as `_evict` does."""
     segs = tuple(segment_dirs)
     with _SESSION_FRAMES_LOCK:
         frames = _frames(spark)
@@ -2221,12 +2236,9 @@ def read_segments(
     and index buffers. Every distributed segment decode goes through
     here, apart from the star-tree scan.
 
-    A plain scan (no `where`, `bounds` or `residual`) depends only on
-    the session, the segments and the columns, so its plan is built once
-    per session and shared by every caller: the registered view pickles
-    no new closure. It still decodes on every query, so a query that
-    bypasses the dialect sees the segments as they are on disk. The
-    dialect's column-pruned scans keep their rows too (`scan_view`).
+    The frame decodes on every query that runs it, so the registered
+    view of a segment table shows the segments as they are on disk; the
+    dialect's column-pruned scans keep their rows (`scan_view`).
 
     `where = (col, op, value)` prunes whole segments (metadata min/max +
     bloom + partition) AND filters rows inside the survivors using their
@@ -2280,14 +2292,6 @@ def read_segments(
     for conjunct in _normalize_where(where):
         segment_dirs = prune_segments(segment_dirs, *conjunct)
 
-    if not (bounds or where or residual) and segment_dirs:
-        cols = None if decode_cols is None else tuple(decode_cols)
-        return _session_frame(
-            spark,
-            ("scan", tuple(segment_dirs), cols, schema),
-            lambda: _scan(spark, [(s, None) for s in segment_dirs], decode_cols, None, schema),
-        )
-
     def plan_for(s):
         import numpy as np
 
@@ -2312,7 +2316,7 @@ def read_segments(
     return out.drop(*extras) if extras else out
 
 
-def scan_view(spark, segment_dirs: list[str], columns: list[str]) -> tuple[str, str]:
+def scan_view(spark, segment_dirs: list[str], columns: list[str]):
     """`session_view` over the plain scan of `columns`: the segments are
     decoded once per session and version, and every later query of the
     projection reads Spark's in-memory columnar cache."""

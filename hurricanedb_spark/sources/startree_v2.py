@@ -795,137 +795,22 @@ def _segment_dictionary(segment_dir: str, col: str) -> list:
     )
 
 
-_CMP_OPS = {
-    "=": lambda v, lit: v == lit,
-    "!=": lambda v, lit: v != lit,
-    "<": lambda v, lit: v < lit,
-    "<=": lambda v, lit: v <= lit,
-    ">": lambda v, lit: v > lit,
-    ">=": lambda v, lit: v >= lit,
-}
-
-
-def _compile_value_pred(spec):
-    """Compile a per-dimension predicate spec (dialect._st_parse_conjunct)
-    into a value-level python predicate, evaluated over the column
-    DICTIONARY (O(vocab), not O(docs)) to build the pruning dictId set —
-    the generalization of the reference's per-dimension
-    PredicateEvaluator (StarTreeFilterOperator.java:59-117). Legacy
-    plain-iterable specs mean IN. On any evaluation error (e.g. type
-    mismatch between a string dictionary and a numeric literal) the
-    value is KEPT: pruning must stay a superset of the verbatim WHERE
-    residual, which is the sole authority on semantics."""
-    if not isinstance(spec, dict):
-        values = set(spec)
-        return lambda v: v in values
-    kind = spec["kind"]
-    if kind == "in":
-        values = set(spec["values"])
-        return lambda v: v in values
-    if kind == "cmp":
-        op, lit = _CMP_OPS[spec["op"]], spec["value"]
-
-        def cmp_pred(v, op=op, lit=lit):
-            try:
-                return bool(op(v, lit))
-            except TypeError:
-                return True  # unprunable value: keep, residual decides
-
-        return cmp_pred
-    if kind == "between":
-        lo, hi = spec["lo"], spec["hi"]
-
-        def between_pred(v, lo=lo, hi=hi):
-            try:
-                return bool(lo <= v <= hi)
-            except TypeError:
-                return True
-
-        return between_pred
-    if kind == "or":
-        preds = [_compile_value_pred(s) for s in spec["specs"]]
-        return lambda v: any(p(v) for p in preds)
-    raise ValueError(f"unknown star-tree predicate spec: {spec!r}")
-
-
-def _apply_pandas_pred(series, spec):
-    """Vectorized spec evaluation for the raw-scan fallback. Returns a
-    boolean mask, or None when the comparison cannot be evaluated on
-    this dtype (caller keeps all rows — the residual filters exactly)."""
-    if isinstance(spec, dict) and spec.get("kind") not in (
-        "in",
-        "cmp",
-        "between",
-        "or",
-    ):
-        raise ValueError(f"unknown star-tree predicate spec: {spec!r}")
-    try:
-        if not isinstance(spec, dict):
-            return series.isin(list(spec))
-        kind = spec["kind"]
-        if kind == "in":
-            return series.isin(spec["values"])
-        if kind == "cmp":
-            op = spec["op"]
-            lit = spec["value"]
-            if op == "=":
-                return series == lit
-            if op == "!=":
-                return series != lit
-            if op == "<":
-                return series < lit
-            if op == "<=":
-                return series <= lit
-            if op == ">":
-                return series > lit
-            return series >= lit
-        if kind == "between":
-            return (series >= spec["lo"]) & (series <= spec["hi"])
-        # kind == "or"
-        masks = [_apply_pandas_pred(series, s) for s in spec["specs"]]
-        if any(m is None for m in masks):
-            return None
-        out = masks[0]
-        for m in masks[1:]:
-            out = out | m
-        return out
-    except Exception:  # noqa: BLE001 — dtype-mismatch comparisons vary by
-        # pandas/numpy version (TypeError, DTypePromotionError, ...);
-        # an unevaluable pruning mask means "keep all rows" — the
-        # verbatim WHERE residual is the semantic authority
-        return None
-
-
 def star_tree_visit_pandas(
     segment_dir: str,
     tree_id: int,
     key_cols: list[str],
     pairs: list[str],
-    conjuncts: list[tuple[str, tuple]] | None = None,
 ):
     """Traverse one segment's star-tree and return its contribution as
     a pre-aggregated pandas frame: decoded key columns (group-by +
     predicate dims — always concrete values, never the star
     placeholder, because wanted dims fan out over value children) plus
-    one metric column per pair (pair_out_col names). `conjuncts` are
-    (col, values) equality/IN filters used for PRUNING only — the SQL
-    residual re-applies them on the returned keys, so missing a value
-    here can only cost work, never rows."""
+    one metric column per pair (pair_out_col names). The caller's
+    predicates re-apply on the returned keys."""
     import pandas as pd
 
     tree, records, _spec = load_star_tree(segment_dir, tree_id)
-    want = set(key_cols)
-    filt: dict[str, set[int]] = {}
-    for col, spec in conjuncts or []:
-        dvals = _segment_dictionary(segment_dir, col)
-        pred = _compile_value_pred(spec)
-        ids = {i for i, v in enumerate(dvals) if pred(v)}
-        if not ids:  # no dictionary hit: the segment contributes nothing
-            return pd.DataFrame(
-                columns=[*key_cols, *[pair_out_col(p) for p in pairs]]
-            )
-        filt[col] = ids
-    sub = records.iloc[_collect_docs(tree, records, want, filt)]
+    sub = records.iloc[_collect_docs(tree, records, set(key_cols), {})]
     aggs = {p: _loaded_metric_agg(_parse_pair(p)[0]) for p in pairs}
     if key_cols:
         out = sub.groupby(key_cols, as_index=False, sort=False).agg(aggs)
@@ -943,12 +828,11 @@ def _segment_prearg_fallback_pandas(
     segment_dir: str,
     key_cols: list[str],
     pairs: list[str],
-    conjuncts: list[tuple[str, tuple]] | None = None,
 ):
     """Raw-scan fallback for a segment without a fitting tree: decode
-    the needed columns, apply the equality/IN conjuncts, and emit the
-    SAME pre-agg frame shape the tree path emits (count -> 1 per doc,
-    sum/min/max -> the doc value), so the union re-aggregates exactly.
+    the needed columns and emit the SAME pre-agg frame shape the tree
+    path emits (count -> 1 per doc, sum/min/max -> the doc value), so
+    the union re-aggregates exactly.
     Mirrors the reference's per-segment plan choice: each segment
     independently answers from its tree or scans
     (AggregationPlanNode.java)."""
@@ -961,12 +845,6 @@ def _segment_prearg_fallback_pandas(
     metric_cols = [c for _, c in parsed if c != "*"]
     base_cols = list(dict.fromkeys([*key_cols, *metric_cols]))
     pdf = read_segment_pandas(segment_dir, base_cols or None)
-    mask = pd.Series(True, index=pdf.index)
-    for col, spec in conjuncts or []:
-        m = _apply_pandas_pred(pdf[col], spec)
-        if m is not None:  # None = unprunable dtype; residual is exact
-            mask &= m
-    pdf = pdf[mask]
     out = pdf[key_cols].copy() if key_cols else pd.DataFrame(index=pdf.index)
     for (fn, col), pair in zip(parsed, pairs):
         name = pair_out_col(pair)
@@ -1020,7 +898,6 @@ def read_segments_star_tree(
     segment_dirs: list[str],
     key_cols: list[str],
     pairs: list[str],
-    conjuncts: list[tuple[str, tuple]] | None = None,
 ):
     """Distributed star-tree pre-agg scan over a segment store, in
     min(#segments, defaultParallelism) tasks (`map_segments`, the
@@ -1034,7 +911,7 @@ def read_segments_star_tree(
     pre-aggregated rows."""
     from hurricanedb_spark.sources.pinot_segment import map_segments
 
-    scan = _star_tree_scan(key_cols, pairs, conjuncts)
+    scan = _star_tree_scan(key_cols, pairs)
     return map_segments(
         spark, segment_dirs, scan, _star_tree_schema(segment_dirs[0], key_cols, pairs)
     )
@@ -1042,14 +919,14 @@ def read_segments_star_tree(
 
 def star_tree_view(
     spark, segment_dirs: list[str], key_cols: list[str], pairs: list[str]
-) -> tuple[str, str]:
+):
     """`session_view` over the star-tree pre-agg scan of `key_cols` and
-    `pairs`, without conjuncts: the pre-agg rows are decoded once per
-    session and version, and the caller's WHERE re-applies on the view
-    (`key_cols` holds its columns)."""
+    `pairs`: the pre-agg rows are decoded once per session and version,
+    and the caller's WHERE re-applies on the view (`key_cols` holds its
+    columns)."""
     from hurricanedb_spark.sources.pinot_segment import map_segments, session_view
 
-    scan = _star_tree_scan(key_cols, pairs, None)
+    scan = _star_tree_scan(key_cols, pairs)
 
     def build(plans):
         schema = _star_tree_schema(segment_dirs[0], key_cols, pairs)
@@ -1059,14 +936,14 @@ def star_tree_view(
     return session_view(spark, key, segment_dirs, build)
 
 
-def _star_tree_scan(key_cols: list[str], pairs: list[str], conjuncts):
+def _star_tree_scan(key_cols: list[str], pairs: list[str]):
     """segment dir -> its pre-agg rows, from the fitting tree or a raw scan."""
 
     def scan(seg):
         tid = fitting_tree_id(seg, key_cols, pairs, [])
         if tid is not None:
-            return star_tree_visit_pandas(seg, tid, key_cols, pairs, conjuncts)
-        return _segment_prearg_fallback_pandas(seg, key_cols, pairs, conjuncts)
+            return star_tree_visit_pandas(seg, tid, key_cols, pairs)
+        return _segment_prearg_fallback_pandas(seg, key_cols, pairs)
 
     return scan
 

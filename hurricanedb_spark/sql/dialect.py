@@ -3684,9 +3684,10 @@ class HurricaneSQL:
         per session and segment version: the first query of a projection
         decodes it into Spark's in-memory columnar cache, later ones read
         the cache. The view outlives the request, since dropping it would
-        uncache it; the note's `scan_cache` says "build" or "hit". The
-        index accelerations prune the same way when they fire, but decode
-        per query."""
+        uncache it: the cleanup only releases this request's hold on it.
+        The note's `scan_cache` says "build" or "hit". The index
+        accelerations prune the same way when they fire, but decode per
+        query."""
         if not self._segment_tables:
             return query, None, None
         masked = mask(query)
@@ -3698,9 +3699,9 @@ class HurricaneSQL:
                 continue
             from hurricanedb_spark.sources import pinot_segment as ps
 
-            view, cache = ps.scan_view(self.spark, segs, used)
+            view, cache, release = ps.scan_view(self.spark, segs, used)
             note = {"column_prune": (name, used), "scan_cache": cache}
-            return query[:s] + view + query[e:], None, note
+            return query[:s] + view + query[e:], release, note
         return query, None, None
 
     @staticmethod
@@ -3739,13 +3740,6 @@ class HurricaneSQL:
         re.IGNORECASE,
     )
     _ST_LITERAL = re.compile(r"^(?:'(?:[^']|'')*'|-?\d+(?:\.\d+)?)$")
-
-    @staticmethod
-    def _st_parse_literal(tok: str):
-        tok = tok.strip()
-        if tok.startswith("'"):
-            return tok[1:-1].replace("''", "'")
-        return float(tok) if "." in tok else int(tok)
 
     _ST_CMP = re.compile(
         r"^([A-Za-z_][A-Za-z0-9_]*)\s*(=|!=|<>|<=|>=|<|>)\s*(.+)$", re.DOTALL
@@ -3795,46 +3789,28 @@ class HurricaneSQL:
         parts.append(txt[start:])
         return [p.strip() for p in parts]
 
-    def _st_parse_simple(self, part: str):
-        """One per-dimension predicate -> (col, spec) or None. Specs are
-        value-level descriptions the star-tree reader compiles into
-        dictionary predicates (startree_v2._compile_value_pred); they are
-        used for PRUNING only — the verbatim WHERE residual re-applies on
-        the pre-agg view, so a spec can only skip work, never change
-        results (StarTreeFilterOperator.java:59-117 accepts any
-        per-dimension predicate evaluator the same way)."""
+    def _st_parse_simple(self, part: str) -> str | None:
+        """The column of one per-dimension predicate (`col op literal`,
+        `col BETWEEN lit AND lit`, `col IN (lits)`), or None. The
+        predicate itself re-applies verbatim on the pre-agg view, whose
+        key columns hold every filter column (StarTreeFilterOperator.java:
+        59-117 accepts any per-dimension predicate the same way)."""
         part = part.strip()
         m = self._ST_BETWEEN.match(part)
         if m:
             lo, hi = m.group(2).strip(), m.group(3).strip()
             if self._ST_LITERAL.match(lo) and self._ST_LITERAL.match(hi):
-                return m.group(1), {
-                    "kind": "between",
-                    "lo": self._st_parse_literal(lo),
-                    "hi": self._st_parse_literal(hi),
-                }
+                return m.group(1)
             return None
         m = self._ST_IN.match(part)
         if m:
             toks = [t.strip() for t in m.group(2).split(",")]
-            if not all(self._ST_LITERAL.match(t) for t in toks):
-                return None
-            return m.group(1), {
-                "kind": "in",
-                "values": [self._st_parse_literal(t) for t in toks],
-            }
+            if all(self._ST_LITERAL.match(t) for t in toks):
+                return m.group(1)
+            return None
         m = self._ST_CMP.match(part)
-        if m:
-            lit = m.group(3).strip()
-            if not self._ST_LITERAL.match(lit):
-                return None
-            op = m.group(2)
-            val = self._st_parse_literal(lit)
-            if op == "=":
-                return m.group(1), {"kind": "in", "values": [val]}
-            if op == "<>":
-                op = "!="
-            return m.group(1), {"kind": "cmp", "op": op, "value": val}
+        if m and self._ST_LITERAL.match(m.group(3).strip()):
+            return m.group(1)
         return None
 
     @staticmethod
@@ -3852,12 +3828,12 @@ class HurricaneSQL:
                     return False
         return depth == 0
 
-    def _st_parse_conjunct(self, part: str):
-        """One AND-conjunct -> (col, spec) or None. Accepts simple
+    def _st_parse_conjunct(self, part: str) -> str | None:
+        """The column of one AND-conjunct, or None. Accepts simple
         predicates plus OR chains over ONE dimension
         (`c = 1 OR c BETWEEN 5 AND 9`, parenthesized or not) — OR across
-        different columns cannot prune a single dimension and falls back
-        to the scan."""
+        different columns is not a per-dimension predicate and falls
+        back to the scan."""
         part = part.strip()
         while (
             part.startswith("(")
@@ -3869,28 +3845,21 @@ class HurricaneSQL:
         if disjuncts is None:
             return None
         if len(disjuncts) > 1:
-            parsed = [self._st_parse_conjunct(d) for d in disjuncts]
-            if any(p is None for p in parsed):
-                return None
-            cols = {c for c, _ in parsed}
-            if len(cols) != 1:
-                return None
-            specs = []
-            for _, s in parsed:
-                specs.extend(s["specs"] if s["kind"] == "or" else [s])
-            return cols.pop(), {"kind": "or", "specs": specs}
+            cols = {self._st_parse_conjunct(d) for d in disjuncts}
+            return cols.pop() if len(cols) == 1 and None not in cols else None
         return self._st_parse_simple(part)
 
     def _st_parse_shape(self, query: str):
         """Parse the star-tree-eligible query shape:
-        SELECT {dim | AGG(col) AS alias}... FROM t [WHERE =/IN AND-chain]
-        GROUP BY dims [ORDER BY dims/aliases] [LIMIT n]. Returns a dict
-        of pieces or None (None => leave the scan plan alone)."""
+        SELECT {dim | AGG(col) AS alias}... FROM t [WHERE AND-chain of
+        per-dimension predicates] GROUP BY dims [ORDER BY dims/aliases]
+        [LIMIT n]. Returns a dict of pieces or None (None => leave the
+        scan plan alone)."""
         q = query.strip().rstrip(";")
-        # OR/NOT are no longer global disqualifiers: single-dimension OR
-        # chains prune like the reference's StarTreeFilterOperator; any
-        # conjunct the parser below cannot prove per-dimension (cross-col
-        # OR, NOT, subqueries) makes it return None -> scan path
+        # single-dimension OR chains are per-dimension predicates, as in
+        # the reference's StarTreeFilterOperator; any conjunct the parser
+        # below cannot prove per-dimension (cross-col OR, NOT,
+        # subqueries) makes it return None -> scan path
         if re.search(
             r"\bJOIN\b|\bHAVING\b|\bDISTINCT\b|\bUNION\b|\bWITH\b",
             q,
@@ -3973,23 +3942,23 @@ class HurricaneSQL:
             # shape must keep the scan path (where every aggregate is
             # JVM-side) rather than redirect into an analysis error
             return None
-        conjuncts: list[tuple[str, dict]] = []
+        filter_cols: list[str] = []
         where_txt = (rm.group("w") or "").strip()
         if where_txt:
             parts = self._st_split_top(where_txt, "AND")
             if parts is None:
                 return None
             for part in parts:
-                parsed = self._st_parse_conjunct(part)
-                if parsed is None:
+                col = self._st_parse_conjunct(part)
+                if col is None:
                     return None
-                conjuncts.append(parsed)
+                filter_cols.append(col)
         return {
             "table": tbl,
             "items": items,
             "pairs": pairs,
             "group_cols": group_cols,
-            "conjuncts": conjuncts,
+            "filter_cols": filter_cols,
             "where_txt": where_txt,
             "tail": tail,
         }
@@ -3998,21 +3967,21 @@ class HurricaneSQL:
         """Transparent star-tree access path: when a fitting aggregation
         (shape above) targets a segment-backed table whose segments
         carry serialized star-trees, rebind the table to a pre-agg view
-        fed by read_segments_star_tree — per segment, the fitting tree's
-        records or a raw-scan fallback — and rewrite each aggregate to
-        re-aggregate the pre-agg metric (SUM(x)->SUM(__st_sum_x),
-        COUNT(*)->SUM(__st_count_star), MIN/MAX likewise). The WHERE
-        clause re-applies verbatim on the view (dims survive decode), so
-        tree pruning can only skip work, never change results; any
-        involved column carrying a null-value vector in ANY segment
+        fed by startree_v2.star_tree_view — per segment, the fitting
+        tree's records or a raw-scan fallback — and rewrite each
+        aggregate to re-aggregate the pre-agg metric
+        (SUM(x)->SUM(__st_sum_x), COUNT(*)->SUM(__st_count_star), MIN/MAX
+        likewise). The WHERE clause re-applies verbatim on the view (its
+        dims are key columns of the view); any involved column carrying a null-value vector in ANY segment
         disables the redirect entirely (the tree pre-aggregated
         default-filled values; exact NULL semantics need the scan).
 
-        The pre-agg view (`startree_v2.star_tree_view`) is built without
-        the WHERE conjuncts, which only prune the tree walk, and kept per
+        The pre-agg view (`startree_v2.star_tree_view`) is keyed by the
+        group-by and filter columns, not by the predicates, and kept per
         session and segment version in Spark's in-memory columnar cache,
-        like the column-pruned scans; the note's `scan_cache` says
-        "build" or "hit" and its info feeds last_star_tree_redirect."""
+        like the column-pruned scans (the cleanup releases this request's
+        hold on it); the note's `scan_cache` says "build" or "hit" and
+        its info feeds last_star_tree_redirect."""
         noop = (query, None, None)
         if not self._segment_tables:
             return noop
@@ -4032,7 +4001,7 @@ class HurricaneSQL:
             read_segment_metadata,
         )
 
-        filter_cols = [c for c, _ in shape["conjuncts"]]
+        filter_cols = shape["filter_cols"]
         metric_cols = [
             p.partition("__")[2] for p in shape["pairs"] if not p.endswith("__*")
         ]
@@ -4065,7 +4034,9 @@ class HurricaneSQL:
         if n_fit == 0:
             return noop
         key_cols = list(dict.fromkeys([*shape["group_cols"], *filter_cols]))
-        uniq, cache = st.star_tree_view(self.spark, segs, key_cols, shape["pairs"])
+        uniq, cache, release = st.star_tree_view(
+            self.spark, segs, key_cols, shape["pairs"]
+        )
         out_items = []
         for kind, payload in shape["items"]:
             if kind == "dim":
@@ -4121,7 +4092,7 @@ class HurricaneSQL:
             "segments_tree": n_fit,
             "segments_scan": len(segs) - n_fit,
         }
-        return " ".join(parts), None, {
+        return " ".join(parts), release, {
             "star_tree_redirect": info,
             "scan_cache": cache,
             "access_path": "accessPath: STAR_TREE "

@@ -1,8 +1,7 @@
 """The per-store parts of a segment scan are built once and reused:
 parsed segment metadata (`read_segment_metadata`, checked against the
 files' stat on every read), the id leaf of each session and plan count,
-one plain scan per (session, segments, columns), and the rows of the
-dialect's column-pruned and star-tree scans, persisted per (session,
+and the rows of the dialect's column-pruned and star-tree scans, persisted per (session,
 segments, projection) and checked against the segments' versions on
 every query. Each test checks that the reuse never serves a stale
 store, another session's frames or a table name that now names
@@ -165,8 +164,6 @@ def test_sessions_never_share_scans(spark, tmp_path):
 
     a1 = ps.read_segments(s1, segs, ["id"])
     a2 = ps.read_segments(s2, segs, ["id"])
-    assert ps.read_segments(s1, segs, ["id"])._jdf is a1._jdf  # reused
-    assert a2._jdf is not a1._jdf
     for s, df in ((s1, a1), (s2, a2)):
         assert df.sparkSession is s
         assert df._jdf.sparkSession().equals(s._jsparkSession)
@@ -317,6 +314,36 @@ def test_new_versions_are_seen_by_the_next_query(spark, tmp_path):
     assert check(STAR_Q) == [(k, int(v)) for k, v in want.items()]
     assert _scan_cache(hq) == "build" and hq.last_star_tree_redirect["segments_tree"] == 2
     assert _persisted(spark) == base + 2
+
+
+def test_a_held_view_outlives_its_entry(spark, tmp_path):
+    """A request that bound a cached view keeps it while the entry is
+    replaced twice and then dropped: its query still analyzes (and
+    decodes the segments as they are now). The view goes with the
+    request's release, while the current entry's view stays."""
+    segs = _store(tmp_path, [_frame(0, 20), _frame(1, 20)])
+    base = _persisted(spark)
+    view, cache, release = ps.scan_view(spark, segs, ["id", "lang"])
+    assert cache == "build"
+    for keep in (10, 5):
+        ps.write_valid_doc_ids(segs[0], list(range(keep)))
+        newer, cache, let_go = ps.scan_view(spark, segs, ["id", "lang"])
+        assert cache == "build" and newer != view
+        assert _rows(spark.sql(f"SELECT COUNT(*) AS n FROM {newer}")) == [(20 + keep,)]
+        let_go()
+    assert _persisted(spark) == base + 1  # replaced entries are unpersisted
+    df = spark.sql(f"SELECT COUNT(*) AS n FROM {view}")
+    release()
+    assert _rows(df) == [(25,)]
+    assert view not in _cache_views(spark) and newer in _cache_views(spark)
+
+    view, _, release = ps.scan_view(spark, segs, ["id", "lang"])
+    assert view == newer
+    ps.drop_session_frames(spark, segs)
+    assert _persisted(spark) == base and view in _cache_views(spark)
+    assert _rows(spark.sql(f"SELECT COUNT(*) AS n FROM {view}")) == [(25,)]
+    release()
+    assert view not in _cache_views(spark)
 
 
 def test_register_and_eviction_release_the_cache(spark, tmp_path, monkeypatch):
