@@ -757,6 +757,16 @@ def register_all(spark: SparkSession) -> None:
         "thetasketchunionraw",
         _F.pandas_udf(_theta_union_raw, "binary", _F.PandasUDFType.GROUPED_AGG),
     )
+
+    # the same union as a scalar over collect_list(sketch column): a JVM
+    # aggregate, so a global aggregate over no rows still returns one
+    # row, holding the empty sketch, as the reference does (a pandas
+    # grouped-agg UDF returns no row there)
+    def _theta_union_list(blobs, k):
+        sks = [_theta_deser(bytes(b)) for b in blobs]
+        return _theta_serialize(_theta_union(sks, k=int(k)))
+
+    spark.udf.register("thetasketchunionlist", _theta_union_list, "binary")
     # EXACT distinct over serialized value RoaringBitmaps (star-tree
     # distinctCountBitmap pairs): union + cardinality
     from hurricanedb_spark.sources.pinot_segment import (

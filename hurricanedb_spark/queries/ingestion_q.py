@@ -787,8 +787,8 @@ def q_startree_theta_redirect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(VarByteChunkSVForwardIndexWriterV4.java), dictionary-encoded MV "
     "with var-length string dicts, and raw (noDictionary) MV "
     "(Fixed/VarByteChunkMVForwardIndexReader layouts). read_segments "
-    "decodes all five in one distributed scan (min(#segments, cores) "
-    "tasks, CombineOperatorUtils' cap, each segment assigned by id) "
+    "decodes all five in one distributed scan (at most min(#segments, "
+    "cores) tasks, CombineOperatorUtils' cap, each segment assigned by id) "
     "and the aggregate must equal the parquet oracle — proving the "
     "migration path as a composite, not per-feature tests.",
     tags=("sources", "segment-format", "migration"),

@@ -76,8 +76,11 @@ they are redundant acceleration structures, Spark plans its own access
 paths.
 
 Scale design: a segment is the unit of work, and a query's segments
-share min(#segments, cores) tasks, as the reference's servers share a
-bounded pool (CombineOperatorUtils). `read_segments` numbers the
+share min(#segments, cores, ceil(rows / Arrow batch size)) tasks, as the
+reference's servers share a bounded pool (CombineOperatorUtils), less
+the tasks that would decode under one Arrow batch each (`map_segments`):
+a store under one batch of rows is one task, and its aggregates run in
+one job with no exchange. `read_segments` numbers the
 surviving segments and each task decodes the ones whose numbers it
 holds inside mapInPandas (Arrow-batched, numpy-vectorized bit-unpack);
 column pruning happens at the decoder (only requested columns are
@@ -2021,6 +2024,9 @@ def prune_segments(segment_dirs: list[str], column: str, op: str, value):
 _SESSION_FRAMES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _SESSION_FRAMES_SIZE = 64
 _SESSION_FRAMES_LOCK = threading.Lock()
+# per session: the (defaultParallelism, Arrow batch size) that size the
+# decode tasks (`_task_bound`)
+_TASK_BOUNDS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 # one persisted build at a time, so that a key's successive builds see
 # strictly newer segment versions
 _SESSION_BUILD_LOCK = threading.Lock()
@@ -2187,29 +2193,65 @@ def drop_session_frames(spark, segment_dirs: list[str]) -> None:
             _evict(spark, frames, key)
 
 
-def _id_leaf(spark, n: int):
-    """The plan numbers 0..n-1 in min(n, defaultParallelism) partitions,
-    as a LogicalRDD over a range, not the Range itself: a Range reports
-    8 bytes a row, which would let the planner broadcast a whole segment
-    table, while a LogicalRDD's size is unknown
-    (spark.sql.defaultSizeInBytes), as a segment table's is."""
+def _task_bound(spark) -> tuple[int, int]:
+    """(defaultParallelism, spark.sql.execution.arrow.maxRecordsPerBatch)
+    of session `spark`, read once per session."""
+    with _SESSION_FRAMES_LOCK:
+        bound = _TASK_BOUNDS.get(spark)
+    if bound is None:
+        batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        bound = (spark.sparkContext.defaultParallelism, int(batch))
+        with _SESSION_FRAMES_LOCK:
+            _TASK_BOUNDS[spark] = bound
+    return bound
+
+
+def _id_leaf(spark, n: int, tasks: int):
+    """The plan numbers 0..n-1 in `tasks` partitions, as a LogicalRDD
+    over a range, not the Range itself: a Range reports 8 bytes a row,
+    which would let the planner broadcast a whole segment table, while a
+    LogicalRDD's size is unknown (spark.sql.defaultSizeInBytes), as a
+    segment table's is. A one-task leaf is coalesced to one partition:
+    that changes nothing at run time, but the planner then sees a
+    SinglePartition, which mapInPandas keeps, so an aggregate over the
+    scan needs no exchange."""
     from pyspark.sql import DataFrame
 
-    tasks = min(n, spark.sparkContext.defaultParallelism)
     ids = spark.range(0, n, 1, tasks)._jdf.toDF()
-    return DataFrame(spark._jsparkSession.createDataFrame(ids.rdd(), ids.schema()), spark)
+    leaf = DataFrame(spark._jsparkSession.createDataFrame(ids.rdd(), ids.schema()), spark)
+    return leaf.coalesce(1) if tasks == 1 else leaf
 
 
 def map_segments(spark, plans: list, decode, schema: str):
-    """mapInPandas `decode(plan) -> pandas.DataFrame` over every plan, in
-    min(len(plans), defaultParallelism) tasks. The leaf holds only the
-    plan numbers 0..n-1 and each task decodes the plans whose numbers it
-    holds: the plans travel in the task closure (PySpark broadcasts a
-    closure past 1 MB), so no shuffle is needed to spread them out. The
-    leaf (`_id_leaf`) is planned once per session and plan count; each
-    call pickles only its own closure. The frame decodes on every query
-    that runs it, unless it is persisted (`session_view`)."""
-    leaf = _session_frame(spark, ("leaf", len(plans)), lambda: _id_leaf(spark, len(plans)))
+    """mapInPandas `decode(plan) -> pandas.DataFrame` over every plan, a
+    tuple led by its segment dir, in
+
+      min(len(plans), defaultParallelism, ceil(rows / maxRecordsPerBatch))
+
+    tasks, where `rows` sums the plans' segment.total.docs (an upper
+    bound on what a star-tree scan decodes) and maxRecordsPerBatch is
+    Spark's Arrow batch size: the reference's min(#segments, threads)
+    pool (CombineOperatorUtils), less the tasks that would decode under
+    one batch each. A non-positive batch size (no limit) leaves the
+    first two bounds. A one-task scan is a SinglePartition to the
+    planner (`_id_leaf`), so an aggregate over it runs in one job with
+    no exchange.
+
+    The leaf holds only the plan numbers 0..n-1 and each task decodes
+    the plans whose numbers it holds: the plans travel in the task
+    closure (PySpark broadcasts a closure past 1 MB), so no shuffle is
+    needed to spread them out. The leaf (`_id_leaf`) is planned once per
+    session, plan count and task count, and the two bounds are read once
+    per session (`_task_bound`); each call pickles only its own closure.
+    The frame decodes on every query that runs it, unless it is
+    persisted (`session_view`)."""
+    cores, batch = _task_bound(spark)
+    n = len(plans)
+    tasks = min(n, cores)
+    if batch > 0:
+        rows = sum(read_segment_metadata(p[0]).total_docs for p in plans)
+        tasks = max(1, min(tasks, -(-rows // batch)))
+    leaf = _session_frame(spark, ("leaf", n, tasks), lambda: _id_leaf(spark, n, tasks))
 
     def run(batches):
         for pdf in batches:
@@ -2230,8 +2272,10 @@ def read_segments(
 ):
     """Segments -> Spark DataFrame, decoded by `map_segments`: the
     surviving segments are numbered and shared out over min(#segments,
-    defaultParallelism) mapInPandas tasks, the reference's
-    min(#segments, threads) operator pool (CombineOperatorUtils). The
+    defaultParallelism, ceil(Σ total_docs / Arrow batch size))
+    mapInPandas tasks, the reference's min(#segments, threads) operator
+    pool (CombineOperatorUtils) less the tasks that would decode under
+    one batch each. The
     driver touches only segment metadata (cached, `read_segment_metadata`)
     and index buffers. Every distributed segment decode goes through
     here, apart from the star-tree scan.

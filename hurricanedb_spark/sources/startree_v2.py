@@ -741,14 +741,19 @@ def fitting_tree_id(
     (reader-side soundness): no involved column may carry a null-value
     vector — the tree was built from stored (default-filled) values
     while the scan path restores NULLs, so such segments must take the
-    scan fallback for exact SQL null semantics. Returns the first
-    fitting tree id or None."""
-    from hurricanedb_spark.sources.pinot_segment import read_segment_metadata
+    scan fallback for exact SQL null semantics — and the segment may
+    carry no upsert valid-docId snapshot: the tree aggregates every doc,
+    while the fallback's decode keeps only the valid ones. Returns the
+    first fitting tree id or None."""
+    from hurricanedb_spark.sources.pinot_segment import (
+        VALID_DOC_IDS_FILE,
+        read_segment_metadata,
+    )
 
     meta = read_segment_metadata(segment_dir)
     props = meta.props
     count = int((props.get("startree.v2.count") or ["0"])[0])
-    if not count:
+    if not count or os.path.isfile(os.path.join(meta.segment_dir, VALID_DOC_IDS_FILE)):
         return None
     parsed_pairs = [_parse_pair(p) for p in pairs]
     metric_cols = [c for _, c in parsed_pairs if c != "*"]
@@ -899,8 +904,9 @@ def read_segments_star_tree(
     key_cols: list[str],
     pairs: list[str],
 ):
-    """Distributed star-tree pre-agg scan over a segment store, in
-    min(#segments, defaultParallelism) tasks (`map_segments`, the
+    """Distributed star-tree pre-agg scan over a segment store, in at
+    most min(#segments, defaultParallelism) tasks, fewer on a store
+    under that many Arrow batches of rows (`map_segments`, the
     reference's CombineOperatorUtils pool); per segment, its task
     answers from the segment's FITTING tree (fitting_tree_id) or falls
     back to a raw scan of that segment — both emit the same (key
@@ -913,7 +919,10 @@ def read_segments_star_tree(
 
     scan = _star_tree_scan(key_cols, pairs)
     return map_segments(
-        spark, segment_dirs, scan, _star_tree_schema(segment_dirs[0], key_cols, pairs)
+        spark,
+        [(s,) for s in segment_dirs],
+        lambda p: scan(p[0]),
+        _star_tree_schema(segment_dirs[0], key_cols, pairs),
     )
 
 

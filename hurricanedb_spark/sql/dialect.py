@@ -3239,9 +3239,11 @@ class HurricaneSQL:
         directory of v1/v3 segment dirs): point the dialect at existing
         on-disk segments and query them with Pinot SQL directly — the
         full switch-over story with zero re-ingestion. The scan runs in
-        min(#segments, defaultParallelism) decode tasks, each decoding
-        the segments whose ids it holds, the reference's
-        CombineOperatorUtils cap (sources/pinot_segment.py:map_segments)."""
+        min(#segments, defaultParallelism, ceil(rows / Arrow batch size))
+        decode tasks, each decoding the segments whose ids it holds: the
+        reference's CombineOperatorUtils cap, less the tasks that would
+        decode under one batch each (sources/pinot_segment.py:
+        map_segments). The count is fixed when the table is registered."""
         import os
 
         from hurricanedb_spark.sources import pinot_segment as ps
@@ -3422,10 +3424,10 @@ class HurricaneSQL:
             return None
 
         out, pos = [], 0
-        # theta estimates (index in `out`, column, nominal): emitted after
-        # the loop, once it is known whether this pass emitted a Python
-        # aggregate they must sit beside
-        estimates: list[tuple[int, str, int]] = []
+        # theta unions (index in `out`, column, nominal, raw form?):
+        # emitted after the loop, once it is known whether this pass
+        # emitted a Python aggregate they must sit beside
+        thetas: list[tuple[int, str, int, bool]] = []
         py_agg = False
         for start, end, name, args in calls:
             out.append(query[pos:start])
@@ -3484,14 +3486,9 @@ class HurricaneSQL:
                     )
             elif is_bin and len(args) <= 2:
                 nominal = _theta_params(args[1]) if len(args) == 2 else 4096
-                if name == "distinctcountrawthetasketch":
-                    py_agg = True
-                    out.append(
-                        unchunked_base64(f"thetasketchunionraw({col}, {nominal})")
-                    )
-                else:
-                    estimates.append((len(out), col, nominal))
-                    out.append("")
+                raw = name == "distinctcountrawthetasketch"
+                thetas.append((len(out), col, nominal, raw))
+                out.append("")
             elif is_bin:
                 raise ValueError(
                     f"{name} over a BYTES column supports only the simple "
@@ -3502,17 +3499,22 @@ class HurricaneSQL:
                 out.append(query[start:end])
             pos = end
         out.append(query[pos:])
-        for i, col, nominal in estimates:
-            # native union (JVM partial + final aggregate) unless a raw
-            # union from this pass is a Python aggregate: Spark cannot
-            # place the two kinds in one SELECT, so the estimate then
-            # reads the Python union's serVer-3 bytes
-            out[i] = (
-                f"thetasketchestimate(thetasketchunionraw({col}, {nominal}))"
-                if py_agg
-                else "theta_sketch_estimate("
-                f"theta_union_agg({col}, {lg_k(nominal)}))"
-            )
+        for i, col, nominal, raw in thetas:
+            if py_agg:
+                # a clearspring union from this pass is a pandas
+                # aggregate, and Spark cannot place a JVM one beside it:
+                # both forms read the Python union's serVer-3 bytes
+                union = f"thetasketchunionraw({col}, {nominal})"
+                out[i] = unchunked_base64(union) if raw else f"thetasketchestimate({union})"
+            elif raw:
+                # serVer-3 bytes over a JVM collect_list, so a global
+                # aggregate over no rows returns the empty sketch
+                out[i] = unchunked_base64(
+                    f"thetasketchunionlist(collect_list({col}), {nominal})"
+                )
+            else:
+                # native union (JVM partial + final aggregate)
+                out[i] = f"theta_sketch_estimate(theta_union_agg({col}, {lg_k(nominal)}))"
         return "".join(out), None, None
 
     def _restructure(self, query: str, family: _Family):

@@ -2039,6 +2039,38 @@ def test_theta_bytes_estimate_is_a_jvm_aggregate(hdb, spark):
     assert [(r["n"], r["dc"]) for r in mixed] == [(6, 35)]
 
 
+def test_raw_theta_over_bytes_returns_the_empty_sketch_on_no_rows(hdb, spark):
+    """The raw form over a BYTES column unions through a JVM
+    collect_list: a global aggregate over no rows returns one row holding
+    the empty serVer-3 sketch, as the value path and the reference do,
+    and the raw form sits beside JVM aggregates in one SELECT."""
+    import base64
+
+    from hurricanedb_spark.operators.theta_ds import (
+        build_sketch,
+        deserialize,
+        serialize,
+        union,
+    )
+
+    blobs = [serialize(build_sketch(list(range(i, i + 10)))) for i in range(0, 30, 5)]
+    spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in enumerate(blobs)], "p int, sk binary"
+    ).createOrReplaceTempView("theta_bytes_raw_t")
+    empty = serialize(union([]))
+    for where, want, n in (
+        ("p < 0", empty, 0),
+        ("p >= 0", serialize(union([deserialize(b) for b in blobs], k=4096)), 6),
+    ):
+        rows = hdb.sql(
+            "SELECT distinctCountRawThetaSketch(sk) AS raw, COUNT(*) AS n "
+            f"FROM theta_bytes_raw_t WHERE {where}",
+            default_limit=None,
+        ).collect()
+        assert [(base64.b64decode(r["raw"]), r["n"]) for r in rows] == [(want, n)]
+    assert deserialize(empty).estimate() == 0
+
+
 def test_theta_over_qualified_bytes_column_unions(hdb, spark):
     """Round-12: a table-QUALIFIED BYTES argument (`t.sk` — how join
     queries are written) must type-dispatch to the sketch union too; the

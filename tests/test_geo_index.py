@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from hurricanedb_spark.sources import geo_index as gi
 from hurricanedb_spark.sources import pinot_segment as ps
+from tests.segment_decodes import collect_decoding
 
 RES = 12  # ~10 km cells at the equator
 
@@ -105,7 +106,7 @@ def test_segment_skip_observable(spark, geo_store):
     fast = gi.read_segments_geo_radius(
         spark, geo_store, "loc", 2.35, 48.85, 20_000
     )
-    assert fast.rdd.getNumPartitions() == 2
+    assert collect_decoding(fast)[1] == 2
 
 
 def test_candidate_cells_superset_property():

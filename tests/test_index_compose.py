@@ -25,6 +25,7 @@ from hurricanedb_spark.sql.dialect import (
     rewrite_functions,
     rewrite_json_match,
 )
+from tests.segment_decodes import collect_decoding
 
 RES = 8
 
@@ -164,7 +165,7 @@ def test_accelerated_scan_decodes_only_referenced_columns(spark, hq, where, used
 def test_intersection_prunes_beyond_any_single_index(hq):
     # json tag=alpha matches segments {0, 2}; text 'spark' matches
     # {1, 2}: only segment 2 (index-less, full decode) survives the
-    # intersection — one task, where either single index alone keeps two
+    # intersection — one decode, where either single index alone keeps two
     fast = hq.sql(
         "SELECT id FROM cmp_docs WHERE "
         "JSON_MATCH(props, '\"$.tag\" = ''alpha''') "
@@ -172,7 +173,7 @@ def test_intersection_prunes_beyond_any_single_index(hq):
         default_limit=None,
     )
     assert hq.last_multi_index_accel == ["JSON_INDEX", "TEXT_INDEX"]
-    assert fast.rdd.getNumPartitions() == 1
+    assert collect_decoding(fast)[1] == 1
 
 
 def test_empty_intersection_everywhere(spark, hq):

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from hurricanedb_spark.sources import json_index as ji
 from hurricanedb_spark.sources import pinot_segment as ps
 from hurricanedb_spark.sql.json_match import translate_json_match
+from tests.segment_decodes import collect_decoding
 
 
 @pytest.fixture(scope="module")
@@ -75,15 +76,15 @@ def test_accelerated_scan_equals_expression_path(spark, store, cond):
 
 def test_segment_level_pruning_observable(spark, store):
     # 'alpha' never occurs in segment 1 (beta only): its posting is empty,
-    # so the accelerated plan carries one task per SURVIVING segment only
+    # so the accelerated plan decodes the SURVIVING segments only
     fast = ji.read_segments_json_match(spark, store, "props", '"$.tag" = \'alpha\'')
-    assert fast.rdd.getNumPartitions() == 2  # segments 0 and 2 (index-less)
+    assert collect_decoding(fast)[1] == 2  # segments 0 and 2 (index-less)
     # and a value that exists nowhere with an index prunes to just the
     # index-less segment
     fast2 = ji.read_segments_json_match(
         spark, store, "props", '"$.tag" = \'beta\' AND "$.nested.city" = \'zz\''
     )
-    assert fast2.rdd.getNumPartitions() == 1
+    assert collect_decoding(fast2)[1] == 1
 
 
 def test_row_level_docid_mask(store):

@@ -18,6 +18,7 @@ import pandas as pd
 import pytest
 
 from hurricanedb_spark.sources import pinot_segment as ps
+from tests.segment_decodes import collect_decoding, decoded_segments, small_batches
 
 
 def _sample_pdf(n=500, seed=3):
@@ -1197,11 +1198,11 @@ def test_in_list_prunes_segments_via_minmax_and_bloom(spark, tmp_path):
     assert kept4 == [segs[1]]
     # not_in never prunes on min/max
     assert ps.prune_segments(segs, "k", "not_in", [5]) == segs
-    # end-to-end: two surviving segments, under the parallelism cap, so
-    # one decode task each
+    # end-to-end: two surviving segments decode
     got = ps.read_segments(spark, segs, where=("k", "in", [5, 1042]))
-    assert got.rdd.getNumPartitions() == 2
-    assert sorted(r["k"] for r in got.collect()) == [5, 1042]
+    rows, n = collect_decoding(got)
+    assert n == 2
+    assert sorted(r["k"] for r in rows) == [5, 1042]
 
 
 def test_in_list_null_interaction(tmp_path):
@@ -1323,40 +1324,6 @@ def test_sql_column_pruned_segment_decode(spark, sf_dir, tmp_path):
     assert hq.last_column_prune is None
 
 
-def _decoded_segments(df) -> int:
-    """Segments an executed DataFrame decoded: the rows its segment-id
-    leaves (`Scan ExistingRDD[id]` under each MapInPandas) emitted, read
-    from their numOutputRows metrics, through AQE query stages and into
-    the cached plan under an InMemoryTableScan. Every query over one
-    cache shares that plan, so its count covers all of them; use
-    `_collect_decoding` for one query's share."""
-    total, stack = 0, [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            stack.append(node.executedPlan())
-        elif name.endswith("QueryStageExec"):
-            stack.append(node.plan())
-        elif name == "InMemoryTableScanExec":
-            stack.append(node.relation().cachedPlan())
-        elif name == "RDDScanExec":
-            total += node.metrics().apply("numOutputRows").value()
-        else:
-            children = node.children().iterator()
-            while children.hasNext():
-                stack.append(children.next())
-    return total
-
-
-def _collect_decoding(df) -> tuple[list, int]:
-    """(rows, segments decoded) of collecting `df`: the decodes counted
-    in its plan after the collect less those counted before it."""
-    before = _decoded_segments(df)
-    rows = df.collect()
-    return rows, _decoded_segments(df) - before
-
-
 def _assert_one_scan_stage(spark, df):
     """No Exchange below the decode, and the unknown size estimate that
     keeps a segment table from being broadcast."""
@@ -1410,12 +1377,14 @@ def test_segment_scan_is_one_stage_with_unknown_size(spark, seg11):
         spark, segs[:3], bounds=[lambda s: [0, 1]], residual="id >= 0"
     )
     _assert_one_scan_stage(spark, bounded)
-    assert _decoded_segments(bounded) == 3
+    assert decoded_segments(bounded) == 3
 
 
 def test_more_segments_than_cores_share_capped_tasks(spark, seg11):
-    """11 segments over defaultParallelism (8) tasks: every segment is
-    decoded once, and each allowlist reaches its own segment."""
+    """11 segments of 60 rows over defaultParallelism (8) tasks, in a
+    session whose Arrow batch is 10 rows, so the store is over the task
+    bound: every segment is decoded once, and each allowlist reaches its
+    own segment."""
     from hurricanedb_spark.sql.dialect import (
         HurricaneSQL,
         rewrite_functions,
@@ -1423,6 +1392,7 @@ def test_more_segments_than_cores_share_capped_tasks(spark, seg11):
     )
 
     store, segs = seg11
+    spark = small_batches(spark, 10)
     par = spark.sparkContext.defaultParallelism
     assert par < len(segs)
     plain = ps.read_segments(spark, segs)
@@ -1446,12 +1416,12 @@ def test_more_segments_than_cores_share_capped_tasks(spark, seg11):
     for where, accel, decoded in cases:
         q = f"SELECT id FROM seg11 WHERE {where}"
         fast = hq.sql(q, default_limit=None)
-        rows, n = _collect_decoding(fast)
+        rows, n = collect_decoding(fast)
         got = sorted(r["id"] for r in rows)
         assert accel is None or getattr(hq, accel), where
         assert n == decoded, where
         slow = spark.sql(rewrite_functions(rewrite_json_match(q)))
         assert got == sorted(r["id"] for r in slow.collect()) and got, where
     # the pruned scan of the first case is cached: a repeat decodes none
-    rows, n = _collect_decoding(hq.sql("SELECT id FROM seg11 WHERE id >= 0", default_limit=None))
+    rows, n = collect_decoding(hq.sql("SELECT id FROM seg11 WHERE id >= 0", default_limit=None))
     assert n == 0 and len(rows) == 11 * 60

@@ -1,7 +1,7 @@
 """The per-store parts of a segment scan are built once and reused:
 parsed segment metadata (`read_segment_metadata`, checked against the
-files' stat on every read), the id leaf of each session and plan count,
-and the rows of the dialect's column-pruned and star-tree scans, persisted per (session,
+files' stat on every read), the id leaf of each session, plan count and
+task count, and the rows of the dialect's column-pruned and star-tree scans, persisted per (session,
 segments, projection) and checked against the segments' versions on
 every query. Each test checks that the reuse never serves a stale
 store, another session's frames or a table name that now names
@@ -29,7 +29,13 @@ from hurricanedb_spark.sql.dialect import (
     rewrite_json_match,
 )
 from hurricanedb_spark.sql.server import serve
-from tests.test_pinot_segment import _collect_decoding, _decoded_segments
+from tests.segment_decodes import (
+    collect_decoding,
+    collect_jobs,
+    decode_tasks,
+    decoded_segments,
+    small_batches,
+)
 from tests.test_server import _post
 
 SPEC = st.StarTreeSpec(
@@ -130,7 +136,7 @@ def test_v1_index_file_added_is_seen_next_query(spark, tmp_path):
 
     scan = hq.sql(q, default_limit=None)
     assert _rows(scan) == want and hq.last_text_match_accel
-    assert _decoded_segments(scan) == 2  # no index: both segments decode
+    assert decoded_segments(scan) == 2  # no index: both segments decode
 
     for seg, pdf in zip(segs, frames):
         with open(os.path.join(seg, "text.nativetext.idx"), "wb") as f:
@@ -138,7 +144,7 @@ def test_v1_index_file_added_is_seen_next_query(spark, tmp_path):
     assert os.stat(props).st_mtime_ns == before
     pruned = hq.sql(q, default_limit=None)
     assert _rows(pruned) == want and hq.last_text_match_accel
-    assert _decoded_segments(pruned) == 1  # segment 0 holds no 'storm'
+    assert decoded_segments(pruned) == 1  # segment 0 holds no 'storm'
 
 
 def test_sessions_never_share_scans(spark, tmp_path):
@@ -170,6 +176,7 @@ def test_sessions_never_share_scans(spark, tmp_path):
 
     s3 = spark.newSession()
     ps.read_segments(s3, segs, ["id"]).collect()
+    gc.collect()  # sessions other tests left behind go first
     held = len(ps._SESSION_FRAMES)
     gone = weakref.ref(s3)
     del s3
@@ -219,8 +226,9 @@ def test_warm_json_match_py4j_calls(spark, indexed_store):
     """A warm JSON_MATCH sql() makes 42 py4j calls: 32 in PySpark's
     mapInPandas (the per-query closure), 5 in spark.sql, 3 reading the
     table's columns, 2 binding and dropping the uuid view. The id leaf
+    (coalesced to one partition on this small store), the task bounds
     and the segment metadata are reused, so none goes to planning a
-    Range or to the SparkContext. gc is off and py4j's object-release
+    Range, to the SparkContext or to the session's conf. gc is off and py4j's object-release
     commands are not counted, so finalizers do not move the number."""
     hq = HurricaneSQL(spark)
     hq.register_segment_table("docs", indexed_store)
@@ -248,6 +256,59 @@ def test_warm_json_match_py4j_calls(spark, indexed_store):
     assert _rows(df) == _plain(spark, q)
 
 
+# (query, the note its access path sets, segments it decodes)
+AGGREGATES = [
+    (STAR_Q, "last_star_tree_redirect", 2),
+    (PRUNED_Q, "last_column_prune", 2),
+    (
+        "SELECT lang, COUNT(*) AS n FROM docs WHERE TEXT_MATCH(text, 'storm') GROUP BY lang",
+        "last_text_match_accel",
+        1,  # 'storm' is only in segment 1
+    ),
+    (
+        "SELECT lang, COUNT(*) AS n FROM docs "
+        "WHERE JSON_MATCH(props, '\"$.k\" = ''1''') GROUP BY lang",
+        "last_json_match_accel",
+        2,
+    ),
+    # every column: the registered view itself
+    (
+        "SELECT lang, COUNT(*) AS n, MAX(id) AS m, MIN(text) AS t, MIN(props) AS p "
+        "FROM docs GROUP BY lang",
+        None,
+        2,
+    ),
+]
+
+
+@pytest.mark.parametrize("batch", [None, 10])
+def test_decode_tasks_follow_the_rows(spark, indexed_store, batch):
+    """A store under one Arrow batch of rows (2 segments, 80 rows)
+    decodes in one task, which the planner sees as one partition: its
+    aggregates (over the cached star-tree and pruned views, the TEXT and
+    JSON index scans and the registered view) run in one job with no
+    Exchange. With a 10-row batch the store is over the bound: a scan
+    keeps min(#segments, cores) tasks, and an aggregate over two
+    segments shuffles."""
+    session = spark if batch is None else small_batches(spark, batch)
+    hq = HurricaneSQL(session)
+    hq.register_segment_table("docs", indexed_store)
+    for q, note, segments in AGGREGATES:
+        hq.sql(q, default_limit=None).collect()  # builds a cached view
+        df = hq.sql(q, default_limit=None)
+        rows, jobs = collect_jobs(df)
+        assert note is None or getattr(hq, note), q
+        assert note or not (hq.last_column_prune or hq.last_star_tree_redirect), q
+        assert sorted(tuple(r) for r in rows) == _plain(session, q), q
+        tasks = 1 if batch is None else segments
+        assert decode_tasks(df) == [tasks], q
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if tasks == 1:
+            assert jobs == 1 and "Exchange" not in plan, plan
+        else:
+            assert "Exchange" in plan, plan
+
+
 def test_repeated_queries_read_the_in_memory_cache(spark, tmp_path):
     """The first pruned and the first star-tree query decode the store
     and fill the cache; a repeat reads InMemoryTableScan, decodes no
@@ -256,11 +317,11 @@ def test_repeated_queries_read_the_in_memory_cache(spark, tmp_path):
     hq = HurricaneSQL(spark)
     hq.register_segment_table("docs", str(tmp_path))
     for q, note in ((PRUNED_Q, "last_column_prune"), (STAR_Q, "last_star_tree_redirect")):
-        first, n = _collect_decoding(hq.sql(q, default_limit=None))
+        first, n = collect_decoding(hq.sql(q, default_limit=None))
         assert getattr(hq, note) and _scan_cache(hq) == "build", q
         assert n == 2, q
         again = hq.sql(q, default_limit=None)
-        rows, n = _collect_decoding(again)
+        rows, n = collect_decoding(again)
         assert _scan_cache(hq) == "hit" and n == 0, q
         assert "InMemoryTableScan" in again._jdf.queryExecution().executedPlan().toString()
         assert sorted(rows) == sorted(first) == _plain(spark, q), q
@@ -306,7 +367,7 @@ def test_new_versions_are_seen_by_the_next_query(spark, tmp_path):
     want = pd.concat([frames[0].iloc[:10], moved]).groupby("lang")["id"].sum()
     assert mid == [(k, int(v)) for k, v in want.items()]
 
-    # the tree holds every doc, so the star-tree part runs without the snapshot
+    # dropping the snapshot is a new version too, and lets segment 0's tree answer
     os.remove(os.path.join(segs[0], ps.V3_SUBDIR, ps.VALID_DOC_IDS_FILE))
     assert check(STAR_Q) and _scan_cache(hq) == "build"
     ps.write_segment_pandas(_frame(1, 45), segs[1], star_tree_specs=[SPEC])
@@ -314,6 +375,30 @@ def test_new_versions_are_seen_by_the_next_query(spark, tmp_path):
     assert check(STAR_Q) == [(k, int(v)) for k, v in want.items()]
     assert _scan_cache(hq) == "build" and hq.last_star_tree_redirect["segments_tree"] == 2
     assert _persisted(spark) == base + 2
+
+
+def test_star_tree_redirect_honours_the_valid_doc_snapshot(spark, tmp_path):
+    """Two 30-doc segments with trees, docs 0-9 of one kept valid by an
+    upsert snapshot: the tree counts every doc, so that segment answers
+    from its raw fallback, which keeps only the valid ones, and the
+    redirect returns what the registered view does (13/14/13, not
+    20/20/20). A store whose every segment has a snapshot takes the
+    scan."""
+    segs = _store(tmp_path, [_frame(0, 30), _frame(1, 30)], star_tree_specs=[SPEC])
+    ps.write_valid_doc_ids(segs[0], list(range(10)))
+    hq = HurricaneSQL(spark)
+    hq.register_segment_table("docs", str(tmp_path))
+    want = [("de", 13), ("en", 14), ("fr", 13)]
+    assert _plain(spark, STAR_Q) == want
+    assert _rows(hq.sql(STAR_Q, default_limit=None)) == want
+    info = hq.last_star_tree_redirect
+    assert (info["segments_tree"], info["segments_scan"]) == (1, 1)
+    direct = st.read_segments_star_tree(spark, segs, ["lang"], ["count__*"])
+    assert _rows(direct.groupBy("lang").sum()) == want
+
+    ps.write_valid_doc_ids(segs[1], list(range(30)))
+    assert _rows(hq.sql(STAR_Q, default_limit=None)) == want
+    assert hq.last_star_tree_redirect is None
 
 
 def test_a_held_view_outlives_its_entry(spark, tmp_path):

@@ -20,6 +20,7 @@ import pytest
 from hurricanedb_spark.sources import pinot_segment as ps
 from hurricanedb_spark.sources import startree_v2 as st
 from hurricanedb_spark.sql.dialect import HurricaneSQL, rewrite_functions
+from tests.segment_decodes import collect_decoding, small_batches
 
 SPEC = st.StarTreeSpec(
     split_order=["city", "status"],
@@ -118,10 +119,12 @@ def test_star_tree_scan_is_one_stage_with_unknown_size(spark, store):
 
 
 def test_redirect_over_more_segments_than_cores(spark, tmp_path):
-    """11 segments (every fourth without a tree) share defaultParallelism
-    (8) tasks, and the redirect still equals the same rows held in
-    memory: each segment is answered once, from its own tree or its own
-    fallback scan."""
+    """11 segments of 120 rows (every fourth without a tree), in a
+    session whose Arrow batch is 100 rows so that the store is over the
+    task bound, share defaultParallelism (8) tasks, and the redirect
+    still equals the same rows held in memory: each segment is answered
+    once, from its own tree or its own fallback scan."""
+    spark = small_batches(spark, 100)
     rng = np.random.default_rng(29)
     segs, frames = [], []
     for si in range(11):
@@ -136,6 +139,7 @@ def test_redirect_over_more_segments_than_cores(spark, tmp_path):
     assert par < len(segs)
     pre = st.read_segments_star_tree(spark, segs, ["city", "status"], ["count__*"])
     assert pre.rdd.getNumPartitions() == par
+    assert collect_decoding(pre)[1] == len(segs)
     h = HurricaneSQL(spark)
     h.register_segment_table("st_wide", str(tmp_path))
     spark.createDataFrame(pd.concat(frames)).createOrReplaceTempView("st_wide_rows")

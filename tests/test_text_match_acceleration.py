@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from hurricanedb_spark.sources import native_text_index as nti
 from hurricanedb_spark.sources import pinot_segment as ps
 from hurricanedb_spark.sql.text_match import translate_text_match
+from tests.segment_decodes import collect_decoding
 
 DOCS = [
     "Spark powers the columnar engine",       # Spark + columnar
@@ -93,12 +94,12 @@ def test_segment_skip_observable(spark, tm_store):
     # 'spark' docs were removed from segment 1, so its postings prune the
     # whole segment; segment 2 (no index) always survives
     fast = nti.read_segments_text_match(spark, tm_store, "text", "spark AND columnar")
-    assert fast.rdd.getNumPartitions() == 2
+    assert collect_decoding(fast)[1] == 2
     # an AND with an impossible term prunes every indexed segment
     fast2 = nti.read_segments_text_match(
         spark, tm_store, "text", "spark AND nosuchtoken"
     )
-    assert fast2.rdd.getNumPartitions() == 1  # only the index-less segment
+    assert collect_decoding(fast2)[1] == 1  # only the index-less segment
 
 
 def test_allowlist_superset_property(tm_store):
