@@ -152,8 +152,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Must work in ANY SparkSession, not just ours: callers (the driver's
     correctness harness, notebooks) construct vanilla sessions, so the
     nanosAsLong conf is set here at runtime (it is runtime-settable and
-    idempotent) rather than assumed from the session builder."""
+    idempotent) rather than assumed from the session builder.
+
+    The served path of a versioned sink (`{name}.parquet` a link to the
+    committed `{name}.parquet.v{N}`, with `{name}.parquet.meta` beside
+    it; streaming/realtime.py) is read by `realtime.read_state`: with
+    the schema in `.meta`, so registering a new version starts no
+    schema-inference job, and as one partition when Spark plans the
+    scan as one split, so a GROUP BY or window over a small served
+    table runs in one job with no exchange. Any other path, and a sink
+    whose link and `.meta` disagree, is read by inference. Plain parquet
+    tables are never coalesced: their exchanges spread an operator over
+    the cores."""
     from pyspark.sql import functions as F, types as T
+
+    from hurricanedb_spark.streaming.realtime import read_state
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     cache = getattr(spark, "_hurricane_df_cache", None)
@@ -174,7 +187,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if hit is not None and hit[0] == sig:
             return hit[1]
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = read_state(spark, path, served=True)[0]
+    if df is None:
+        df = spark.read.parquet(path)
     if name == "events":
         for field in df.schema.fields:
             if field.name != "ts":

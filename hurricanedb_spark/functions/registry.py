@@ -721,22 +721,16 @@ def register_all(spark: SparkSession) -> None:
     spark.udf.register("clearspringhllcard", _cs_hll_card, "bigint")
 
     # union of pre-built clearspring sketches in a BYTES column
-    # (DistinctCountRawHLLAggregationFunction BYTES dispatch: addAll)
-    def _cs_hll_union(v):
-        return _cs_merge(bytes(b) for b in v if b is not None)
-
-    def _cs_hll_union_est(v):
-        raw = _cs_merge(bytes(b) for b in v if b is not None)
+    # (DistinctCountRawHLLAggregationFunction BYTES dispatch: addAll),
+    # as scalars over collect_list(sketch column): JVM aggregates, so a
+    # global aggregate over no rows still returns a row. A list with no
+    # sketch unions to NULL; the dialect reads that as the empty sketch
+    def _cs_hll_union_est(blobs):
+        raw = _cs_merge(blobs)
         return None if raw is None else _CsHLL.deserialize(raw).cardinality()
 
-    spark.udf.register(
-        "clearspringhllunion",
-        _F.pandas_udf(_cs_hll_union, "binary", _F.PandasUDFType.GROUPED_AGG),
-    )
-    spark.udf.register(
-        "clearspringhllunionest",
-        _F.pandas_udf(_cs_hll_union_est, "bigint", _F.PandasUDFType.GROUPED_AGG),
-    )
+    spark.udf.register("clearspringhllunion", _cs_merge, "binary")
+    spark.udf.register("clearspringhllunionest", _cs_hll_union_est, "bigint")
     # raw theta aggregation over a BYTES column = union of the PRE-BUILT
     # sketches stored in it (DistinctCountThetaSketchAggregationFunction
     # aggregate(): valueTypes[0] == BYTES deserializes and unions instead
@@ -749,19 +743,9 @@ def register_all(spark: SparkSession) -> None:
         union as _theta_union,
     )
 
-    def _theta_union_raw(v, k):
-        sks = [_theta_deser(bytes(b)) for b in v if b is not None]
-        return _theta_serialize(_theta_union(sks, k=int(k.iloc[0])))
-
-    spark.udf.register(
-        "thetasketchunionraw",
-        _F.pandas_udf(_theta_union_raw, "binary", _F.PandasUDFType.GROUPED_AGG),
-    )
-
-    # the same union as a scalar over collect_list(sketch column): a JVM
-    # aggregate, so a global aggregate over no rows still returns one
-    # row, holding the empty sketch, as the reference does (a pandas
-    # grouped-agg UDF returns no row there)
+    # a scalar over collect_list(sketch column): a JVM aggregate, so a
+    # global aggregate over no rows still returns one row, holding the
+    # empty sketch, as the reference does
     def _theta_union_list(blobs, k):
         sks = [_theta_deser(bytes(b)) for b in blobs]
         return _theta_serialize(_theta_union(sks, k=int(k)))

@@ -902,6 +902,15 @@ def _unquote_literal(s: str, what: str) -> str:
     raise ValueError(f"{what} must be a quoted string literal, got: {s!r}")
 
 
+def _raw_hll_log2m(s: str) -> int:
+    """distinctCountRawHLL's log2m argument: a clearspring RegisterSet
+    size, 4..30 like the estimate form."""
+    log2m = int(s.strip().strip("'"))
+    if not 4 <= log2m <= 30:
+        raise ValueError(f"distinctCountRawHLL log2m out of range: {log2m}")
+    return log2m
+
+
 def _theta_params(s: str) -> int:
     """Validate a theta-sketch parameters literal ('nominalEntries=4096')
     and return the nominalEntries (default 4096, Util.DEFAULT_NOMINAL_
@@ -1301,11 +1310,7 @@ def _agg_optional_args(name: str, args: list[str]) -> str | None:
             int(v)
         return f"count(DISTINCT {args[0]})"
     if name == "distinctcountrawhll" and len(args) == 2:
-        # clearspring RegisterSet sizes 4..30 like the estimate form
-        log2m = int(args[1].strip().strip("'"))
-        if not 4 <= log2m <= 30:
-            raise ValueError(f"distinctCountRawHLL log2m out of range: {log2m}")
-        return f"lower(hex(rawclearspringhll({args[0]}, {log2m})))"
+        return f"lower(hex(rawclearspringhll({args[0]}, {_raw_hll_log2m(args[1])})))"
     if name in ("firstwithtime", "lastwithtime") and len(args) == 3:
         # 3-arg reference form: (dataCol, timeCol, 'dataType')
         dt = _unquote_literal(args[2], f"{name} dataType").upper()
@@ -3372,14 +3377,11 @@ class HurricaneSQL:
         counted distinct BLOBS instead of unioning the stored sketches.
 
         The estimate forms union natively (theta_union_agg reads the
-        stored serVer-3 bytes; hll_union_agg): JVM partial and final
-        aggregates that mix freely with other aggregates. Beside a raw
-        theta or clearspring HLL union from this pass, a theta estimate
-        reads the raw union's bytes instead.
-        Limitation: those raw unions are grouped-agg pandas UDFs, which
-        Spark cannot place beside JVM aggregates in one SELECT — such a
-        mix fails loudly at analysis (INVALID_PANDAS_UDF_PLACEMENT);
-        query that sketch column in its own statement."""
+        stored serVer-3 bytes; hll_union_agg). The raw theta form and
+        both clearspring HLL forms are scalar unions over a JVM
+        collect_list. All of them mix freely with other aggregates, and
+        a global aggregate over no rows returns one row: the empty
+        sketch, or 0."""
         names = {
             "distinctcountthetasketch",
             "distinctcountrawthetasketch",
@@ -3424,11 +3426,6 @@ class HurricaneSQL:
             return None
 
         out, pos = [], 0
-        # theta unions (index in `out`, column, nominal, raw form?):
-        # emitted after the loop, once it is known whether this pass
-        # emitted a Python aggregate they must sit beside
-        thetas: list[tuple[int, str, int, bool]] = []
-        py_agg = False
         for start, end, name, args in calls:
             out.append(query[pos:start])
             col = args[0].strip()
@@ -3450,6 +3447,7 @@ class HurricaneSQL:
                 clearspring = False
                 try:
                     from hurricanedb_spark.operators.clearspring_hll import (
+                        ClearspringHLL,
                         is_clearspring_hll,
                     )
 
@@ -3465,30 +3463,43 @@ class HurricaneSQL:
                     )
                 except Exception:  # noqa: BLE001 — unreadable: DS path
                     pass
-                py_agg = py_agg or clearspring
-                if name == "distinctcounthll":
+                if clearspring and name == "distinctcounthll":
+                    # a group with no sketch reads as the reference's
+                    # default HyperLogLog: estimate 0 ...
                     out.append(
-                        f"clearspringhllunionest({col})"
-                        if clearspring
-                        else (
-                            "CAST(round(hll_sketch_estimate("
-                            f"hll_union_agg({col}))) AS BIGINT)"
-                        )
+                        f"coalesce(clearspringhllunionest(collect_list({col})), 0)"
+                    )
+                elif clearspring:
+                    # ... and bytes of the empty HyperLogLog(log2m)
+                    log2m = _raw_hll_log2m(args[1]) if len(args) == 2 else 8
+                    empty = ClearspringHLL(log2m).serialize().hex()
+                    out.append(
+                        "coalesce(lower(hex(clearspringhllunion("
+                        f"collect_list({col})))), '{empty}')"
+                    )
+                elif name == "distinctcounthll":
+                    out.append(
+                        "CAST(round(hll_sketch_estimate("
+                        f"hll_union_agg({col}))) AS BIGINT)"
                     )
                 else:
                     # raw form: lowercase-HEX envelope either way; the
                     # bytes keep the column's own wire format (formats
                     # cannot be converted — different hash spaces)
-                    out.append(
-                        f"lower(hex(clearspringhllunion({col})))"
-                        if clearspring
-                        else f"lower(hex(hll_union_agg({col})))"
-                    )
+                    out.append(f"lower(hex(hll_union_agg({col})))")
             elif is_bin and len(args) <= 2:
                 nominal = _theta_params(args[1]) if len(args) == 2 else 4096
-                raw = name == "distinctcountrawthetasketch"
-                thetas.append((len(out), col, nominal, raw))
-                out.append("")
+                if name == "distinctcountrawthetasketch":
+                    # serVer-3 bytes over a JVM collect_list, so a global
+                    # aggregate over no rows returns the empty sketch
+                    out.append(unchunked_base64(
+                        f"thetasketchunionlist(collect_list({col}), {nominal})"
+                    ))
+                else:
+                    # native union (JVM partial + final aggregate)
+                    out.append(
+                        f"theta_sketch_estimate(theta_union_agg({col}, {lg_k(nominal)}))"
+                    )
             elif is_bin:
                 raise ValueError(
                     f"{name} over a BYTES column supports only the simple "
@@ -3499,22 +3510,6 @@ class HurricaneSQL:
                 out.append(query[start:end])
             pos = end
         out.append(query[pos:])
-        for i, col, nominal, raw in thetas:
-            if py_agg:
-                # a clearspring union from this pass is a pandas
-                # aggregate, and Spark cannot place a JVM one beside it:
-                # both forms read the Python union's serVer-3 bytes
-                union = f"thetasketchunionraw({col}, {nominal})"
-                out[i] = unchunked_base64(union) if raw else f"thetasketchestimate({union})"
-            elif raw:
-                # serVer-3 bytes over a JVM collect_list, so a global
-                # aggregate over no rows returns the empty sketch
-                out[i] = unchunked_base64(
-                    f"thetasketchunionlist(collect_list({col}), {nominal})"
-                )
-            else:
-                # native union (JVM partial + final aggregate)
-                out[i] = f"theta_sketch_estimate(theta_union_agg({col}, {lg_k(nominal)}))"
         return "".join(out), None, None
 
     def _restructure(self, query: str, family: _Family):

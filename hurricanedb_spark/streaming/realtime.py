@@ -55,30 +55,50 @@ from hurricanedb_spark.operators.upsert import upsert_view
 # merge and just re-points the link. Readers of {sink} see a whole
 # version at every instant; the version before the committed one is kept
 # until the next commit, so a reader that opened {sink} just before a
-# swap still finds its files. The state is read back with the schema
-# in .meta, which skips Spark's parquet schema-inference job (a .meta
-# with no schema, from before the schema was recorded, still infers).
-# The protocol needs a local filesystem (symlinks, os.replace).
+# swap still finds its files. The protocol needs a local filesystem
+# (symlinks, os.replace).
+#
+# `read_state` is the one reader of committed state, and it reads with
+# the schema in .meta, which skips Spark's parquet schema-inference job.
+# The merge reads {sink}.v{N} as .meta names it. A reader of the served
+# {sink} (`catalog.tables.load_table`) gets the .meta schema only while
+# the link names the version .meta records, and its frame is coalesced
+# to one partition when Spark plans the scan as one split: the planner
+# then sees SinglePartition, so an aggregate over a small served table
+# runs in one job with no exchange. Anything else (a reader between the
+# .meta rename and the link swap, a .meta from before the schema was
+# recorded, a plain {sink} directory) is left to inference.
 # ---------------------------------------------------------------------------
 
 
-def _read_state_meta(sink_dir: str) -> dict | None:
+def read_state(
+    spark: SparkSession, sink_dir: str, served: bool = False
+) -> tuple[DataFrame | None, dict | None]:
+    """Return (committed state, meta) of the versioned sink `sink_dir`:
+    (None, None) before its first commit. The merge (served=False) reads
+    the committed version. A served read reads `sink_dir` itself, and
+    gets (None, meta) unless the link names the committed version and
+    .meta holds its schema: the caller then infers the schema."""
     meta_path = sink_dir + ".meta"
     if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as f:
-        return json.load(f)
-
-
-def _load_state(spark: SparkSession, sink_dir: str) -> tuple[DataFrame | None, dict | None]:
-    """Return (committed state, meta), read from the committed version."""
-    meta = _read_state_meta(sink_dir)
-    if meta is None:
         return None, None
+    with open(meta_path) as f:
+        meta = json.load(f)
+    path = f"{sink_dir}.v{meta['version']}"
+    if served:
+        if "schema" not in meta or not os.path.islink(sink_dir) or (
+            os.readlink(sink_dir) != os.path.basename(path)
+        ):
+            return None, meta
+        path = sink_dir
     reader = spark.read
     if "schema" in meta:
         reader = reader.schema(StructType.fromJson(meta["schema"]))
-    return reader.parquet(f"{sink_dir}.v{meta['version']}"), meta
+    df = reader.parquet(path)
+    # plans the scan's splits without running a job
+    if served and df._jdf.rdd().getNumPartitions() == 1:
+        df = df.coalesce(1)
+    return df, meta
 
 
 def _publish_state(sink_dir: str, version: int) -> None:
@@ -209,7 +229,7 @@ def start_upsert_sink(
     spark = stream_df.sparkSession
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        state, meta = _load_state(spark, sink_dir)
+        state, meta = read_state(spark, sink_dir)
         if _already_applied(meta, epoch_id):
             _publish_state(sink_dir, meta["version"])
             return
@@ -422,7 +442,7 @@ def start_partial_upsert_sink(
     spark = stream_df.sparkSession
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        state, meta = _load_state(spark, sink_dir)
+        state, meta = read_state(spark, sink_dir)
         if _already_applied(meta, epoch_id):
             _publish_state(sink_dir, meta["version"])
             return
@@ -611,7 +631,7 @@ def start_rollup_sink(
     spark = stream_df.sparkSession
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        state, meta = _load_state(spark, sink_dir)
+        state, meta = read_state(spark, sink_dir)
         if _already_applied(meta, epoch_id):
             _publish_state(sink_dir, meta["version"])
             return

@@ -302,9 +302,9 @@ def test_bytes_column_dispatch_on_join_and_cte_shapes(hdb, spark):
 
 
 def test_bytes_column_all_null_group_yields_null(hdb, spark):
-    """clearspringhllunion / clearspringhllunionest over a group whose
-    BYTES column is all NULL must return NULL for that group, not fail
-    the query (round-10 ADVICE)."""
+    """clearspringhllunion / clearspringhllunionest over the
+    collect_list of a group whose BYTES column is all NULL must return
+    NULL for that group, not fail the query (round-10 ADVICE)."""
     one = ClearspringHLL(8)
     one.offer_bytes(b"only")
     df = spark.createDataFrame(
@@ -315,9 +315,55 @@ def test_bytes_column_all_null_group_yields_null(hdb, spark):
     rows = {
         r["g"]: (r["u"], r["e"])
         for r in spark.sql(
-            "SELECT g, clearspringhllunion(sk) AS u, "
-            "clearspringhllunionest(sk) AS e FROM cs_null_t GROUP BY g"
+            "SELECT g, clearspringhllunion(collect_list(sk)) AS u, "
+            "clearspringhllunionest(collect_list(sk)) AS e "
+            "FROM cs_null_t GROUP BY g"
         ).collect()
     }
     assert rows["a"] == (None, None)
     assert bytes(rows["b"][0]) == one.serialize() and rows["b"][1] == 1
+
+
+def test_bytes_column_unions_on_no_rows_and_beside_theta(hdb, spark):
+    """Both clearspring forms over a BYTES column are JVM aggregates: a
+    global aggregate over no rows returns one row holding the empty
+    sketch (of the call's log2m) and 0, as the reference does, and one
+    SELECT holds them beside a theta union and COUNT(*). Pinned byte
+    for byte on no rows and on all rows."""
+    import base64
+
+    from hurricanedb_spark.operators.theta_ds import (
+        build_sketch,
+        deserialize,
+        serialize,
+        union,
+    )
+
+    hlls, thetas = [], []
+    for i in range(4):
+        vals = list(range(100 * i, 100 * i + 150))
+        h = ClearspringHLL(8)
+        for v in vals:
+            h.offer_bytes(str(v).encode())
+        hlls.append(h.serialize())
+        thetas.append(serialize(build_sketch(vals)))
+    hdb.register("cs_theta_t", spark.createDataFrame(
+        [(i, bytearray(h), bytearray(t)) for i, (h, t) in enumerate(zip(hlls, thetas))],
+        "p int, sk binary, th binary",
+    ))
+    full = merge_hlls(hlls)
+    for where, raw, raw12, est, theta, n in (
+        ("p < 0", ClearspringHLL(8).serialize(), ClearspringHLL(12).serialize(),
+         0, serialize(union([])), 0),
+        ("p >= 0", full, full, ClearspringHLL.deserialize(full).cardinality(),
+         serialize(union([deserialize(t) for t in thetas], k=4096)), 4),
+    ):
+        rows = hdb.sql(
+            "SELECT distinctCountRawHLL(sk) AS raw, distinctCountRawHLL(sk, 12) AS raw12, "
+            "distinctCountHLL(sk) AS est, distinctCountRawThetaSketch(th) AS theta, "
+            f"COUNT(*) AS n FROM cs_theta_t WHERE {where}",
+            default_limit=None,
+        ).collect()
+        assert [(bytes.fromhex(r["raw"]), bytes.fromhex(r["raw12"]), r["est"],
+                 base64.b64decode(r["theta"]), r["n"]) for r in rows] == [
+            (raw, raw12, est, theta, n)]

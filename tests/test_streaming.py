@@ -680,7 +680,7 @@ def test_rollup_sink_restart_reads_state_with_meta_schema(spark, tmp):
     assert [(f.name, f.dataType) for f in schema.fields] == [
         ("event_type", T.StringType()), ("value", T.DoubleType()),
         ("event_id", T.LongType()), ("user_id", T.BinaryType())]
-    state, _ = rt._load_state(spark, sink)
+    state, _ = rt.read_state(spark, sink)
     assert state.schema == spark.read.parquet(f"{sink}.v0").schema
     _write_batch(spark, src, _rows(5, 2, uid=3) + _rows(7, 1, uid=3, et="error"))
     run()
@@ -690,3 +690,91 @@ def test_rollup_sink_restart_reads_state_with_meta_schema(spark, tmp):
         "FROM rollup_restart_t").collect()}
     assert got == {"click": (0.0 + 1 + 2 + 5 + 6, 5, 2), "view": (7.0, 2, 1),
                    "error": (7.0, 1, 1)}
+
+
+# ---------------------------------------------------------------------------
+# The served read: `load_table` over {sink} reads with the schema in .meta
+# and, while Spark plans the scan as one split, as one partition.
+# ---------------------------------------------------------------------------
+
+
+def _served_table(session, sink):
+    from hurricanedb_spark.catalog.tables import load_table
+
+    parent, base = os.path.split(sink)
+    return load_table(session, parent, base[: -len(".parquet")])
+
+
+def _commit_three(spark, tmp):
+    src, sink, ckpt = f"{tmp}/src", f"{tmp}/sink.parquet", f"{tmp}/ckpt"
+    _write_batch(spark, src, _rows(0, 6) + _rows(6, 4, uid=2, et="view"))
+    _run_upsert(spark, src, sink, ckpt)
+    _write_batch(spark, src, _upd(0, 3, 50.0))
+    _run_upsert(spark, src, sink, ckpt)
+    _write_batch(spark, src, _upd(6, 2, 60.0) + _rows(10, 2, et="view"))
+    _run_upsert(spark, src, sink, ckpt)
+    assert os.readlink(sink) == "sink.parquet.v2"
+    return sink
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+GROUPED = ("SELECT event_type, COUNT(*) AS n, SUM(value) AS total "
+           "FROM served_t GROUP BY event_type ORDER BY event_type")
+# click: ids 0-2 at 50, 3-5, and 6-7 (updated as clicks) at 60; view: 8-11
+GROUPED_ROWS = [("click", 8, 3 * 50.0 + 3 + 4 + 5 + 2 * 60.0),
+                ("view", 4, 8.0 + 9 + 10 + 11)]
+
+
+def test_served_table_reads_meta_schema_as_one_partition(spark, tmp):
+    """After several commits the served frame has the inferred schema,
+    and its GROUP BY runs in one job with no exchange: the one-split
+    scan is coalesced to one partition."""
+    from segment_decodes import collect_jobs
+
+    sink = _commit_three(spark, tmp)
+    df = _served_table(spark, sink)
+    assert df.schema == spark.read.parquet(sink).schema
+    df.createOrReplaceTempView("served_t")
+    q = spark.sql(GROUPED)
+    rows, jobs = collect_jobs(q)
+    assert [tuple(r) for r in rows] == GROUPED_ROWS
+    assert jobs == 1
+    plan = _plan(q)
+    assert "Coalesce 1" in plan and "FileScan parquet" in plan
+    assert "Exchange" not in plan, plan
+
+
+def test_served_table_split_by_spark_is_not_coalesced(spark, tmp):
+    """In a session that splits the state into several scan partitions
+    the served frame keeps Spark's split, and returns the same rows."""
+    sink = _commit_three(spark, tmp)
+    session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", "256")
+    df = _served_table(session, sink)
+    assert df._jdf.rdd().getNumPartitions() > 1
+    assert "Coalesce" not in _plan(df)
+    df.createOrReplaceTempView("served_t")
+    assert [tuple(r) for r in session.sql(GROUPED).collect()] == GROUPED_ROWS
+
+
+def test_served_table_falls_back_to_inference(spark, tmp):
+    """With .meta naming version N+1 while the link still names N (a
+    reader between the commit and the publish), and with a .meta that
+    holds no schema, the served read infers the schema and returns
+    version N's rows."""
+    sink = _commit_three(spark, tmp)
+    want = _served(spark, sink)
+    meta = _meta(sink)
+    shutil.copytree(f"{sink}.v2", f"{sink}.v3")
+    _write_batch(spark, f"{sink}.v3", _rows(100, 1))
+    for torn in ({**meta, "version": 3}, {k: v for k, v in meta.items() if k != "schema"}):
+        with open(sink + ".meta", "w") as f:
+            json.dump(torn, f)
+        session = spark.newSession()  # a load_table cache of its own
+        assert rt.read_state(session, sink, served=True) == (None, torn)
+        df = _served_table(session, sink)
+        assert "Coalesce" not in _plan(df)
+        assert sorted((r.event_id, r.value) for r in df.collect()) == want
